@@ -81,22 +81,6 @@ def suppress_first_per_key(
     )
 
 
-def suppress_on_count_change(
-    alerts: DataFrame,
-    key_cols: list[str],
-    count_col: str = "count",
-    ts_col: str = "timestamp",
-) -> DataFrame:
-    """`AlertSuppressorCount.java:26-36`: re-emit a suppressed key when
-    its count metadata changes — batch analog via lag compare."""
-    w = Window.partitionBy(*key_cols).orderBy(ts_col, "alert_id")
-    return (
-        alerts.withColumn("__prev", F.lag(count_col).over(w))
-        .where(F.col("__prev").isNull() | (F.col(count_col) != F.col("__prev")))
-        .drop("__prev")
-    )
-
-
 # AlertMeta.IPADDRESS_KEYS (`alert/AlertMeta.java:380`) with their
 # associated geo metadata key names (`AlertMeta.java:222-240` —
 # AssociatedKeyLinkage CITY/COUNTRY/ISP/ASN/AS_ORG per base key).

@@ -307,106 +307,85 @@ def dedup_clusters(
     Connected components by min-label propagation: every node starts
     labeled with itself; each round a node adopts the minimum label
     among itself and its neighbors; at fixpoint label(x) = min id of
-    x's component, which doubles as the cluster keeper. Rounds are
-    whole joins (label frontier propagates like hash-to-min), so
-    convergence needs O(diameter) rounds — near-dup graphs are dense
-    clumps with tiny diameters, and `max_iterations` bounds the
-    pathological chain case. The driver-side loop tests only a
-    changed-count per round (an aggregate, not a collect of rows).
+    x's component, which doubles as the cluster keeper. Convergence
+    needs O(diameter) rounds — near-dup graphs are dense clumps with
+    tiny diameters, and `max_iterations` bounds the pathological chain
+    case.
 
     Returns (id_col, cluster_keeper, cluster_size) for EVERY node in
     `nodes` — singletons keep themselves, so the output is directly a
-    keep/drop decision: drop rows where id != cluster_keeper.
+    keep/drop decision: drop rows where id != cluster_keeper. Pair
+    endpoints missing from `nodes` get a row too.
 
-    Loop mechanics (r12): each round's update is `persist()`ed and a
-    single probe aggregate (max of the per-row changed flag) both
-    answers the fixpoint test AND materializes that cache — one job
-    per round, where the older eager-localCheckpoint + separate probe
-    paid two sequential jobs. The logical plan does nest round over
-    round (persist does not truncate lineage, and `labels` is read
-    twice per round), but every inner reference resolves to an
-    already-populated InMemoryRelation at planning time, so
-    re-analysis stays cheap and no subtree re-executes. The FINAL
-    labels are cut with one eager `localCheckpoint` and every
-    per-round cache is then unpersisted before return, so nothing
-    stays pinned after the call (the old persist-based version leaked
-    its final cache and contaminated every later query in the bench
-    run; a leak-regression test pins this). Change detection rides
-    the update join itself (max(changed) over a flag column) instead
-    of a second old-vs-new join.
+    Loop mechanics:
+    - edges hold both directions of every pair, built in one pass by
+      exploding a two-element array; duplicate edges are harmless to
+      a min, so there is no distinct. Only edge-touched nodes enter
+      the loop, with labels seeded at min(self, neighbors) by one
+      aggregate over the edges.
+    - each round is ONE aggregate: every node receives its neighbors'
+      labels (edges joined to labels on dst) plus its own label,
+      marked as its own, and `groupBy(node)` yields the new label
+      (min) and the old one (the marked row) together — no join back.
+    - the round's result is cut with an eager `localCheckpoint`, then
+      one `first()` probe over rows whose label fell answers the
+      fixpoint test. The checkpoint it replaced is released at once,
+      and the edges after the loop, so only the final labels stay
+      pinned, until the returned DataFrame is garbage-collected.
+    - cluster_size is a count window over the label.
     """
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    e = F.explode(
+        F.array(
+            F.struct(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
+            F.struct(F.col(b_col).alias("src"), F.col(a_col).alias("dst")),
         )
-        .distinct()
+    )
+    edges = (
+        pairs.select(e.alias("__e"))
+        .select("__e.src", "__e.dst")
         .localCheckpoint(eager=True)
     )
-    # iterate ONLY over edge-touched nodes: singletons can never change
-    # label, so they skip the loop entirely and rejoin at the end with
-    # label = self. On a near-dup corpus the touched set is a small
-    # fraction of the corpus (36% on the driver testdata, far less on
-    # clean data at scale), which shrinks every per-round join/shuffle
-    # by the same factor. Edges are already bidirectional, so src alone
-    # covers both endpoints. Labels SEED at min(self, neighbors) — the
-    # first propagation round computed as one aggregate over the edge
-    # list itself (no join), so the loop starts one round ahead.
     labels = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
         .localCheckpoint(eager=True)
     )
-    # r12: each round runs ONE job, not two — `upd` is persist()ed and
-    # the changed-probe aggregate both answers the fixpoint test and
-    # materializes the cache in the same pass (the old eager
-    # localCheckpoint + separate agg paid two sequential jobs per
-    # round). Lineage stays shallow (each round reads the previous
-    # round's cache), and the final labels are cut to an eager
-    # checkpoint below so every per-round cache can be unpersisted
-    # before return — nothing leaks into later queries (the r10
-    # persist-leak lesson).
-    cached_rounds = []
     for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
+        sent = edges.join(labels, edges["dst"] == labels["node"]).select(
+            F.col("src").alias("node"),
+            "label",
+            F.lit(None).alias("__old"),
         )
+        own = labels.select("node", "label", F.col("label").alias("__old"))
         upd = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-                (F.col("nlabel") < F.col("label")).cast("int").alias("__chg"),
-            )
-            .persist()
+            own.unionByName(sent)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"), F.max("__old").alias("__old"))
+            .localCheckpoint(eager=True)
         )
-        cached_rounds.append(upd)
-        changed = upd.agg(F.max("__chg")).first()[0]
-        labels = upd.drop("__chg")
-        if not changed:
+        _release_checkpoint(labels)
+        labels = upd
+        if upd.where(F.col("label") < F.col("__old")).first() is None:
             break
-    labels = labels.localCheckpoint(eager=True)
-    for c in cached_rounds:
-        c.unpersist(blocking=False)
+    _release_checkpoint(edges)
     singletons = (
         nodes.select(F.col(id_col).alias("node"))
         .join(labels.select("node"), "node", "left_anti")
         .withColumn("label", F.col("node"))
     )
-    labels = labels.unionByName(singletons)
-    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (
-        labels.join(sizes, "label")
-        .select(
-            F.col("node").alias(id_col),
-            F.col("label").alias("cluster_keeper"),
-            "cluster_size",
-        )
+    return labels.select("node", "label").unionByName(singletons).select(
+        F.col("node").alias(id_col),
+        F.col("label").alias("cluster_keeper"),
+        F.count(F.lit(1)).over(Window.partitionBy("label")).alias("cluster_size"),
     )
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind an eager `localCheckpoint` DataFrame.
+    `DataFrame.unpersist` only drops cache-manager entries; a local
+    checkpoint lives in the block manager until the ContextCleaner
+    reclaims it, and a loop would otherwise pin one per round."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def simhash(

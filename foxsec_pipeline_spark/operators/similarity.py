@@ -95,19 +95,6 @@ def cosine_topk(
     )
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: sign bit per plane, packed.
-
-    `planes` is a small python-side list (broadcast as literals into
-    the expression). Bucket = Σ 2^i * (dot(vec, plane_i) > 0).
-    """
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(v)) for v in plane])
-        bucket = bucket + F.when(dot(vec, arr) > 0, F.lit(2**i)).otherwise(F.lit(0))
-    return bucket
-
-
 # fixed-point scale for the relational bucket path: embeddings are
 # float32 in (-1, 1); x -> floor(x * 2^20) is exact in double (the
 # scale is a power of two) and makes the per-plane dot an INTEGER sum

@@ -43,15 +43,6 @@ def session_win(ts: str | Column = "ts", gap: str = "45 minutes") -> Column:
     )
 
 
-def with_window_bounds(df: DataFrame, window_col: str = "window") -> DataFrame:
-    """Flatten the window struct into sortable/joinable start/end columns."""
-    return df.select(
-        F.col(f"{window_col}.start").alias("window_start"),
-        F.col(f"{window_col}.end").alias("window_end"),
-        *[c for c in df.columns if c != window_col],
-    ).drop(window_col)
-
-
 def windowed_counts(
     df: DataFrame,
     key: str,

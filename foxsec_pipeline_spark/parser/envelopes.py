@@ -23,6 +23,9 @@ as a JSON string, so string + explicit cast accepts both shapes.
 
 from __future__ import annotations
 
+import weakref
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -611,17 +614,23 @@ AUTH0_BODY = T.StructType(
 _AUTH0_WRAPPED = T.StructType([T.StructField("jsonPayload", AUTH0_BODY)])
 
 
-_ENVELOPE_COLS: dict[str, tuple] = {}
+# Keyed on the py4j gateway: the Column handles are JVM objects of one
+# gateway, so a restarted gateway must never see them, while a session
+# restarted in the same JVM (same gateway) keeps using them.
+_ENVELOPE_COLS: "weakref.WeakKeyDictionary[object, dict[str, tuple]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _envelope_cols(value_col: str) -> tuple:
     """Input-independent Column trees of `strip_envelopes`, cached per
-    value_col — the `_projection` posture (parse.py:97): Columns are
-    immutable unresolved expressions bound to nothing, reusable across
-    DataFrames and queries, and rebuilding this set is ~90 py4j calls
-    (~0.1-0.2 s of driver time) per parse_events call (r13, guide
-    §1.2 — fixed driver cost paid on every bench rep)."""
-    hit = _ENVELOPE_COLS.get(value_col)
+    gateway and value_col — the `_projection` posture (parse.py:97):
+    Columns are immutable unresolved expressions bound to nothing,
+    reusable across DataFrames, queries and sessions, and rebuilding
+    this set is ~90 py4j calls (~0.1-0.2 s of client-side planning) per
+    parse_events call."""
+    per_gateway = _ENVELOPE_COLS.setdefault(SparkContext._gateway, {})
+    hit = per_gateway.get(value_col)
     if hit is not None:
         return hit
     j = F.from_json(F.col(value_col), WIDE_SCHEMA)
@@ -684,7 +693,7 @@ def _envelope_cols(value_col: str) -> tuple:
         F.to_timestamp(F.col("j.timestamp")),
     )
     built = (j, m, a0, mt, layer3, envelope_ts)
-    _ENVELOPE_COLS[value_col] = built
+    per_gateway[value_col] = built
     return built
 
 

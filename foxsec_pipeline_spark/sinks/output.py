@@ -478,13 +478,6 @@ def violation_wires_from_alert_json(
     return out
 
 
-def violation_wire_from_alert_json(line: str) -> tuple[str, str, str] | None:
-    """Back-compat single-violation view of
-    violation_wires_from_alert_json (first wire or None)."""
-    wires = violation_wires_from_alert_json(line)
-    return wires[0] if wires else None
-
-
 def violation_wire_json(
     violations: DataFrame, suppress_col: str | None = None
 ) -> Column:
