@@ -11,413 +11,81 @@ this module is a thin adapter.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from foxsec_pipeline_spark.plans.catalog import registry  # noqa: E402
 
-# The driver records exactly the FIRST 50 rows of queries()
-# (registration-order prefix; counted against CORRECTNESS_r01..r09).
-# Round-10 ordering lives in _CHANGED_R10/_STALE_PRIORITY_R10 below
-# (the r9 verdict's item-1 list). The r9 rationale is kept for the
-# tail ordering:
-#   1. Queries whose IMPLEMENTATION changed this round lead —
-#      shared_state_at_risk first (its plan changed in r8 AFTER its
-#      r7 driver row, and again in r9: pid-scoped state dir), then
-#      the queries touched by the r9 work: the fixed-count ANN eval
-#      query sets (ann_range_search / knn_label_vote /
-#      mmr_diversified_topk), ann_cosine_ivf (candidate-stage
-#      refactor shared with the new range variant),
-#      account_creation_dist (work_budget_pairs default reverted to
-#      None per ADVICE), customs_prefilter_split + parse_normalize
-#      (strip_envelopes batching + synth/parse barrier), and the four
-#      copurchase-family queries (basket-pair explode rewrite).
-#   2. NEW round-9 queries (never driver-checked).
-#   3. The 32 queries whose last green row is r3 (the r8 verdict's
-#      explicit list). 12 + 7 + 32 = 51, so the LAST r3-stale row
-#      (waiting_orders_suppliers) misses the 50-row prefix and heads
-#      the r10 backlog — changed-code and never-checked rows outrank
-#      stale-but-valid evidence.
-#   4. Then the rest, stalest last-green row first (r4 -> r6 -> r7 ->
-#      r8), computed from CORRECTNESS_r0*.json.
-_CHANGED_R9 = [
-    "shared_state_at_risk",
-    "ann_range_search", "knn_label_vote", "mmr_diversified_topk",
-    "ann_cosine_ivf", "account_creation_dist",
-    "customs_prefilter_split", "parse_normalize",
-    "copurchase_pagerank", "copurchase_link_jaccard",
-    "copurchase_triangles", "frequent_itemsets",
+# A CORRECTNESS_r*.json file records exactly the FIRST 50 rows of
+# queries(), so the order decides what gets re-verified. CHANGED leads
+# it: every query whose plan changed after the newest CORRECTNESS
+# file. Add a name here in the change that alters its plan; drop it
+# once a CORRECTNESS file records it green. The rest follow
+# stalest-evidence first (see _ordered).
+CHANGED = [
+    # connected components: one aggregate and one probe per round
+    "dedup_clusters", "cluster_canonical_docs", "split_leakage_check",
+    # shingle-kernel consumers with no after-plan evidence
+    "dedup_minhash_lsh", "decontaminate", "bloom_decontaminate",
+    "dedup_ngram_jaccard",
+    # LSH buckets: guarded fixed-point conversion in both forms
+    "ann_cosine_lsh", "dedup_embedding_cosine", "ann_cosine_lsh_multiprobe",
 ]
 
-# NEW in round 9 — never driver-checked; each landed with a
-# non-vacuous sf0.01 oracle, a plan assertion, and a SCALE.md entry.
-#
-# r10 PREFIX OBLIGATION (changed after this prefix was frozen): the
-# decontamination family's eval split became fixed-count late in r9
-# (STEPUP_r09 light_band note) — `decontaminate` and
-# `contamination_overlap_fraction` must LEAD the r10 prefix;
-# `bloom_decontaminate` and `training_data_pipeline` sit in the
-# r4-stale set that is due next anyway.
-_NEW_R9: list[str] = [
-    "ann_range_search_ivf", "bigram_pmi_collocations",
-    "token_simpson_index", "duplicate_ngram_fraction",
-    "slo_multiwindow_burn", "burstiness_fano_factor",
-    "minhash_jaccard_estimate_error",
-]
 
-# r8 prefix legacy lists (now r8-fresh; kept for the stale ordering
-# of the catalog tail below).
-_STALE_PRIORITY_R8 = [
-    "etd_finding_matcher", "aws_behavior_match",
-    "amo_addon_matcher", "amo_multi_submit", "amo_cloud_submission",
-    "amo_fxa_ban_pattern", "amo_report_restriction",
-    "source_login_failure_dist", "content_server_variance",
-    "customs_activity_monitor", "login_failure_at_risk_account",
-    "customs_alert_fanout", "customs_prefilter_split", "alert_pipeline",
-    "violation_projection", "notify_merge",
-    "kcenter_coreset_picks", "multimodal_phash_dedup",
-]
+def _green(row: dict) -> bool:
+    return (
+        bool(row.get("rows_match"))
+        and bool(row.get("schema_match"))
+        and bool(row.get("hash_match"))
+        and row.get("err") is None
+    )
 
-_NEW_R8: list[str] = [
-    "c4_quality_rules", "contamination_overlap_fraction",
-    "priority_sample_weighted", "embedding_norm_outliers",
-    "ann_range_search", "password_spray_detection",
-    "dormant_reactivation_burst", "latency_p95_slo",
-    "error_budget_burn", "multimodal_frame_sample",
-    "mmr_diversified_topk", "knn_label_vote",
-    "part_supplier_variety", "latency_p95_regression",
-    "multimodal_audio_energy", "user_feature_snapshot",
-    "record_linkage_blocking",
-]
 
-# Last green driver row r2 (remaining 27 of the old 43 re-greened in
-# r7; these 27 are now r7-fresh and live in _FRESH_R7 below).
-_STALE_R2: list[str] = []
+def _rounds() -> list[tuple[int, dict]]:
+    """[(round, {query: row})] from the CORRECTNESS_r*.json files next
+    to this module, oldest round first. The round comes from the
+    basename only, so a checkout path like /home/u/repo_r2 cannot
+    shadow it."""
+    out = []
+    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m is not None:
+            with open(path) as f:
+                out.append((int(m.group(1)), json.load(f)))
+    return sorted(out, key=lambda r: r[0])
 
-# Last green driver row r3 (47 entries).
-_STALE_R3 = [
-    "status_code_rate_analysis", "endpoint_abuse_analysis",
-    "alert_summary_delta", "account_creation_dist", "assume_role_correlate",
-    "private_relay_forward", "password_reset_abuse", "account_enumeration",
-    "customs_pipeline", "dedup_ngram_jaccard", "dedup_simhash",
-    "ann_cosine_ivf", "ann_cosine_pq", "embedding_int8_quantize",
-    "gopher_topngram", "dedup_embedding_cosine", "part_supplier_stats",
-    "supplier_return_candidates", "kmeans_codebook", "passage_dedup",
-    "ngram_corpus_stats", "shipping_priority", "customer_order_distribution",
-    "dedup_simhash_pairs", "tfidf_top_terms", "postprocessing_pipeline",
-    "small_lot_revenue", "dormant_customer_balance", "funnel_conversion",
-    "retention_cohorts", "timeseries_resample", "min_cost_supplier",
-    "nation_volume_shipping", "nation_market_share", "product_type_profit",
-    "returned_item_customers", "important_parts_value", "promo_revenue_ratio",
-    "top_revenue_supplier", "disjunctive_quantity_revenue",
-    "waiting_orders_suppliers", "asof_join_purchase",
-    "interval_error_click_count", "rolling_user_value", "scd2_user_segment",
-    "robust_outlier_mad", "last_touch_attribution",
-]
 
-# Last green driver row r4 (45 entries).
-_STALE_R4 = [
-    "hard_limit_analysis", "error_rate_analysis", "detect_nat",
-    "endpoint_sequence_abuse", "session_analysis", "alert_summary_sliding",
-    "source_correlation", "event_filter_dsl", "cidr_exclusion",
-    "geo_velocity", "levenshtein_similarity", "ua_blocklist",
-    "alert_suppression", "authprofile_parse_filters", "global_stats",
-    "crit_object_analyze", "identity_resolution", "customs_features",
-    "multi_ip_login", "watchlist_match", "guardduty_finding_matcher",
-    "addon_multi_match", "fxa_alias_abuse", "pioneer_exfil_sessions",
-    "customs_summary", "email_normalize", "dedup_exact", "dedup_minhash_lsh",
-    "ann_cosine_topk", "sequence_packing", "user_event_pivot",
-    "value_deciles", "training_data_pipeline", "bloom_decontaminate",
-    "containment_dedup", "doc_language_mix", "cdc_merge_upserts",
-    "window_dedup_latest", "approx_quantile_sketch", "value_histogram",
-    "order_rollup_revenue", "url_normalize_stats", "sessionize_clickstream",
-    "pivot_event_matrix", "parse_normalize",
-]
-
-# Green in round 6 (kcenter_coreset_picks / multimodal_phash_dedup
-# moved up to _STALE_PRIORITY_R8 — code changed after their r6 row).
-_FRESH_R6 = [
-    "threshold_analysis", "rag_chunk_passages", "exact_substring_dedup",
-    "countmin_heavy_hitters", "epoch_mixture_plan", "bpe_train_merges",
-    "bpe_token_counts", "winnowing_fingerprints", "inverted_index_stats",
-    "winnowing_plagiarism_pairs", "prefix_jaccard_join",
-    "gini_token_diversity", "vocab_growth_curve", "source_rank_normalize",
-    "ann_cosine_lsh", "embedding_cluster_summary", "semdedup",
-    "sketch_distinct_users", "dataset_split_assign", "mixture_budget_sample",
-    "split_leakage_check", "rrf_hybrid_fusion",
-    "suspicious_ip_cooccurrence",
-    "data_quality_checks", "skew_diagnosis", "zorder_layout_stats",
-    "hourly_trend_slopes", "ivm_incremental_agg", "frequent_itemsets",
-    "changepoint_mean_shift", "snapshot_diff", "markov_transitions",
-    "copurchase_triangles", "sliding_distinct_hll_merge",
-    "pareto_frontier_parts", "weighted_median_price", "theil_sen_trend",
-    "copurchase_pagerank", "benford_first_digit", "ks_drift_orders",
-    "hll_intersection_overlap", "beacon_detection", "copurchase_link_jaccard",
-    "reputation_decay", "top_session_paths", "transition_dwell_times",
-    "large_order_customers", "scd2_point_in_time_join",
-]
-
-# Green in round 7 (freshest evidence; deepest backlog region).
-_FRESH_R7 = [
-    "corpus_drift", "oov_rate_filter", "seasonal_anomaly",
-    "shared_state_at_risk", "reservoir_sample_per_key",
-    "lm_typicality_filter", "consistent_hash_assignment",
-    "autocorrelation_lags",
-    "ngram_novelty_score", "dsir_importance_weights",
-    "bm25_topk_retrieval", "kcore_decomposition", "cluster_canonical_docs",
-    "tokenizer_fertility", "session_overlap_pairs",
-    "new_vs_returning_users", "category_lift_matrix",
-    "telemetry_gap_detection", "khop_reachability",
-    "record_linkage_sorted_neighborhood",
-    "text_stats", "text_quality",
-    "alert_summary_rollup", "auth_state_decision", "session_limit_analysis",
-    "per_endpoint_error_rate", "threshold_with_nat_exclusion",
-    "salted_hard_limit", "authprofile_pipeline", "status_comparator",
-    "source_login_failure", "dedup_clusters", "ann_cosine_lsh_multiprobe",
-    "token_count_bpe", "text_repetition", "regional_revenue",
-    "stratified_sample", "decontaminate", "pii_scrub",
-    "quality_filter_pipeline", "language_id", "doc_fingerprint",
-    "multimodal_metadata", "pricing_summary", "segment_revenue",
-    "priority_semijoin", "topk_per_group", "events_dim_join",
-    "xff_client_select",
-]
-
-# The 32 r3-stale rows the r8 verdict ordered into the r9 prefix, in
-# the verdict's (alphabetical) order so the one row that misses the
-# 50-row cut is the verdict-last one (waiting_orders_suppliers).
-_STALE_R3_PRIORITY_R9 = [
-    "asof_join_purchase", "customer_order_distribution",
-    "dedup_embedding_cosine", "dedup_simhash_pairs",
-    "disjunctive_quantity_revenue", "dormant_customer_balance",
-    "funnel_conversion", "important_parts_value",
-    "interval_error_click_count", "kmeans_codebook",
-    "last_touch_attribution", "min_cost_supplier",
-    "nation_market_share", "nation_volume_shipping",
-    "ngram_corpus_stats", "part_supplier_stats", "passage_dedup",
-    "postprocessing_pipeline", "product_type_profit",
-    "promo_revenue_ratio", "retention_cohorts",
-    "returned_item_customers", "robust_outlier_mad",
-    "rolling_user_value", "scd2_user_segment", "shipping_priority",
-    "small_lot_revenue", "supplier_return_candidates",
-    "tfidf_top_terms", "timeseries_resample", "top_revenue_supplier",
-    "waiting_orders_suppliers",
-]
-
-# Round-10 prefix (the r9 verdict's item-1 ordering): changed-code
-# rows first, then the last r3-stale row, then the r4-stale set.
-_CHANGED_R10 = [
-    # the decontamination family's eval split became fixed-count AFTER
-    # the r9 prefix froze (self-recorded obligation above; r9 verdict
-    # What's-wrong item 1) — these four LEAD the prefix
-    "decontaminate", "contamination_overlap_fraction",
-    "bloom_decontaminate", "training_data_pipeline",
-    # code changed in round 10: the codegen pair-expansion rewrite +
-    # eager edge checkpoint (kcore/khop), the _jaccard_bitmask_path
-    # identical-set leg (reached via prefix_jaccard_join), the
-    # 60-bit/3-band simhash pairs query, the bits-parametrized
-    # simhash() fingerprint (dedup_simhash re-greens the 16-bit
-    # behavior), and shared_state_at_risk's atexit state-dir cleanup
-    # (result-neutral, re-greened on the r9 precedent)
-    "kcore_decomposition", "khop_reachability", "prefix_jaccard_join",
-    "dedup_simhash_pairs", "dedup_simhash", "shared_state_at_risk",
-    # late-r10 eager-checkpoint switch (result-neutral, A/B
-    # hash-verified identical + sf0.01 parity green; re-greened on
-    # the r9 precedent for result-neutral changes)
-    "copurchase_triangles", "frequent_itemsets", "copurchase_link_jaccard",
-]
-
-# The one remaining r3-stale row (missed the r9 cut), then the
-# r4-stale rows in their check_union (registration) order (44 minus
-# bloom_decontaminate / training_data_pipeline, already in
-# _CHANGED_R10). 13 + 1 + 42 = 56 > 50, so the LAST 6 r4 rows
-# (value_histogram, order_rollup_revenue, url_normalize_stats,
-# sessionize_clickstream, pivot_event_matrix — plus
-# approx_quantile_sketch at slot 51) miss this prefix and head the
-# r11 backlog — changed-code and oldest-evidence rows outrank
-# stale-but-valid evidence.
-_STALE_PRIORITY_R10 = [
-    "waiting_orders_suppliers",
-    "hard_limit_analysis", "error_rate_analysis", "detect_nat",
-    "endpoint_sequence_abuse", "session_analysis", "alert_summary_sliding",
-    "source_correlation", "event_filter_dsl", "cidr_exclusion",
-    "geo_velocity", "levenshtein_similarity", "ua_blocklist",
-    "alert_suppression", "authprofile_parse_filters", "global_stats",
-    "crit_object_analyze", "identity_resolution", "customs_features",
-    "multi_ip_login", "watchlist_match", "guardduty_finding_matcher",
-    "addon_multi_match", "fxa_alias_abuse", "pioneer_exfil_sessions",
-    "customs_summary", "email_normalize", "dedup_exact",
-    "dedup_minhash_lsh", "ann_cosine_topk", "sequence_packing",
-    "user_event_pivot", "value_deciles", "containment_dedup",
-    "doc_language_mix", "cdc_merge_upserts", "window_dedup_latest",
-    "approx_quantile_sketch", "value_histogram", "order_rollup_revenue",
-    "url_normalize_stats", "sessionize_clickstream", "pivot_event_matrix",
-]
-
-# Round-11 prefix (the r10 verdict's item-1 ordering, amended by the
-# standing rule that CHANGED-CODE rows outrank stale-but-valid
-# evidence): the one NEW query leads (never driver-checked), then the
-# changed-code rows — khop (BFS accumulator lazy -> eager
-# localCheckpoint, r10 verdict item 2) plus the three queries whose
-# PLANS changed in the 30x step-up work late this round:
-# prefix_jaccard_join (chunk-grid candidates, vocab-tiered mask
-# verify, dense-corpus block-nested sweep), dedup_simhash_pairs and
-# multimodal_phash_dedup (hamming_pairs pair stage rewritten to the
-# shared _chunked_self_pairs chunk grid — the quadratic array-shuffle
-# fix). neardup_pair_recall's simhash candidate leg shares that
-# operator and is the new row anyway. All four re-verified at sf0.01
-# (233/233 local gate, value parity). Then the pre-r7 evidence
-# backlog: the 6 r4-stale rows and 42 of the 43 r6-stale rows in
-# check_union order (the list below is 53 names; the driver records
-# only the FIRST 50, so its last three entries — top_session_paths,
-# transition_dwell_times, large_order_customers — fell outside the
-# r11 cut and join scd2_point_in_time_join at the head of the r12
-# backlog, as CORRECTNESS_r11/check_union confirm) — changed-code
-# rows outrank stale-but-valid evidence.
-# kcore_decomposition's oracle-construction changed this round too
-# (support threshold now derives from the shared _MIN_PAIR_SUPP
-# constant) but the emitted SQL string is verified byte-identical,
-# so its r10 row stands.
-_NEW_R11 = ["neardup_pair_recall"]
-_CHANGED_R11 = [
-    "khop_reachability", "prefix_jaccard_join",
-    "dedup_simhash_pairs", "multimodal_phash_dedup",
-]
-_STALE_PRIORITY_R11 = [
-    # r4-stale (6)
-    "approx_quantile_sketch", "value_histogram", "order_rollup_revenue",
-    "url_normalize_stats", "sessionize_clickstream", "pivot_event_matrix",
-    # r6-stale (first 42 of 43, check_union order)
-    "threshold_analysis", "rag_chunk_passages", "exact_substring_dedup",
-    "countmin_heavy_hitters", "epoch_mixture_plan", "bpe_train_merges",
-    "bpe_token_counts", "winnowing_fingerprints", "inverted_index_stats",
-    "winnowing_plagiarism_pairs", "gini_token_diversity",
-    "vocab_growth_curve", "source_rank_normalize", "ann_cosine_lsh",
-    "embedding_cluster_summary", "semdedup", "sketch_distinct_users",
-    "dataset_split_assign", "mixture_budget_sample", "split_leakage_check",
-    "rrf_hybrid_fusion", "suspicious_ip_cooccurrence",
-    "data_quality_checks", "skew_diagnosis", "zorder_layout_stats",
-    "hourly_trend_slopes", "ivm_incremental_agg", "changepoint_mean_shift",
-    "snapshot_diff", "markov_transitions", "sliding_distinct_hll_merge",
-    "pareto_frontier_parts", "weighted_median_price", "theil_sen_trend",
-    "benford_first_digit", "ks_drift_orders", "hll_intersection_overlap",
-    "beacon_detection", "reputation_decay", "top_session_paths",
-    "transition_dwell_times", "large_order_customers",
-]
-
-# Round-12 prefix (the r11 verdict's item-1 ordering, amended by the
-# standing rule: CHANGED-CODE rows outrank stale-but-valid evidence).
-# The r12 optimization round touched the plan of 18 queries —
-# prefix_jaccard_join (emission-derived pair-dedup width, byte-bounded
-# verify broadcasts), the _shingled one-aggregate rewrite (ngram
-# jaccard / containment / decontaminate / bloom / training pipeline /
-# neardup truth leg), the simhash single-expression fingerprint
-# (dedup_simhash, dedup_simhash_pairs, neardup simhash leg), the CC
-# loop persist-fusion (dedup_clusters, cluster_canonical_docs,
-# split_leakage_check), the MMR HOF-aggregate rewrite, the shared-
-# hash minhash candidate leg (minhash_jaccard_estimate_error), the
-# aggregate-before-shuffle pair (dsir_importance_weights,
-# oov_rate_filter), and the Levenshtein prefix-strip pair
-# (account_creation_dist, record_linkage_blocking) — every
-# one re-verified value-exact vs the DuckDB oracle at sf0.01 in-round.
-# These 18 lead; then the stale backlog in check_union order (4
-# r6-stale rows, then the r7-stale rows). 18 + 4 + 45 > 50, so the
-# last r7 rows overflow to the r13 prefix (changed-code outranks
-# stale — the overflow is the standing rule working as intended;
-# cluster_canonical_docs and dedup_clusters appear in both lists and
-# are counted once by the _seen dedup).
-# Round-13 prefix (standing rule: CHANGED-CODE rows outrank stale
-# evidence). The r13 optimization round changed the plan of 19
-# queries — the BPE literal-merge family (bpe_train_merges,
-# bpe_token_counts, tokenizer_fertility), the minhash shingle-hash
-# checkpoint (minhash_jaccard_estimate_error), the PQ/IVF/LSH
-# literal-codebook map kernels (ann_cosine_pq, ann_cosine_ivf,
-# ann_range_search_ivf, ann_cosine_lsh, semdedup,
-# embedding_cluster_summary, dedup_embedding_cosine), the one-
-# projection quality pipeline (quality_filter_pipeline,
-# training_data_pipeline), carry_cols (doc_language_mix), df-as-
-# window (tfidf_top_terms), grouped winnowing pairs
-# (winnowing_plagiarism_pairs), the kcore/khop last-round-checkpoint
-# skip, and the edit-distance length-gap prune
-# (record_linkage_blocking) — plus multimodal_phash_dedup, whose
-# plan is unchanged but whose pandas-UDF internals were vectorized
-# (bit-identical by test, listed for scrutiny anyway). Every one
-# re-verified value-exact vs the DuckDB oracle at sf0.01 in-round.
-_CHANGED_R13 = [
-    "quality_filter_pipeline", "training_data_pipeline",
-    "semdedup", "embedding_cluster_summary", "dedup_embedding_cosine",
-    "ann_cosine_lsh", "ann_cosine_ivf", "ann_range_search_ivf",
-    "ann_cosine_pq", "minhash_jaccard_estimate_error",
-    "bpe_train_merges", "bpe_token_counts", "tokenizer_fertility",
-    "tfidf_top_terms", "winnowing_plagiarism_pairs",
-    "kcore_decomposition", "khop_reachability",
-    "record_linkage_blocking", "doc_language_mix",
-    "multimodal_phash_dedup",
-]
-
-_CHANGED_R12 = [
-    "prefix_jaccard_join",
-    "mmr_diversified_topk", "neardup_pair_recall",
-    "dedup_simhash_pairs", "dedup_simhash",
-    "minhash_jaccard_estimate_error", "dedup_ngram_jaccard",
-    "containment_dedup", "decontaminate", "bloom_decontaminate",
-    "training_data_pipeline", "dedup_clusters",
-    "cluster_canonical_docs", "split_leakage_check",
-    "dsir_importance_weights", "oov_rate_filter",
-    "account_creation_dist", "record_linkage_blocking",
-]
-_STALE_PRIORITY_R12 = [
-    # r6-stale (4)
-    "top_session_paths", "transition_dwell_times",
-    "large_order_customers", "scd2_point_in_time_join",
-    # r7-stale (45, check_union order)
-    "corpus_drift", "oov_rate_filter", "seasonal_anomaly",
-    "reservoir_sample_per_key", "lm_typicality_filter",
-    "consistent_hash_assignment", "autocorrelation_lags",
-    "ngram_novelty_score", "dsir_importance_weights",
-    "bm25_topk_retrieval", "cluster_canonical_docs",
-    "tokenizer_fertility", "session_overlap_pairs",
-    "new_vs_returning_users", "category_lift_matrix",
-    "telemetry_gap_detection", "record_linkage_sorted_neighborhood",
-    "text_stats", "text_quality", "alert_summary_rollup",
-    "auth_state_decision", "session_limit_analysis",
-    "per_endpoint_error_rate", "threshold_with_nat_exclusion",
-    "salted_hard_limit", "authprofile_pipeline", "status_comparator",
-    "source_login_failure", "dedup_clusters",
-    "ann_cosine_lsh_multiprobe", "token_count_bpe", "text_repetition",
-    "regional_revenue", "stratified_sample", "pii_scrub",
-    "quality_filter_pipeline", "language_id", "doc_fingerprint",
-    "multimodal_metadata", "pricing_summary", "segment_revenue",
-    "priority_semijoin", "topk_per_group", "events_dim_join",
-    "xff_client_select",
-]
-
-_seen: set[str] = set()
-_VERIFY_FIRST = [
-    n
-    for n in [
-        *_CHANGED_R13,
-        *_CHANGED_R12, *_STALE_PRIORITY_R12,
-        *_NEW_R11, *_CHANGED_R11, *_STALE_PRIORITY_R11,
-        *_CHANGED_R10, *_STALE_PRIORITY_R10,
-        *_CHANGED_R9, *_NEW_R9, *_STALE_R3_PRIORITY_R9,
-        *_STALE_PRIORITY_R8, *_NEW_R8,
-        *_STALE_R2, *_STALE_R3, *_STALE_R4, *_FRESH_R6, *_FRESH_R7,
-    ]
-    if not (n in _seen or _seen.add(n))
-]
+def _last_green() -> dict[str, int]:
+    """{query: newest round with a green row}; never-green queries are
+    absent."""
+    return {
+        name: rnd
+        for rnd, rows in _rounds()
+        for name, row in rows.items()
+        if _green(row)
+    }
 
 
 def _ordered():
+    """CHANGED first, then the rest of the registry stalest last-green
+    round first (never-green queries lead); ties keep registration
+    order."""
     reg = registry()
-    missing = [n for n in _VERIFY_FIRST if n not in reg]
-    assert not missing, f"_VERIFY_FIRST references unknown queries: {missing}"
-    rest = [n for n in reg if n not in set(_VERIFY_FIRST)]
-    return {n: reg[n] for n in [*_VERIFY_FIRST, *rest]}
+    missing = [n for n in CHANGED if n not in reg]
+    assert not missing, f"CHANGED references unknown queries: {missing}"
+    last = _last_green()
+    rest = sorted((n for n in reg if n not in CHANGED), key=lambda n: last.get(n, 0))
+    return {n: reg[n] for n in [*CHANGED, *rest]}
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -113,14 +113,82 @@ LSH_SCALE = 1 << 20
 _LSH_MAP_FORM_MAX_PLANES = 8
 
 
-def _fixed_point_plain_hof_sql(vec_col: str) -> str:
-    """SQL for the UNGUARDED fixed-point conversion as one transform()
-    — the exact twin of the relational LSH path's floor(x * 2^20)
-    (which carries no range guard; the guarded variant backs the
-    IVF/PQ paths via `_fixed_point_hof_sql`)."""
+# |component| bound for the fixed-point int64 paths: a scaled component
+# is at most B * 2^20, a product (B * 2^20)^2 = B^2 * 2^40, and a dot
+# sums `dim` of them — safe iff dim * B^2 * 2^40 < 2^63, i.e.
+# B <= sqrt(2^23 / dim) (dim 64 -> B ~ 362). Components past that
+# overflow — and Spark (non-ANSI) WRAPS silently where the DuckDB
+# oracle's BIGINT errors, so the divergence would be one-sided. B = 300
+# is valid to dim ~93; ~unit-norm embeddings are far inside it.
+#
+# One contract on every fixed-point kernel (LSH in both forms, IVF
+# assign/probe, PQ encode and LUT): a NULL component or one with
+# |x| > B fails the query through raise_error (USER_RAISED_EXCEPTION;
+# the message names the bound for an out-of-range value and is "null"
+# for a null one). A null or empty VECTOR is dropped by the LSH and
+# IVF kernels and by the PQ query side; the PQ corpus encode needs
+# exactly n_sub * sub_dim components per vector.
+INT_COMPONENT_BOUND = 300.0
+
+_RANGE_MSG = (
+    f"fixed-point component out of range (|x| > {INT_COMPONENT_BOUND}): "
+    "normalize the corpus before the bucketed similarity paths; got "
+)
+
+
+def _fixed_point(x: Column) -> Column:
+    """floor(x * 2^20) as int64 under the INT_COMPONENT_BOUND guard."""
+    x = x.cast("double")
+    return F.when(
+        F.abs(x) <= F.lit(INT_COMPONENT_BOUND),
+        F.floor(x * F.lit(float(LSH_SCALE))).cast("long"),
+    ).otherwise(
+        F.raise_error(F.concat(F.lit(_RANGE_MSG), x.cast("string"))).cast("long")
+    )
+
+
+def _fixed_point_hof_sql(vec_col: str) -> str:
+    """SQL twin of `_fixed_point` applied to a whole vector as ONE
+    transform(): identical floor/scale arithmetic and identical
+    raise."""
     return (
-        f"transform({vec_col}, __x -> CAST(floor(CAST(__x AS DOUBLE) * "
-        f"{float(LSH_SCALE)}D) AS BIGINT))"
+        f"transform({vec_col}, __x -> CASE "
+        f"WHEN abs(CAST(__x AS DOUBLE)) <= {INT_COMPONENT_BOUND}D "
+        f"THEN CAST(floor(CAST(__x AS DOUBLE) * {float(LSH_SCALE)}D) "
+        f"AS BIGINT) "
+        f"ELSE CAST(raise_error(concat('{_RANGE_MSG}', "
+        f"CAST(CAST(__x AS DOUBLE) AS STRING))) AS BIGINT) END)"
+    )
+
+
+def _fixed_point_rows(df: DataFrame, id_col: str, vec_col: str, *keep: str) -> DataFrame:
+    """(id, *keep, __xs) with __xs the converted vector, one row per
+    non-null, non-empty vector."""
+    return (
+        spread(df)
+        .where(F.size(F.col(vec_col)) >= 1)
+        .selectExpr(id_col, *keep, f"{_fixed_point_hof_sql(vec_col)} AS __xs")
+    )
+
+
+def _int_dot_sql(coefs: list[int]) -> str:
+    """SQL expr for the int64 dot of a materialized `__xs` fixed-point
+    array column with literal integer coefficients (a left fold;
+    integer addition makes it order-independent)."""
+    cs = ", ".join(f"{int(c)}L" for c in coefs)
+    return (
+        f"aggregate(zip_with(__xs, array({cs}), "
+        f"(x, c) -> x * c), 0L, (a, b) -> a + b)"
+    )
+
+
+def _lsh_pack_sql(table: list[list[float]]) -> str:
+    """SQL expr for one LSH table's sign-packed bucket id over a
+    materialized `__xs` fixed-point array column (literal integer
+    plane coefficients — see lsh_buckets_relational)."""
+    return " + ".join(
+        f"(CASE WHEN {_int_dot_sql(plane)} > 0 THEN {2 ** i} ELSE 0 END)"
+        for i, plane in enumerate(table)
     )
 
 
@@ -133,28 +201,21 @@ def lsh_buckets_relational(
     """(id, vec, __tbl, __bkt) — one row per (vector, LSH table):
     fixed-point the vector once, one literal-coefficient integer dot
     per (table, plane), sign-pack per table, posexplode the per-table
-    buckets.
+    buckets. Malformed input follows the INT_COMPONENT_BOUND contract
+    in both forms.
 
-    r13 — the form is PLANE-COUNT-adaptive, both branches measured
+    The form is PLANE-COUNT-adaptive, both branches measured
     interleaved at sf0.1 (OPTIMIZATION_r13.md):
 
     MAP form (total planes <= _LSH_MAP_FORM_MAX_PLANES): zero
-    exchanges — fixed-point once via transform(), each plane dot is
-    `aggregate(zip_with(__xs, <literal coef array>, *), 0L, +)`
-    (integer addition is commutative, so the left-fold equals the
-    shuffled sum bit-for-bit). The r9 objections are engineered
-    around, not ignored: (1) CollapseProject inlining — the
-    fixed-point array, the plane dots, and the bucket pack live in
-    THREE layered projections; __xs is multi-referenced and non-cheap
-    so CollapseProject leaves the layers alone, and each dot is
-    referenced exactly once by the pack; (2) Generate re-evaluation —
-    the posexplode consumes a MATERIALIZED pack-array column
-    (re-evaluating an attribute reference per output row is free);
-    (3) py4j cost — the dot exprs are parsed SQL strings. Null/empty
-    vectors are filtered up front (the posexplode form emitted no
-    rows for them). Measured at 4 planes: dedup_embedding_cosine
-    1.32 -> 1.09 s, ann_cosine_lsh ~flat-to-better, semdedup/
-    embedding_cluster_summary win big with the joins also removed.
+    exchanges. The vector is converted once by `_fixed_point_rows`
+    into its own projection (__xs is multi-referenced and non-cheap,
+    so CollapseProject keeps the layer), each table's bucket is
+    `_lsh_pack_sql` over it (integer addition is commutative, so the
+    left-fold equals the shuffled sum bit-for-bit), and the posexplode
+    consumes the MATERIALIZED pack-array column (re-evaluating an
+    attribute reference per output row is free). Null/empty vectors
+    are filtered up front, matching the relational form.
 
     RELATIONAL form (above the cutoff): posexplode + one codegen
     integer agg per plane + sign-pack. HOFs evaluate INTERPRETED, and
@@ -164,30 +225,9 @@ def lsh_buckets_relational(
     min, so the wide-table path keeps codegen.
     """
     if sum(len(t) for t in tables) <= _LSH_MAP_FORM_MAX_PLANES:
-        base = (
-            spread(df)
-            .where(F.size(F.col(vec_col)) >= 1)
-            .selectExpr(
-                id_col, vec_col, f"{_fixed_point_plain_hof_sql(vec_col)} AS __xs"
-            )
-        )
-        dot_exprs = []
-        for t, table in enumerate(tables):
-            for i, plane in enumerate(table):
-                coefs = ", ".join(f"{int(v)}L" for v in plane)
-                dot_exprs.append(
-                    f"aggregate(zip_with(__xs, array({coefs}), "
-                    f"(x, c) -> x * c), 0L, (a, b) -> a + b) AS __d_{t}_{i}"
-                )
-        dots = base.selectExpr(id_col, vec_col, *dot_exprs)
-        packed = ", ".join(
-            " + ".join(
-                f"(CASE WHEN __d_{t}_{i} > 0 THEN {2 ** i} ELSE 0 END)"
-                for i in range(len(table))
-            )
-            for t, table in enumerate(tables)
-        )
-        wide = dots.selectExpr(id_col, vec_col, f"array({packed}) AS __pk")
+        base = _fixed_point_rows(df, id_col, vec_col, vec_col)
+        packed = ", ".join(_lsh_pack_sql(table) for table in tables)
+        wide = base.selectExpr(id_col, vec_col, f"array({packed}) AS __pk")
         return wide.select(
             F.col(id_col),
             F.col(vec_col),
@@ -197,12 +237,8 @@ def lsh_buckets_relational(
         F.col(id_col), F.col(vec_col), F.posexplode(vec_col).alias("__j", "__x")
     )
     scaled = ex.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("__j"),
-        F.floor(F.col("__x").cast("double") * F.lit(float(LSH_SCALE)))
-        .cast("long")
-        .alias("__xs"),
+        F.col(id_col), F.col(vec_col), F.col("__j"),
+        _fixed_point(F.col("__x")).alias("__xs"),
     )
     # the vector rides through the agg via first() (one vector per id,
     # so deterministic) — cheaper than joining it back on id afterward
@@ -413,103 +449,14 @@ def cosine_topk_arrow(
     )
 
 
-# |component| bound for the fixed-point int64 paths: a scaled component
-# is at most B * 2^20, a product (B * 2^20)^2 = B^2 * 2^40, and a dot
-# sums `dim` of them — safe iff dim * B^2 * 2^40 < 2^63, i.e.
-# B <= sqrt(2^23 / dim) (dim 64 -> B ~ 362). Components past that
-# overflow — and Spark (non-ANSI) WRAPS silently where the DuckDB
-# oracle's BIGINT errors, so the divergence would be one-sided. The
-# contract (B = 300, valid to dim ~93; ~unit-norm embeddings are far
-# inside it) is therefore enforced loudly at the scale step.
-INT_COMPONENT_BOUND = 300.0
-
-
 def _int_exploded(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
     """(out_id, __j, __xs): vector exploded to fixed-point int64
     components — the order-independent, cross-engine-exact currency of
-    the bucketing paths (see LSH_SCALE). Components must satisfy
-    |x| <= INT_COMPONENT_BOUND (~unit-norm embeddings trivially do);
-    a non-normalized corpus fails with an explicit error instead of
-    silently wrapping int64."""
-    x = F.col("__x").cast("double")
-    scaled = F.when(
-        F.abs(x) <= F.lit(INT_COMPONENT_BOUND),
-        F.floor(x * F.lit(float(LSH_SCALE))).cast("long"),
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "fixed-point component out of range (|x| > "
-                    f"{INT_COMPONENT_BOUND}): normalize the corpus "
-                    "before the bucketed similarity paths; got "
-                ),
-                x.cast("string"),
-            )
-        ).cast("long")
-    )
+    the bucketing paths (see LSH_SCALE and INT_COMPONENT_BOUND)."""
     return (
         spread(df)
         .select(F.col(id_col).alias(out_id), F.posexplode(vec_col).alias("__j", "__x"))
-        .select(out_id, "__j", scaled.alias("__xs"))
-    )
-
-
-def ivf_cells(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(__vid, cid, __d, __rn): every vector scored against every
-    centroid by INTEGER fixed-point inner product, ranked per vector
-    (rank 1 = the vector's IVF cell).
-
-    The score is a MIPS (max-inner-product) coarse quantizer rather
-    than full cosine: skipping the centroid-norm division keeps the
-    whole assignment in int64 — exactly reproducible under any
-    summation order and by the DuckDB oracle's fold, with centroid-id
-    tie-break making ranks total. For ~unit-norm embeddings the cells
-    approximate cosine Voronoi cells; products are bounded by
-    64 * 2^40 < 2^47, no int64 overflow.
-
-    Shape for 100 TB: centroids are tiny and BROADCAST; the corpus is
-    posexploded map-side (|corpus| x dim rows), partial-agged back to
-    ~|corpus| x K rows before the one shuffle on (id, cid), then a
-    window argmax per id. One pass over the corpus, no corpus
-    self-join.
-    """
-    dots = _ivf_dots(vectors, centroids, id_col, vec_col)
-    w = Window.partitionBy("__vid").orderBy(F.col("__d").desc(), F.col("cid").asc())
-    return dots.withColumn("__rn", F.row_number().over(w))
-
-
-def _ivf_dots(vectors, centroids, id_col, vec_col):
-    ex = _int_exploded(vectors, id_col, vec_col, "__vid")
-    ce = _int_exploded(centroids, id_col, vec_col, "cid").withColumnRenamed(
-        "__xs", "__cs"
-    )
-    return (
-        ex.join(F.broadcast(ce), "__j")
-        .groupBy("__vid", "cid")
-        .agg(F.sum(F.col("__xs") * F.col("__cs")).alias("__d"))
-    )
-
-
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, cell): each vector's IVF cell — argmax integer MIPS dot,
-    ties to the lowest centroid id, via max_by hash-agg (no rank
-    window). The assignment half of `cosine_topk_ivf`, exposed for
-    clustering / cluster-summary consumers."""
-    dots = _ivf_dots(corpus, centroids, id_col, vec_col)
-    return (
-        dots.groupBy("__vid")
-        .agg(F.expr("max_by(cid, struct(__d, -cid))").alias("cell"))
-        .select(F.col("__vid").alias(id_col), "cell")
+        .select(out_id, "__j", _fixed_point(F.col("__x")).alias("__xs"))
     )
 
 
@@ -588,9 +535,9 @@ TRAIN_DRIVER_ROWS = 500_000
 
 def _collect_fixed_point(corpus, id_col, vec_col):
     """Corpus as (ids int64[n], X int64[n, d]) in LSH_SCALE fixed
-    point, replicating `_int_exploded`'s floor(x_double * 2^20) scaling
+    point, replicating `_fixed_point`'s floor(x_double * 2^20) scaling
     (float64 multiply + floor — IEEE-identical to the JVM) and its
-    |x| <= INT_COMPONENT_BOUND guard."""
+    guard (a null component arrives as NaN and fails it too)."""
     import numpy as np
 
     pdf = corpus.select(
@@ -598,12 +545,9 @@ def _collect_fixed_point(corpus, id_col, vec_col):
     ).toPandas()
     ids = pdf["id"].to_numpy(dtype="int64")
     X = np.stack([np.asarray(v, dtype="float64") for v in pdf["v"]])
-    if np.abs(X).max(initial=0.0) > INT_COMPONENT_BOUND:
-        raise ValueError(
-            "fixed-point component out of range "
-            f"(|x| > {INT_COMPONENT_BOUND}): normalize the corpus "
-            "before the bucketed similarity paths"
-        )
+    ok = np.abs(X) <= INT_COMPONENT_BOUND
+    if not ok.all():
+        raise ValueError(_RANGE_MSG + str(X[~ok][0]))
     return ids, np.floor(X * float(LSH_SCALE)).astype("int64")
 
 
@@ -635,7 +579,7 @@ def ivf_train_codebook(
     the cluster.
 
     Returns {cid: [component / 2^20 as double, ...]} — exact multiples
-    of 2^-20, so re-scaling through `_int_exploded` recovers the
+    of 2^-20, so re-scaling through `_ivf_cell_sql` recovers the
     trained integers losslessly.
     """
     import math
@@ -757,112 +701,101 @@ def _pq_train_numpy(corpus, seed_ids, n_sub, dim, iters, id_col, vec_col):
     return {k: v for k, v in sorted(out.items())}
 
 
-def ivf_codebook_df(
-    spark,
+def _ivf_dot_sql(centroid: list[float]) -> str:
+    """`_int_dot_sql` against a codebook centroid, floor-scaled to
+    fixed point like the vectors themselves."""
+    import math
+
+    return _int_dot_sql([math.floor(float(x) * LSH_SCALE) for x in centroid])
+
+
+def _ivf_cell_sql(codebook: dict[int, list[float]]) -> str:
+    """SQL expr for a vector's IVF cell over a materialized `__xs`
+    fixed-point array column: the argmax integer MIPS dot against the
+    codebook's literal centroids, ties to the LOWEST cid (array_max
+    over (d, -cid) structs). Codebook components are exact 2^-20
+    multiples (ivf_train_codebook), so the floor re-scale recovers the
+    trained integers losslessly."""
+    structs = [
+        f"named_struct('d', {_ivf_dot_sql(comps)}, "
+        f"'nc', CAST({-int(cid)} AS BIGINT))"
+        for cid, comps in sorted(codebook.items())
+    ]
+    body = (
+        f"array_max(array({', '.join(structs)})).nc"
+        if len(structs) > 1
+        else f"({structs[0]}).nc"
+    )
+    return f"CAST(-({body}) AS BIGINT)"
+
+
+def _ivf_probe_sql(codebook: dict[int, list[float]], nprobe: int) -> str:
+    """SQL expr for a vector's `nprobe` nearest cell ids over a
+    materialized `__xs` column: array_sort on (-d, cid) structs orders
+    by integer MIPS dot descending, ties to the lowest cid, and the
+    first `nprobe` entries are the probe set."""
+    structs = [
+        f"named_struct('nd', -({_ivf_dot_sql(comps)}), "
+        f"'cid', CAST({int(cid)} AS BIGINT))"
+        for cid, comps in sorted(codebook.items())
+    ]
+    return (
+        f"transform(slice(array_sort(array({', '.join(structs)})), 1, "
+        f"{int(nprobe)}), s -> s.cid)"
+    )
+
+
+def ivf_assign(
+    corpus: DataFrame,
     codebook: dict[int, list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    carry_cols: tuple = (),
 ) -> DataFrame:
-    """Materialize a trained codebook as the (id, vector) frame the
-    IVF operators consume (components are exact 2^-20 multiples, so
-    the fixed-point re-scale inside `_int_exploded` is lossless)."""
-    return spark.createDataFrame(
-        [(cid, comps) for cid, comps in sorted(codebook.items())],
-        f"{id_col} long, {vec_col} array<double>",
+    """(id, [carry_cols...,] cell): each vector's IVF cell (see
+    `_ivf_cell_sql`) — the assignment half of `cosine_topk_ivf`,
+    exposed for clustering / cluster-summary consumers. The trained
+    codebook enters as LITERAL arrays in one map projection: zero
+    exchanges, zero joins, |corpus| rows in flight. ``carry_cols``
+    projects extra input columns through the same pass so consumers
+    don't join the assignment back to the corpus on id. Malformed
+    input follows the INT_COMPONENT_BOUND contract."""
+    proj = _fixed_point_rows(corpus, id_col, vec_col, *carry_cols)
+    return proj.selectExpr(
+        id_col, *carry_cols, f"{_ivf_cell_sql(codebook)} AS cell"
     )
 
 
 def _ivf_candidates(
     queries: DataFrame,
     corpus: DataFrame,
-    centroid_ids: list[int] | None,
+    codebook: dict[int, list[float]],
     id_col: str,
     vec_col: str,
     nprobe: int,
-    queries_in_corpus: bool,
-    centroids: DataFrame | None,
-    codebook: dict[int, list[float]] | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id) candidate pairs from IVF cell probing —
     the shared head of `cosine_topk_ivf` and `cosine_range_ivf`.
 
-    When the caller holds the trained codebook DICT (`codebook`), both
-    assignment passes take the r13 literal map form: corpus cell =
-    `_ivf_cell_sql` argmax, query probe cells = `_ivf_probe_sql`
-    top-nprobe — zero joins/aggregates/exchanges before the cell-id
-    equi-join, where the relational form posexploded the corpus
-    against a broadcast centroid frame and paid an aggregate exchange
-    (guide §2.3/§2.4). Cell ids and probe sets are bit-identical
-    (integer dots, identical tie order); the `queries_in_corpus` dots
-    reuse becomes moot because query scoring is map-side over |Q|
-    rows."""
-    if codebook is not None:
-        corpus_cells = ivf_assign_literal(
-            corpus, codebook, id_col=id_col, vec_col=vec_col
-        ).select(
-            F.col(id_col).alias("neighbor_id"), F.col("cell").alias("__cell")
-        )
-        q_wide = (
-            spread(queries)
-            .where(F.size(F.col(vec_col)) >= 1)
-            .selectExpr(
-                id_col, f"{_fixed_point_hof_sql(vec_col)} AS __xs"
-            )
-            .selectExpr(
-                id_col, f"{_ivf_probe_sql(codebook, nprobe)} AS __cells"
-            )
-        )
-        query_cells = q_wide.select(
-            F.col(id_col).alias("query_id"),
-            F.explode("__cells").alias("__cell"),
-        )
-        return (
-            corpus_cells.join(F.broadcast(query_cells), "__cell")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id")
-        )
-    if centroids is not None:
-        cents = centroids
-    elif centroid_ids is not None:
-        cents = corpus.where(F.col(id_col).isin([int(i) for i in centroid_ids]))
-    else:
-        raise ValueError("pass centroids or centroid_ids")
-    # corpus assignment needs only the ARGMAX cell, so a max_by
-    # hash-agg replaces the rank window — no sort of the |corpus| x K
-    # score rows (the window's dominant cost at scale). struct(__d,
-    # -cid) max = highest dot, ties to the LOWEST centroid id, exactly
-    # the oracle's ORDER BY d DESC, cid ASC at rn = 1.
-    dots = _ivf_dots(corpus, cents, id_col, vec_col)
-    corpus_cells = (
-        dots.groupBy("__vid")
-        .agg(F.expr("max_by(cid, struct(__d, -cid))").alias("__cell"))
-        .select(F.col("__vid").alias("neighbor_id"), "__cell")
+    Both assignment passes are map-side projections over the literal
+    codebook: corpus cell = `ivf_assign`, query probe cells =
+    `_ivf_probe_sql` top-nprobe over the |Q| query rows. The only
+    exchange before scoring is the broadcast of the query cells into
+    the cell-id equi-join. Each corpus vector is in exactly one cell
+    and probe cells are distinct per query, so a (query, neighbor)
+    pair meets at most once — no dedup needed before scoring."""
+    corpus_cells = ivf_assign(
+        corpus, codebook, id_col=id_col, vec_col=vec_col
+    ).select(
+        F.col(id_col).alias("neighbor_id"), F.col("cell").alias("__cell")
     )
-    if queries_in_corpus:
-        # queries ⊆ corpus (dedup/self-search): the corpus assignment
-        # pass already scored every query vector — probe cells come
-        # from the SAME dots frame via a broadcast id semi-join + a
-        # window over only the query rows, halving the assignment work
-        q_dots = dots.join(
-            F.broadcast(queries.select(F.col(id_col).alias("__vid"))), "__vid"
-        )
-        w = Window.partitionBy("__vid").orderBy(
-            F.col("__d").desc(), F.col("cid").asc()
-        )
-        query_cells = (
-            q_dots.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= F.lit(int(nprobe)))
-            .select(F.col("__vid").alias("query_id"), F.col("cid").alias("__cell"))
-        )
-    else:
-        query_cells = (
-            ivf_cells(queries, cents, id_col, vec_col)
-            .where(F.col("__rn") <= F.lit(int(nprobe)))
-            .select(F.col("__vid").alias("query_id"), F.col("cid").alias("__cell"))
-        )
-    # each corpus vector is in exactly one cell and probe cells are
-    # distinct per query, so a (query, neighbor) pair meets at most
-    # once — no dedup needed before scoring
+    q_wide = _fixed_point_rows(queries, id_col, vec_col).selectExpr(
+        id_col, f"{_ivf_probe_sql(codebook, nprobe)} AS __cells"
+    )
+    query_cells = q_wide.select(
+        F.col(id_col).alias("query_id"),
+        F.explode("__cells").alias("__cell"),
+    )
     return (
         corpus_cells.join(F.broadcast(query_cells), "__cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -873,14 +806,11 @@ def _ivf_candidates(
 def cosine_topk_ivf(
     queries: DataFrame,
     corpus: DataFrame,
-    centroid_ids: list[int] | None = None,
+    codebook: dict[int, list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
-    queries_in_corpus: bool = False,
-    centroids: DataFrame | None = None,
-    codebook: dict[int, list[float]] | None = None,
 ) -> DataFrame:
     """Approximate top-k via IVF (inverted-file) bucketing: each corpus
     vector lands in exactly ONE cell (nearest centroid); each query
@@ -890,15 +820,11 @@ def cosine_topk_ivf(
     recall is tuned by nprobe (measured against the exact baseline in
     tests/test_similarity_recall.py).
 
-    Centroids come either from a trained codebook (`centroids`, see
-    `ivf_train_codebook`) or from the corpus by id (`centroid_ids`) —
-    the deterministic untrained fallback; the operator only assumes
-    the centroid set is small enough to broadcast, which both are.
+    `codebook` is {cid: centroid} — trained by `ivf_train_codebook`,
+    or any small set of vectors (e.g. corpus rows by id) as the
+    untrained fallback.
     """
-    cand = _ivf_candidates(
-        queries, corpus, centroid_ids, id_col, vec_col, nprobe,
-        queries_in_corpus, centroids, codebook,
-    )
+    cand = _ivf_candidates(queries, corpus, codebook, id_col, vec_col, nprobe)
     return _score_candidates(cand, queries, corpus, id_col, vec_col, k)
 
 
@@ -906,13 +832,10 @@ def cosine_range_ivf(
     queries: DataFrame,
     corpus: DataFrame,
     radius: float,
-    centroid_ids: list[int] | None = None,
+    codebook: dict[int, list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     nprobe: int = 2,
-    queries_in_corpus: bool = False,
-    centroids: DataFrame | None = None,
-    codebook: dict[int, list[float]] | None = None,
 ) -> DataFrame:
     """Approximate cosine RANGE (radius) search via IVF cell probing:
     all probed candidates with cosine >= `radius`, the sub-linear
@@ -922,10 +845,7 @@ def cosine_range_ivf(
     Output (query_id, neighbor_id, cosine), unranked: a radius query
     has no k, so no per-query window is needed — the filter is
     map-side over the scored candidates."""
-    cand = _ivf_candidates(
-        queries, corpus, centroid_ids, id_col, vec_col, nprobe,
-        queries_in_corpus, centroids, codebook,
-    )
+    cand = _ivf_candidates(queries, corpus, codebook, id_col, vec_col, nprobe)
     qv = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
@@ -1091,7 +1011,8 @@ def pq_train_codebooks(
 
 def pq_codebook_df(spark, codebooks: dict[tuple[int, int], list[int]]) -> DataFrame:
     """Trained codebooks as the exploded (m, cid, jj, cs) frame the
-    encode/LUT steps consume — M*K*sub_dim rows, always broadcast."""
+    query-side ADC lookup table (LUT) joins — M*K*sub_dim rows, always
+    broadcast."""
     return spark.createDataFrame(
         [
             (m, cid, jj, cs)
@@ -1102,62 +1023,41 @@ def pq_codebook_df(spark, codebooks: dict[tuple[int, int], list[int]]) -> DataFr
     )
 
 
-def _fixed_point_hof_sql(vec_col: str) -> str:
-    """SQL twin of `_int_exploded`'s guarded fixed-point conversion as
-    ONE transform() over the whole vector — identical floor/scale
-    arithmetic AND the identical out-of-range raise, so the
-    literal-codebook paths keep the operator's error contract."""
-    return (
-        f"transform({vec_col}, __x -> CASE "
-        f"WHEN abs(CAST(__x AS DOUBLE)) <= {INT_COMPONENT_BOUND}D "
-        f"THEN CAST(floor(CAST(__x AS DOUBLE) * {float(LSH_SCALE)}D) "
-        f"AS BIGINT) "
-        f"ELSE CAST(raise_error(concat('fixed-point component out of "
-        f"range (|x| > {INT_COMPONENT_BOUND}): normalize the corpus "
-        f"before the bucketed similarity paths; got ', "
-        f"CAST(CAST(__x AS DOUBLE) AS STRING))) AS BIGINT) END)"
-    )
+def _pq_shape(codebooks: dict[tuple[int, int], list[int]]) -> tuple[int, int]:
+    """(n_sub, sub_dim) of a {(m, cid): codeword} codebook."""
+    return len({m for m, _ in codebooks}), len(next(iter(codebooks.values())))
 
 
-def pq_encode_literal(
+def pq_encode(
     corpus: DataFrame,
     codebooks: dict[tuple[int, int], list[int]],
-    n_sub: int,
-    sub_dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(vec_id, __m, code) — same contract as :func:`pq_encode`, but
-    the trained codebook enters as LITERAL arrays in one scalar
-    projection instead of an exploded broadcast-join: per subspace the
-    argmin over K codes is `array_min(transform(<literal codewords>,
-    cw -> struct(Σ(xs-cs)², cid)))` (lexicographic struct order ==
-    min_by(cid, struct(d, cid)) ties-to-lowest), and the code row
-    stream is a map-side `stack`.
+    """(vec_id, __m, code): each vector's nearest codeword per subspace
+    (squared-L2 argmin, ties to the lowest code id). The output IS the
+    compressed corpus — M small ints per vector.
 
-    Why (r13, guide §2.3/§2.4): the relational encode posexplodes the
-    corpus 64-wide, fans out Kx against the codebook join, and pays
-    TWO aggregate exchanges (|corpus| x dim x K rows through the
-    first) — the committed before-plan showed 30 Exchanges for
-    ann_cosine_pq. This form encodes in ONE projection: zero
-    exchanges, zero joins, |corpus| rows in flight. HOF form, not the
-    unrolled per-term SQL: the first attempt unrolled all
-    n_sub*K*sub_dim squared-diff terms into scalar expressions and
-    Janino compilation of the resulting megamethod cost ~7 s PER PLAN
-    at sf0.1 (REJECTED, numbers in OPTIMIZATION_r13.md); the HOF tree
-    is ~50 nodes, evaluates interpreted per-row, and costs microseconds
-    at this K. Integer math is bit-identical (int64 sums of the same
-    terms; addition order immaterial).
+    The trained codebook enters as LITERAL arrays in one scalar
+    projection: per subspace the argmin over K codes is
+    `array_min(transform(<literal codewords>, cw -> struct(Σ(xs-cs)²,
+    cid)))` (lexicographic struct order gives ties-to-lowest), and the
+    code row stream is a map-side `stack` — zero exchanges, zero
+    joins, |corpus| rows in flight. HOF form, not unrolled per-term
+    SQL: unrolling all n_sub*K*sub_dim squared-diff terms made Janino
+    compile a megamethod for ~7 s per plan at sf0.1
+    (OPTIMIZATION_r13.md); the HOF tree is ~50 nodes and costs
+    microseconds per row at this K.
 
     Contract: vectors must carry exactly `n_sub * sub_dim` components
-    (the same fixed-dim assumption the PQ oracle's range(1, dim+1)
-    unnest encodes); each component passes the `_int_exploded` range
-    guard, preserving the raise-on-unnormalized behavior."""
+    (the fixed-dim assumption the PQ oracle's range(1, dim+1) unnest
+    encodes); components follow the INT_COMPONENT_BOUND contract."""
+    n_sub, sub_dim = _pq_shape(codebooks)
     proj = spread(corpus).selectExpr(
         id_col, f"{_fixed_point_hof_sql(vec_col)} AS __xs"
     )
     per_sub = []
-    for m in range(int(n_sub)):
+    for m in range(n_sub):
         cws = ", ".join(
             f"named_struct('c', {int(cid)}L, 'v', array("
             + ", ".join(f"{int(cs)}L" for cs in comps)
@@ -1165,7 +1065,7 @@ def pq_encode_literal(
             for (mm, cid), comps in sorted(codebooks.items())
             if mm == m
         )
-        sub = f"slice(__xs, {m * int(sub_dim) + 1}, {int(sub_dim)})"
+        sub = f"slice(__xs, {m * sub_dim + 1}, {sub_dim})"
         per_sub.append(
             f"array_min(transform(array({cws}), cw -> named_struct("
             f"'d', aggregate(zip_with({sub}, cw.v, "
@@ -1174,156 +1074,26 @@ def pq_encode_literal(
         )
     wide = proj.selectExpr(id_col, *per_sub)
     stack = ", ".join(
-        f"CAST({m} AS INT), __code{m}" for m in range(int(n_sub))
+        f"CAST({m} AS INT), __code{m}" for m in range(n_sub)
     )
     return wide.selectExpr(
-        id_col, f"stack({int(n_sub)}, {stack}) AS (__m, code)"
-    )
-
-
-def _ivf_cell_sql(codebook: dict[int, list[float]]) -> str:
-    """SQL expr for the argmax-MIPS IVF cell id over a materialized
-    `__xs` fixed-point array column — the literal-codebook twin of
-    `ivf_assign`'s max_by(cid, struct(__d, -cid)): array_max over
-    (d, -cid) structs picks max dot, ties to the LOWEST cid. Codebook
-    components are exact 2^-20 multiples (ivf_train_codebook), so the
-    floor re-scale recovers the trained integers losslessly — the
-    same conversion `_int_exploded` applies to the centroid frame."""
-    import math
-
-    structs = []
-    for cid, comps in sorted(codebook.items()):
-        cs = ", ".join(
-            f"{math.floor(float(x) * LSH_SCALE)}L" for x in comps
-        )
-        structs.append(
-            f"named_struct('d', aggregate(zip_with(__xs, array({cs}), "
-            f"(x, c) -> x * c), 0L, (a, b) -> a + b), "
-            f"'nc', CAST({-int(cid)} AS BIGINT))"
-        )
-    body = (
-        f"array_max(array({', '.join(structs)})).nc"
-        if len(structs) > 1
-        else f"({structs[0]}).nc"
-    )
-    return f"CAST(-({body}) AS BIGINT)"
-
-
-def _ivf_probe_sql(codebook: dict[int, list[float]], nprobe: int) -> str:
-    """SQL expr for a vector's `nprobe` nearest cell ids (integer MIPS
-    dot, ORDER BY d DESC, cid ASC) over a materialized `__xs` column —
-    the literal-codebook twin of the rank-window probe: array_sort on
-    (-d, cid) structs is the identical total order, so the first
-    nprobe entries equal the window's rn <= nprobe rows."""
-    import math
-
-    structs = []
-    for cid, comps in sorted(codebook.items()):
-        cs = ", ".join(
-            f"{math.floor(float(x) * LSH_SCALE)}L" for x in comps
-        )
-        structs.append(
-            f"named_struct('nd', -(aggregate(zip_with(__xs, array({cs}), "
-            f"(x, c) -> x * c), 0L, (a, b) -> a + b)), "
-            f"'cid', CAST({int(cid)} AS BIGINT))"
-        )
-    return (
-        f"transform(slice(array_sort(array({', '.join(structs)})), 1, "
-        f"{int(nprobe)}), s -> s.cid)"
-    )
-
-
-def _lsh_pack_sql(table: list[list[float]]) -> str:
-    """SQL expr for one LSH table's sign-packed bucket id over a
-    materialized `__xs` fixed-point array column (literal integer
-    plane coefficients — see lsh_buckets_relational)."""
-    terms = []
-    for i, plane in enumerate(table):
-        coefs = ", ".join(f"{int(v)}L" for v in plane)
-        d = (
-            f"aggregate(zip_with(__xs, array({coefs}), "
-            f"(x, c) -> x * c), 0L, (a, b) -> a + b)"
-        )
-        terms.append(f"(CASE WHEN {d} > 0 THEN {2 ** i} ELSE 0 END)")
-    return " + ".join(terms)
-
-
-def ivf_assign_literal(
-    corpus: DataFrame,
-    codebook: dict[int, list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    carry_cols: tuple = (),
-) -> DataFrame:
-    """(id, [carry_cols...,] cell) — same contract and identical cell
-    ids as :func:`ivf_assign` over `ivf_codebook_df(codebook)`, but the
-    trained codebook enters as LITERAL arrays in one map projection
-    instead of the posexplode + broadcast-join + agg/window relational
-    form (r13, guide §2.3/§2.4 — the pq_encode_literal pattern): zero
-    exchanges, zero joins, |corpus| rows in flight. ``carry_cols``
-    projects extra input columns through the same pass so consumers
-    don't join the assignment back to the corpus on id. Null/empty
-    vectors are dropped (the relational form's posexplode emitted no
-    rows for them); components pass the `_int_exploded` range guard."""
-    proj = (
-        spread(corpus)
-        .where(F.size(F.col(vec_col)) >= 1)
-        .selectExpr(
-            id_col, *carry_cols, f"{_fixed_point_hof_sql(vec_col)} AS __xs"
-        )
-    )
-    return proj.selectExpr(
-        id_col, *carry_cols, f"{_ivf_cell_sql(codebook)} AS cell"
-    )
-
-
-def pq_encode(
-    corpus: DataFrame,
-    codebook: DataFrame,
-    sub_dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, __m, code): each vector's nearest codeword per subspace
-    (squared-L2 argmin, ties to the lowest code id). One pass over the
-    corpus: posexplode map-side, broadcast-join the M*K*sub_dim
-    codebook, partial-agg back to |corpus| x M x K score rows before
-    the one shuffle, min_by hash-agg (no rank window). The output IS
-    the compressed corpus — M small ints per vector."""
-    ex = _int_exploded_sub(corpus, id_col, vec_col, "__vid", sub_dim)
-    return (
-        ex.join(F.broadcast(codebook), ["__m", "__jj"])
-        .groupBy("__vid", "__m", "cid")
-        .agg(
-            F.sum(
-                (F.col("__xs") - F.col("__cs"))
-                * (F.col("__xs") - F.col("__cs"))
-            ).alias("__d")
-        )
-        .groupBy("__vid", "__m")
-        .agg(F.expr("min_by(cid, struct(__d, cid))").alias("code"))
-        .select(F.col("__vid").alias(id_col), "__m", "code")
+        id_col, f"stack({n_sub}, {stack}) AS (__m, code)"
     )
 
 
 def cosine_topk_pq(
     queries: DataFrame,
     corpus: DataFrame,
-    seed_ids: list[int],
-    n_sub: int = 4,
-    dim: int = 64,
-    iters: int = 2,
+    codebooks: dict[tuple[int, int], list[int]],
     k: int = 5,
     rerank: int = 32,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebooks: dict[tuple[int, int], list[int]] | None = None,
 ) -> DataFrame:
     """Approximate top-k via PQ asymmetric distance computation (ADC)
     with exact re-rank:
 
-    1. train per-subspace codebooks (`pq_train_codebooks`) — or take
-       them precomputed;
+    1. take per-subspace codebooks trained by `pq_train_codebooks`;
     2. encode the corpus to (id, m, code) — the compressed form;
     3. build the ADC lookup table: integer dot of every query SUBvector
        with every codeword (|Q| x M x K rows — tiny, broadcast);
@@ -1341,22 +1111,12 @@ def cosine_topk_pq(
     for dim <= 64 at B = 300. Recall vs the exact baseline is
     measured in tests/test_similarity_recall.py.
     """
-    sub_dim = dim // int(n_sub)
-    if codebooks is None:
-        codebooks = pq_train_codebooks(
-            corpus, seed_ids, n_sub=n_sub, dim=dim, iters=iters,
-            id_col=id_col, vec_col=vec_col,
-        )
+    _, sub_dim = _pq_shape(codebooks)
     cb = pq_codebook_df(corpus.sparkSession, codebooks)
-    # r13: the CORPUS-scale encode takes the literal-codebook path
-    # (one whole-stage-codegen projection, zero exchanges) instead of
-    # the posexplode + broadcast-join + two-agg relational form; the
-    # query-side LUT below stays relational — it is |Q|-sized and its
-    # explode/join cost is noise. Same integer math, same argmin
-    # tie-break (see pq_encode_literal), so codes are bit-identical.
-    codes = pq_encode_literal(
-        corpus, codebooks, n_sub, sub_dim, id_col=id_col, vec_col=vec_col
-    )
+    # the corpus-scale encode is one map projection (`pq_encode`); the
+    # query-side LUT stays relational — it is |Q|-sized and its
+    # explode/join cost is noise
+    codes = pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col)
     q_ex = _int_exploded_sub(queries, id_col, vec_col, "__qid", sub_dim)
     lut = (
         q_ex.join(F.broadcast(cb), ["__m", "__jj"])

@@ -565,13 +565,8 @@ FROM ranked WHERE rank <= 5
 def q_ann_cosine_ivf(spark, sf_dir):
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     cb = _trained_ivf_codebook(spark, sf_dir)
-    # r13: the trained codebook dict rides in as literals (map-side
-    # corpus assign + map-side probe cells — guide §2.3/§2.4, see
-    # _ivf_candidates); centroids kept for the relational fallback's
-    # contract documentation
     return cosine_topk_ivf(
-        emb.where(F.col("vec_id") < 10), emb, k=5, nprobe=2,
-        queries_in_corpus=True, codebook=cb,
+        emb.where(F.col("vec_id") < 10), emb, k=5, nprobe=2, codebook=cb,
     )
 
 
@@ -694,9 +689,7 @@ FROM ranked WHERE rank <= 5
         "tests/test_similarity_recall.py",
 )
 def q_ann_cosine_pq(spark, sf_dir):
-    from ..operators.similarity import cosine_topk_pq
-
-    from ..operators.similarity import pq_train_codebooks
+    from ..operators.similarity import cosine_topk_pq, pq_train_codebooks
 
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     key = ("pq", sf_dir)
@@ -705,9 +698,8 @@ def q_ann_cosine_pq(spark, sf_dir):
             emb, list(_PQ_SEED_IDS), n_sub=_PQ_N_SUB, iters=_PQ_TRAIN_ITERS
         )
     return cosine_topk_pq(
-        emb.where(F.col("vec_id") < 10), emb, seed_ids=list(_PQ_SEED_IDS),
-        n_sub=_PQ_N_SUB, iters=_PQ_TRAIN_ITERS, k=5, rerank=_PQ_RERANK,
-        codebooks=_TRAINED_CACHE[key],
+        emb.where(F.col("vec_id") < 10), emb, _TRAINED_CACHE[key],
+        k=5, rerank=_PQ_RERANK,
     )
 
 
@@ -785,25 +777,20 @@ SELECT cell, n_vecs, label AS top_label, c AS top_label_n,
 FROM top WHERE rn = 1
 """,
     doc="document clustering over the trained k-means codebook: every "
-        "embedding assigned to its cell (broadcast centroids, one "
-        "corpus pass, max_by hash-agg), then per-cluster size + "
+        "embedding assigned to its cell (literal codebook, one "
+        "map-side corpus pass), then per-cluster size + "
         "majority label + purity — the topic-clustering / "
         "cluster-balancing step of a training-data pipeline, and a "
         "label-based quality readout for the codebook itself. Oracle "
         "unrolls the same integer Lloyd training",
 )
 def q_embedding_cluster_summary(spark, sf_dir):
-    from ..operators.similarity import ivf_assign_literal
+    from ..operators.similarity import ivf_assign
 
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     cb = _trained_ivf_codebook(spark, sf_dir)
-    # r13: literal-codebook map-side assignment with label carried
-    # through the one pass — the r12 shape posexploded the corpus,
-    # broadcast-joined the centroid frame, aggregated twice, and then
-    # joined the cells BACK to the corpus on vec_id just to fetch
-    # label (guide §2.3/§2.4; cell ids bit-identical, see
-    # ivf_assign_literal / tests/test_ivf_assign_literal.py)
-    lab = ivf_assign_literal(emb, cb, carry_cols=("label",))
+    # label rides through the assignment pass (no join-back on vec_id)
+    lab = ivf_assign(emb, cb, carry_cols=("label",))
     per = lab.groupBy("cell", "label").agg(F.count(F.lit(1)).alias("c"))
     agg = per.groupBy("cell").agg(
         F.sum("c").alias("n_vecs"),
@@ -982,7 +969,7 @@ FROM pairs WHERE cosine >= 0.4 GROUP BY 1, 2
 )
 def q_semdedup(spark, sf_dir):
     from ..operators.similarity import (
-        _fixed_point_hof_sql,
+        _fixed_point_rows,
         _ivf_cell_sql,
         _lsh_pack_sql,
         dot,
@@ -992,26 +979,15 @@ def q_semdedup(spark, sf_dir):
 
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     cb = _trained_ivf_codebook(spark, sf_dir)
-    # r13: cell AND bucket are both per-row functions of the one
-    # embedding, so they compute in ONE map pass over a shared
-    # fixed-point layer — the r12 shape ran two posexplode+agg
-    # pipelines (IVF assign with a broadcast centroid join; LSH dots)
-    # and equi-joined them back on vec_id (guide §2.3/§2.4). The __xs
-    # layer stays its own projection so the cell/bucket HOFs reference
-    # an attribute, not 20 inlined copies of the conversion. Cell ids
-    # and buckets are bit-identical (integer dots, same floor scale;
-    # tests/test_ivf_assign_literal.py pins both).
-    keyed = (
-        spread(emb)
-        .where(F.size(F.col("embedding")) >= 1)
-        .selectExpr(
-            "vec_id", f"{_fixed_point_hof_sql('embedding')} AS __xs"
-        )
-        .selectExpr(
-            "vec_id",
-            f"{_ivf_cell_sql(cb)} AS cell",
-            f"{_lsh_pack_sql(_PLANES)} AS bkt",
-        )
+    # cell AND bucket are both per-row functions of the one embedding,
+    # so they compute in ONE map pass over a shared fixed-point layer
+    # (no join-back on vec_id). The __xs layer stays its own
+    # projection so the cell/bucket HOFs reference an attribute, not
+    # 20 inlined copies of the conversion.
+    keyed = _fixed_point_rows(emb, "vec_id", "embedding").selectExpr(
+        "vec_id",
+        f"{_ivf_cell_sql(cb)} AS cell",
+        f"{_lsh_pack_sql(_PLANES)} AS bkt",
     )
     par = spark.sparkContext.defaultParallelism
     pairs = (

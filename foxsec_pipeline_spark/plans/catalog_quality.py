@@ -486,11 +486,7 @@ def q_ann_range_search_ivf(spark, sf_dir):
         .limit(16)
     )
     cb = _trained_ivf_codebook(spark, sf_dir)
-    # r13: literal-codebook map-side assign/probe (guide §2.3/§2.4)
-    return cosine_range_ivf(
-        q, e, radius=0.2, nprobe=2, queries_in_corpus=True,
-        codebook=cb,
-    )
+    return cosine_range_ivf(q, e, radius=0.2, nprobe=2, codebook=cb)
 
 
 # ---------------------------------------------------------------------------

@@ -96,7 +96,6 @@ SLOW_TESTS = {
     "test_streaming2.py::test_incremental_dedup_state_survives_across_runs",
     "test_streaming2.py::test_incremental_run_processes_only_new_files",
     "test_streaming.py::test_streaming_update_mode_early_panes",
-    "test_catalog.py::test_query_matches_oracle[ann_cosine_ivf]",
 }
 
 

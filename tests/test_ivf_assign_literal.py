@@ -1,34 +1,79 @@
-"""The r13 literal/map-side embedding kernels must be BIT-IDENTICAL to
-the relational forms they replaced:
+"""Row-level checks of the fixed-point embedding kernels:
 
-- ivf_assign_literal vs ivf_assign (posexplode + broadcast centroid
-  join + max_by agg) — same integer MIPS dots, same ties-to-lowest-cid
-  rule;
-- the rewritten lsh_buckets_relational (zip_with literal-coefficient
-  map form) vs the r12 posexplode + groupBy-sum form, reconstructed
-  here verbatim as the reference implementation.
+- `ivf_assign` and the IVF candidate stage against a numpy reference
+  built on `_collect_fixed_point` (argmax int64 MIPS dot, ties to the
+  lowest cid; probe cells = top-nprobe by (dot desc, cid asc));
+- both physical forms of `lsh_buckets_relational` against the
+  posexplode + groupBy-sum pipeline, kept here as the reference;
+- the INT_COMPONENT_BOUND contract on malformed vectors."""
 
-These are plan-shape optimizations only; any row-level divergence is a
-correctness bug."""
+import math
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from foxsec_pipeline_spark.operators.similarity import (
     LSH_SCALE,
+    _collect_fixed_point,
+    _ivf_candidates,
     ivf_assign,
-    ivf_assign_literal,
-    ivf_codebook_df,
     ivf_train_codebook,
     lsh_buckets_relational,
 )
 from foxsec_pipeline_spark.session import load_tables
 
 SF_DIR = "/root/testdata/sf0.001"
+_SCHEMA = "vec_id long, embedding array<double>"
+
+
+def _np_mips_dots(df, codebook):
+    """(ids, cids ascending, int64 dots[n, K]) in LSH_SCALE fixed point."""
+    ids, X = _collect_fixed_point(df, "vec_id", "embedding")
+    cids = np.array(sorted(codebook), dtype="int64")
+    C = np.array(
+        [[math.floor(float(x) * LSH_SCALE) for x in codebook[c]] for c in cids],
+        dtype="int64",
+    )
+    return ids, cids, X @ C.T
+
+
+def _np_cells(df, codebook):
+    """{id: cell}: argmax dot; np.argmax takes the first max, i.e. the
+    lowest cid."""
+    ids, cids, D = _np_mips_dots(df, codebook)
+    return dict(zip(ids.tolist(), cids[np.argmax(D, axis=1)].tolist()))
+
+
+def _np_probes(df, codebook, nprobe):
+    """{id: [cell, ...]}: the nprobe cells by (dot desc, cid asc)."""
+    ids, cids, D = _np_mips_dots(df, codebook)
+    order = np.lexsort((np.broadcast_to(cids, D.shape), -D), axis=1)
+    return {i: cids[o[:nprobe]].tolist() for i, o in zip(ids.tolist(), order)}
+
+
+def _np_candidates(queries, corpus, codebook, nprobe):
+    cells = _np_cells(corpus, codebook)
+    return {
+        (q, n)
+        for q, probe in _np_probes(queries, codebook, nprobe).items()
+        for n, c in cells.items()
+        if c in probe and n != q
+    }
+
+
+def _candidates(queries, corpus, codebook, nprobe):
+    return {
+        (r["query_id"], r["neighbor_id"])
+        for r in _ivf_candidates(
+            queries, corpus, codebook, "vec_id", "embedding", nprobe
+        ).collect()
+    }
 
 
 def _lsh_reference(df, tables, id_col="vec_id", vec_col="embedding"):
-    """The pre-r13 relational bucket pipeline (posexplode + one integer
-    agg per plane + sign-pack), kept as the semantic reference."""
+    """The posexplode + one integer agg per plane + sign-pack bucket
+    pipeline, kept as the semantic reference."""
     ex = df.select(
         F.col(id_col), F.col(vec_col),
         F.posexplode(vec_col).alias("__j", "__x"),
@@ -60,26 +105,35 @@ def _lsh_reference(df, tables, id_col="vec_id", vec_col="embedding"):
     )
 
 
-def test_ivf_assign_literal_matches_relational(spark):
+def test_ivf_assign_matches_numpy_reference(spark):
     from foxsec_pipeline_spark.plans.catalog_data import _CENTROID_IDS
 
     emb = load_tables(spark, SF_DIR, "embeddings")["embeddings"]
     cb = ivf_train_codebook(emb, list(_CENTROID_IDS), iters=3)
-    rel = {
-        (r["vec_id"], r["cell"])
-        for r in ivf_assign(emb, ivf_codebook_df(spark, cb)).collect()
-    }
-    lit_df = ivf_assign_literal(emb, cb, carry_cols=("label",))
-    lit = {(r["vec_id"], r["cell"]) for r in lit_df.collect()}
-    assert rel == lit and len(rel) == emb.count()
+    want = _np_cells(emb, cb)
+    got_df = ivf_assign(emb, cb, carry_cols=("label",))
+    rows = got_df.collect()
+    assert {r["vec_id"]: r["cell"] for r in rows} == want
+    assert len(rows) == emb.count()
     # carry must be the row's own column, and the plan join/agg-free
     labels = dict(
         emb.select("vec_id", "label").rdd.map(tuple).collect()
     )
-    for r in lit_df.collect():
+    for r in rows:
         assert labels[r["vec_id"]] == r["label"]
-    plan = lit_df._jdf.queryExecution().executedPlan().toString()
+    plan = got_df._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan and "Aggregate" not in plan
+
+
+def test_ivf_assign_tie_goes_to_lowest_cid(spark):
+    # [0.5, 0.5] has the same dot with centroids 5 and 2; dict order
+    # puts 5 first, the rule picks 2
+    cb = {5: [1.0, 0.0], 2: [0.0, 1.0], 9: [-1.0, 0.0]}
+    df = spark.createDataFrame([(1, [0.5, 0.5])], _SCHEMA)
+    assert _np_cells(df, cb) == {1: 2}
+    assert [(r["vec_id"], r["cell"]) for r in ivf_assign(df, cb).collect()] == [
+        (1, 2)
+    ]
 
 
 def test_lsh_buckets_map_form_matches_relational(spark):
@@ -107,44 +161,52 @@ def test_lsh_buckets_map_form_matches_relational(spark):
     assert "Aggregate" not in plan and "hashpartitioning" not in plan
 
 
-def test_ivf_candidates_literal_matches_relational(spark):
-    """The codebook fast path of _ivf_candidates must produce the
-    identical (query, neighbor) candidate set as the relational
-    centroid-frame path — same argmax cells, same top-nprobe probe
-    order (d DESC, cid ASC) including ties."""
-    from foxsec_pipeline_spark.operators.similarity import (
-        _ivf_candidates,
-    )
+def test_ivf_candidates_match_numpy_reference(spark):
+    """Corpus cells and top-nprobe probe cells (ties included) give
+    the reference's (query, neighbor) candidate set."""
     from foxsec_pipeline_spark.plans.catalog_data import _CENTROID_IDS
 
     emb = load_tables(spark, SF_DIR, "embeddings")["embeddings"]
     cb = ivf_train_codebook(emb, list(_CENTROID_IDS), iters=3)
     q = emb.where(F.col("vec_id") < 10)
     for nprobe in (1, 2, 4):
-        rel = {
-            (r["query_id"], r["neighbor_id"])
-            for r in _ivf_candidates(
-                q, emb, None, "vec_id", "embedding", nprobe, True,
-                ivf_codebook_df(spark, cb),
-            ).collect()
-        }
-        lit = {
-            (r["query_id"], r["neighbor_id"])
-            for r in _ivf_candidates(
-                q, emb, None, "vec_id", "embedding", nprobe, True,
-                None, cb,
-            ).collect()
-        }
-        assert rel == lit, nprobe
+        assert _candidates(q, emb, cb, nprobe) == _np_candidates(
+            q, emb, cb, nprobe
+        ), nprobe
+
+
+def test_ivf_probe_tie_order(spark):
+    """Probe cells rank by (dot desc, cid asc): the query ties cells 5
+    and 2, so nprobe=1 probes cell 2 only and nprobe=2 adds cell 5."""
+    cb = {5: [1.0, 0.0], 2: [0.0, 1.0], 9: [-1.0, 0.0]}
+    q = spark.createDataFrame([(1, [0.5, 0.5])], _SCHEMA)
+    corpus = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (11, [0.0, 1.0]), (12, [-1.0, 0.0])], _SCHEMA
+    )
+    assert _np_probes(q, cb, 2) == {1: [2, 5]}
+    assert _candidates(q, corpus, cb, 1) == {(1, 11)}
+    assert _candidates(q, corpus, cb, 2) == {(1, 11), (1, 10)}
+    for nprobe in (1, 2, 3):
+        assert _candidates(q, corpus, cb, nprobe) == _np_candidates(
+            q, corpus, cb, nprobe
+        )
 
 
 def test_lsh_buckets_drops_null_and_empty_vectors(spark):
-    """The posexplode form emitted no rows for null/empty vectors; the
-    map form must preserve that (not emit a bucket-0 row)."""
-    df = spark.createDataFrame(
-        [(1, [0.5] * 4), (2, []), (3, None)],
-        "vec_id long, embedding array<double>",
-    )
+    """Both forms drop null/empty vectors (no bucket-0 row) and raise
+    on a null or out-of-range component (INT_COMPONENT_BOUND)."""
     table = [[1.0, -1.0, 1.0, -1.0], [1.0, 1.0, -1.0, -1.0]]
-    out = lsh_buckets_relational(df, [table]).collect()
-    assert {r["vec_id"] for r in out} == {1}
+    df = spark.createDataFrame(
+        [(1, [0.5] * 4), (2, []), (3, None)], _SCHEMA
+    )
+    # 2 planes -> map form; 5 tables x 2 planes = 10 -> relational form
+    for tables in ([table], [table] * 5):
+        out = lsh_buckets_relational(df, tables).collect()
+        assert {r["vec_id"] for r in out} == {1}
+        for bad, msg in (
+            ([0.5, None, 0.5, 0.5], "USER_RAISED_EXCEPTION"),
+            ([0.5, 400.0, 0.5, 0.5], "fixed-point component out of range"),
+        ):
+            bad_df = spark.createDataFrame([(1, bad)], _SCHEMA)
+            with pytest.raises(Exception, match=msg):
+                lsh_buckets_relational(bad_df, tables).collect()

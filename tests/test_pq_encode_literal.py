@@ -1,16 +1,13 @@
-"""The r13 literal-codebook PQ encode must be BIT-IDENTICAL to the
-relational posexplode/broadcast-join encode it replaced inside
-cosine_topk_pq — same fixed-point conversion, same squared-L2 argmin,
-same ties-to-lowest-code-id rule. The literal path exists purely as a
-plan-shape optimization (one codegen projection, zero exchanges), so
-any row-level divergence is a correctness bug, not a tuning knob."""
+"""`pq_encode` (literal codebooks in one map projection) against a
+numpy reference built on `_collect_fixed_point`: per subspace, the
+argmin of the int64 squared L2 distance, ties to the lowest code."""
 
-from pyspark.sql import functions as F
+import numpy as np
+import pytest
 
 from foxsec_pipeline_spark.operators.similarity import (
-    pq_codebook_df,
+    _collect_fixed_point,
     pq_encode,
-    pq_encode_literal,
     pq_train_codebooks,
 )
 from foxsec_pipeline_spark.plans.catalog_data import (
@@ -23,41 +20,62 @@ from foxsec_pipeline_spark.session import load_tables
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_literal_encode_matches_relational(spark):
+def _np_codes(df, codebooks):
+    """{(id, m): code}; np.argmin takes the first min over codes in
+    ascending order, i.e. the lowest code."""
+    ids, X = _collect_fixed_point(df, "vec_id", "embedding")
+    out = {}
+    for m in sorted({m for m, _ in codebooks}):
+        cids = np.array(sorted(c for mm, c in codebooks if mm == m))
+        C = np.array([codebooks[(m, c)] for c in cids], dtype="int64")
+        sub = X[:, m * C.shape[1]:(m + 1) * C.shape[1]]
+        d = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        for i, code in zip(ids.tolist(), cids[np.argmin(d, axis=1)].tolist()):
+            out[(i, m)] = code
+    return out
+
+
+def _codes(df, codebooks):
+    return {(r["vec_id"], r["__m"]): r["code"] for r in pq_encode(df, codebooks).collect()}
+
+
+def test_pq_encode_matches_numpy_reference(spark):
     emb = load_tables(spark, SF_DIR, "embeddings")["embeddings"]
-    dim = 64
-    sub_dim = dim // _PQ_N_SUB
     cb = pq_train_codebooks(
         emb, list(_PQ_SEED_IDS), n_sub=_PQ_N_SUB, iters=_PQ_TRAIN_ITERS
     )
-    rel = pq_encode(emb, pq_codebook_df(spark, cb), sub_dim)
-    lit = pq_encode_literal(emb, cb, _PQ_N_SUB, sub_dim)
-    assert rel.columns == lit.columns
-    rel_rows = {(r["vec_id"], r["__m"]): r["code"] for r in rel.collect()}
-    lit_rows = {(r["vec_id"], r["__m"]): r["code"] for r in lit.collect()}
-    assert rel_rows == lit_rows
-    # the literal form's plan must be join- and aggregate-free with no
-    # hash-partitioning shuffle (the point of the rewrite — the only
-    # allowed Exchange is spread()'s round-robin fan-out, which the
-    # relational form also pays on top of its joins/aggs)
-    lit_plan = lit._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in lit_plan
-    assert "Aggregate" not in lit_plan
-    assert "hashpartitioning" not in lit_plan
+    codes = pq_encode(emb, cb)
+    assert codes.columns == ["vec_id", "__m", "code"]
+    assert _codes(emb, cb) == _np_codes(emb, cb)
+    # one projection: join- and aggregate-free with no hash-partitioning
+    # shuffle (the only Exchange is spread()'s round-robin fan-out)
+    plan = codes._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan
+    assert "Aggregate" not in plan
+    assert "hashpartitioning" not in plan
+
+
+def test_pq_encode_tie_goes_to_lowest_code(spark):
+    # [0.5, 0.5] -> fixed point [2^19, 2^19] is equally far from codes
+    # 7 and 3 in subspace 0; dict order puts 7 first, the rule picks 3
+    one = 1 << 20
+    cb = {(0, 7): [one, one], (0, 3): [0, 0], (0, 5): [-one, -one]}
+    df = spark.createDataFrame(
+        [(1, [0.5, 0.5])], "vec_id long, embedding array<double>"
+    )
+    assert _np_codes(df, cb) == {(1, 0): 3}
+    assert _codes(df, cb) == {(1, 0): 3}
 
 
 def test_literal_encode_range_guard(spark):
-    """Out-of-range components must still raise (the _int_exploded
-    error contract survives the SQL translation). K >= 2 codes per
-    subspace: with a single code the argmin is a constant and Catalyst
-    legitimately prunes the distance expression (struct-field
-    extraction simplification), so the guard never evaluates — the
-    catalog operating point is K=16."""
-    import pytest
-
+    """Out-of-range components must raise (the INT_COMPONENT_BOUND
+    contract). K >= 2 codes per subspace: with a single code the
+    argmin is a constant and Catalyst legitimately prunes the distance
+    expression (struct-field extraction simplification), so the guard
+    never evaluates — the catalog operating point is K=16."""
     bad = spark.createDataFrame(
         [(1, [400.0] * 64)], "vec_id long, embedding array<double>"
     )
     cb = {(m, c): [c] * 8 for m in range(8) for c in (0, 1)}
     with pytest.raises(Exception, match="fixed-point component"):
-        pq_encode_literal(bad, cb, 8, 8).collect()
+        pq_encode(bad, cb).collect()

@@ -66,27 +66,26 @@ def test_ann_lsh_recall_vs_exact(emb, spark):
 
 
 def test_ann_ivf_recall_vs_exact(emb, spark):
-    from foxsec_pipeline_spark.operators.similarity import (
-        ivf_codebook_df,
-        ivf_train_codebook,
-    )
+    from foxsec_pipeline_spark.operators.similarity import ivf_train_codebook
 
     queries = emb.where(F.col("vec_id") < 50)
     exact = _pair_set(
         cosine_topk(queries, emb, k=5), "query_id", "neighbor_id"
     )
+    # untrained: the 16 seed rows themselves are the centroids
+    seeds = {
+        r["vec_id"]: r["embedding"]
+        for r in emb.where(F.col("vec_id").isin(list(_CENTROID_IDS))).collect()
+    }
     cb = ivf_train_codebook(emb, list(_CENTROID_IDS), iters=3)
-    cents = ivf_codebook_df(spark, cb)
     untrained, trained = {}, {}
     for nprobe in (1, 2, 4, 8):
         untrained[nprobe] = len(exact & _pair_set(
-            cosine_topk_ivf(
-                queries, emb, list(_CENTROID_IDS), k=5, nprobe=nprobe
-            ),
+            cosine_topk_ivf(queries, emb, seeds, k=5, nprobe=nprobe),
             "query_id", "neighbor_id",
         )) / len(exact)
         trained[nprobe] = len(exact & _pair_set(
-            cosine_topk_ivf(queries, emb, k=5, nprobe=nprobe, centroids=cents),
+            cosine_topk_ivf(queries, emb, cb, k=5, nprobe=nprobe),
             "query_id", "neighbor_id",
         )) / len(exact)
     print("ivf recall@5 by nprobe: "
@@ -133,10 +132,7 @@ def test_ann_pq_recall_vs_exact(emb, spark):
     recall = {}
     for rerank in (16, 32, 64):
         got = _pair_set(
-            cosine_topk_pq(
-                queries, emb, list(_PQ_SEED_IDS), n_sub=_PQ_N_SUB,
-                rerank=rerank, codebooks=cb,
-            ),
+            cosine_topk_pq(queries, emb, cb, rerank=rerank),
             "query_id", "neighbor_id",
         )
         recall[rerank] = len(exact & got) / len(exact)
@@ -207,10 +203,7 @@ def test_ann_ivf_recall_clustered_corpus(spark):
     by nprobe 8."""
     import numpy as np
 
-    from foxsec_pipeline_spark.operators.similarity import (
-        ivf_codebook_df,
-        ivf_train_codebook,
-    )
+    from foxsec_pipeline_spark.operators.similarity import ivf_train_codebook
 
     rng = np.random.default_rng(7)
     k_clusters, dim, n = 16, 32, 2000
@@ -231,12 +224,10 @@ def test_ann_ivf_recall_clustered_corpus(spark):
     # arbitrary spread seeds; training, not seeding, finds the cells
     cb = ivf_train_codebook(df, [int(i) for i in range(0, n, n // 16)][:16],
                             iters=3)
-    cents = ivf_codebook_df(spark, cb)
     recall = {}
     for nprobe in (1, 2, 4, 8):
         got = _pair_set(
-            cosine_topk_ivf(queries, df, k=5, nprobe=nprobe,
-                            centroids=cents),
+            cosine_topk_ivf(queries, df, cb, k=5, nprobe=nprobe),
             "query_id", "neighbor_id",
         )
         recall[nprobe] = len(exact & got) / len(exact)
@@ -258,7 +249,6 @@ def test_range_ivf_recall_vs_exact_radius(emb, spark):
     from foxsec_pipeline_spark.operators.similarity import (
         cosine_range_ivf,
         dot,
-        ivf_codebook_df,
         ivf_train_codebook,
         l2_norm,
     )
@@ -289,13 +279,11 @@ def test_range_ivf_recall_vs_exact_radius(emb, spark):
     )
     assert exact, "radius too tight for the fixture corpus"
     cb = ivf_train_codebook(emb, list(_CENTROID_IDS), iters=3)
-    cents = ivf_codebook_df(spark, cb)
     recall = {}
     for nprobe in (1, 2, 4, 8):
         got = _pair_set(
             cosine_range_ivf(
-                queries, emb, radius=radius, nprobe=nprobe,
-                queries_in_corpus=True, centroids=cents,
+                queries, emb, radius=radius, codebook=cb, nprobe=nprobe
             ),
             "query_id", "neighbor_id",
         )
