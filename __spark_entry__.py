@@ -39,6 +39,9 @@ CHANGED = [
     "dedup_ngram_jaccard",
     # LSH buckets: guarded fixed-point conversion in both forms
     "ann_cosine_lsh", "dedup_embedding_cosine", "ann_cosine_lsh_multiprobe",
+    # cosine scorers: zero norm clamped to 1; PQ encode drops null/empty
+    "ann_cosine_topk", "ann_cosine_ivf", "ann_range_search_ivf",
+    "ann_cosine_pq", "rrf_hybrid_fusion",
 ]
 
 

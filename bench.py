@@ -17,6 +17,19 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from foxsec_pipeline_spark.plans.catalog import registry  # noqa: E402
 from foxsec_pipeline_spark.session import get_spark  # noqa: E402
 
+# Rep escalation: while the reps of one query disagree by more than
+# ESCALATE_RATIO, add reps up to MAX_REPS (see main()).
+ESCALATE_RATIO = 2.5
+MAX_REPS = 4
+# Load sentinel (see main()): the probe's committed idle steady, in
+# seconds, and the drift factor above which a run is annotated as
+# contended. Steady: 0.32-0.42 s measured across a full idle (load
+# 0.46) r12 bench session — an isolated 6-rep session reads ~0.6-0.8 s
+# because C2 JIT is still tiering; in-bench the JVM is fully warm,
+# which is the state every probe after q0 runs in.
+SENTINEL_STEADY = 0.37
+SENTINEL_DRIFT = 2.0
+
 
 def compact_stdout_line(payload: dict, budget: int = 1900) -> str:
     """The ONE stdout line the driver parses. The driver records only
@@ -143,11 +156,8 @@ def main() -> None:
     # Escalation loops to MAX_REPS (not a single extra rep): if a
     # contention burst spans reps 1-3 the min is still inflated, so
     # keep adding reps while the spread stays above the ratio (r10
-    # ADVICE). ESCALATE_RATIO is env-tunable for symmetry with
-    # SPARK_GRAFT_BENCH_REPS.
+    # ADVICE).
     N_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    ESCALATE_RATIO = float(os.environ.get("SPARK_GRAFT_ESCALATE_RATIO", "2.5"))
-    MAX_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_REPS", "4"))
 
     def _escalated(run_once, rep_log: list[float],
                    clear_cache: bool = True) -> float:
@@ -189,13 +199,6 @@ def main() -> None:
     # is ANNOTATED (sentinel_contended) when any probe drifts more
     # than SENTINEL_DRIFT x the committed idle steady — never
     # suppressed, the driver still needs its one line.
-    # committed idle steady: 0.32-0.42 s measured across a full idle
-    # (load 0.46) r12 bench session — an isolated 6-rep session reads
-    # ~0.6-0.8 s because C2 JIT is still tiering; in-bench the JVM is
-    # fully warm, which is the state every probe after q0 runs in
-    SENTINEL_STEADY = float(
-        os.environ.get("SPARK_GRAFT_SENTINEL_STEADY", "0.37"))
-    SENTINEL_DRIFT = float(os.environ.get("SPARK_GRAFT_SENTINEL_DRIFT", "2.0"))
     SENTINEL_EVERY = 20
     sentinel_series: list[list] = []
 

@@ -151,17 +151,14 @@ def iprepd_reputation_provider(spec: str, obj_type: str = "ip",
 
 
 def iprepd_violation_emitter(specs: list[str], gcs_fetch=None,
-                             kms_decrypt=None,
-                             legacy_heavy_hitter_fallback: bool = False):
+                             kms_decrypt=None):
     """A CompositeOutput emitter (`sinks/output.py` emitter map,
     executor-side foreachPartition) that converts alert JSON lines to
     violations and PUTs each to every configured iprepd instance —
     `IprepdIO.java:389-470` including the fan-out over multiple
     specs. Lines that don't map to a violation are skipped, like the
     reference's ignored non-Alert inputs (alerts with no generator-map
-    subcategory escalate nothing unless
-    ``legacy_heavy_hitter_fallback`` opts in to the category-keyed
-    heavy-hitter projection)."""
+    subcategory escalate nothing)."""
     resolved = [
         parse_iprepd_spec(s, gcs_fetch=gcs_fetch, kms_decrypt=kms_decrypt)
         for s in specs
@@ -174,11 +171,8 @@ def iprepd_violation_emitter(specs: list[str], gcs_fetch=None,
         for line in lines:
             # full WriteFn conversion: iprepd_exempt guard + the
             # subcategory generator map (one PUT per violation, e.g.
-            # one per EMAIL list entry); optional heavy-hitter
-            # fallback for category-only alerts
-            for obj_type, obj, vjson in violation_wires_from_alert_json(
-                    line,
-                    legacy_heavy_hitter_fallback=legacy_heavy_hitter_fallback):
+            # one per EMAIL list entry)
+            for obj_type, obj, vjson in violation_wires_from_alert_json(line):
                 for client in clients:
                     client.put_violation(obj_type, obj, vjson)
 

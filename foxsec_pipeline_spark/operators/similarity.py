@@ -41,6 +41,33 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _normed(df: DataFrame, id_col: str, vec_col: str, out_id: str, tag: str) -> DataFrame:
+    """(out_id, __<tag>v, __<tag>n): each vector with its L2 norm,
+    hoisted out of the per-pair score so the norm fold runs once per
+    vector instead of once per pair (sqrt(fold) is the same expression
+    as the inline form, so scores are bit-identical).
+
+    A zero norm is clamped to 1: a zero vector (`featurize_media` on an
+    empty payload) then scores cosine 0.0 against everything instead of
+    failing the query with DIVIDE_BY_ZERO under ANSI. Every other score
+    is unchanged, and a null vector still scores null. `nullif` keeps
+    the fold to one evaluation."""
+    norm = l2_norm(F.col(vec_col))
+    return df.select(
+        F.col(id_col).alias(out_id),
+        F.col(vec_col).alias(f"__{tag}v"),
+        F.coalesce(F.nullif(norm, F.lit(0.0)), F.lit(1.0)).alias(f"__{tag}n"),
+    )
+
+
+def _pair_cosine(round_decimals: int) -> Column:
+    """Rounded cosine of a (__qv, __qn) x (__cv, __cn) pair row."""
+    return F.round(
+        dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),
+        round_decimals,
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -59,30 +86,11 @@ def cosine_topk(
     Ranking uses the rounded score with id tie-break, so the result
     set is deterministic across engines.
     """
-    # per-vector norms are hoisted OUT of the per-pair expression: the
-    # pair score is then one dot fold instead of three (dot + 2 norm
-    # folds), and sqrt(fold) is computed identically to the inline
-    # form, so results are bit-identical
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
-    c = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-    )
+    q = _normed(queries, id_col, vec_col, "query_id", "q")
+    c = _normed(spread(corpus), id_col, vec_col, "neighbor_id", "c")
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv"))
-                / (F.col("__qn") * F.col("__cn")),
-                round_decimals,
-            ),
-        )
+        .withColumn("cosine", _pair_cosine(round_decimals))
         .drop("__qv", "__cv", "__qn", "__cn")
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -125,9 +133,9 @@ _LSH_MAP_FORM_MAX_PLANES = 8
 # assign/probe, PQ encode and LUT): a NULL component or one with
 # |x| > B fails the query through raise_error (USER_RAISED_EXCEPTION;
 # the message names the bound for an out-of-range value and is "null"
-# for a null one). A null or empty VECTOR is dropped by the LSH and
-# IVF kernels and by the PQ query side; the PQ corpus encode needs
-# exactly n_sub * sub_dim components per vector.
+# for a null one). A null or empty VECTOR is dropped by every one of
+# them (no bucket, cell or code row); a PQ vector that is neither needs
+# exactly n_sub * sub_dim components.
 INT_COMPONENT_BOUND = 300.0
 
 _RANGE_MSG = (
@@ -331,6 +339,32 @@ def _lsh_candidates(queries, corpus, tables, id_col, vec_col):
     )
 
 
+def _scored_pairs(
+    cand: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query_id, neighbor_id, cosine) for a (query_id, neighbor_id)
+    candidate set — the shared scoring step of every bucketed ANN path
+    (LSH, IVF, PQ re-rank)."""
+    # re-attach vectors + hoisted norms, then score on an explicitly
+    # wide stage: AQE coalesces the candidate shuffle by its small byte
+    # size, blind to the interpreted 64-wide dot fold each row still
+    # costs
+    qv = _normed(queries, id_col, vec_col, "query_id", "q")
+    cv = _normed(spread(corpus), id_col, vec_col, "neighbor_id", "c")
+    par = corpus.sparkSession.sparkContext.defaultParallelism
+    return (
+        cand.join(cv, "neighbor_id")
+        .join(F.broadcast(qv), "query_id")
+        .repartition(par)
+        .withColumn("cosine", _pair_cosine(6))
+        .select("query_id", "neighbor_id", "cosine")
+    )
+
+
 def _score_candidates(
     cand: DataFrame,
     queries: DataFrame,
@@ -339,36 +373,9 @@ def _score_candidates(
     vec_col: str,
     k: int,
 ) -> DataFrame:
-    """Exact cosine rank over a (query_id, neighbor_id) candidate set —
-    the shared tail of every bucketed ANN path (LSH, IVF)."""
-    # re-attach vectors + hoisted norms (norm fold once per vector,
-    # not once per pair), then score on an explicitly wide stage: AQE
-    # coalesces the candidate shuffle by its small byte size, blind to
-    # the interpreted 64-wide dot fold each row still costs
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
-    cv = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-    )
-    par = corpus.sparkSession.sparkContext.defaultParallelism
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .repartition(par)
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),
-                6,
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    """Exact cosine top-k over a (query_id, neighbor_id) candidate
+    set."""
+    scored = _scored_pairs(cand, queries, corpus, id_col, vec_col)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
@@ -376,87 +383,6 @@ def _score_candidates(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= F.lit(int(k)))
         .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def cosine_topk_arrow(
-    queries_matrix,
-    query_ids,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    round_decimals: int = 6,
-) -> DataFrame:
-    """Brute-force cosine top-k with an Arrow-batched numpy scorer —
-    the measured fast path when candidate volume makes the per-pair
-    `aggregate` fold (interpreted, ~µs/element) the bottleneck.
-
-    `queries_matrix` is a (|Q|, dim) numpy array and `query_ids` the
-    matching id list — the caller materializes the (always small) query
-    side; the corpus streams through `mapInPandas` one Arrow batch at a
-    time and each batch is ONE `batch @ Q.T` matmul. Same plan shape as
-    `cosine_topk` (corpus scan, no corpus shuffle, |corpus|x|Q| scored
-    rows pruned to k per query by the window) — only the scorer
-    changes.
-
-    Values differ from the fold scorer by float summation order
-    (numpy pairwise vs sequential), so this variant is NOT wired to a
-    DuckDB-hash oracle; `tests/test_similarity_recall.py` asserts
-    allclose + identical top-k sets vs `cosine_topk`, and SCALE.md
-    records the measured speedup.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(queries_matrix, dtype=np.float64)
-    qn = np.sqrt((q * q).sum(axis=1))
-    # zero-norm guard: a degenerate all-zero vector (e.g. featurize_media
-    # on an empty payload) must score cosine 0.0, not NaN — Spark sorts
-    # NaN above every number, so one zero vector would otherwise rank #1
-    # for every query. Clamped norm divides a zero dot by 1 -> 0.0.
-    qn = np.where(qn == 0, 1.0, qn)
-    qids = list(query_ids)
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            c = np.asarray(
-                np.stack(pdf[vec_col].to_numpy()), dtype=np.float64
-            )
-            cn = np.sqrt((c * c).sum(axis=1))
-            cn = np.where(cn == 0, 1.0, cn)
-            sims = (c @ q.T) / (cn[:, None] * qn[None, :])
-            n, m = sims.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(qids, n),
-                    "neighbor_id": np.repeat(ids, m),
-                    "cosine": np.round(sims.ravel(), round_decimals),
-                }
-            )
-
-    scored = spread(corpus).select(id_col, vec_col).mapInPandas(
-        score, schema="query_id long, neighbor_id long, cosine double"
-    ).where(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(int(k)))
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _int_exploded(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
-    """(out_id, __j, __xs): vector exploded to fixed-point int64
-    components — the order-independent, cross-engine-exact currency of
-    the bucketing paths (see LSH_SCALE and INT_COMPONENT_BOUND)."""
-    return (
-        spread(df)
-        .select(F.col(id_col).alias(out_id), F.posexplode(vec_col).alias("__j", "__x"))
-        .select(out_id, "__j", _fixed_point(F.col("__x")).alias("__xs"))
     )
 
 
@@ -476,8 +402,7 @@ def int8_quantize(
     per-row (map-side, zero shuffles at any scale); folds are
     sequential so the DuckDB oracle reproduces them bit-for-bit.
     Zero vectors (max = 0) quantize to all-zero codes with cosine 0.0,
-    not NaN (Spark sorts NaN above every value — the advice-file
-    lesson from cosine_topk_arrow)."""
+    not NaN (Spark sorts NaN above every value)."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     m = F.array_max(F.transform(v, F.abs))
     codes = F.when(
@@ -520,16 +445,13 @@ def int8_quantize(
     )
 
 
-# Above this many corpus vectors the trainers keep the fully
-# distributed Lloyd loop; at or below it they collect the fixed-point
-# sample and run the SAME integer arithmetic in numpy on the driver —
-# bit-identical results (int64 dots/sums are exact and
-# order-independent; double division + floor are IEEE-identical), but
-# milliseconds instead of one Spark job per iteration. 500k x 64-dim
-# int64 is ~256 MB: well inside driver memory, and collecting a
-# bounded TRAINING SAMPLE driver-side is how production ANN builds
-# train (FAISS trains codebooks on a sample; the corpus-side
-# assign/encode passes stay distributed regardless).
+# Input bound of the codebook trainers: they collect the fixed-point
+# training vectors once and run Lloyd's iterations in numpy on the
+# driver. 500k x 64-dim int64 is ~256 MB, well inside driver memory,
+# and training on a bounded SAMPLE is how production ANN builds work
+# (FAISS trains codebooks on a sample; the corpus-side assign/encode
+# passes stay distributed). A larger input raises instead of being
+# collected: pass a training sample.
 TRAIN_DRIVER_ROWS = 500_000
 
 
@@ -537,12 +459,23 @@ def _collect_fixed_point(corpus, id_col, vec_col):
     """Corpus as (ids int64[n], X int64[n, d]) in LSH_SCALE fixed
     point, replicating `_fixed_point`'s floor(x_double * 2^20) scaling
     (float64 multiply + floor — IEEE-identical to the JVM) and its
-    guard (a null component arrives as NaN and fails it too)."""
+    guard (a null component arrives as NaN and fails it too).
+
+    One collect of at most TRAIN_DRIVER_ROWS + 1 rows; more than
+    TRAIN_DRIVER_ROWS raises ValueError."""
     import numpy as np
 
-    pdf = corpus.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    ).toPandas()
+    pdf = (
+        corpus.select(F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v"))
+        .limit(TRAIN_DRIVER_ROWS + 1)
+        .toPandas()
+    )
+    if len(pdf) > TRAIN_DRIVER_ROWS:
+        raise ValueError(
+            f"training corpus has more than TRAIN_DRIVER_ROWS = "
+            f"{TRAIN_DRIVER_ROWS} rows: pass a training sample "
+            "(e.g. corpus.sample(...)) instead of the whole corpus"
+        )
     ids = pdf["id"].to_numpy(dtype="int64")
     X = np.stack([np.asarray(v, dtype="float64") for v in pdf["v"]])
     ok = np.abs(X) <= INT_COMPONENT_BOUND
@@ -560,98 +493,26 @@ def ivf_train_codebook(
 ) -> dict[int, list[float]]:
     """Lloyd's k-means codebook for IVF, in CROSS-ENGINE-EXACT integer
     arithmetic: components are fixed-point int64 (floor-scale 2^20, see
-    LSH_SCALE), the assignment score is the integer MIPS dot (sum of
-    int64 products — order-independent, so Spark's shuffled partial agg
-    and a sequential SQL fold agree bit-for-bit), and the re-centered
-    component is floor(sum/count) where sum is exact in double
-    (|sum| < 2^53 for any sample the driver would train on) and IEEE
-    division/floor are bit-identical across engines. The whole loop is
-    therefore reproducible by an unrolled DuckDB CTE chain — the
-    property that lets the trained `ann_cosine_ivf` stay oracle-green.
+    LSH_SCALE), the assignment score is the integer MIPS dot (exact and
+    order-independent), and the re-centered component is
+    floor(sum/count) where sum is exact in double (|sum| < 2^53 for
+    any input under TRAIN_DRIVER_ROWS) and IEEE division/floor are
+    bit-identical across engines. The whole loop is therefore
+    reproducible by an unrolled DuckDB CTE chain — the property that
+    lets the trained `ann_cosine_ivf` stay oracle-green.
 
-    Seeds are corpus vectors by id (`init_ids`); cells keep their seed
-    id as the stable centroid id (ties in assignment break to the
-    LOWEST cid in both engines). Empty cells keep their previous
-    centroid. Each iteration is two shuffles over the (already tiny
-    after partial-agg) exploded sample plus a K x dim collect — the
-    codebook is metadata, and collecting it driver-side is how every
-    IVF build works (FAISS included); the corpus itself never leaves
-    the cluster.
+    The training vectors are collected once (at most
+    TRAIN_DRIVER_ROWS; more raises ValueError) and the iterations run
+    in numpy on the driver. Seeds are corpus vectors by id
+    (`init_ids`); cells keep their seed id as the stable centroid id;
+    assignment ties break to the LOWEST cid (centroid columns ordered
+    by cid, np.argmax takes the first max), as in the oracle. Empty
+    cells keep their previous centroid.
 
     Returns {cid: [component / 2^20 as double, ...]} — exact multiples
     of 2^-20, so re-scaling through `_ivf_cell_sql` recovers the
     trained integers losslessly.
     """
-    import math
-
-    if corpus.count() <= TRAIN_DRIVER_ROWS:
-        return _ivf_train_numpy(corpus, init_ids, iters, id_col, vec_col)
-
-    spark = corpus.sparkSession
-    seed_rows = (
-        corpus.where(F.col(id_col).isin([int(i) for i in init_ids]))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    cents: dict[int, list[int]] = {}
-    for r in seed_rows:
-        comps = [float(x) for x in r[1]]
-        for x in comps:
-            if abs(x) > INT_COMPONENT_BOUND:
-                raise ValueError(
-                    f"component {x} outside |x| <= {INT_COMPONENT_BOUND}"
-                )
-        cents[int(r[0])] = [
-            math.floor(x * float(LSH_SCALE)) for x in comps
-        ]
-    dim = len(next(iter(cents.values())))
-    ex = _int_exploded(corpus, id_col, vec_col, "__vid").persist()
-    try:
-        for _ in range(int(iters)):
-            ce = spark.createDataFrame(
-                [
-                    (cid, j, cs)
-                    for cid, comps in cents.items()
-                    for j, cs in enumerate(comps)
-                ],
-                "cid long, __j integer, __cs long",
-            )
-            assign = (
-                ex.join(F.broadcast(ce), "__j")
-                .groupBy("__vid", "cid")
-                .agg(F.sum(F.col("__xs") * F.col("__cs")).alias("__d"))
-                .groupBy("__vid")
-                .agg(F.expr("max_by(cid, struct(__d, -cid))").alias("cid"))
-            )
-            newc = (
-                ex.join(assign, "__vid")
-                .groupBy("cid", "__j")
-                .agg(
-                    F.floor(
-                        F.sum("__xs").cast("double") / F.count(F.lit(1))
-                    ).cast("long").alias("__cs")
-                )
-            )
-            got: dict[int, dict[int, int]] = {}
-            for r in newc.collect():
-                got.setdefault(int(r["cid"]), {})[int(r["__j"])] = int(r["__cs"])
-            for cid, byj in got.items():
-                cents[cid] = [byj.get(j, cents[cid][j]) for j in range(dim)]
-    finally:
-        ex.unpersist()
-    return {
-        cid: [cs / float(LSH_SCALE) for cs in comps]
-        for cid, comps in sorted(cents.items())
-    }
-
-
-def _ivf_train_numpy(corpus, init_ids, iters, id_col, vec_col):
-    """Driver-side twin of `ivf_train_codebook`'s distributed loop,
-    bit-identical by construction: int64 MIPS dots (exact, so argmax
-    equals the shuffled-agg max), argmax ties to the LOWEST cid
-    (centroid columns ordered by cid ascending; np.argmax takes the
-    first max), re-center = floor(exact-int64-sum as double / count),
-    empty cells keep their centroid."""
     import numpy as np
 
     ids, X = _collect_fixed_point(corpus, id_col, vec_col)
@@ -671,34 +532,6 @@ def _ivf_train_numpy(corpus, init_ids, iters, id_col, vec_col):
         cid: [int(cs) / float(LSH_SCALE) for cs in C[idx]]
         for idx, cid in enumerate(cids)
     }
-
-
-def _pq_train_numpy(corpus, seed_ids, n_sub, dim, iters, id_col, vec_col):
-    """Driver-side twin of `pq_train_codebooks`: squared-L2 argmin per
-    subspace, ties to the lowest code id, same re-center rule."""
-    import numpy as np
-
-    sub_dim = dim // int(n_sub)
-    ids, X = _collect_fixed_point(corpus, id_col, vec_col)
-    by_id = {int(i): row for i, row in zip(ids, X)}
-    cids = sorted(int(i) for i in seed_ids)
-    out: dict[tuple[int, int], list[int]] = {}
-    for m in range(int(n_sub)):
-        Xm = X[:, m * sub_dim:(m + 1) * sub_dim]
-        C = np.stack([by_id[c][m * sub_dim:(m + 1) * sub_dim] for c in cids])
-        for _ in range(int(iters)):
-            d = Xm[:, None, :] - C[None, :, :]
-            best = np.argmin((d * d).sum(axis=2, dtype="int64"), axis=1)
-            for idx in range(len(cids)):
-                mask = best == idx
-                if mask.any():
-                    s = Xm[mask].sum(axis=0, dtype="int64")
-                    C[idx] = np.floor(
-                        s.astype("float64") / int(mask.sum())
-                    ).astype("int64")
-        for idx, cid in enumerate(cids):
-            out[(m, cid)] = [int(v) for v in C[idx]]
-    return {k: v for k, v in sorted(out.items())}
 
 
 def _ivf_dot_sql(centroid: list[float]) -> str:
@@ -846,31 +679,8 @@ def cosine_range_ivf(
     has no k, so no per-query window is needed — the filter is
     map-side over the scored candidates."""
     cand = _ivf_candidates(queries, corpus, codebook, id_col, vec_col, nprobe)
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
-    cv = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-    )
-    par = corpus.sparkSession.sparkContext.defaultParallelism
-    return (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .repartition(par)
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv"))
-                / (F.col("__qn") * F.col("__cn")),
-                6,
-            ),
-        )
-        .where(F.col("cosine") >= F.lit(float(radius)))
-        .select("query_id", "neighbor_id", "cosine")
+    return _scored_pairs(cand, queries, corpus, id_col, vec_col).where(
+        F.col("cosine") >= F.lit(float(radius))
     )
 
 
@@ -889,16 +699,22 @@ def cosine_range_ivf(
 def _int_exploded_sub(
     df: DataFrame, id_col: str, vec_col: str, out_id: str, sub_dim: int
 ) -> DataFrame:
-    """(out_id, __m, __jj, __xs): fixed-point components keyed by
+    """(out_id, __m, __jj, __xs): the vector exploded to fixed-point
+    int64 components (see LSH_SCALE and INT_COMPONENT_BOUND), keyed by
     subspace index __m = j div sub_dim and in-subspace position __jj —
-    the exploded currency of every PQ step (one posexplode pass; the
-    subspace split is arithmetic on the position, not a second
-    explode)."""
-    return _int_exploded(df, id_col, vec_col, out_id).select(
-        out_id,
-        F.expr(f"__j DIV {int(sub_dim)}").cast("int").alias("__m"),
-        F.expr(f"__j % {int(sub_dim)}").cast("int").alias("__jj"),
-        "__xs",
+    the exploded currency of the PQ query-side LUT (one posexplode
+    pass; the subspace split is arithmetic on the position, not a
+    second explode)."""
+    return (
+        spread(df)
+        .select(F.col(id_col).alias(out_id), F.posexplode(vec_col).alias("__j", "__x"))
+        .select(out_id, "__j", _fixed_point(F.col("__x")).alias("__xs"))
+        .select(
+            out_id,
+            F.expr(f"__j DIV {int(sub_dim)}").cast("int").alias("__m"),
+            F.expr(f"__j % {int(sub_dim)}").cast("int").alias("__jj"),
+            "__xs",
+        )
     )
 
 
@@ -912,29 +728,21 @@ def pq_train_codebooks(
     vec_col: str = "embedding",
 ) -> dict[tuple[int, int], list[int]]:
     """Per-subspace k-means codebooks in the same CROSS-ENGINE-EXACT
-    integer arithmetic as `ivf_train_codebook`, with two deltas that
-    make it PQ (and keep it oracle-reproducible):
-
-    - assignment is squared L2 distance sum((xs-cs)^2) per subspace
-      (argmin, ties to the lowest code id) — PQ quantizes *position*,
-      so MIPS would collapse every cell onto the largest-norm
-      codeword; the squared difference of fixed-point int64s is still
-      order-independent, so shuffled partial aggs and DuckDB's
-      sequential fold agree bit-for-bit. Overflow: |diff| <= 2B*2^20
-      with B = INT_COMPONENT_BOUND, so a subspace dot sums sub_dim *
-      (2B)^2 * 2^40 — safe for sub_dim <= 16 at B = 300 (5.8e18 <
-      2^63), asserted below;
-    - ALL subspaces train in one loop over a (m, cid)-composite-keyed
-      codebook: one assignment job and one re-center job per Lloyd
-      iteration regardless of M (not M loops), so driver rounds don't
-      scale with the number of subspaces.
+    integer arithmetic as `ivf_train_codebook` (one collect of at most
+    TRAIN_DRIVER_ROWS vectors, iterations in numpy), with squared L2
+    distance sum((xs-cs)^2) per subspace as the assignment score
+    (argmin, ties to the lowest code id) — PQ quantizes *position*, so
+    MIPS would collapse every cell onto the largest-norm codeword.
+    Overflow: |diff| <= 2B*2^20 with B = INT_COMPONENT_BOUND, so a
+    subspace distance sums sub_dim * (2B)^2 * 2^40 — safe for
+    sub_dim <= 16 at B = 300 (5.8e18 < 2^63), asserted below.
 
     Seeds are corpus vectors by id; subspace m of seed s initializes
     code (m, s). Empty cells keep their previous centroid. Returns
     {(m, cid): [int components, len sub_dim]} — already in fixed-point
     integer space (PQ never needs the float form back).
     """
-    import math
+    import numpy as np
 
     sub_dim = dim // int(n_sub)
     if sub_dim * (2 * INT_COMPONENT_BOUND) ** 2 * float(LSH_SCALE) ** 2 >= 2.0**63:
@@ -942,71 +750,26 @@ def pq_train_codebooks(
             f"sub_dim {sub_dim} too wide for the int64 squared-L2 bound "
             f"at |x| <= {INT_COMPONENT_BOUND}; raise n_sub"
         )
-    if corpus.count() <= TRAIN_DRIVER_ROWS:
-        return _pq_train_numpy(
-            corpus, seed_ids, n_sub, dim, iters, id_col, vec_col
-        )
-    spark = corpus.sparkSession
-    seed_rows = (
-        corpus.where(F.col(id_col).isin([int(i) for i in seed_ids]))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    cents: dict[tuple[int, int], list[int]] = {}
-    for r in seed_rows:
-        comps = [float(x) for x in r[1]]
-        for x in comps:
-            if abs(x) > INT_COMPONENT_BOUND:
-                raise ValueError(
-                    f"component {x} outside |x| <= {INT_COMPONENT_BOUND}"
-                )
-        scaled = [math.floor(x * float(LSH_SCALE)) for x in comps]
-        for m in range(int(n_sub)):
-            cents[(m, int(r[0]))] = scaled[m * sub_dim:(m + 1) * sub_dim]
-    ex = _int_exploded_sub(corpus, id_col, vec_col, "__vid", sub_dim).persist()
-    try:
+    ids, X = _collect_fixed_point(corpus, id_col, vec_col)
+    by_id = {int(i): row for i, row in zip(ids, X)}
+    cids = sorted(int(i) for i in seed_ids)
+    out: dict[tuple[int, int], list[int]] = {}
+    for m in range(int(n_sub)):
+        Xm = X[:, m * sub_dim:(m + 1) * sub_dim]
+        C = np.stack([by_id[c][m * sub_dim:(m + 1) * sub_dim] for c in cids])
         for _ in range(int(iters)):
-            cb = spark.createDataFrame(
-                [
-                    (m, cid, jj, cs)
-                    for (m, cid), comps in cents.items()
-                    for jj, cs in enumerate(comps)
-                ],
-                "__m integer, cid long, __jj integer, __cs long",
-            )
-            assign = (
-                ex.join(F.broadcast(cb), ["__m", "__jj"])
-                .groupBy("__vid", "__m", "cid")
-                .agg(
-                    F.sum(
-                        (F.col("__xs") - F.col("__cs"))
-                        * (F.col("__xs") - F.col("__cs"))
-                    ).alias("__d")
-                )
-                .groupBy("__vid", "__m")
-                .agg(F.expr("min_by(cid, struct(__d, cid))").alias("cid"))
-            )
-            newc = (
-                ex.join(assign, ["__vid", "__m"])
-                .groupBy("__m", "cid", "__jj")
-                .agg(
-                    F.floor(
-                        F.sum("__xs").cast("double") / F.count(F.lit(1))
-                    ).cast("long").alias("__cs")
-                )
-            )
-            got: dict[tuple[int, int], dict[int, int]] = {}
-            for r in newc.collect():
-                got.setdefault((int(r["__m"]), int(r["cid"])), {})[
-                    int(r["__jj"])
-                ] = int(r["__cs"])
-            for key, byj in got.items():
-                cents[key] = [
-                    byj.get(jj, cents[key][jj]) for jj in range(sub_dim)
-                ]
-    finally:
-        ex.unpersist()
-    return {k: v for k, v in sorted(cents.items())}
+            d = Xm[:, None, :] - C[None, :, :]
+            best = np.argmin((d * d).sum(axis=2, dtype="int64"), axis=1)
+            for idx in range(len(cids)):
+                mask = best == idx
+                if mask.any():
+                    s = Xm[mask].sum(axis=0, dtype="int64")
+                    C[idx] = np.floor(
+                        s.astype("float64") / int(mask.sum())
+                    ).astype("int64")
+        for idx, cid in enumerate(cids):
+            out[(m, cid)] = [int(v) for v in C[idx]]
+    return {k: v for k, v in sorted(out.items())}
 
 
 def pq_codebook_df(spark, codebooks: dict[tuple[int, int], list[int]]) -> DataFrame:
@@ -1049,13 +812,13 @@ def pq_encode(
     (OPTIMIZATION_r13.md); the HOF tree is ~50 nodes and costs
     microseconds per row at this K.
 
-    Contract: vectors must carry exactly `n_sub * sub_dim` components
-    (the fixed-dim assumption the PQ oracle's range(1, dim+1) unnest
-    encodes); components follow the INT_COMPONENT_BOUND contract."""
+    Contract: a null or empty vector gets no code rows (dropped by
+    `_fixed_point_rows`, as in LSH and IVF); any other vector must
+    carry exactly `n_sub * sub_dim` components (the fixed-dim
+    assumption the PQ oracle's range(1, dim+1) unnest encodes);
+    components follow the INT_COMPONENT_BOUND contract."""
     n_sub, sub_dim = _pq_shape(codebooks)
-    proj = spread(corpus).selectExpr(
-        id_col, f"{_fixed_point_hof_sql(vec_col)} AS __xs"
-    )
+    proj = _fixed_point_rows(corpus, id_col, vec_col)
     per_sub = []
     for m in range(n_sub):
         cws = ", ".join(

@@ -401,9 +401,7 @@ def _violation_wire(obj: str, obj_type: str, vname: str,
     return (obj_type, obj, _json.dumps(body, separators=(",", ":")))
 
 
-def violation_wires_from_alert_json(
-    line: str, legacy_heavy_hitter_fallback: bool = False
-) -> list[tuple[str, str, str]]:
+def violation_wires_from_alert_json(line: str) -> list[tuple[str, str, str]]:
     """Pure-Python per-line twin of the iprepd WriteFn conversion
     (`IprepdIO.java:389-420` + `Violation.java:100-235,344`), for
     EXECUTOR-side emitters that receive alert JSON lines.
@@ -420,13 +418,8 @@ def violation_wires_from_alert_json(
       (`Violation.java:145-176`);
     - ``iprepd_suppress_recovery`` metadata rides along as the
       integer suppress_recovery wire field (`Violation.java:90-96`);
-    - unknown/missing subcategories produce NO violations by default,
-      matching ``Violation.fromAlert`` returning null
-      (`IprepdIO.java:405-410`). Pass
-      ``legacy_heavy_hitter_fallback=True`` to opt in to the legacy
-      ``fxa:heavy_hitter_{category}`` source-address projection
-      (violations_from_alerts) for pipelines that key alerts by
-      category only.
+    - unknown/missing subcategories produce NO violations, matching
+      ``Violation.fromAlert`` returning null (`IprepdIO.java:405-410`).
     """
     import json as _json
 
@@ -451,16 +444,7 @@ def violation_wires_from_alert_json(
     subcat = alert.get("subcategory")
     gens = VIOLATION_GENERATOR_MAP.get(subcat) if subcat else None
     if gens is None:
-        if not legacy_heavy_hitter_fallback:
-            # reference behavior: no generator for the subcategory ->
-            # no iprepd escalation (Violation.fromAlert returns null)
-            return []
-        # legacy heavy-hitter fallback (pre-generator-map projection)
-        category = alert.get("category")
-        if not source or not category:
-            return []
-        return [_violation_wire(
-            source, "ip", f"fxa:heavy_hitter_{category}", suppress)]
+        return []
     if subcat == "amo_abuse_matched_addon" and not source:
         return []
     out: list[tuple[str, str, str]] = []

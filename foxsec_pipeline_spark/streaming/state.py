@@ -249,113 +249,3 @@ def auth_state_analyze(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-def auth_state_analyze_tws(
-    logins: DataFrame,
-    max_kmh: float = 800.0,
-    prune_age_days: float = 10.0,
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """T4 StateAnalyze on the `transformWithState` API: same known-IP
-    + geo-velocity decisions as `auth_state_analyze`, held to it by a
-    parity test on the shared fixture
-    (`test_auth_state_tws_parity`).
-
-    The mapping is closer to the reference than the GroupState twin:
-    `AuthStateModel.java:18-20,114-117` holds a map ip -> {lat, lon,
-    last_seen}, which becomes a typed MapState (per-entry point
-    lookups/updates instead of rewriting one flat array row), and the
-    external store's age pruning becomes a per-key expiry timer
-    re-armed at the prune horizon past the newest login. At scale
-    MapState on RocksDB reads/writes only the touched IP entries —
-    the flat-array GroupState row rewrites the whole profile per
-    login. Same environment seam as the tws suppressors:
-    google.protobuf + RocksDB state store provider.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    prune_us = int(prune_age_days * 86_400_000_000)
-
-    class _AuthState(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            # ip -> (lat, lon, last_seen_us): AuthStateModel's map
-            self._ips = handle.getMapState(
-                "ips", "ip STRING", "lat DOUBLE, lon DOUBLE, seen_us LONG"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            entries = {k[0]: tuple(v) for k, v in self._ips.iterator()}
-            orig = dict(entries)
-            out_rows = []
-            newest_us = 0
-            for pdf in rows:
-                for _, row in pdf.sort_values("timestamp").iterrows():
-                    ts_us = int(row["timestamp"].value // 1000)
-                    newest_us = max(newest_us, ts_us)
-                    # entry-age pruning (PruningStrategyEntryAge.java)
-                    entries = {
-                        ip: e
-                        for ip, e in entries.items()
-                        if ts_us - e[2] <= prune_us
-                    }
-                    ip = row["source_address"]
-                    known = ip in entries
-                    km = kmh = None
-                    severity = "info"
-                    if not known and entries:
-                        lat0, lon0, seen0 = max(
-                            entries.values(), key=lambda e: e[2]
-                        )
-                        km = _haversine_km(
-                            lat0, lon0, row["lat"], row["lon"]
-                        )
-                        dt_h = (ts_us - seen0) / 3.6e9
-                        kmh = km / dt_h if dt_h > 0 else float("inf")
-                        severity = "critical" if kmh > max_kmh else "warn"
-                    entries[ip] = (row["lat"], row["lon"], ts_us)
-                    out_rows.append(
-                        {
-                            "identity": row["identity"],
-                            "timestamp": row["timestamp"],
-                            "source_address": ip,
-                            "known_ip": known,
-                            "km_from_last": km,
-                            "kmh": kmh,
-                            "severity": severity,
-                        }
-                    )
-            # delta write-back: MapState touches only pruned + updated
-            # entries (the GroupState twin rewrites its whole flat row)
-            for ip in orig.keys() - entries.keys():
-                self._ips.removeKey((ip,))
-            for ip, e in entries.items():
-                if orig.get(ip) != e:
-                    self._ips.updateValue((ip,), e)
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(newest_us // 1000 + prune_us // 1000)
-            if out_rows:
-                yield pd.DataFrame(out_rows)
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            self._ips.clear()
-            return iter([])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        logins.withWatermark("timestamp", watermark_delay)
-        .groupBy("identity")
-        .transformWithStateInPandas(
-            _AuthState(),
-            outputStructType=AUTH_EVAL_SCHEMA,
-            outputMode="append",
-            timeMode="EventTime",
-        )
-    )

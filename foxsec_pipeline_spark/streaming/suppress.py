@@ -5,13 +5,15 @@ emit first alert per key, drop repeats until expiry),
 `alert/AlertSuppressorCount.java:26-36` (re-emit when count changes),
 `alert/AlertSuppressorSession.java:41-112` (TTL extended per arrival).
 
-Spark mappings, in preference order:
-1. `dropDuplicatesWithinWatermark` — the built-in streaming dedup
-   with state TTL'd by the watermark; exactly AlertSuppressor
-   semantics when the suppression window equals the watermark delay.
-   Zero custom state code, scales via the state store.
-2. `applyInPandasWithState` — for count-change re-emit and
-   session-TTL variants, which need custom state transitions.
+Each suppressor has one Spark form:
+- T1 `suppress_stream`: `dropDuplicatesWithinWatermark`, the built-in
+  streaming dedup with state TTL'd by the watermark; exactly
+  AlertSuppressor semantics when the suppression window equals the
+  watermark delay. Zero custom state code, scales via the state store.
+- T2 `suppress_count_stream` and T3 `suppress_session_stream`:
+  `applyInPandasWithState` (GroupState with an event-time timeout —
+  the Python form of `mapGroupsWithState`), for the count-change
+  re-emit and sliding-TTL transitions.
 """
 
 from __future__ import annotations
@@ -149,164 +151,5 @@ def suppress_session_stream(
             stateStructType=state_schema,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def suppress_count_stream_tws(
-    alerts: DataFrame,
-    key_cols: list[str],
-    count_col: str = "count",
-    ts_col: str = "timestamp",
-    expiry: str = "15 minutes",
-) -> DataFrame:
-    """T2 AlertSuppressorCount on the `transformWithState` API
-    (Spark 4's successor to `applyInPandasWithState`): same
-    count-change re-emit semantics as `suppress_count_stream`, held
-    to it by a parity test on the shared fixture.
-
-    Why a second implementation exists: transformWithState is the
-    scale path forward — typed state variables (ValueState) instead
-    of one flat state row, first-class event-time timers instead of
-    the single timeoutTimestamp slot, per-state TTL, and state
-    schema evolution on a live checkpoint, all on the RocksDB state
-    store provider. The reference's ValueState + expiry-timer pair
-    (`alert/AlertSuppressorCount.java:26-36`) maps 1:1 onto
-    getValueState + registerTimer, closer than the GroupState
-    emulation above.
-
-    Environment note: the transformWithState Python protocol speaks
-    protobuf (`pyspark/sql/streaming/proto/StateMessage_pb2`), so
-    running this operator needs `google.protobuf` AND the RocksDB
-    state store provider
-    (`spark.sql.streaming.stateStore.providerClass=...RocksDBStateStoreProvider`).
-    The parity test (`test_suppress_count_tws_parity`) skips where
-    protobuf is absent; `suppress_count_stream` is the
-    dependency-free twin with identical semantics.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    num, unit = expiry.split()
-    ttl_ms = int(num) * {"seconds": 1000, "minutes": 60_000, "hours": 3_600_000}[unit]
-    out_schema = alerts.schema
-
-    class _CountReemit(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._last = handle.getValueState("last_count", "c LONG")
-
-        def handleInputRows(self, key, rows, timer_values):
-            last = self._last.get()
-            last_count = None if last is None else int(last[0])
-            newest_ms = 0
-            for pdf in rows:
-                pdf = pdf.sort_values(ts_col)
-                keep = []
-                for i, c in enumerate(pdf[count_col]):
-                    c = int(c)
-                    if last_count is None or c != last_count:
-                        keep.append(i)
-                        last_count = c
-                newest_ms = max(
-                    newest_ms, int(pdf[ts_col].max().value // 1_000_000)
-                )
-                if keep:
-                    yield pdf.iloc[keep]
-            self._last.update((last_count,))
-            # the reference arms one expiry timer per key
-            # (AlertSuppressorCount.java: state TTL); re-arming replaces
-            # the old timer so the TTL slides with the newest event
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(newest_ms + ttl_ms)
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            self._last.clear()
-            return iter([])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        alerts.withWatermark(ts_col, expiry)
-        .groupBy(*key_cols)
-        .transformWithStateInPandas(
-            _CountReemit(),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="EventTime",
-        )
-    )
-
-
-def suppress_session_stream_tws(
-    alerts: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "timestamp",
-    expiry: str = "15 minutes",
-) -> DataFrame:
-    """T3 AlertSuppressorSession on the `transformWithState` API:
-    same sliding-TTL semantics as `suppress_session_stream` (emit the
-    first alert per key, suppress while the key stays active, each
-    arrival extends the TTL — `alert/AlertSuppressorSession.java:
-    41-112`), held to it by a parity test on the shared fixture
-    (`test_suppress_session_tws_parity`).
-
-    The reference's session suppressor is a ValueState (last-seen) +
-    a timer it re-arms on every element — exactly getValueState +
-    deleteTimer/registerTimer here, the 1:1 mapping the GroupState
-    emulation approximates through its single timeoutTimestamp slot.
-    Same environment seam as `suppress_count_stream_tws`: needs
-    google.protobuf + the RocksDB state store provider.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    num, unit = expiry.split()
-    ttl_ms = int(num) * {"seconds": 1000, "minutes": 60_000, "hours": 3_600_000}[unit]
-    out_schema = alerts.schema
-
-    class _SessionSuppress(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._seen = handle.getValueState("last_seen", "ms LONG")
-
-        def handleInputRows(self, key, rows, timer_values):
-            alive = self._seen.get() is not None
-            newest_ms = 0
-            for pdf in rows:
-                pdf = pdf.sort_values(ts_col)
-                newest_ms = max(
-                    newest_ms, int(pdf[ts_col].max().value // 1_000_000)
-                )
-                if not alive:
-                    yield pdf.iloc[[0]]
-                    alive = True
-            self._seen.update((newest_ms,))
-            # sliding TTL: every arrival replaces the expiry timer
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(newest_ms + ttl_ms)
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            self._seen.clear()
-            return iter([])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        alerts.withWatermark(ts_col, expiry)
-        .groupBy(*key_cols)
-        .transformWithStateInPandas(
-            _SessionSuppress(),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="EventTime",
         )
     )

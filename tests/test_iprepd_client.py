@@ -139,31 +139,28 @@ def test_reputation_provider_enriches_dataframe(spark, server):
 
 
 def test_violation_emitter_end_to_end(server):
-    """Alert JSON lines -> violation PUTs, including skip of
-    non-convertible lines (IprepdIO WriteFn ignores non-Alert
-    input). These category-only alerts use the legacy heavy-hitter
-    projection, which is opt-in as of r9 (default matches
-    Violation.fromAlert returning null for no-generator alerts)."""
+    """Alert JSON lines -> violation PUTs over the generator map,
+    including skip of non-convertible lines (IprepdIO WriteFn ignores
+    non-Alert input): non-JSON, a subcategory with no generator, and
+    an ip generator without a source address escalate nothing."""
     _FakeIprepd.puts.clear()
-    emit = iprepd_violation_emitter(
-        [f"{server}|k3"], legacy_heavy_hitter_fallback=True)
-    # default emitter: no generator-map subcategory -> no PUTs at all
-    no_fallback = iprepd_violation_emitter([f"{server}|k3"])
-    no_fallback([json.dumps({"category": "httprequest",
-                             "metadata": {"source_address": "10.1.2.3"}})])
-    assert _FakeIprepd.puts == []
+    emit = iprepd_violation_emitter([f"{server}|k3"])
     lines = [
-        json.dumps({"category": "httprequest",
+        json.dumps({"category": "httprequest", "subcategory": "hard_limit",
                     "metadata": {"source_address": "10.1.2.3"}}),
         "not json at all",
-        json.dumps({"category": "customs", "metadata": {}}),  # no addr
-        json.dumps({"category": "customs",
+        json.dumps({"category": "httprequest",
+                    "subcategory": "not_a_generator",
+                    "metadata": {"source_address": "10.9.9.9"}}),
+        json.dumps({"category": "httprequest", "subcategory": "error_rate",
+                    "metadata": {}}),  # no addr
+        json.dumps({"category": "httprequest", "subcategory": "error_rate",
                     "metadata": {"source_address": "10.4.5.6"}}),
     ]
     emit(lines)
     assert [(t, o, v["violation"]) for t, o, v in _FakeIprepd.puts] == [
-        ("ip", "10.1.2.3", "fxa:heavy_hitter_httprequest"),
-        ("ip", "10.4.5.6", "fxa:heavy_hitter_customs"),
+        ("ip", "10.1.2.3", "hard_limit_violation"),
+        ("ip", "10.4.5.6", "client_error_rate_violation"),
     ]
     for _, _, v in _FakeIprepd.puts:
         assert v["ip"] == v["object"] and v["type"] == "ip"
@@ -244,16 +241,13 @@ def test_violation_wires_generator_map_and_exempt():
         "suppress_recovery": 900,
     }
 
-    # unknown subcategory: NO escalation by default (Violation.fromAlert
-    # null, IprepdIO.java:405-410); legacy heavy-hitter projection only
-    # behind the explicit opt-in flag
+    # unknown subcategory: NO escalation (Violation.fromAlert null,
+    # IprepdIO.java:405-410)
     unknown = json.dumps({
         "category": "httprequest", "subcategory": "not_a_generator",
         "metadata": {"source_address": "10.5.5.5"},
     })
     assert wires(unknown) == []
-    [(_, _, v)] = wires(unknown, legacy_heavy_hitter_fallback=True)
-    assert json.loads(v)["violation"] == "fxa:heavy_hitter_httprequest"
 
 
 def test_violation_emitter_generator_map_put_fanout(server):

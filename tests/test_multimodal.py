@@ -128,32 +128,42 @@ def test_multimodal_to_ann_pipeline(spark):
     """The full multimodal training-data path composes end-to-end:
     binary payloads -> Arrow featurize (byte-histogram embedding; a
     real encoder swaps in at the same seam) -> ANN top-k over the
-    embedding column. Deterministic across runs."""
+    embedding column. Deterministic across runs. An empty payload
+    featurizes to the zero vector, which scores cosine 0.0 against
+    everything instead of failing the query."""
     import numpy as np
+    from pyspark.sql import functions as F
 
     from foxsec_pipeline_spark.operators.multimodal import featurize_media
-    from foxsec_pipeline_spark.operators.similarity import cosine_topk_arrow
+    from foxsec_pipeline_spark.operators.similarity import cosine_topk
     from foxsec_pipeline_spark.session import load_tables
 
+    empty_id = 10**9
     docs = load_tables(spark, "/root/testdata/sf0.001", "documents")["documents"]
-    emb = featurize_media(attach_binary_payload(docs.limit(50)))
-    ep = emb.toPandas().sort_values("doc_id")
-    # unit-norm embeddings out of the featurizer
-    norms = [np.linalg.norm(v) for v in ep["embedding"]]
-    assert all(abs(n - 1.0) < 1e-9 for n in norms)
-    qp = ep.head(5)
-    topk = cosine_topk_arrow(
-        np.stack(qp["embedding"].to_numpy()), qp["doc_id"].tolist(),
-        emb, id_col="doc_id", k=3,
+    docs = docs.select("doc_id", "text").limit(49).unionByName(
+        spark.createDataFrame([(empty_id, "")], "doc_id long, text string")
     )
-    rows = topk.collect()
-    assert len(rows) == 15  # 5 queries x k=3
+    emb = featurize_media(attach_binary_payload(docs))
+    ep = emb.toPandas().sort_values("doc_id")
+    # unit-norm embeddings out of the featurizer, zero for the empty one
+    norms = dict(zip(ep["doc_id"], (np.linalg.norm(v) for v in ep["embedding"])))
+    assert norms.pop(empty_id) == 0.0
+    assert all(abs(n - 1.0) < 1e-9 for n in norms.values())
+    qids = [*ep["doc_id"].head(5), empty_id]
+    queries = emb.where(F.col("doc_id").isin(qids))
+    rows = cosine_topk(queries, emb, id_col="doc_id", k=3).collect()
+    assert len(rows) == 18  # 6 queries x k=3
     assert all(1 <= r.rank <= 3 and -1.0 <= r.cosine <= 1.0 for r in rows)
-    again = {(r.query_id, r.neighbor_id, r.rank) for r in cosine_topk_arrow(
-        np.stack(qp["embedding"].to_numpy()), qp["doc_id"].tolist(),
-        emb, id_col="doc_id", k=3,
+    assert [r.cosine for r in rows if r.query_id == empty_id] == [0.0] * 3
+    again = {(r.query_id, r.neighbor_id, r.rank) for r in cosine_topk(
+        queries, emb, id_col="doc_id", k=3
     ).collect()}
     assert {(r.query_id, r.neighbor_id, r.rank) for r in rows} == again
+    # with every neighbor kept, the zero vector is in each query's list
+    everyone = cosine_topk(queries, emb, id_col="doc_id", k=50).collect()
+    assert sorted(
+        (r.query_id, r.cosine) for r in everyone if r.neighbor_id == empty_id
+    ) == [(q, 0.0) for q in qids[:5]]
 
 
 def test_media_phash_near_dup_properties(spark):

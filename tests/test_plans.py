@@ -125,7 +125,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
 
     from pyspark.sql import functions as F
 
-    from foxsec_pipeline_spark.sources.bucketed import read_table, write_bucketed
+    from foxsec_pipeline_spark.sources.bucketing import read_bucketed, write_bucketed
 
     suffix = _uuid.uuid4().hex[:8]
     ta, tb = f"bt_events_{suffix}", f"bt_alerts_{suffix}"
@@ -136,12 +136,12 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
         F.col("id").alias("k"), (F.col("id") % 7).alias("sev")
     )
     try:
-        write_bucketed(ev, ta, ["k"], num_buckets=8, sort_cols=["k"])
-        write_bucketed(al, tb, ["k"], num_buckets=8, sort_cols=["k"])
+        write_bucketed(ev, ta, key="k", buckets=8)
+        write_bucketed(al, tb, key="k", buckets=8)
         # disable broadcast so the join exercises the bucketed SMJ path
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            joined = read_table(spark, ta).join(read_table(spark, tb), "k")
+            joined = read_bucketed(spark, ta).join(read_bucketed(spark, tb), "k")
             plan = plan_of(joined)
             assert "SortMergeJoin" in plan, plan
             assert _exchange_nodes(plan) == 0, plan

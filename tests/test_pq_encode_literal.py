@@ -79,3 +79,16 @@ def test_literal_encode_range_guard(spark):
     cb = {(m, c): [c] * 8 for m in range(8) for c in (0, 1)}
     with pytest.raises(Exception, match="fixed-point component"):
         pq_encode(bad, cb).collect()
+
+
+def test_pq_encode_drops_null_and_empty_vectors(spark):
+    """A null or an empty vector gets no code rows, as in the LSH and
+    IVF kernels; the other rows are encoded as without them."""
+    one = 1 << 20
+    cb = {(0, 1): [one, 0], (0, 2): [0, one], (1, 1): [one, 0], (1, 2): [0, one]}
+    schema = "vec_id long, embedding array<double>"
+    good = [(1, [0.9, 0.1, 0.2, 0.8]), (2, [0.1, 0.9, 0.7, 0.3])]
+    want = {(1, 0): 1, (1, 1): 2, (2, 0): 2, (2, 1): 1}
+    assert _codes(spark.createDataFrame(good, schema), cb) == want
+    bad = [(3, None), (4, [])]
+    assert _codes(spark.createDataFrame(good + bad, schema), cb) == want

@@ -151,26 +151,6 @@ def test_ann_pq_recall_vs_exact(emb, spark):
     assert recall[64] >= 0.65
 
 
-def test_arrow_scorer_matches_fold_scorer(emb, spark):
-    """The Arrow/numpy brute-force scorer returns the same top-k sets
-    as the built-in fold scorer (values allclose — summation order
-    differs, so exact-hash parity is deliberately not claimed)."""
-    import numpy as np
-
-    from foxsec_pipeline_spark.operators.similarity import cosine_topk_arrow
-
-    queries = emb.where(F.col("vec_id") < 20)
-    qp = queries.orderBy("vec_id").toPandas()
-    fold = cosine_topk(queries, emb, k=5)
-    arrow = cosine_topk_arrow(
-        np.stack(qp["embedding"].to_numpy()), qp["vec_id"].tolist(), emb, k=5
-    )
-    f = {(r.query_id, r.neighbor_id): r.cosine for r in fold.collect()}
-    a = {(r.query_id, r.neighbor_id): r.cosine for r in arrow.collect()}
-    assert set(f) == set(a)
-    assert all(abs(f[k_] - a[k_]) < 1e-9 for k_ in f)
-
-
 def test_minhash_recall_vs_exact_jaccard(spark):
     docs = load_tables(spark, SF_DIR, "documents")["documents"]
     exact = _pair_set(

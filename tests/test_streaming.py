@@ -555,54 +555,6 @@ def test_stream_stream_interval_join_matches_batch(spark, tmpdir):
     assert stream_pairs == batch_pairs
 
 
-def test_suppress_count_tws_parity(spark, tmpdir):
-    """The transformWithState implementation (Spark 4 state API) must
-    make the same emit/suppress decisions as the GroupState one on
-    the shared count-change fixture, including cross-key isolation.
-
-    Skips where google.protobuf is missing: the transformWithState
-    Python worker protocol imports StateMessage_pb2 at startup, so
-    without protobuf the driver worker cannot even initialize (the
-    same environment-seam pattern as the real-mmdb GeoIP test)."""
-    pytest.importorskip("google.protobuf")
-    from foxsec_pipeline_spark.streaming.suppress import suppress_count_stream_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-
-    rows = [
-        Row(timestamp=datetime.fromisoformat("2024-01-01 00:00:00"), key="a", count=5),
-        Row(timestamp=datetime.fromisoformat("2024-01-01 00:01:00"), key="a", count=5),
-        Row(timestamp=datetime.fromisoformat("2024-01-01 00:02:00"), key="a", count=9),
-        Row(timestamp=datetime.fromisoformat("2024-01-01 00:03:00"), key="a", count=9),
-        Row(timestamp=datetime.fromisoformat("2024-01-01 00:00:30"), key="b", count=5),
-        Row(timestamp=datetime.fromisoformat("2024-01-01 00:01:30"), key="b", count=5),
-    ]
-    src = _stream_from_rows(
-        spark, rows, "timestamp timestamp, key string, count long", tmpdir
-    )
-    name = f"suptws_{uuid.uuid4().hex[:8]}"
-    _run_stream(
-        suppress_count_stream_tws(src, ["key"], count_col="count", expiry="15 minutes"),
-        name,
-    )
-    got = [
-        (r["key"], r["count"])
-        for r in spark.sql(f"SELECT * FROM {name} ORDER BY key, timestamp").collect()
-    ]
-    # same decisions as test_suppress_count_reemit_on_change: dup 5s
-    # suppressed per key, change to 9 re-emitted
-    if prev is None:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    else:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    assert got == [("a", 5), ("a", 9), ("b", 5)]
-
-
 def test_streaming_session_window_matches_batch(spark, tmpdir):
     """W5-W8 under readStream: F.session_window gap-sessionization in
     a streaming aggregation agrees with the batch session plan on
@@ -647,98 +599,3 @@ def test_streaming_session_window_matches_batch(spark, tmpdir):
         for r in sessions(ev).collect()
     }
     assert stream_rows == batch_rows and len(batch_rows) > 0
-
-
-def _with_rocksdb(spark):
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    return prev
-
-
-def _restore_provider(spark, prev):
-    if prev is None:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    else:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_suppress_session_tws_parity(spark, tmpdir):
-    """T3 on transformWithState must make the same emit/suppress
-    decisions as the GroupState twin on the sliding-TTL fixture of
-    test_suppress_session_sliding_ttl: continuous activity keeps the
-    key suppressed past a fixed-TTL horizon; only the first alert per
-    active session emits. Skip-gated on google.protobuf like
-    test_suppress_count_tws_parity (the transformWithState Python
-    worker protocol imports StateMessage_pb2 at startup)."""
-    pytest.importorskip("google.protobuf")
-    from foxsec_pipeline_spark.streaming.suppress import (
-        suppress_session_stream_tws,
-    )
-
-    prev = _with_rocksdb(spark)
-    try:
-        rows = [
-            Row(timestamp=datetime.fromisoformat("2024-01-01 00:00:00"), key="a", n=1),
-            Row(timestamp=datetime.fromisoformat("2024-01-01 00:10:00"), key="a", n=2),
-            Row(timestamp=datetime.fromisoformat("2024-01-01 00:20:00"), key="a", n=3),
-            Row(timestamp=datetime.fromisoformat("2024-01-01 00:25:00"), key="b", n=4),
-        ]
-        src = _stream_from_rows(
-            spark, rows, "timestamp timestamp, key string, n int", tmpdir
-        )
-        name = f"supstws_{uuid.uuid4().hex[:8]}"
-        _run_stream(
-            suppress_session_stream_tws(src, ["key"], expiry="15 minutes"),
-            name,
-        )
-        got = {r.key: r.n for r in spark.sql(f"SELECT * FROM {name}").collect()}
-        # identical to the GroupState twin's assertion
-        assert got == {"a": 1, "b": 4}
-    finally:
-        _restore_provider(spark, prev)
-
-
-def test_auth_state_tws_parity(spark, tmpdir):
-    """T4 on transformWithState (MapState ip -> entry, the 1:1 image
-    of AuthStateModel.java's map) must reproduce the GroupState twin's
-    decisions on the known-IP/geo-velocity fixture of
-    test_auth_state_known_ip_and_geovelocity. Skip-gated on
-    google.protobuf."""
-    pytest.importorskip("google.protobuf")
-    from foxsec_pipeline_spark.streaming.state import auth_state_analyze_tws
-
-    prev = _with_rocksdb(spark)
-    try:
-        logins = [
-            Row(identity="u1", timestamp=datetime.fromisoformat("2024-01-01 00:00:00"),
-                source_address="1.1.1.1", lat=51.5, lon=-0.12),
-            Row(identity="u1", timestamp=datetime.fromisoformat("2024-01-01 01:00:00"),
-                source_address="1.1.1.1", lat=51.5, lon=-0.12),
-            Row(identity="u1", timestamp=datetime.fromisoformat("2024-01-01 01:30:00"),
-                source_address="2.2.2.2", lat=48.85, lon=2.35),
-            Row(identity="u1", timestamp=datetime.fromisoformat("2024-01-01 01:31:00"),
-                source_address="3.3.3.3", lat=-33.86, lon=151.2),
-            Row(identity="u2", timestamp=datetime.fromisoformat("2024-01-01 00:00:00"),
-                source_address="9.9.9.9", lat=0.0, lon=0.0),
-        ]
-        src = _stream_from_rows(spark, logins, LOGIN_SCHEMA, tmpdir)
-        name = f"authtws_{uuid.uuid4().hex[:8]}"
-        _run_stream(auth_state_analyze_tws(src, max_kmh=800.0), name)
-        rows = {
-            (r.identity, str(r.timestamp)): r
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        }
-        assert rows[("u1", "2024-01-01 00:00:00")].known_ip is False
-        assert rows[("u1", "2024-01-01 00:00:00")].severity == "info"
-        assert rows[("u1", "2024-01-01 01:00:00")].known_ip is True
-        w = rows[("u1", "2024-01-01 01:30:00")]
-        assert w.severity == "warn" and 330 < w.km_from_last < 350
-        c = rows[("u1", "2024-01-01 01:31:00")]
-        assert c.severity == "critical" and c.kmh > 800
-        assert rows[("u2", "2024-01-01 00:00:00")].severity == "info"
-    finally:
-        _restore_provider(spark, prev)
