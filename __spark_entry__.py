@@ -42,6 +42,11 @@ CHANGED = [
     # cosine scorers: zero norm clamped to 1; PQ encode drops null/empty
     "ann_cosine_topk", "ann_cosine_ivf", "ann_range_search_ivf",
     "ann_cosine_pq", "rrf_hybrid_fusion",
+    # in-bucket pairs from the one pair kernel (dedup.bucket_pairs);
+    # dedup_ngram_jaccard, dedup_minhash_lsh and dedup_embedding_cosine
+    # changed too and are listed above
+    "containment_dedup", "minhash_jaccard_estimate_error", "neardup_pair_recall",
+    "prefix_jaccard_join", "semdedup", "winnowing_plagiarism_pairs",
 ]
 
 

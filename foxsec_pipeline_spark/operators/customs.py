@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import bucket_pairs
+
 _UNITS = {
     "second": 1, "seconds": 1, "minute": 60, "minutes": 60,
     "hour": 3600, "hours": 3600, "day": 86400, "days": 86400,
@@ -126,7 +128,6 @@ def account_creation_dist(
     max_ratio: float = 0.35,
     max_distance: int | None = None,
     hot_group_cutoff: int = 100_000,
-    n_blocks: int = 8,
     hot_strategy: str = "minhash",
     minhash_hashes: int = 12,
     work_budget_pairs: int | None = None,
@@ -172,10 +173,6 @@ def account_creation_dist(
       a missed borderline cross-name candidate (same-name mass is
       exact) — recall is measured on a skewed fixture in
       tests/test_detectors.py.
-    - "block": exact pair space tiled into n_blocks² cells (every
-      pair meets exactly once, output identical) — quadratic work
-      balanced across reducers, for when exactness is mandatory and
-      the group still fits the compute budget.
     - "sorted": distinct-name compression + sorted-neighborhood
       candidates (each distinct name against its next `sorted_window`
       lexicographic neighbors — n*w candidates, an equi-join on
@@ -295,29 +292,7 @@ def account_creation_dist(
         return small_counts
 
     hot = base.where(F.col("__hot")).drop("__hot")
-    if hot_strategy == "block":
-        blk = F.pmod(F.hash("id"), F.lit(int(n_blocks)))
-        cells = F.sequence(F.lit(0), F.lit(int(n_blocks) - 1))
-        hot_a = (
-            hot.withColumn("ci", blk)
-            .withColumn("cj", F.explode(cells))
-            .select(
-                "g", "ci", "cj",
-                F.col("id").alias("id_a"), F.col("name").alias("name_a"),
-                F.col("addr").alias("addr_a"),
-            )
-        )
-        hot_b = (
-            hot.withColumn("cj", blk)
-            .withColumn("ci", F.explode(cells))
-            .select(
-                "g", "ci", "cj",
-                F.col("id").alias("id_b"), F.col("name").alias("name_b"),
-                F.col("addr").alias("addr_b"),
-            )
-        )
-        hot_counts = _counts(_pairs(hot_a, hot_b, ["ci", "cj"]).drop("ci", "cj"))
-    elif hot_strategy == "minhash":
+    if hot_strategy == "minhash":
         hot_counts = _hot_minhash_counts(
             hot, group_col, id_col, _sim, int(minhash_hashes)
         )
@@ -398,8 +373,10 @@ def _hot_minhash_counts(hot, group_col, id_col, sim, minhash_hashes):
     )
     # band_size 1: a pair is a candidate on ANY shared minimum — the
     # high-recall operating point for short strings (measured in
-    # tests/test_detectors.py); bucket-local ordered combinations, same
-    # shape as dedup.minhash_lsh_pairs
+    # tests/test_detectors.py); bucket-local pairs, same shape as
+    # dedup.minhash_lsh_pairs. Names are distinct per group and each
+    # has one minimum per band, so a bucket's sorted names are
+    # distinct and the kernel's pairs are already ordered.
     bands = sig.select(
         "g", "name",
         F.posexplode(
@@ -412,13 +389,9 @@ def _hot_minhash_counts(hot, group_col, id_col, sim, minhash_hashes):
         .where(F.size("__names") >= 2)
     )
     par = hot.sparkSession.sparkContext.defaultParallelism
-    cand = (
-        grouped.repartition(par)
-        .select("g", "__names", F.explode("__names").alias("name_a"))
-        .select("g", "name_a", F.explode("__names").alias("name_b"))
-        .where(F.col("name_a") < F.col("name_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(
+        grouped.repartition(par), "__names", "name_a", "name_b", "g"
+    ).distinct()
     simp = cand.where(sim(F.col("name_a"), F.col("name_b")))
     return _hot_name_class_counts(hot, nc, ca, simp, group_col, id_col)
 

@@ -3,19 +3,21 @@
 Seeded by the reference's similarity detector
 (`customs/CustomsAccountCreationDist.java:56-126` — Levenshtein-ratio
 clustering within a group) and generalized to the standard dedup
-family: exact hash, n-gram Jaccard, MinHash+LSH, SimHash.
+family: exact hash, n-gram Jaccard and containment, MinHash+LSH,
+SimHash, prefix-filtered token-set Jaccard, blocked edit distance.
 
-Scale design (100 TB):
-- exact_dedup: one shuffle on the content hash; hash computed map-side
-  so only (hash, id) shuffles if you project first.
-- ngram-jaccard: explode-on-shingle equi-join — candidate generation
-  is an equi-join on the shingle, never an O(n²) cross join; the
-  per-shingle bucket size is the skew knob (cap via frequent-shingle
-  pruning at scale).
-- minhash_lsh: candidates meet only within (band, signature) buckets,
-  the classic LSH bound; band count trades recall vs join fan-out.
-- simhash: fingerprint is a fixed-width agg; near-dup = equal
-  fingerprint (or hamming ≤ k via multi-probe of rotated bands).
+Scale design:
+- exact_dedup: one shuffle on the content hash, computed map-side.
+- candidate generators meet documents only inside a bucket: a shingle
+  (document-frequency capped), a (band, band signature), a SimHash
+  slice, a prefix token. Each groups the bucket's ids into a sorted
+  array and emits the pairs map-side — never a self-join, never a
+  cross join. `bucket_pairs` is the one pair kernel for buckets with
+  a width bound; `_chunked_self_pairs` spreads unbounded buckets
+  (hamming bands, prefix tokens) over a chunk-pair grid.
+- simhash: a fixed-width map-side fingerprint; near-dup pairs come
+  from the pigeonhole band join plus an exact bit_count(xor) filter.
+- dedup_clusters: connected components over any generator's pairs.
 All expressed with built-in expressions (md5/conv/transform/aggregate),
 so whole-stage codegen applies and the DuckDB oracle can reproduce
 results bit-for-bit.
@@ -50,6 +52,26 @@ def exact_dedup(
         df.select(F.col(id_col), doc_fingerprint(F.col(text_col)).alias("content_hash"))
         .groupBy("content_hash")
         .agg(F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("n_docs"))
+    )
+
+
+def bucket_pairs(
+    df: DataFrame, arr_col: str, a: str, b: str, *keep: str
+) -> DataFrame:
+    """Every pair of elements inside each row's array, as (a, b, *keep)
+    rows with `a` at a lower array position than `b`: exactly C(n, 2)
+    rows per n-element array, so a sorted array of distinct elements
+    yields a < b with no filter. Two chained codegen Generates
+    (posexplode, then explode of the tail slice): no interpreted
+    lambda, no n² explode of the array against itself. Callers that
+    spread the buckets repartition `df` themselves."""
+    return (
+        df.select(F.posexplode(arr_col).alias("_i", a), arr_col, *keep)
+        .select(
+            a,
+            F.explode(F.expr(f"slice({arr_col}, _i + 2, size({arr_col}))")).alias(b),
+            *keep,
+        )
     )
 
 
@@ -127,6 +149,39 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     )
 
 
+def _shingle_pair_counts(
+    df: DataFrame, id_col: str, text_col: str, n: int, df_cap: int
+) -> DataFrame:
+    """(doc_a, doc_b, na, nb, common) over doc_a < doc_b: the number of
+    distinct shingles each pair shares, and each doc's shingle count.
+
+    Docs group per shingle (2..df_cap docs; wider shingles are pruned
+    before any pair exists, the quadratic skew bound) and pair inside
+    the sorted (id, n_sh) array. AQE sizes the post-agg stage by its
+    tiny byte count and would coalesce the quadratic pair stage to a
+    few tasks, so an explicit-width repartition spreads it. The
+    order predicate stays: a 60-bit shingle-hash collision inside one
+    doc repeats its id in the array."""
+    grouped = (
+        _shingled(df, id_col, text_col, n)
+        .groupBy("shingle")
+        .agg(F.sort_array(F.collect_list(F.struct(id_col, "n_sh"))).alias("docs"))
+        .where((F.size("docs") >= 2) & (F.size("docs") <= int(df_cap)))
+    )
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return (
+        bucket_pairs(grouped.repartition(par), "docs", "a", "b")
+        .where(F.col("a")[id_col] < F.col("b")[id_col])
+        .groupBy(
+            F.col("a")[id_col].alias("doc_a"),
+            F.col("b")[id_col].alias("doc_b"),
+            F.col("a")["n_sh"].alias("na"),
+            F.col("b")["n_sh"].alias("nb"),
+        )
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -137,8 +192,9 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard ≥ threshold.
 
-    |A∩B| via shingle equi-join + count; |A∪B| = |A|+|B|-|A∩B|.
-    One explode, one shuffle join on the shingle, one pair-group agg.
+    |A∩B| is the pair's shared-shingle count (`_shingle_pair_counts`:
+    one shuffle on the shingle, one pair-group agg);
+    |A∪B| = |A|+|B|-|A∩B|.
 
     `df_cap` is the document-frequency pruning knob: shingles shared
     by more than df_cap documents are dropped BEFORE pair generation.
@@ -152,39 +208,7 @@ def ngram_jaccard_pairs(
     the default cap of 64 changes nothing at test scale — it exists
     for the corpus where it matters.
     """
-    ex = _shingled(df, id_col, text_col, n)
-    # group docs per shingle and generate ordered pairs inside the
-    # array (combinations via an indexed transform) rather than
-    # self-joining: the self-join would recompute the whole
-    # shingle+digest pipeline for both sides (no exchange reuse for
-    # aliased subplans), and the pair stream shuffles once on the
-    # shingle instead of twice.
-    grouped = (
-        ex.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(F.struct(id_col, "n_sh"))).alias("docs"))
-        .where((F.size("docs") >= 2) & (F.size("docs") <= int(df_cap)))
-    )
-    # AQE sizes the post-agg stage by its (tiny) byte count and
-    # coalesces it to a few partitions — but the next stage EXPLODES
-    # the doc arrays quadratically, multiplying work AQE can't see. An
-    # explicit-width repartition of the (small) grouped rows spreads
-    # the explode. Pair generation is two NATIVE Generate nodes with an
-    # ordered post-filter (codegen) — an indexed-transform combinations
-    # lambda produces fewer rows but evaluates interpreted, ~3× slower.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    pairs = (
-        grouped.repartition(par)
-        .select("docs", F.explode("docs").alias("a"))
-        .select("a", F.explode("docs").alias("b"))
-        .where(F.col("a")[id_col] < F.col("b")[id_col])
-        .groupBy(
-            F.col("a")[id_col].alias("doc_a"),
-            F.col("b")[id_col].alias("doc_b"),
-            F.col("a")["n_sh"].alias("na"),
-            F.col("b")["n_sh"].alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
+    pairs = _shingle_pair_counts(df, id_col, text_col, n, df_cap)
     jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
     return (
         pairs.where(jac >= F.lit(float(threshold)))
@@ -216,15 +240,14 @@ def minhash_lsh_pairs(
     # codegen and map-side partial agg shrinks the exploded shingles
     # back to one row per (doc, partition) before the exchange, so the
     # shuffle is ~|docs| rows at any scale. An array-shaped signature
-    # (transform + array_min per permutation) was rejected in r9/r12:
+    # (transform + array_min per permutation) is avoided on purpose:
     # CollapseProject inlines it into every band column, duplicating
     # the HOF tree ~num_hashes^2 times (~1.7 s COMPILE vs 0.3 s run).
-    # r13: the shingle stream itself is the map-side `_shingle_arrays`
-    # kernel (per-doc distinct in the array domain; min per permutation
-    # is duplicate-insensitive, so dedup'd shingles give the identical
-    # signature) — the old window-lead form's Exchange(id) + Sort over
-    # the full token stream is gone, and the ONLY exchange before
-    # banding moves |docs| partial-agg rows, not |corpus tokens|.
+    # The shingle stream is the map-side `_shingle_arrays` kernel
+    # (per-doc distinct in the array domain; min per permutation is
+    # duplicate-insensitive, so dedup'd shingles give the identical
+    # signature), so the ONLY exchange before banding moves |docs|
+    # partial-agg rows, not |corpus tokens|.
     if hashed is None:
         hashed = (
             _shingle_arrays(df, id_col, text_col, n)
@@ -270,26 +293,21 @@ def minhash_lsh_pairs(
             )
         ).alias("bs"),
     ).select(id_col, "bs.band", "bs.band_sig")
-    # pairs are generated INSIDE each (band, band_sig) bucket by
-    # grouping ids and exploding ordered combinations — a self-join on
-    # the bucket key would re-evaluate the whole (higher-order,
-    # interpreted) signature pipeline for both join sides, since
-    # Catalyst gives aliased subplans no exchange reuse. One signature
-    # pass, one shuffle on the bucket key; bucket width stays the LSH
-    # fan-out bound either way.
+    # pairs are generated INSIDE each (band, band_sig) bucket — a
+    # self-join on the bucket key would re-evaluate the whole signature
+    # pipeline for both join sides, since Catalyst gives aliased
+    # subplans no exchange reuse. Each doc has one band_sig per band,
+    # so a bucket's sorted ids are distinct and the kernel's pairs are
+    # already ordered; the distinct folds pairs met in several bands.
     grouped = (
         bands.groupBy("band", "band_sig")
         .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("docs"))
         .where(F.size("docs") >= 2)
     )
     par = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        grouped.repartition(par)
-        .select("docs", F.explode("docs").alias("doc_a"))
-        .select("doc_a", F.explode("docs").alias("doc_b"))
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .distinct()
-    )
+    return bucket_pairs(
+        grouped.repartition(par), "docs", "doc_a", "doc_b"
+    ).distinct()
 
 
 def dedup_clusters(
@@ -665,34 +683,22 @@ def containment_pairs(
     jaccard ≈ 0.01. The standard second pass of a corpus dedup after
     Jaccard (quotes, boilerplate-wrapped reposts, truncated copies).
 
-    Same candidate machinery as `ngram_jaccard_pairs` (shingle
-    group + in-array pair generation, df_cap prunes the quadratic
-    skew bomb); emits BOTH directions of each pair since containment
-    is directional. Threshold and ratio in integer ppm — the filter
-    compares `common * 1e6 >= threshold * n_a` in exact int64
-    arithmetic (n_sh and common are ≤ doc length, no overflow).
+    Same shared-shingle counts as `ngram_jaccard_pairs`
+    (`_shingle_pair_counts`, df_cap prunes the quadratic skew bomb);
+    each unordered pair is counted once and emitted in BOTH directions
+    after the aggregate, since containment is directional. Threshold
+    and ratio in integer ppm — the filter compares
+    `common * 1e6 >= threshold * n_a` in exact int64 arithmetic (n_sh
+    and common are ≤ doc length, no overflow).
     """
-    ex = _shingled(df, id_col, text_col, n)
-    grouped = (
-        ex.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(F.struct(id_col, "n_sh"))).alias("docs"))
-        .where((F.size("docs") >= 2) & (F.size("docs") <= int(df_cap)))
-    )
-    par = df.sparkSession.sparkContext.defaultParallelism
-    pairs = (
-        grouped.repartition(par)
-        .select("docs", F.explode("docs").alias("a"))
-        .select("a", F.explode("docs").alias("b"))
-        .where(F.col("a")[id_col] != F.col("b")[id_col])
-        .groupBy(
-            F.col("a")[id_col].alias("doc_a"),
-            F.col("b")[id_col].alias("doc_b"),
-            F.col("a")["n_sh"].alias("n_a"),
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
+    pairs = _shingle_pair_counts(df, id_col, text_col, n, df_cap)
+    both = pairs.select(F.explode(F.array(
+        F.struct("doc_a", "doc_b", F.col("na").alias("n_a"), "common"),
+        F.struct(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"),
+                 F.col("nb").alias("n_a"), "common"),
+    )).alias("__d")).select("__d.*")
     return (
-        pairs.where(
+        both.where(
             F.col("common") * 1_000_000 >= F.lit(int(threshold_ppm)) * F.col("n_a")
         )
         .select(
@@ -780,16 +786,12 @@ def prefix_filter_jaccard_pairs(
     text_col: str = "text",
     t_num: int = 3,
     t_den: int = 5,
-    bitmask_vocab_cap: int = 62,
-    multiword_vocab_cap: int = 8192,
-    dense_emission_factor: float = 2.0,
-    dense_docs_cap: int = 500_000,
 ) -> DataFrame:
     """LOSSLESS token-set Jaccard self-join at threshold t_num/t_den,
     with a STATISTICS-DRIVEN choice of physical algorithm (the same
     move Catalyst makes between broadcast and shuffle joins):
 
-    - **Bitmask path** (measured vocabulary <= `bitmask_vocab_cap`):
+    - **Bitmask path** (measured vocabulary <= `_BITMASK_VOCAB_CAP`):
       token sets are subsets of a tiny universe, so every set packs
       into one int64 bitmask. Docs compress to DISTINCT (mask, size)
       rows first — corpora with small vocabularies are exactly the
@@ -811,7 +813,7 @@ def prefix_filter_jaccard_pairs(
       construction. The PPJoin LENGTH filter (t_den*min(|A|,|B|) >=
       t_num*max(|A|,|B|)) prunes inside the join condition before
       the pair materializes. Verification is itself TIERED on the
-      measured vocabulary: MID-VOCAB corpora (<= `multiword_vocab_cap`)
+      measured vocabulary: MID-VOCAB corpora (<= `_MULTIWORD_VOCAB_CAP`)
       pack every token set into ceil(vocab/62) int64 mask columns and
       score each pair as a static sum of bit_count(a&b) terms
       (register bit math, whole-stage codegen — ~10x cheaper per pair
@@ -819,8 +821,8 @@ def prefix_filter_jaccard_pairs(
       sorted token arrays and compute the exact intersection map-side
       (`array_intersect`).
     - **Dense mask path** (mid vocab AND the measured candidate
-      emission Sum_w C(prefix_df_w, 2) exceeds `dense_emission_factor`
-      x C(n_docs, 2), n_docs <= `dense_docs_cap`): prefix filtering is
+      emission Sum_w C(prefix_df_w, 2) exceeds `_DENSE_EMISSION_FACTOR`
+      x C(n_docs, 2), n_docs <= `_DENSE_DOCS_CAP`): prefix filtering is
       output-sensitive, and on a pair-dense corpus its candidate
       stream plus the pair distinct cost MORE than sweeping every
       pair. Docs chunk into contiguous-id mask blocks; the chunk-pair
@@ -854,18 +856,9 @@ def prefix_filter_jaccard_pairs(
         .localCheckpoint(eager=False)
     )
     n_vocab = tok.select("w").distinct().count()
-    if n_vocab <= bitmask_vocab_cap:
+    if n_vocab <= _BITMASK_VOCAB_CAP:
         return _jaccard_bitmask_path(tok, id_col, t_num, t_den)
-    return _jaccard_prefix_path(
-        tok,
-        id_col,
-        t_num,
-        t_den,
-        n_vocab,
-        multiword_vocab_cap,
-        dense_emission_factor,
-        dense_docs_cap,
-    )
+    return _jaccard_prefix_path(tok, id_col, t_num, t_den, n_vocab)
 
 
 def _jaccard_bitmask_path(tok, id_col, t_num, t_den):
@@ -941,29 +934,17 @@ def _jaccard_bitmask_path(tok, id_col, t_num, t_den):
             "n_inter",
         )
     )
-    # identical-set groups: every within-group pair has J = 1.
-    # Ordered pair expansion as two chained codegen Generate stages
-    # (posexplode + slice-explode), not the interpreted
-    # flatten/transform HOF — same rewrite as
-    # catalog_mining._basket_pairs (r9: 1.18 s -> 0.71 s on the
-    # identical expansion).
-    same = (
-        dm.where(F.col("cnt") >= 2)
-        .select("n", F.posexplode("ids").alias("_i", "doc_a"), "ids")
-        .select(
-            "n",
-            "doc_a",
-            F.explode(
-                F.expr("slice(ids, _i + 2, size(ids))")
-            ).alias("doc_b"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("n").alias("n_a"),
-            F.col("n").alias("n_b"),
-            F.col("n").alias("n_inter"),
-        )
+    # identical-set groups: every within-group pair has J = 1; a
+    # group's ids are distinct and sorted, so the kernel's pairs are
+    # ordered.
+    same = bucket_pairs(
+        dm.where(F.col("cnt") >= 2), "ids", "doc_a", "doc_b", "n"
+    ).select(
+        "doc_a",
+        "doc_b",
+        F.col("n").alias("n_a"),
+        F.col("n").alias("n_b"),
+        F.col("n").alias("n_inter"),
     )
     out = cross.unionAll(same) if t_num <= t_den else cross
     return out.select(
@@ -980,6 +961,18 @@ def _jaccard_bitmask_path(tok, id_col, t_num, t_den):
     )
 
 
+# Path choice of `prefix_filter_jaccard_pairs`, from measured
+# statistics: vocabularies up to _BITMASK_VOCAB_CAP pack into one int64
+# mask (bitmask path); up to _MULTIWORD_VOCAB_CAP into 62-bit mask
+# columns (mask verify, and the dense sweep when the prefix candidate
+# emission exceeds _DENSE_EMISSION_FACTOR x C(n_docs, 2) with n_docs <=
+# _DENSE_DOCS_CAP — the dense path's chunk ids come from a single-task
+# sort, which this cap bounds).
+_BITMASK_VOCAB_CAP = 62
+_MULTIWORD_VOCAB_CAP = 8192
+_DENSE_EMISSION_FACTOR = 2.0
+_DENSE_DOCS_CAP = 500_000
+
 # Target pre-dedup candidate pairs of per-task state in the sparse
 # path's pair-key exchange (~16 bytes/pair of dedup hash-map entry ->
 # ~400 MB/task); the exchange width is ceil(emission / this), floored
@@ -988,9 +981,7 @@ _PAIRS_PER_DEDUP_TASK = 25_000_000
 
 # One broadcast side of a verify dim (mask columns or token arrays)
 # must fit this bound or the verify falls back to the AQE shuffle
-# join. Shared by BOTH verify tiers (r12 — the array tier previously
-# gated on a 2M-ROW count, an OOM-grade multi-GB broadcast on real
-# text).
+# join. Shared by both verify tiers.
 _BROADCAST_BYTES_CAP = 512 * 2**20
 
 # Driver-side statistics of the most recent prefix-path planning
@@ -999,16 +990,7 @@ _BROADCAST_BYTES_CAP = 512 * 2**20
 _LAST_STATS: dict = {}
 
 
-def _jaccard_prefix_path(
-    tok,
-    id_col,
-    t_num,
-    t_den,
-    n_vocab=None,
-    multiword_vocab_cap=8192,
-    dense_emission_factor=2.0,
-    dense_docs_cap=500_000,
-):
+def _jaccard_prefix_path(tok, id_col, t_num, t_den, n_vocab=None):
     dfreq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("wdf"))
     ranked = tok.join(dfreq, "w").select(
         id_col,
@@ -1031,46 +1013,21 @@ def _jaccard_prefix_path(
         - F.expr(f"(n * {t_num} + {t_den - 1}) div {t_den}")
         + 1
     ).select(id_col, "w", "n")
-    # Candidate generation (r11 rewrite — the dense-corpus skew bomb):
-    # the original pref-pref self-join placed every token's quadratic
-    # pair emission in the ONE task that hashes the token. On a dense
-    # corpus (the 10x near-dup replica testdata is 57%-pair-dense by
-    # construction) hot prefix tokens stalled 22 straggler tasks for
-    # minutes, and an explicit repartition that pins the stage width
-    # also opts the join out of AQE skew splitting. Grouped-explode
-    # form instead (the ngram_jaccard pattern — one shuffle on the
-    # token, no aliased-subplan recompute), extended with a CHUNK
-    # GRID: each token's sorted doc array splits into 1024-doc
-    # chunks, and every (chunk_i, chunk_j | i <= j) grid row becomes
-    # an independent unit of quadratic emission. A token shared by p
-    # docs spreads over C(ceil(p/1024)+1, 2) tasks instead of one
-    # p^2/2 task, so emission runs at machine width. Pair order stays
-    # doc_a < doc_b because sort_array chunks are consecutive id
-    # ranges. The PPJoin length filter prunes before the pair
-    # materializes, exactly as in the join form.
+    # Candidates: docs group per prefix token and pair through the
+    # chunk grid of `_chunked_self_pairs`, not a pref-pref self-join,
+    # which puts a token's whole quadratic emission in the one task
+    # that hashes it (hot prefix tokens of the 57%-pair-dense 10x
+    # replica corpus stalled 22 straggler tasks for minutes). A token
+    # shared by p docs spreads over C(ceil(p/1024)+1, 2) tasks. The
+    # PPJoin length filter prunes before the pair materializes.
     par = tok.sparkSession.sparkContext.defaultParallelism
-    # DENSITY decision (r11): prefix filtering is output-sensitive —
-    # its cost is the candidate emission Sum_w C(p_w, 2) over prefix
-    # tokens, which beats brute force only when candidates << all
-    # pairs. On a dense corpus (the 10x near-dup replica testdata:
-    # vocab 2637, hottest token in 78% of docs, candidate emission
-    # ~17x the C(n,2) bound) the candidate stream plus its distinct
-    # costs far MORE than comparing every pair as register bit math.
-    # Both sides of the tradeoff are measured from the data (two
-    # cheap driver actions, the same posture as the vocab count) and
-    # the dense path is only available when token sets pack into
-    # multi-word masks and the mask table stays modest.
-    #
-    # n_docs and the emission estimate are computed UNCONDITIONALLY
-    # (r12): the density decision consumes them when the vocab packs
-    # into masks, and the pair-dedup exchange width below derives
-    # from emission on EVERY sparse-path run — a fixed width was the
-    # same class of constant the r11 AQE find replaced (held to ~6B
-    # candidates at ~1 GB/task, then per-task dedup state grows
-    # linearly with corpus). Both are 1-row bounded statistics,
-    # memoized per (session, probe plan) — r13, the same
-    # plan_stat_memo posture as the prefix strip, so bench reps and
-    # repeat callers don't re-pay the token-stream pass at plan build.
+    # Density decision: prefix filtering is output-sensitive — its cost
+    # is the candidate emission Sum_w C(p_w, 2), which beats comparing
+    # every pair as register bit math only when candidates << C(n, 2)
+    # (the 10x replica corpus, vocab 2637: ~17x the C(n, 2) bound).
+    # n_docs and the emission are 1-row statistics memoized per
+    # (session, probe plan); the emission also sizes the pair-dedup
+    # exchange on every sparse run.
     from ..session import plan_stat_memo
 
     n_docs = plan_stat_memo(
@@ -1082,11 +1039,11 @@ def _jaccard_prefix_path(
         .agg(F.sum(F.expr("p * (p - 1) div 2")).alias("em")),
         lambda p: p.collect()[0]["em"] or 0,
     )
-    if n_vocab is not None and n_vocab <= multiword_vocab_cap:
+    if n_vocab is not None and n_vocab <= _MULTIWORD_VOCAB_CAP:
         all_pairs = n_docs * (n_docs - 1) // 2
         if (
-            n_docs <= dense_docs_cap
-            and emission > dense_emission_factor * all_pairs
+            n_docs <= _DENSE_DOCS_CAP
+            and emission > _DENSE_EMISSION_FACTOR * all_pairs
         ):
             _LAST_STATS.update(
                 path="dense", n_docs=n_docs, emission=emission, width=None
@@ -1105,17 +1062,13 @@ def _jaccard_prefix_path(
         )
         .where(F.size("ds") >= 2)
     )
-    # The distinct's hash distribution is satisfied by an
-    # explicit-width exchange on the pair keys: without it AQE sizes
-    # the read on the compresses-20x int-pair shuffle bytes and
-    # coalesces the final dedup to ~10 tasks of 64M-entry hash maps
-    # (a GC spiral measured to freeze the executor past the 120 s
-    # heartbeat at the 10x corpus). Width is EMISSION-DERIVED (r12,
-    # replacing a par*8 constant that was right at the 30x corpus's
-    # ~6B-pair stream but nowhere else): target ~25M pre-dedup
-    # candidate pairs of per-task dedup state, floored at machine
-    # width — the estimate is the exact upper bound on rows entering
-    # this exchange (the length filter only removes).
+    # The distinct reads an explicit-width exchange on the pair keys:
+    # without it AQE sizes the read on the compresses-20x int-pair
+    # shuffle bytes and coalesces the dedup to ~10 tasks of 64M-entry
+    # hash maps (a GC spiral that froze the executor past the 120 s
+    # heartbeat at the 10x corpus). The width targets
+    # _PAIRS_PER_DEDUP_TASK candidates per task, floored at machine
+    # width; the emission bounds the rows entering the exchange.
     width = max(par, -(-emission // _PAIRS_PER_DEDUP_TASK))
     _LAST_STATS.update(
         path="sparse", n_docs=n_docs, emission=emission, width=width
@@ -1137,7 +1090,7 @@ def _jaccard_prefix_path(
     # The verify fuses into the distinct's output stage (explicit
     # width above — no exchange in between), so the per-pair scoring
     # runs at machine width with no extra shuffle of the pair stream.
-    if n_vocab is not None and n_vocab <= multiword_vocab_cap:
+    if n_vocab is not None and n_vocab <= _MULTIWORD_VOCAB_CAP:
         return _verify_pairs_multiword(
             tok, cand, id_col, t_num, t_den, n_vocab, n_docs
         )
@@ -1199,7 +1152,7 @@ def _jaccard_dense_mask_path(tok, id_col, t_num, t_den, n_vocab):
     chunk = 4096
     # The un-partitioned row_number window below is a SINGLE-TASK sort
     # of the mask table — acceptable ONLY because the caller's
-    # `dense_docs_cap` gate (default 500k docs, ~(words+1)*8 B/row)
+    # `_DENSE_DOCS_CAP` gate (500k docs, ~(words+1)*8 B/row)
     # bounds what can reach this path; a cap bump past a few million
     # rows would turn this into a driver-sized straggler and must come
     # with a partitioned chunk-id scheme (e.g. range-partition by id,

@@ -656,7 +656,7 @@ def bpe_train_merge_list(
 ) -> list[tuple]:
     """The trained merge rules of :func:`bpe_train` as a plain list of
     (merge_rank, left_sym, right_sym, pair_count) tuples — the form
-    the literal-apply path of :func:`bpe_segment_counts` consumes."""
+    :func:`bpe_segment_counts` consumes."""
     from ..session import plan_stat_memo
 
     # the ONE corpus-scale pass; materialized once per (session, plan,
@@ -737,13 +737,10 @@ def bpe_segment_counts(
     subword tokens per document (the learned-tokenizer twin of the
     regex-BPE proxy in `token_counts`).
 
-    ``merges`` is either the :func:`bpe_train_merge_list` tuple list —
-    the r13 fast path: every merge applies as a LITERAL replace, so
-    the whole segmentation is ONE map-side corpus pass inside codegen
-    with zero joins — or the :func:`bpe_train` DataFrame, in which
-    case each rule joins in as a single-row broadcast (the pre-r13
-    shape, kept for callers that only hold the relation; at sf0.1 the
-    6 broadcast jobs cost ~0.4 s of pure serial latency).
+    ``merges`` is the :func:`bpe_train_merge_list` list of
+    (rank, left, right) tuples. Every merge applies as a LITERAL
+    replace, so the whole segmentation is ONE map-side corpus pass
+    inside codegen with zero joins.
 
     ``carry_cols`` ({name: Column expr}) projects extra expressions
     through the pass (e.g. the whitespace token count) so consumers
@@ -761,32 +758,19 @@ def bpe_segment_counts(
             "<$1>",
         ).alias("repr"),
     )
-    if isinstance(merges, list):
-        by_rank = {int(m[0]): (m[1], m[2]) for m in merges}
-        for r in range(int(n_merges)):
-            if r not in by_rank:
-                break
-            left, right = by_rank[r]
-            cur = cur.withColumn(
-                "repr",
-                F.replace(
-                    F.col("repr"),
-                    F.lit(f"<{left}><{right}>"),
-                    F.lit(f"<{left}{right}>"),
-                ),
-            )
-    else:
-        for r in range(int(n_merges)):
-            rule = merges.where(F.col("merge_rank") == r).select(
-                "left_sym", "right_sym"
-            )
-            cur = cur.crossJoin(F.broadcast(rule)).withColumn(
-                "repr",
-                F.expr(
-                    "replace(repr, concat('<', left_sym, '><', right_sym, "
-                    "'>'), concat('<', left_sym, right_sym, '>'))"
-                ),
-            ).drop("left_sym", "right_sym")
+    by_rank = {int(m[0]): (m[1], m[2]) for m in merges}
+    for r in range(int(n_merges)):
+        if r not in by_rank:
+            break
+        left, right = by_rank[r]
+        cur = cur.withColumn(
+            "repr",
+            F.replace(
+                F.col("repr"),
+                F.lit(f"<{left}><{right}>"),
+                F.lit(f"<{left}{right}>"),
+            ),
+        )
     n_units = F.size(F.expr("regexp_extract_all(repr, '<([^>]*)>', 1)"))
     return cur.select(
         F.col(id_col),

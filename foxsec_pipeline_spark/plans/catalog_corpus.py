@@ -28,6 +28,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..operators.dedup import bucket_pairs
 from ..operators.ingest import countmin_cells, countmin_estimate
 from ..operators.textanalysis import chunk_passages, dup_span_stats
 from ..session import load_tables
@@ -749,16 +750,16 @@ def q_winnowing_plagiarism_pairs(spark, sf_dir):
     docn = d.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_fp")
     )
-    # r13 (guide §2.4): pairs are generated INSIDE each fp_hash bucket
-    # by grouping doc ids and exploding ordered combinations — the r12
-    # aliased SELF-JOIN evaluated the whole fingerprint pipeline for
-    # both join sides (Catalyst gives aliased subplans no exchange
-    # reuse), and needed a separate df hash-agg + semi-join for the
-    # cap. Here the df-cap [2, _WINNOW_DF_CAP] folds into the same
-    # grouping aggregate as pair generation (size of the id array),
-    # the same shape as ngram_jaccard_pairs / minhash_lsh_pairs; the
-    # explicit-width repartition spreads the quadratic explode AQE
-    # can't see (byte-blind coalescing).
+    # pairs are generated INSIDE each fp_hash bucket — an aliased
+    # self-join would evaluate the whole fingerprint pipeline for both
+    # join sides (Catalyst gives aliased subplans no exchange reuse)
+    # and need a separate df hash-agg + semi-join for the cap. The
+    # df-cap [2, _WINNOW_DF_CAP] folds into the grouping aggregate
+    # (size of the id array), the same shape as ngram_jaccard_pairs /
+    # minhash_lsh_pairs; the explicit-width repartition spreads the
+    # quadratic pair stage AQE can't see (byte-blind coalescing).
+    # (doc_id, fp_hash) rows are distinct, so a bucket's sorted ids
+    # are distinct and the kernel's pairs are already ordered.
     par = spark.sparkContext.defaultParallelism
     grouped = (
         d.groupBy("fp_hash")
@@ -768,10 +769,7 @@ def q_winnowing_plagiarism_pairs(spark, sf_dir):
         )
     )
     pr = (
-        grouped.repartition(par)
-        .select("docs", F.explode("docs").alias("doc_a"))
-        .select("doc_a", F.explode("docs").alias("doc_b"))
-        .where(F.col("doc_a") < F.col("doc_b"))
+        bucket_pairs(grouped.repartition(par), "docs", "doc_a", "doc_b")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .where(F.col("n_shared") >= 2)

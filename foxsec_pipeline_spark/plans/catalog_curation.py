@@ -739,18 +739,15 @@ _KCORE_K_LARGE = 2
 def _copurchase_edges(li, min_supp: int = _MIN_PAIR_SUPP):
     """Undirected co-purchase edge list (both directions), the edge
     definition shared with the catalog_mining copurchase family:
-    per-order distinct part baskets -> ordered pair explode via the
-    codegen `_basket_pairs` shape (posexplode + slice-explode; the
-    interpreted flatten/transform HOF form this replaced measured
-    1.18 s -> 0.71 s on the identical expansion, r9 BASELINE.md) ->
-    pair support >= min_supp -> symmetrize."""
-    from .catalog_mining import _basket_pairs
+    per-order distinct part baskets -> in-basket pairs
+    (`dedup.bucket_pairs`) -> pair support >= min_supp -> symmetrize."""
+    from ..operators.dedup import bucket_pairs
 
     baskets = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )
     pairs = (
-        _basket_pairs(baskets, "u", "v")
+        bucket_pairs(baskets, "ps", "u", "v")
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("_n"))
         .where(F.col("_n") >= min_supp)

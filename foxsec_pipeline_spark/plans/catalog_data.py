@@ -29,6 +29,7 @@ from ..operators import (
     simhash,
     text_stats,
 )
+from ..operators.dedup import bucket_pairs
 from ..operators.multimodal import attach_binary_payload, binary_metadata
 from ..session import load_tables
 from .catalog import register
@@ -876,22 +877,24 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     from ..operators.skew import spread
 
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
-    # candidate pairs from id-only bucket rows (grouped in-bucket
-    # combination explode — one evaluation of the bucket pipeline, no
-    # self-join); vectors and hoisted norms re-attach by id afterward,
-    # and the interpreted dot fold runs on an explicitly wide stage
-    # (AQE sizes the pair shuffle by bytes, blind to fold cost)
+    # candidate pairs from id-only bucket rows (in-bucket pairs — one
+    # evaluation of the bucket pipeline, no self-join); vectors and
+    # hoisted norms re-attach by id afterward, and the interpreted dot
+    # fold runs on an explicitly wide stage (AQE sizes the pair shuffle
+    # by bytes, blind to fold cost). The order predicate stays: vec_id
+    # is not unique by construction.
     b = lsh_buckets_relational(emb, [_PLANES]).select(
         "vec_id", F.col("__bkt").alias("bkt")
     )
     par = spark.sparkContext.defaultParallelism
-    pairs = (
+    grouped = (
         b.groupBy("bkt")
         .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
         .where(F.size("ids") >= 2)
         .repartition(par)
-        .select("ids", F.explode("ids").alias("vec_a"))
-        .select("vec_a", F.explode("ids").alias("vec_b"))
+    )
+    pairs = (
+        bucket_pairs(grouped, "ids", "vec_a", "vec_b")
         .where(F.col("vec_a") < F.col("vec_b"))
         .distinct()
         # AQE coalesces the distinct's output to 1 partition (tiny
@@ -990,13 +993,15 @@ def q_semdedup(spark, sf_dir):
         f"{_lsh_pack_sql(_PLANES)} AS bkt",
     )
     par = spark.sparkContext.defaultParallelism
-    pairs = (
+    grouped = (
         keyed.groupBy("cell", "bkt")
         .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
         .where(F.size("ids") >= 2)
         .repartition(par)
-        .select("cell", "ids", F.explode("ids").alias("vec_a"))
-        .select("cell", "vec_a", F.explode("ids").alias("vec_b"))
+    )
+    # the order predicate stays: vec_id is not unique by construction
+    pairs = (
+        bucket_pairs(grouped, "ids", "vec_a", "vec_b", "cell")
         .where(F.col("vec_a") < F.col("vec_b"))
         .repartition(par)
     )

@@ -1,0 +1,133 @@
+#!/usr/bin/env python
+"""Compare every catalog query's plan (and optionally its output)
+between two checkouts.
+
+    python scripts/plan_check.py capture OUT.json [--sf DIR] [--rows] [-q NAME ...]
+    python scripts/plan_check.py diff A.json B.json
+
+`capture` builds each registered query on one session and records a
+sha256 digest of its optimized logical plan, with the run-specific
+parts masked: expression ids (`#12`, `#12L`), `plan_id=N`, `uuid(Some(N))`
+seeds and timestamp literals folded from the session clock. With
+`--rows` it also records an order-insensitive hash of the output: the
+row count plus the decimal sum of `xxhash64(to_json(struct(*)))`.
+
+`diff` prints the queries whose digest (or row hash) differs, and the
+queries present on one side only; it exits 1 when anything differs.
+A query that materializes part of its input while it is built (an
+eager `localCheckpoint`, as in the connected-components loop) shows
+only the plan above that cut, so an equal digest there does not prove
+equal work; `--rows` still compares its output.
+
+Run `capture` from the root of each checkout with the same `--sf`
+and the same `SPARK_GRAFT_CPUS` (explicit repartition widths follow the
+session's parallelism), then `diff` the two files.
+"""
+from __future__ import annotations
+
+import argparse
+import hashlib
+import json
+import os
+import re
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_MASKS = [
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"uuid\(Some\(-?\d+\)\)"), "uuid(Some(N))"),
+    # current_timestamp()/now() folded to a literal by the optimizer
+    (re.compile(r"\b1[5-9]\d{14}\b"), "<ts_us>"),
+    (re.compile(r"\d{4}-\d\d-\d\d \d\d:\d\d:\d\d(\.\d+)?"), "<ts>"),
+]
+
+
+def mask(plan: str) -> str:
+    for pat, rep in _MASKS:
+        plan = pat.sub(rep, plan)
+    return plan
+
+
+def _row_hash(df) -> dict:
+    from pyspark.sql import functions as F
+
+    row = df.select(
+        F.sum(
+            F.xxhash64(F.to_json(F.struct(*df.columns))).cast("decimal(38,0)")
+        ).cast("string").alias("h"),
+        F.count(F.lit(1)).alias("n"),
+    ).first()
+    return {"n": row["n"], "hash": row["h"]}
+
+
+def capture(out: str, sf_dir: str, rows: bool, names: list[str]) -> None:
+    from foxsec_pipeline_spark.plans.catalog import registry
+    from foxsec_pipeline_spark.session import get_spark
+
+    spark = get_spark(app_name="plan_check")
+    reg = registry()
+    res = {}
+    for name in names or list(reg):
+        try:
+            df = reg[name].fn(spark, sf_dir)
+            plan = mask(df._jdf.queryExecution().optimizedPlan().toString())
+            rec = {
+                "plan": hashlib.sha256(plan.encode()).hexdigest(),
+                "schema": df.schema.simpleString(),
+            }
+            if rows:
+                rec.update(_row_hash(df))
+        except Exception as e:  # a failing query is a result too
+            rec = {"error": f"{type(e).__name__}: {str(e)[:300]}"}
+        res[name] = rec
+        print(name, rec.get("plan", rec.get("error"))[:16],
+              rec.get("n", ""), rec.get("hash", ""), flush=True)
+    with open(out, "w") as f:
+        json.dump(res, f, indent=1, sort_keys=True)
+
+
+def diff(a_path: str, b_path: str) -> int:
+    with open(a_path) as f:
+        a = json.load(f)
+    with open(b_path) as f:
+        b = json.load(f)
+    differ = 0
+    for name in sorted(a.keys() | b.keys()):
+        if name not in a or name not in b:
+            print(f"{name}: only in {a_path if name in a else b_path}")
+            differ += 1
+            continue
+        fields = [k for k in sorted(a[name].keys() | b[name].keys())
+                  if a[name].get(k) != b[name].get(k)]
+        if fields:
+            print(f"{name}: {', '.join(fields)}")
+            differ += 1
+    print(f"{differ} of {len(a.keys() | b.keys())} queries differ")
+    return 1 if differ else 0
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    sub = ap.add_subparsers(dest="cmd", required=True)
+    c = sub.add_parser("capture")
+    c.add_argument("out")
+    c.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
+                   help="testdata directory (default $SPARK_GRAFT_SF_DIR)")
+    c.add_argument("--rows", action="store_true")
+    c.add_argument("-q", "--query", action="append", default=[])
+    d = sub.add_parser("diff")
+    d.add_argument("a")
+    d.add_argument("b")
+    args = ap.parse_args()
+    if args.cmd == "capture":
+        if not args.sf:
+            ap.error("capture needs --sf or $SPARK_GRAFT_SF_DIR")
+        capture(args.out, args.sf, args.rows, args.query)
+    else:
+        sys.exit(diff(args.a, args.b))
+
+
+if __name__ == "__main__":
+    main()

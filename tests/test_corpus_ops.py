@@ -640,19 +640,22 @@ def test_pareto_frontier_matches_bruteforce(spark):
     assert got == want and len(got) > 0
 
 
-def test_prefix_jaccard_prefix_path_matches_bruteforce_and_bitmask(spark):
+def test_prefix_jaccard_prefix_path_matches_bruteforce_and_bitmask(
+    spark, monkeypatch
+):
     """A 120-word vocabulary forces the PPJoin prefix-filter path;
     its output must equal brute-force all-pairs AND the bitmask path
     is unavailable (>62 bits), so this pins the real-text code path's
     recall 1.0 and the paths' cross-consistency on a corpus the
     bitmask path can't take. All three mid-vocab tiers are pinned:
-    120 <= multiword_vocab_cap exercises the multi-word mask popcount
-    verify by default, multiword_vocab_cap=0 forces the token-array
-    (array_intersect) verify, and dense_emission_factor=0 forces the
+    120 <= _MULTIWORD_VOCAB_CAP exercises the multi-word mask popcount
+    verify by default, _MULTIWORD_VOCAB_CAP=0 forces the token-array
+    (array_intersect) verify, and _DENSE_EMISSION_FACTOR=0 forces the
     block-nested dense mask sweep — every variant must agree exactly
     with brute force."""
     import random
 
+    from foxsec_pipeline_spark.operators import dedup as D
     from foxsec_pipeline_spark.operators.dedup import (
         prefix_filter_jaccard_pairs,
     )
@@ -678,19 +681,23 @@ def test_prefix_jaccard_prefix_path_matches_bruteforce_and_bitmask(spark):
         (r.doc_a, r.doc_b): (r.n_inter, r.n_union)
         for r in prefix_filter_jaccard_pairs(docs, t_num=3, t_den=5).collect()
     }
-    got_arrays = {
-        (r.doc_a, r.doc_b): (r.n_inter, r.n_union)
-        for r in prefix_filter_jaccard_pairs(
-            docs, t_num=3, t_den=5, multiword_vocab_cap=0
-        ).collect()
-    }
-    # dense_emission_factor=0 forces the block-nested dense mask path
-    got_dense = {
-        (r.doc_a, r.doc_b): (r.n_inter, r.n_union)
-        for r in prefix_filter_jaccard_pairs(
-            docs, t_num=3, t_den=5, dense_emission_factor=0.0
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(D, "_MULTIWORD_VOCAB_CAP", 0)
+        got_arrays = {
+            (r.doc_a, r.doc_b): (r.n_inter, r.n_union)
+            for r in prefix_filter_jaccard_pairs(
+                docs, t_num=3, t_den=5
+            ).collect()
+        }
+    # _DENSE_EMISSION_FACTOR=0 forces the block-nested dense mask path
+    with monkeypatch.context() as m:
+        m.setattr(D, "_DENSE_EMISSION_FACTOR", 0.0)
+        got_dense = {
+            (r.doc_a, r.doc_b): (r.n_inter, r.n_union)
+            for r in prefix_filter_jaccard_pairs(
+                docs, t_num=3, t_den=5
+            ).collect()
+        }
     sets = {i: set(ws) for i, ws in texts.items()}
     want = {}
     ids = sorted(sets)

@@ -120,27 +120,6 @@ def test_addon_multi_submit_rounding_and_distinct(spark):
     assert out[0].n_submitters == 5
 
 
-def test_account_creation_dist_block_decomposition_identical(spark):
-    """Hot-group block decomposition must not change results — every
-    pair meets in exactly one (block_a, block_b) cell."""
-    from foxsec_pipeline_spark.operators.customs import account_creation_dist
-
-    rows = [
-        Row(g="ex.com", id=i, name=f"user{i % 4}x{i}", addr=f"10.0.0.{i % 6}")
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows)
-    kw = dict(group_col="g", id_col="id", name_col="name", addr_col="addr",
-              max_ratio=0.5)
-    plain = account_creation_dist(df, hot_group_cutoff=100_000, **kw)
-    blocked = account_creation_dist(
-        df, hot_group_cutoff=10, n_blocks=4, hot_strategy="block", **kw
-    )
-    a = sorted(map(tuple, plain.collect()))
-    b = sorted(map(tuple, blocked.collect()))
-    assert a == b and len(a) > 0
-
-
 def _skewed_account_fixture():
     """Realistically-skewed account fixture: one hot domain dominated
     by POPULAR names (why real groups are hot) plus typo-variant

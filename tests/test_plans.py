@@ -261,7 +261,7 @@ def test_hot_group_flag_is_broadcast(spark):
     )
     plan = plan_of(account_creation_dist(
         df, group_col="g", id_col="id", name_col="name", addr_col="addr",
-        max_ratio=0.3, hot_group_cutoff=5, n_blocks=2,
+        max_ratio=0.3, hot_group_cutoff=5,
     ))
     assert "BroadcastHashJoin" in plan, plan
 
@@ -534,7 +534,7 @@ def test_prefix_jaccard_bounded_joins(spark, reg):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_prefix_jaccard_dense_and_chunked_shapes(spark, reg):
+def test_prefix_jaccard_dense_and_chunked_shapes(spark, reg, monkeypatch):
     """r11 shapes of the adaptive Jaccard join on a >62-word corpus.
 
     DENSE path (emission factor forced to 0): the block-nested mask
@@ -550,18 +550,15 @@ def test_prefix_jaccard_dense_and_chunked_shapes(spark, reg):
     distinct — never an AQE-sized read (the compresses-20x int-pair
     exchange coalesced the dedup to 10 tasks of 64M-entry hash maps
     at the 10x corpus, a GC freeze)."""
-    from foxsec_pipeline_spark.operators.dedup import (
-        prefix_filter_jaccard_pairs,
-    )
+    from foxsec_pipeline_spark.operators import dedup as D
 
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{(i * 7 + k) % 100:03d}" for k in range(12)))
          for i in range(200)],
         "doc_id long, text string",
     )
-    dense = plan_of(
-        prefix_filter_jaccard_pairs(docs, dense_emission_factor=0.0)
-    )
+    monkeypatch.setattr(D, "_DENSE_EMISSION_FACTOR", 0.0)
+    dense = plan_of(D.prefix_filter_jaccard_pairs(docs))
     assert "CartesianProduct" not in dense, dense
     assert dense.count("Generate") >= 2, dense
     assert "REPARTITION_BY_NUM" in dense, dense
@@ -569,9 +566,8 @@ def test_prefix_jaccard_dense_and_chunked_shapes(spark, reg):
     assert "array_intersect" not in dense, dense
     assert "bit_count" in dense, dense
 
-    sparse = plan_of(
-        prefix_filter_jaccard_pairs(docs, dense_emission_factor=1e18)
-    )
+    monkeypatch.setattr(D, "_DENSE_EMISSION_FACTOR", 1e18)
+    sparse = plan_of(D.prefix_filter_jaccard_pairs(docs))
     assert "CartesianProduct" not in sparse, sparse
     assert sparse.count("Generate") >= 2, sparse
     # the pair-dedup aggregate reads the explicit pair-key exchange
@@ -779,10 +775,10 @@ def _dense_corpus(spark, n=200):
     )
 
 
-def test_dense_path_docs_cap_gates_single_task_sort(spark):
+def test_dense_path_docs_cap_gates_single_task_sort(spark, monkeypatch):
     """r11 verdict item 6 pin: the dense mask sweep's chunk-id
     assignment is a SINGLE-TASK row_number sort, bounded only by the
-    `dense_docs_cap` gate in `_jaccard_prefix_path` — a future cap
+    `_DENSE_DOCS_CAP` gate in `_jaccard_prefix_path` — a future cap
     bump must not silently un-bound it. Forcing the density test TRUE
     (emission factor 0) while the corpus EXCEEDS the cap must fall
     through to the sparse prefix path (pair-key exchange present, no
@@ -791,11 +787,11 @@ def test_dense_path_docs_cap_gates_single_task_sort(spark):
     from foxsec_pipeline_spark.operators import dedup as D
 
     docs = _dense_corpus(spark)
-    dense_df = D.prefix_filter_jaccard_pairs(docs, dense_emission_factor=0.0)
+    monkeypatch.setattr(D, "_DENSE_EMISSION_FACTOR", 0.0)
+    dense_df = D.prefix_filter_jaccard_pairs(docs)
     assert D._LAST_STATS["path"] == "dense", D._LAST_STATS
-    gated_df = D.prefix_filter_jaccard_pairs(
-        docs, dense_emission_factor=0.0, dense_docs_cap=100
-    )
+    monkeypatch.setattr(D, "_DENSE_DOCS_CAP", 100)
+    gated_df = D.prefix_filter_jaccard_pairs(docs)
     assert D._LAST_STATS["path"] == "sparse", D._LAST_STATS
     gated = plan_of(gated_df)
     assert "hashpartitioning(doc_a" in gated, gated
@@ -814,7 +810,7 @@ def test_array_verify_broadcast_byte_bounded(spark, monkeypatch):
     broadcast exchanges, a shuffled join on the pair keys."""
     from foxsec_pipeline_spark.operators import dedup as D
 
-    # vocab 300*35 unique + 20 shared = 10520 > multiword_vocab_cap,
+    # vocab 300*35 unique + 20 shared = 10520 > _MULTIWORD_VOCAB_CAP,
     # so verification takes the ARRAYS tier; the shared pool creates
     # real candidates.
     docs = spark.createDataFrame(
@@ -851,16 +847,15 @@ def test_pair_dedup_width_emission_derived(spark, monkeypatch):
     docs = _dense_corpus(spark)
     par = spark.sparkContext.defaultParallelism
 
-    D.prefix_filter_jaccard_pairs(docs, dense_emission_factor=1e18)
+    monkeypatch.setattr(D, "_DENSE_EMISSION_FACTOR", 1e18)
+    D.prefix_filter_jaccard_pairs(docs)
     s1 = dict(D._LAST_STATS)
     assert s1["path"] == "sparse" and s1["emission"] > par, s1
     # default 25M-pairs/task target: tiny corpus floors at par
     assert s1["width"] == par, s1
 
     monkeypatch.setattr(D, "_PAIRS_PER_DEDUP_TASK", 1)
-    plan = plan_of(
-        D.prefix_filter_jaccard_pairs(docs, dense_emission_factor=1e18)
-    )
+    plan = plan_of(D.prefix_filter_jaccard_pairs(docs))
     s2 = dict(D._LAST_STATS)
     assert s2["width"] == max(par, s2["emission"]) > s1["width"], (s1, s2)
     assert f", {s2['width']}), REPARTITION_BY_NUM" in plan, plan
