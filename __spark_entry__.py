@@ -29,8 +29,12 @@ from foxsec_pipeline_spark.plans.catalog import registry  # noqa: E402
 # queries(), so the order decides what gets re-verified. CHANGED leads
 # it: every query whose plan changed after the newest CORRECTNESS
 # file. Add a name here in the change that alters its plan; drop it
-# once a CORRECTNESS file records it green. The rest follow
-# stalest-evidence first (see _ordered).
+# once a CORRECTNESS file records it green. A plan that reads a
+# LogicalRDD (a build-time checkpoint, or a table that createDataFrame
+# built from local rows) hides the work below that cut from the digest:
+# `scripts/plan_check.py diff` lists such queries apart, to be
+# compared with `--rows`. The rest follow stalest-evidence first (see
+# _ordered).
 CHANGED = [
     # connected components: one aggregate and one probe per round
     "dedup_clusters", "cluster_canonical_docs", "split_leakage_check",

@@ -4,14 +4,14 @@ reference's FreeMarker stack (`alert/TemplateManager.java`,
 createAlertMailBody, template files under
 `src/main/resources/alert/templates/`).
 
-Design: a template is an ordered list of sections; each section has a
-text body with ``${placeholder}`` substitutions and renders only when
-its guard passes — the deterministic subset of FreeMarker the
-reference's templates actually use (`<#if key == "v">`, `<#if key??>`).
-Placeholders resolve to alert columns (``alert.alert_id``,
-``summary`` …) or metadata map entries. A template compiles ONCE to a
-single Catalyst concat expression, so rendering is a JVM-side
-projection over the alerts DataFrame — no per-row Python, no UDF.
+Design: `compile_ftlh` compiles the reference's own `.ftlh` sources.
+They use a small deterministic subset of FreeMarker — line-level
+`<#if k == "v">`, `<#if k != "v">`, `<#if k??>`, `<#elseif ...>`,
+`<#else>`, `</#if>` (nested) and `${placeholder}` — and a template
+compiles ONCE to a single Catalyst conditional-concat expression, so
+rendering is a JVM-side projection over the alerts DataFrame: no
+per-row Python, no UDF. Placeholders resolve to alert columns
+(``alert.alertId``, ``summary`` …) or metadata map entries.
 """
 
 from __future__ import annotations
@@ -36,22 +36,6 @@ _ALERT_COLS = {
 _PLACEHOLDER_RX = re.compile(r"\$\{([^}]+)\}")
 
 
-@dataclass
-class Section:
-    """One conditional block of a template.
-
-    `when` is an optional (key, value) equality guard over a metadata
-    entry or alert column (`<#if key == "value">` analog); `require`
-    lists placeholders that must be non-null for the section to render
-    (`<#if key??>` analog — missing keys skip the section instead of
-    erroring like FreeMarker does).
-    """
-
-    text: str
-    when: tuple[str, str] | None = None
-    require: list[str] = field(default_factory=list)
-
-
 def _ref(name: str) -> Column:
     col = _ALERT_COLS.get(name)
     if col is not None:
@@ -59,48 +43,9 @@ def _ref(name: str) -> Column:
     return F.col("metadata").getItem(name)
 
 
-def _section_column(s: Section) -> Column:
-    parts: list[Column] = []
-    pos = 0
-    for m in _PLACEHOLDER_RX.finditer(s.text):
-        if m.start() > pos:
-            parts.append(F.lit(s.text[pos : m.start()]))
-        parts.append(F.coalesce(_ref(m.group(1)), F.lit("")))
-        pos = m.end()
-    if pos < len(s.text):
-        parts.append(F.lit(s.text[pos:]))
-    body = F.concat(*parts) if parts else F.lit("")
-    cond = F.lit(True)
-    if s.when is not None:
-        cond = cond & (_ref(s.when[0]) == F.lit(s.when[1]))
-    for req in s.require:
-        cond = cond & _ref(req).isNotNull()
-    return F.when(cond, body).otherwise(F.lit(""))
-
-
-def compile_template(sections: list[Section]) -> Column:
-    """Sections -> one string Column; compose with select/withColumn."""
-    return F.concat(*[_section_column(s) for s in sections])
-
-
-def render_template(alerts: DataFrame, sections: list[Section],
-                    out_col: str = "body") -> DataFrame:
-    """Render a template over an alerts DataFrame (ALERT_SCHEMA rows)."""
-    return alerts.withColumn(out_col, compile_template(sections))
-
-
-# --- FreeMarker-subset compiler for the reference's .ftlh files -----------
-#
-# The reference renders alert bodies with FreeMarker
-# (`alert/TemplateManager.java`; templates under
-# `src/main/resources/alert/templates/`). Its template files use a
-# small deterministic subset — line-level `<#if k == "v">`,
-# `<#if k != "v">`, `<#if k??>`, `<#elseif ...>`, `<#else>`, `</#if>`
-# (nested), and `${placeholder}` — which compiles directly to ONE
-# Catalyst conditional-concat expression: rendering stays a JVM-side
-# projection, no per-row Python. Byte-parity with the reference's own
-# golden outputs (src/test/resources/testdata/templateoutput/) is
-# asserted in tests/test_templates.py.
+# Byte-parity with the reference's own golden outputs
+# (src/test/resources/testdata/templateoutput/) is asserted in
+# tests/test_templates.py.
 #
 # Documented divergences from full FreeMarker: a `== / !=` comparison
 # against a MISSING key evaluates false / true respectively instead of
@@ -220,71 +165,3 @@ def compile_ftlh(text: str) -> Column:
 def render_ftlh(alerts: DataFrame, text: str, out_col: str = "body") -> DataFrame:
     """Render a .ftlh template source over an alerts DataFrame."""
     return alerts.withColumn(out_col, compile_ftlh(text))
-
-
-# --- built-in templates mirroring the reference's resources ---------------
-
-
-def render_amo_slack_catchall(alerts: DataFrame, out_col: str = "body") -> DataFrame:
-    """slack/catchall/amo.ftlh semantics (Amo.java:34
-    SLACK_CATCHALL_TEMPLATE): special body for amo_cloud_submission,
-    plain summary otherwise, alert id appended. FreeMarker expresses
-    the fallback as `<#if category != ...>`; the Section guard is
-    equality-only, so the inequality lives in an explicit when() here."""
-    cloud = compile_template(
-        [
-            Section(
-                text="${monitored_resource} cloud provider addon submission "
-                     "from ${sourceaddress}, guid ${addon_guid} isapi "
-                     "${addon_from_api} user_id ${addon_user_id} "
-                     "(${alert.alertId})"
-            )
-        ]
-    )
-    fallback = compile_template([Section(text="${summary} (${alert.alertId})")])
-    return alerts.withColumn(
-        out_col,
-        F.when(F.col("subcategory") == "amo_cloud_submission", cloud).otherwise(
-            fallback
-        ),
-    )
-
-
-# slack/authprofile.ftlh: auth vs auth_session phrasing + optional
-# state-action explanation + alert id footer
-AUTHPROFILE_SLACK = [
-    Section(
-        text="An authentication event for user ${username} was detected to "
-             "access ${object} from ${sourceaddress}.",
-        when=("auth_alert_type", "auth"),
-    ),
-    Section(
-        text="A sensitive event within ${object} was performed by user "
-             "${username} from ${sourceaddress}.",
-        when=("auth_alert_type", "auth_session"),
-    ),
-    Section(
-        text=" This event occurred at ${event_timestamp}.",
-        require=["event_timestamp"],
-    ),
-    Section(
-        text=" The source address was new, and does not appear to be near "
-             "any previously known location.",
-        when=("state_action_type", "unknown_ip_outside_geo"),
-    ),
-    Section(
-        text=" The source address was new, however is near a previously "
-             "known location so this message is informational.",
-        when=("state_action_type", "unknown_ip_within_geo"),
-    ),
-    Section(text=" alert id: ${alert.alertId}"),
-]
-
-
-# email body (AlertMailer.createAlertMailBody): subject is the
-# summary; the text body carries summary + metadata footer
-EMAIL_BODY = [
-    Section(text="${summary}\n\n"),
-    Section(text="alert id: ${alert.alertId}\ncategory: ${category}\n"
-                 "severity: ${severity}\n"),
-]

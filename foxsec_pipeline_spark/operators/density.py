@@ -14,47 +14,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def density_hot_cutoff(
-    sizes: DataFrame,
-    size_col: str,
-    work_budget_pairs: int | None,
-    absolute_cutoff: int,
-) -> int:
-    """Derive the group-size cutoff above which groups must leave the
-    exact all-pairs path: the largest size c such that the groups of
-    size <= c together stay within `work_budget_pairs` of n² work
-    (resolution: powers of two — a whole log2 bucket is either exact
-    or hot, so the decision is deterministic and order-free).
-
-    `sizes` carries one row per group; the collect here is one row
-    per log2 size bucket (<= 64 rows for any group size that fits in
-    an int64) — bounded regardless of group cardinality, the same
-    driver-readback budget class as the k-means centroid loops.
-
-    Returns min(absolute_cutoff, derived cutoff); with
-    work_budget_pairs=None the absolute cutoff alone applies
-    (the pre-r8 behavior).
-    """
-    if work_budget_pairs is None:
-        return int(absolute_cutoff)
-    return density_hot_split(
-        sizes, size_col, work_budget_pairs, absolute_cutoff
-    )[0]
-
-
 def density_hot_split(
     sizes: DataFrame,
     size_col: str,
     work_budget_pairs: int | None,
     absolute_cutoff: int,
 ) -> tuple[int, bool]:
-    """Like density_hot_cutoff, but also reports whether ANY group
-    actually exceeds the derived cutoff — when none does, callers can
-    skip building the hot-path plan legs entirely (empty-frame
-    subplans still run real jobs: scans, distincts, checkpoint
-    materialization — measured ~3 s of pure overhead on the
-    record-linkage query at sf0.1). One bounded collect serves both
-    answers (per-log2-bucket work + max size).
+    """Derive the group-size cutoff above which groups must leave the
+    exact all-pairs path, and whether ANY group exceeds it.
+
+    The cutoff is the largest size c such that the groups of size <= c
+    together stay within `work_budget_pairs` of n² work (resolution:
+    powers of two — a whole log2 bucket is either exact or hot, so the
+    decision is deterministic and order-free), capped by
+    `absolute_cutoff`; with work_budget_pairs=None the absolute cutoff
+    alone applies. When no group exceeds it, callers can skip building
+    the hot-path plan legs entirely (empty-frame subplans still run
+    real jobs: scans, distincts, checkpoint materialization — measured
+    ~3 s of pure overhead on the record-linkage query at sf0.1).
+
+    `sizes` carries one row per group; one bounded collect serves both
+    answers (per-log2-bucket work + max size): one row per log2 size
+    bucket, <= 64 rows for any group size that fits in an int64.
 
     The bucket profile is a plan-construction STATISTIC: it is
     memoized per (session, probe plan) via session.plan_stat_memo, so

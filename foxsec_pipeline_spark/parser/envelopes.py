@@ -624,7 +624,7 @@ _ENVELOPE_COLS: "weakref.WeakKeyDictionary[object, dict[str, tuple]]" = (
 
 def _envelope_cols(value_col: str) -> tuple:
     """Input-independent Column trees of `strip_envelopes`, cached per
-    gateway and value_col — the `_projection` posture (parse.py:97):
+    gateway and value_col — the `parse._projection` posture:
     Columns are immutable unresolved expressions bound to nothing,
     reusable across DataFrames, queries and sessions, and rebuilding
     this set is ~90 py4j calls (~0.1-0.2 s of client-side planning) per

@@ -17,8 +17,10 @@ optimization manually (`Parser.java:507-516`, `Input.java:429-445`).
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass, field
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -78,8 +80,13 @@ class ParserCfg:
     chain: list[PayloadSpec] | None = None
 
 
-_CHAIN_CACHE: dict[tuple, list[PayloadSpec]] = {}
-_PROJ_CACHE: dict[tuple, tuple] = {}
+# Payload chains and parse projections, keyed on the py4j gateway like
+# envelopes._ENVELOPE_COLS: both hold Column handles, which are JVM
+# objects of one gateway, so a restarted gateway must rebuild them,
+# while a session restarted on the same gateway keeps using them.
+_PARSE_COLS: "weakref.WeakKeyDictionary[object, dict[tuple, object]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _cached_chain(
@@ -87,22 +94,25 @@ def _cached_chain(
     use_xff_as_remote: bool = False,
     use_proxy_xff: bool = False,
 ) -> list[PayloadSpec]:
-    key = (tuple(xff_trusted_cidrs), bool(use_xff_as_remote),
+    cache = _PARSE_COLS.setdefault(SparkContext._gateway, {})
+    key = ("chain", tuple(xff_trusted_cidrs), bool(use_xff_as_remote),
            bool(use_proxy_xff))
-    if key not in _CHAIN_CACHE:
-        _CHAIN_CACHE[key] = default_chain(list(key[0]), key[1], key[2])
-    return _CHAIN_CACHE[key]
+    if key not in cache:
+        cache[key] = default_chain(list(key[1]), key[2], key[3])
+    return cache[key]
 
 
 def _projection(chain: list[PayloadSpec]):
     """Input-independent pieces of the parse projection, cached per
-    chain. Column objects are immutable unresolved expressions bound
-    to nothing, so they are reusable across DataFrames and queries —
-    and rebuilding them is NOT free: the 22-spec chain's when-cascades
-    are ~3000 py4j round-trips, ~2.6 s of driver time per parse_events
-    call (more than executing the parse at sf0.1)."""
-    key = tuple(id(s) for s in chain)
-    hit = _PROJ_CACHE.get(key)
+    gateway and chain. Column objects are immutable unresolved
+    expressions bound to nothing, so they are reusable across
+    DataFrames and queries — and rebuilding them is NOT free: the
+    22-spec chain's when-cascades are ~3000 py4j round-trips, ~2.6 s of
+    driver time per parse_events call (more than executing the parse
+    at sf0.1)."""
+    cache = _PARSE_COLS.setdefault(SparkContext._gateway, {})
+    key = ("projection", *(id(s) for s in chain))
+    hit = cache.get(key)
     if hit is not None:
         return hit[1]
 
@@ -173,7 +183,7 @@ def _projection(chain: list[PayloadSpec]):
     picks = [pick(f) for f in _NORM_FIELDS]
     built = (ptype, norm_type, payload_ts, extras_col, picks)
     # pin the chain so id()-keyed entries can't alias a GC'd chain
-    _PROJ_CACHE[key] = (chain, built)
+    cache[key] = (chain, built)
     return built
 
 

@@ -140,9 +140,9 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str):
 
 
 # SparkSession (weak) -> [(analyzed probe jplan, bounded value), ...].
-# Statistics memo, NOT result caching: every cached value is a BOUNDED
-# plan-construction statistic (a 1-row scalar or a <=64-row bucket
-# profile — the Catalyst-statistics posture), keyed by EXACT plan
+# Statistics memo: every cached value is a BOUNDED plan-construction
+# value (a 1-row scalar, a <=64-row bucket profile or a trained merge
+# list — the Catalyst-statistics posture), keyed by EXACT plan
 # identity via Catalyst sameResult (canonicalized comparison, no
 # hash-collision hazard), so the same logical input always reproduces
 # the same statistic and a different input can never alias. r12
@@ -150,9 +150,14 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str):
 # statistics-driven operator (Levenshtein prefix strip, density hot
 # split) re-ran its full-column probe scan at PLAN-BUILD time —
 # O(corpus) driver-blocking work per call even when the downstream
-# work was small. Query RESULTS are never memoized: these statistics
-# only shape the plan (strip width, hot cutoff), and the plan always
-# recomputes from parquet.
+# work was small. Most of these statistics only shape the plan (strip
+# width, hot cutoff), and the plan recomputes from parquet. Three
+# callers memoize values that ARE query output: the trained merge list
+# of `bpe_train_merge_list` (operators/textanalysis.py), tfidf's
+# `n_docs` (plans/catalog_data.py) and kcore's `n_li`
+# (plans/catalog_curation.py). The key is the analyzed plan, not the
+# files under it, so those three assume their input does not change
+# within a session (ROADMAP open item 4).
 _PLAN_STAT_CACHE: "weakref.WeakKeyDictionary[SparkSession, list]" = (
     weakref.WeakKeyDictionary()
 )

@@ -7,9 +7,9 @@ streaming (each micro-batch fans out to all configured sinks with
 exactly-once file semantics from the checkpoint).
 
 External network sinks (iprepd HTTP, SQS, email/Slack) are pluggable
-callables so tests inject collectors — the reference gates these
-behind IO interfaces the same way (`IprepdIO.java`, `SqsIO.java`,
-`alert/AlertSlack.java`).
+callables that run on the executors, so tests inject stand-ins — the
+reference gates these behind IO interfaces the same way
+(`IprepdIO.java`, `SqsIO.java`, `alert/AlertSlack.java`).
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..alert.model import alerts_to_json
@@ -158,12 +158,15 @@ def sqs_sink_config(queue_info: str, gcs_fetch=None, kms_decrypt=None) -> dict:
     }
 
 
+def _wire_payload(js: DataFrame) -> DataFrame:
+    """Alert-JSON `value` frame -> the single binary `data` column the
+    streaming connectors publish (Pub/Sub Lite sink contract)."""
+    return js.select(F.encode(F.col("value"), "UTF-8").alias("data"))
+
+
 def alerts_to_wire(alerts: DataFrame) -> DataFrame:
-    """Alert rows -> the single binary `data` column the streaming
-    connectors publish (Pub/Sub Lite sink contract)."""
-    return alerts_to_json(alerts).select(
-        F.encode(F.col("value"), "UTF-8").alias("data")
-    )
+    """Alert rows -> the Pub/Sub Lite `data` column."""
+    return _wire_payload(alerts_to_json(alerts))
 
 
 @dataclass
@@ -173,71 +176,40 @@ class CompositeOutput:
     file_path: str | None = None
     # name -> callable(list[str]) receiving alert JSON lines; stands in
     # for pubsub/sqs/iprepd/slack emitters (network IO stubbed per
-    # SURVEY §2.1 S11-S14)
+    # SURVEY §2.1 S11-S14). Emitters run on EXECUTORS via
+    # foreachPartition, one call per non-empty partition: an alert
+    # storm (the scenario this pipeline exists for) must not funnel an
+    # unbounded micro-batch through the driver.
     emitters: dict[str, Callable[[list[str]], None]] = field(default_factory=dict)
-    # emitters run on EXECUTORS via foreachPartition by default: an
-    # alert storm (the scenario this pipeline exists for) must not
-    # funnel an unbounded micro-batch through the driver. Collector
-    # emitters in tests set driver_emit=True to keep closure state
-    # observable in-process.
-    driver_emit: bool = False
     # connector-backed sink legs (BigQuery/Pub/Sub/... SinkSpec):
     # applied to the alert-JSON frame on every batch
     sink_specs: list[SinkSpec] = field(default_factory=list)
 
     def write_batch(self, alerts: DataFrame) -> None:
-        js = alerts_to_json(alerts)
-        if self.file_path:
-            js.write.mode("append").text(self.file_path)
-        wire = None
-        for spec in self.sink_specs:
-            if spec.payload == "data":
-                # Pub/Sub Lite publish contract: one binary `data`
-                # column (alerts_to_wire), not the string `value` frame
-                if wire is None:
-                    wire = js.select(
-                        F.encode(F.col("value"), "UTF-8").alias("data")
-                    )
-                spec.apply(wire)
-            else:
-                spec.apply(js)
-        if self.emitters:
-            if self.driver_emit:
-                lines = [r.value for r in js.collect()]
-                for emit in self.emitters.values():
-                    emit(lines)
-            else:
-                emitters = list(self.emitters.values())
-
-                def emit_partition(rows) -> None:
-                    lines = [r.value for r in rows]
-                    if lines:
-                        for emit in emitters:
-                            emit(lines)
-
-                js.foreachPartition(emit_partition)
+        self._fan_out(alerts_to_json(alerts), self.sink_specs)
 
     def write_lines(self, lines: DataFrame, col: str = "value") -> None:
-        """Raw line fan-out (no alert JSON conversion) — the output
-        half of the StreamWriter echo pipeline."""
-        js = lines.select(F.col(col).alias("value"))
+        """Raw line fan-out (no alert JSON conversion, no sink_specs) —
+        the output half of the StreamWriter echo pipeline."""
+        self._fan_out(lines.select(F.col(col).alias("value")), [])
+
+    def _fan_out(self, js: DataFrame, sink_specs: list[SinkSpec]) -> None:
+        """One string `value` frame -> the file sink, each connector
+        leg in its payload projection, then every emitter."""
         if self.file_path:
             js.write.mode("append").text(self.file_path)
+        for spec in sink_specs:
+            spec.apply(_wire_payload(js) if spec.payload == "data" else js)
         if self.emitters:
-            if self.driver_emit:
-                buf = [r.value for r in js.collect()]
-                for emit in self.emitters.values():
-                    emit(buf)
-            else:
-                emitters = list(self.emitters.values())
+            emitters = list(self.emitters.values())
 
-                def emit_partition(rows) -> None:
-                    buf = [r.value for r in rows]
-                    if buf:
-                        for emit in emitters:
-                            emit(buf)
+            def emit_partition(rows) -> None:
+                lines = [r.value for r in rows]
+                if lines:
+                    for emit in emitters:
+                        emit(lines)
 
-                js.foreachPartition(emit_partition)
+            js.foreachPartition(emit_partition)
 
     def stream_writer(self, alerts: DataFrame, checkpoint: str, **options):
         """writeStream wiring via foreachBatch (exactly-once per sink
@@ -304,90 +276,14 @@ VIOLATION_GENERATOR_MAP: dict[str, list[tuple[str, str]]] = {
 }
 
 
-def violations_by_generator_map(
-    alerts: DataFrame,
-    subcategory_col: str = "subcategory",
-    ip_col: str = "source_address",
-    email_col: str = "email",
-    generator_map: dict[str, list[tuple[str, str]]] | None = None,
-) -> DataFrame:
-    """Alert -> iprepd Violation rows via the reference's
-    subcategory-keyed generator map (`Violation.java:100-235,344`):
-    per subcategory, an ip violation from the source address and/or
-    one email violation per address in the EMAIL metadata list.
-    Unknown subcategories generate nothing (fromAlert returns null).
-    Golden-verified on the iprepdio fixtures in
-    tests/test_reference_goldens.py.
-
-    Shape: one array-of-structs literal per row filtered to non-null
-    objects, exploded — a map-side projection, no joins; the emitter
-    seam (`CompositeOutput.emitters`) ships the rows."""
-    gm = generator_map or VIOLATION_GENERATOR_MAP
-    branches = None
-    for subcat, gens in gm.items():
-        parts = []
-        for kind, vname in gens:
-            if kind == "ip":
-                parts.append(
-                    F.filter(
-                        F.array(
-                            F.named_struct(
-                                F.lit("object"), F.col(ip_col),
-                                F.lit("type"), F.lit("ip"),
-                                F.lit("violation"), F.lit(vname),
-                            )
-                        ),
-                        lambda x: x["object"].isNotNull(),
-                    )
-                )
-            else:
-                # the EMAIL metadata value is a comma-separated LIST
-                # and the reference emits ONE violation PER address
-                # (Violation.fromAlert splits it — golden:
-                # TestAlert.alertToAbusiveAccountViolationTest expects
-                # 3 email violations from 'a, b, c')
-                emails = F.filter(
-                    F.transform(
-                        F.split(F.coalesce(F.col(email_col), F.lit("")),
-                                r",\s*"),
-                        lambda e: F.trim(e),
-                    ),
-                    lambda e: e != "",
-                )
-                parts.append(
-                    F.transform(
-                        emails,
-                        lambda e: F.named_struct(
-                            F.lit("object"), e,
-                            F.lit("type"), F.lit("email"),
-                            F.lit("violation"), F.lit(vname),
-                        ),
-                    )
-                )
-        arr = parts[0]
-        for p in parts[1:]:
-            arr = F.concat(arr, p)
-        cond = F.col(subcategory_col) == subcat
-        branches = (
-            F.when(cond, arr) if branches is None else branches.when(cond, arr)
-        )
-    return (
-        alerts.withColumn("__v", F.explode(branches))
-        .select(
-            F.col("__v.object").alias("object"),
-            F.col("__v.type").alias("type"),
-            F.col("__v.violation").alias("violation"),
-            "*",
-        )
-        .drop("__v")
-    )
-
-
 def _violation_wire(obj: str, obj_type: str, vname: str,
                     suppress: str | None) -> tuple[str, str, str]:
-    """One wire tuple (type, object, json) in the reference's Jackson
-    field order (`Violation.java:294-334`): ip only for ip-type,
-    suppress_recovery only when set."""
+    """One wire tuple (type, object, json), byte-exact vs the reference
+    (`Violation.java:294-334` + golden `TestAlert.violationToJsonTest`):
+    Jackson's property order and non-null serialization — the legacy
+    iprepd-compat `ip` field equals the object for ip-type violations
+    and is ABSENT (not null) otherwise; `suppress_recovery`
+    (`Violation.java:88-96` createViolation) appears only when set."""
     import json as _json
 
     body: dict = {"object": obj, "type": obj_type, "violation": vname}
@@ -402,10 +298,10 @@ def _violation_wire(obj: str, obj_type: str, vname: str,
 
 
 def violation_wires_from_alert_json(line: str) -> list[tuple[str, str, str]]:
-    """Pure-Python per-line twin of the iprepd WriteFn conversion
-    (`IprepdIO.java:389-420` + `Violation.java:100-235,344`), for
-    EXECUTOR-side emitters that receive alert JSON lines.
-    Non-convertible inputs yield [] (ignored, never errors), and:
+    """The iprepd WriteFn conversion (`IprepdIO.java:389-420` +
+    `Violation.java:100-235,344`) of one alert JSON line into violation
+    wire tuples — what the executor-side `iprepd_violation_emitter`
+    PUTs. Non-convertible inputs yield [] (ignored, never errors), and:
 
     - alerts whose metadata carries ``iprepd_exempt == 'true'`` are
       dropped before escalation (`IprepdIO.java:400-403`);
@@ -460,28 +356,3 @@ def violation_wires_from_alert_json(line: str) -> list[tuple[str, str, str]]:
                 _violation_wire(e, "email", vname, suppress) for e in emails
             )
     return out
-
-
-def violation_wire_json(
-    violations: DataFrame, suppress_col: str | None = None
-) -> Column:
-    """The iprepd Violation wire format, byte-exact vs the reference
-    (`Violation.java:294-334` + golden `TestAlert.violationToJsonTest`):
-    `{"object":...,"type":...,"violation":...,"ip":...}` where `ip` is
-    the legacy iprepd-compat field — equal to the object for ip-type
-    violations, ABSENT (not null) otherwise, exactly Jackson's
-    non-null serialization; `suppress_recovery` (from
-    `IprepdIO.addMetadataSuppressRecovery` passthrough,
-    `Violation.java:88-96` createViolation) appears only when set.
-    Spark's to_json drops null struct fields by default
-    (ignoreNullFields), giving the same key-omission semantics; field
-    order follows the struct, matching the Java property order."""
-    fields = [
-        F.col("object").alias("object"),
-        F.col("type").alias("type"),
-        F.col("violation").alias("violation"),
-        F.when(F.col("type") == "ip", F.col("object")).alias("ip"),
-    ]
-    if suppress_col is not None:
-        fields.append(F.col(suppress_col).cast("int").alias("suppress_recovery"))
-    return F.to_json(F.struct(*fields))

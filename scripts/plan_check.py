@@ -14,10 +14,14 @@ row count plus the decimal sum of `xxhash64(to_json(struct(*)))`.
 
 `diff` prints the queries whose digest (or row hash) differs, and the
 queries present on one side only; it exits 1 when anything differs.
-A query that materializes part of its input while it is built (an
-eager `localCheckpoint`, as in the connected-components loop) shows
-only the plan above that cut, so an equal digest there does not prove
-equal work; `--rows` still compares its output.
+A query whose optimized plan reads a `LogicalRDD` (an eager
+`localCheckpoint` taken while the plan is built, as in the
+connected-components loop, or a table that `createDataFrame` built
+from local rows) shows only
+the plan above that cut, so an equal digest there does not prove
+equal work. `capture` marks such a query `"cut": true`, and `diff`
+lists the cut queries under their own heading, to be checked with
+`--rows`.
 
 Run `capture` from the root of each checkout with the same `--sf`
 and the same `SPARK_GRAFT_CPUS` (explicit repartition widths follow the
@@ -77,6 +81,8 @@ def capture(out: str, sf_dir: str, rows: bool, names: list[str]) -> None:
                 "plan": hashlib.sha256(plan.encode()).hexdigest(),
                 "schema": df.schema.simpleString(),
             }
+            if "LogicalRDD" in plan:
+                rec["cut"] = True
             if rows:
                 rec.update(_row_hash(df))
         except Exception as e:  # a failing query is a result too
@@ -94,16 +100,24 @@ def diff(a_path: str, b_path: str) -> int:
     with open(b_path) as f:
         b = json.load(f)
     differ = 0
+    cut = []
     for name in sorted(a.keys() | b.keys()):
+        if a.get(name, {}).get("cut") or b.get(name, {}).get("cut"):
+            cut.append(name)
         if name not in a or name not in b:
             print(f"{name}: only in {a_path if name in a else b_path}")
             differ += 1
             continue
         fields = [k for k in sorted(a[name].keys() | b[name].keys())
-                  if a[name].get(k) != b[name].get(k)]
+                  if k != "cut" and a[name].get(k) != b[name].get(k)]
         if fields:
             print(f"{name}: {', '.join(fields)}")
             differ += 1
+    if cut:
+        print("plan reads a LogicalRDD, digest blind below it "
+              "(check with --rows):")
+        for name in cut:
+            print(f"  {name}")
     print(f"{differ} of {len(a.keys() | b.keys())} queries differ")
     return 1 if differ else 0
 

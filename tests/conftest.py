@@ -118,3 +118,41 @@ def assert_matches_oracle(spark_df, ddb, oracle_sql: str, name: str = "query"):
     )
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True,
                                   obj=name)
+
+
+def alert_violation_wires(rows):
+    """Rows of `category`, `subcategory` and metadata columns -> the
+    iprepd violations the emitter would PUT, through the production
+    path: `to_alerts` -> `alerts_to_json` ->
+    `violation_wires_from_alert_json`. Returns one
+    (subcategory, type, object, violation, wire json) tuple per
+    violation."""
+    import functools
+    import json
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from foxsec_pipeline_spark.alert.model import alerts_to_json, to_alerts
+    from foxsec_pipeline_spark.sinks.output import (
+        violation_wires_from_alert_json,
+    )
+
+    meta = [c for c in rows.columns if c not in ("category", "subcategory")]
+    rows = rows.withColumn("__ts", F.lit("1970-01-01 00:00:00"))
+    keys = rows.select("category", "subcategory").distinct().collect()
+    alerts = functools.reduce(DataFrame.unionByName, [
+        to_alerts(
+            rows.where(F.col("category").eqNullSafe(k.category)
+                       & F.col("subcategory").eqNullSafe(k.subcategory)),
+            category=k.category, subcategory=k.subcategory,
+            summary=F.lit(""), timestamp_col="__ts", metadata_cols=meta,
+        )
+        for k in keys
+    ])
+    return [
+        (json.loads(r.value)["subcategory"], t, obj,
+         json.loads(wire)["violation"], wire)
+        for r in alerts_to_json(alerts).collect()
+        for t, obj, wire in violation_wires_from_alert_json(r.value)
+    ]

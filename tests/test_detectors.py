@@ -201,29 +201,29 @@ def test_account_creation_dist_minhash_hot_path_recall(spark):
     assert rows_matched >= 0.9
 
 
-def test_density_hot_cutoff_derivation(spark):
+def test_density_hot_split_cutoff_derivation(spark):
     """density.py unit semantics: the derived cutoff admits log2 size
     buckets smallest-first until the cumulative n² work would blow the
     budget, capped by the absolute cutoff."""
-    from foxsec_pipeline_spark.operators.density import density_hot_cutoff
+    from foxsec_pipeline_spark.operators.density import density_hot_split
 
     def sizes(*ns):
         return spark.createDataFrame([(int(n),) for n in ns], "sz long")
 
     # under budget everywhere -> absolute cutoff (exact path)
-    assert density_hot_cutoff(sizes(10, 10, 10), "sz", 1000, 100_000) == 100_000
+    assert density_hot_split(sizes(10, 10, 10), "sz", 1000, 100_000)[0] == 100_000
     # budget disabled -> absolute cutoff
-    assert density_hot_cutoff(sizes(10**6), "sz", None, 100_000) == 100_000
+    assert density_hot_split(sizes(10**6), "sz", None, 100_000)[0] == 100_000
     # 25 uniform groups of 100 (250k work) vs 100k budget: the whole
     # bucket (64, 128] is over -> everything above 64 is hot
-    assert density_hot_cutoff(
+    assert density_hot_split(
         sizes(*([100] * 25)), "sz", 100_000, 100_000
-    ) == 64
+    )[0] == 64
     # mixed: the small groups' bucket fits, the single 1000-row group
     # does not -> cutoff lands between them (512 = its bucket's floor)
-    assert density_hot_cutoff(sizes(4, 4, 4, 1000), "sz", 500, 100_000) == 512
+    assert density_hot_split(sizes(4, 4, 4, 1000), "sz", 500, 100_000)[0] == 512
     # absolute cutoff still wins when lower than the derived one
-    assert density_hot_cutoff(sizes(4, 4, 4, 1000), "sz", 500, 100) == 100
+    assert density_hot_split(sizes(4, 4, 4, 1000), "sz", 500, 100)[0] == 100
 
 
 def test_account_creation_dist_density_budget_engages(spark):

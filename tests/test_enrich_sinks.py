@@ -1,8 +1,10 @@
 """GeoIP enrichment plumbing, prefilter splitting, and the output
 plane (composite sink fan-out + iprepd violation mapping)."""
 
+import glob
 import os
 import tempfile
+import uuid
 
 import pytest
 from pyspark.sql import Row
@@ -11,6 +13,28 @@ from pyspark.sql import functions as F
 from foxsec_pipeline_spark.alert.model import to_alerts
 from foxsec_pipeline_spark.functions.geoip import enrich_geoip
 from foxsec_pipeline_spark.sinks.output import CompositeOutput, violations_from_alerts
+
+
+def _file_emitter(out_dir):
+    """An emitter that shows its executor-side calls through the
+    filesystem (executor closures can't mutate driver state): each call
+    writes its lines to a fresh file under `out_dir`."""
+    os.makedirs(out_dir, exist_ok=True)
+
+    def emit(lines):
+        with open(os.path.join(out_dir, f"{uuid.uuid4().hex}.jsonl"), "w") as fh:
+            fh.write("\n".join(lines) + "\n")
+
+    return emit
+
+
+def _emitted(out_dir):
+    """Every line the `_file_emitter` calls wrote under `out_dir`."""
+    lines = []
+    for p in glob.glob(os.path.join(out_dir, "*.jsonl")):
+        with open(p) as fh:
+            lines += [ln for ln in fh.read().splitlines() if ln]
+    return lines
 
 
 def test_enrich_geoip_deterministic_fake(spark):
@@ -98,12 +122,10 @@ def test_composite_output_fanout_and_violations(spark):
         summary=F.concat(F.lit("limit exceeded from "), F.col("source_address")),
         metadata_cols=["source_address", "n"],
     )
-    got: dict[str, list] = {}
     with tempfile.TemporaryDirectory() as d:
         sink = CompositeOutput(
             file_path=os.path.join(d, "alerts"),
-            emitters={"collector": lambda lines: got.setdefault("x", []).extend(lines)},
-            driver_emit=True,  # closure collector must stay in-process
+            emitters={"files": _file_emitter(os.path.join(d, "emitted"))},
         )
         sink.write_batch(alerts)
         files = [
@@ -112,7 +134,8 @@ def test_composite_output_fanout_and_violations(spark):
             if f.endswith(".txt") or f.startswith("part-")
         ]
         assert files, "file sink wrote no part files"
-    assert len(got["x"]) == 1 and "httprequest" in got["x"][0]
+        got = _emitted(os.path.join(d, "emitted"))
+    assert len(got) == 1 and "httprequest" in got[0]
 
     v = violations_from_alerts(alerts).collect()
     assert len(v) == 1
@@ -121,15 +144,9 @@ def test_composite_output_fanout_and_violations(spark):
 
 
 def test_emitters_run_on_executors_by_default(spark, tmp_path):
-    """Default emitter path is foreachPartition (executor-side): an
-    alert storm must not funnel through a driver collect
-    (sinks/output.py; the reference emits from workers too). The
-    emitter proves execution via a filesystem side effect, since
-    executor closures can't mutate driver state."""
-    import glob
-    import os as _os
-    import uuid as _uuid
-
+    """Emitters run through foreachPartition (executor-side): an alert
+    storm must not funnel through a driver collect (sinks/output.py;
+    the reference emits from workers too)."""
     hits = spark.createDataFrame(
         [Row(window_start="2024-01-01 00:00:00", source_address=f"10.0.0.{i}", n=i)
          for i in range(50)]
@@ -139,19 +156,9 @@ def test_emitters_run_on_executors_by_default(spark, tmp_path):
         summary=F.col("source_address"), metadata_cols=["source_address", "n"],
     )
     out_dir = str(tmp_path / "emitted")
-    _os.makedirs(out_dir)
-
-    def file_emitter(lines):
-        p = _os.path.join(out_dir, f"{_uuid.uuid4().hex}.jsonl")
-        with open(p, "w") as fh:
-            fh.write("\n".join(lines) + "\n")
-
-    sink = CompositeOutput(emitters={"files": file_emitter})
+    sink = CompositeOutput(emitters={"files": _file_emitter(out_dir)})
     sink.write_batch(alerts)
-    emitted = []
-    for p in glob.glob(_os.path.join(out_dir, "*.jsonl")):
-        with open(p) as fh:
-            emitted += [ln for ln in fh.read().splitlines() if ln]
+    emitted = _emitted(out_dir)
     assert len(emitted) == 50
     assert all("httprequest" in ln for ln in emitted)
 
@@ -264,18 +271,16 @@ def test_composite_output_stream_writer(spark, tmp_path):
         raw, category="httprequest", severity="warn",
         summary=F.col("ip"), timestamp_col="ws", metadata_cols=["ip", "n"],
     )
-    got: list[str] = []
     sink = CompositeOutput(
         file_path=str(tmp_path / "out"),
-        emitters={"mem": got.extend},
-        driver_emit=True,  # closure collector must stay in-process
+        emitters={"files": _file_emitter(str(tmp_path / "emitted"))},
     )
     q = sink.stream_writer(alerts, checkpoint=str(tmp_path / "ckpt")).trigger(
         availableNow=True
     ).start()
     q.processAllAvailable()
     q.stop()
-    assert len(got) == 3
+    assert len(_emitted(str(tmp_path / "emitted"))) == 3
     texts = spark.read.text(str(tmp_path / "out")).count()
     assert texts == 3
 
@@ -309,14 +314,13 @@ def test_file_read_lines_and_stream_writer(spark, tmp_path):
         "gs://bucket/obj", gcs_fetch=lambda u: "# c\nx\ny"
     ) == ["x", "y"]
 
-    got = []
     out = CompositeOutput(
-        emitters={"collector": got.extend}, driver_emit=True
+        emitters={"files": _file_emitter(str(tmp_path / "emitted"))}
     )
     stream_writer(
         spark, InputSpec([InputElement("default", path=str(p))]), out
     )
-    assert sorted(got) == sorted(
+    assert sorted(_emitted(str(tmp_path / "emitted"))) == sorted(
         ["# comment", "pattern-one", "# another", "pattern-two"]
     )
 

@@ -22,6 +22,7 @@ from foxsec_pipeline_spark.operators.heuristics import (
     windowed_counts,
 )
 from foxsec_pipeline_spark.parser.parse import ParserCfg, parse_events
+from tests.conftest import alert_violation_wires
 
 TESTDATA = "/root/reference/src/test/resources/testdata"
 
@@ -1388,10 +1389,6 @@ def test_iprepd_violation_projection_reference_golden(spark):
     custom matched-addon generator) — the submissions that drive the
     reference's observed 100->50 and 100->0 reputation drops, while
     127.0.0.1 receives none."""
-    from foxsec_pipeline_spark.sinks.output import (
-        violations_by_generator_map,
-    )
-
     schema = (
         "id string, severity string, category string, summary string, "
         "metadata array<struct<key:string,value:string>>, timestamp string"
@@ -1401,23 +1398,23 @@ def test_iprepd_violation_projection_reference_golden(spark):
         .where(F.trim("value") != "")
         .select(F.from_json("value", schema).alias("a"))
         .select(
-            F.col("a.id").alias("alert_id"),
+            F.col("a.category").alias("category"),
             F.map_from_entries(F.col("a.metadata")).alias("md"),
         )
         .select(
-            "alert_id",
+            "category",
             F.col("md")["category"].alias("subcategory"),
             F.col("md")["sourceaddress"].alias("source_address"),
             F.col("md")["email"].alias("email"),
         )
     )
-    out = violations_by_generator_map(alerts).collect()
-    got = {(r["object"], r["type"], r["violation"]) for r in out}
+    out = alert_violation_wires(alerts)
+    got = {(obj, t, v) for _, t, obj, v, _ in out}
     assert got == {
         ("99.99.99.1", "ip", "endpoint_abuse_violation"),
         ("testiprepdio1@mozilla.com", "email", "abusive_account_violation"),
     }
-    assert all(r["object"] != "127.0.0.1" for r in out)
+    assert all(obj != "127.0.0.1" for _, _, obj, _, _ in out)
 
 
 def test_multiplex_multi_resource_reference_golden(spark):

@@ -9,6 +9,8 @@ import datetime
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from tests.conftest import alert_violation_wires
+
 
 def test_string_distance_reference_golden(spark):
     """TestStringDistance.stringDistanceTest (`TestStringDistance.
@@ -428,10 +430,6 @@ def test_alert_violation_conversion_reference_golden(spark):
     error-rate alert into one client_error_rate_violation ip row, and
     a useragent-blocklist alert into the shared wire name
     violation20."""
-    from foxsec_pipeline_spark.sinks.output import (
-        violations_by_generator_map,
-    )
-
     alerts = spark.createDataFrame(
         [
             ("customs", "account_creation_abuse", None,
@@ -442,21 +440,21 @@ def test_alert_violation_conversion_reference_golden(spark):
         "category string, subcategory string, source_address string, "
         "email string",
     )
-    rows = violations_by_generator_map(alerts).collect()
+    rows = alert_violation_wires(alerts)
     acct = sorted(
-        (r.object, r.type, r.violation)
-        for r in rows if r.subcategory == "account_creation_abuse"
+        (obj, t, v)
+        for sub, t, obj, v, _ in rows if sub == "account_creation_abuse"
     )
     assert acct == [
         ("user.1.@mail.com", "email", "abusive_account_violation"),
         ("user.1@mail.com", "email", "abusive_account_violation"),
         ("user@mail.com", "email", "abusive_account_violation"),
     ]
-    er = [(r.object, r.type, r.violation) for r in rows
-          if r.subcategory == "error_rate"]
+    er = [(obj, t, v) for sub, t, obj, v, _ in rows
+          if sub == "error_rate"]
     assert er == [("10.0.0.2", "ip", "client_error_rate_violation")]
-    ua = [(r.object, r.type, r.violation) for r in rows
-          if r.subcategory == "useragent_blocklist"]
+    ua = [(obj, t, v) for sub, t, obj, v, _ in rows
+          if sub == "useragent_blocklist"]
     assert ua == [("10.0.0.2", "ip", "violation20")]
 
 
@@ -497,9 +495,6 @@ def test_alert_violation_full_map_reference_golden(spark):
     one email violation per list entry = 4 on the reference's
     triple-normalized list), and an UNKNOWN subcategory producing
     nothing (fromAlert returns null)."""
-    from foxsec_pipeline_spark.sinks.output import (
-        violations_by_generator_map,
-    )
 
     alias_list = ", ".join(
         ["laforge@mozilla.com"]
@@ -537,12 +532,9 @@ def test_alert_violation_full_map_reference_golden(spark):
         "category string, subcategory string, source_address string, "
         "email string",
     )
-    rows = violations_by_generator_map(alerts).collect()
     by_sub = {}
-    for r in rows:
-        by_sub.setdefault(r.subcategory, []).append(
-            (r.type, r.violation, r.object)
-        )
+    for sub, t, obj, v, _ in alert_violation_wires(alerts):
+        by_sub.setdefault(sub, []).append((t, v, obj))
     assert by_sub["threshold_analysis"] == [
         ("ip", "request_threshold_violation", "10.0.0.2")
     ]
@@ -583,7 +575,7 @@ def test_alert_violation_full_map_reference_golden(spark):
     assert "unknown" not in by_sub
 
 
-def test_violation_wire_json_reference_golden(spark):
+def test_violation_wire_bytes_reference_golden(spark):
     """Violation wire bytes (`TestAlert.violationToJsonTest`,
     `alert/TestAlert.java:88-101`, serializer `Violation.java:
     294-334`): ip-type violations carry the legacy `ip` compat field
@@ -591,46 +583,29 @@ def test_violation_wire_json_reference_golden(spark):
     non-null), byte-identical strings. Plus the suppress_recovery
     passthrough pair (`TestAlert.java:421-477`): absent without the
     iprepd_suppress_recovery metadata, `60` with it."""
-    from foxsec_pipeline_spark.sinks.output import violation_wire_json
-
-    df = spark.createDataFrame(
+    alerts = spark.createDataFrame(
         [
-            ("10.0.0.2", "ip", "request_threshold_violation", None),
-            ("riker@mozilla.com", "email", "abusive_account_violation",
-             None),
-            ("10.0.0.2", "ip", "endpoint_abuse_violation", 60),
+            ("httprequest", "threshold_analysis", "10.0.0.2", None, None),
+            ("customs", "account_creation_abuse", None,
+             "riker@mozilla.com", None),
+            ("httprequest", "endpoint_abuse", "10.0.0.2", None, "60"),
         ],
-        "object string, type string, violation string, "
-        "suppress_recovery int",
+        "category string, subcategory string, source_address string, "
+        "email string, iprepd_suppress_recovery string",
     )
-    plain = {
-        (r.object, r.violation): r.js
-        for r in df.select(
-            "object", "violation", violation_wire_json(df).alias("js")
-        ).collect()
+    wire = {
+        (obj, v): js for _, _, obj, v, js in alert_violation_wires(alerts)
     }
-    assert plain[("10.0.0.2", "request_threshold_violation")] == (
+    assert wire[("10.0.0.2", "request_threshold_violation")] == (
         '{"object":"10.0.0.2","type":"ip","violation":'
         '"request_threshold_violation","ip":"10.0.0.2"}'
     )
-    assert plain[("riker@mozilla.com", "abusive_account_violation")] == (
+    assert wire[("riker@mozilla.com", "abusive_account_violation")] == (
         '{"object":"riker@mozilla.com","type":"email","violation":'
         '"abusive_account_violation"}'
     )
-    sup = {
-        (r.object, r.violation): r.js
-        for r in df.select(
-            "object", "violation",
-            violation_wire_json(df, suppress_col="suppress_recovery")
-            .alias("js"),
-        ).collect()
-    }
-    assert sup[("10.0.0.2", "endpoint_abuse_violation")] == (
+    assert wire[("10.0.0.2", "endpoint_abuse_violation")] == (
         '{"object":"10.0.0.2","type":"ip","violation":'
         '"endpoint_abuse_violation","ip":"10.0.0.2",'
         '"suppress_recovery":60}'
-    )
-    assert sup[("riker@mozilla.com", "abusive_account_violation")] == (
-        '{"object":"riker@mozilla.com","type":"email","violation":'
-        '"abusive_account_violation"}'
     )

@@ -1,19 +1,17 @@
-"""Golden-text tests for the alert template renderer
+"""Golden-text tests for the alert template compiler
 (alert/templates.py — TemplateManager.java / AlertSlack.java /
 AlertMailer.java analog; template semantics from
-src/main/resources/alert/templates/*.ftlh).
+src/main/resources/alert/templates/*.ftlh). The inline sources below
+run without the reference checkout; the byte-parity tests at the end
+load the reference's own template files and goldens.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 
-from foxsec_pipeline_spark.alert.templates import (
-    AUTHPROFILE_SLACK,
-    EMAIL_BODY,
-    render_amo_slack_catchall,
-    render_template,
-)
+from foxsec_pipeline_spark.alert.templates import parse_ftlh, render_ftlh
 
 
 def _alert(spark, **over):
@@ -36,9 +34,33 @@ def _alert(spark, **over):
     )
 
 
+def _render(spark, src, **over):
+    return render_ftlh(_alert(spark, **over), src).collect()[0].body
+
+
+# slack/authprofile.ftlh shape: auth vs auth_session phrasing, optional
+# event time, state-action explanation, alert id footer
+_AUTHPROFILE_FTLH = """\
+<#if auth_alert_type == "auth">
+An authentication event for user ${username} was detected to access ${object} from ${sourceaddress}.
+<#elseif auth_alert_type == "auth_session">
+A sensitive event within ${object} was performed by user ${username} from ${sourceaddress}.
+</#if>
+<#if event_timestamp??>
+This event occurred at ${event_timestamp}.
+</#if>
+<#if state_action_type == "unknown_ip_outside_geo">
+The source address was new, and does not appear to be near any previously known location.
+<#elseif state_action_type == "unknown_ip_within_geo">
+The source address was new, however is near a previously known location so this message is informational.
+</#if>
+alert id: ${alert.alertId}
+"""
+
+
 def test_authprofile_slack_auth_with_geo(spark):
-    a = _alert(
-        spark,
+    body = _render(
+        spark, _AUTHPROFILE_FTLH,
         metadata={
             "auth_alert_type": "auth",
             "username": "riker",
@@ -48,21 +70,21 @@ def test_authprofile_slack_auth_with_geo(spark):
             "state_action_type": "unknown_ip_outside_geo",
         },
     )
-    body = render_template(a, AUTHPROFILE_SLACK).collect()[0].body
     assert body == (
         "An authentication event for user riker was detected to access "
-        "bastion from 216.160.83.56."
-        " This event occurred at 1970-01-01T00:00:00Z."
-        " The source address was new, and does not appear to be near any "
-        "previously known location."
-        " alert id: id-1"
+        "bastion from 216.160.83.56.\n"
+        "This event occurred at 1970-01-01T00:00:00Z.\n"
+        "The source address was new, and does not appear to be near any "
+        "previously known location.\n"
+        "alert id: id-1\n"
     )
 
 
 def test_authprofile_slack_session_minimal(spark):
-    # missing optional keys skip their sections (<#if key??> analog)
-    a = _alert(
-        spark,
+    # `??` skips a missing key's block, and `==` against a missing key
+    # is false, so both optional blocks drop out
+    body = _render(
+        spark, _AUTHPROFILE_FTLH,
         metadata={
             "auth_alert_type": "auth_session",
             "username": "worf",
@@ -70,42 +92,119 @@ def test_authprofile_slack_session_minimal(spark):
             "sourceaddress": "10.0.0.1",
         },
     )
-    body = render_template(a, AUTHPROFILE_SLACK).collect()[0].body
     assert body == (
         "A sensitive event within console was performed by user worf from "
-        "10.0.0.1. alert id: id-1"
+        "10.0.0.1.\nalert id: id-1\n"
     )
 
 
 def test_amo_slack_catchall_branches(spark):
-    cloud = _alert(
-        spark,
-        subcategory="amo_cloud_submission",
-        metadata={
-            "monitored_resource": "amo",
-            "sourceaddress": "10.1.2.3",
-            "addon_guid": "guid-9",
-            "addon_from_api": "true",
-            "addon_user_id": "42",
-        },
-    )
-    got = render_amo_slack_catchall(cloud).collect()[0].body
-    assert got == (
+    """slack/catchall/amo.ftlh keys the special body on the alert's
+    CATEGORY (an amo_cloud_submission subcategory alone does not
+    select it)."""
+    src = """\
+<#if category != "amo_cloud_submission">
+${summary} (${alert.alertId})
+<#else>
+${monitored_resource} cloud provider addon submission from ${sourceaddress}, guid ${addon_guid} isapi ${addon_from_api} user_id ${addon_user_id} (${alert.alertId})
+</#if>
+"""
+    meta = {
+        "monitored_resource": "amo",
+        "sourceaddress": "10.1.2.3",
+        "addon_guid": "guid-9",
+        "addon_from_api": "true",
+        "addon_user_id": "42",
+    }
+    assert _render(
+        spark, src, category="amo_cloud_submission", metadata=meta
+    ) == (
         "amo cloud provider addon submission from 10.1.2.3, guid guid-9 "
-        "isapi true user_id 42 (id-1)"
+        "isapi true user_id 42 (id-1)\n"
     )
-    other = _alert(spark, subcategory="amo_restriction")
-    got2 = render_amo_slack_catchall(other).collect()[0].body
-    assert got2 == "test summary (id-1)"
+    assert _render(
+        spark, src, category="amo", subcategory="amo_cloud_submission",
+        metadata=meta,
+    ) == "test summary (id-1)\n"
+    assert _render(
+        spark, src, category="amo_restriction"
+    ) == "test summary (id-1)\n"
 
 
 def test_email_body(spark):
-    a = _alert(spark, severity="critical")
-    body = render_template(a, EMAIL_BODY).collect()[0].body
-    assert body == (
-        "test summary\n\nalert id: id-1\ncategory: authprofile\n"
-        "severity: critical\n"
+    # a directive-only line drops together with its newline; content
+    # lines, blank ones included, keep theirs
+    src = """\
+${summary}
+
+<#if severity == "critical">
+Immediate action required.
+</#if>
+alert id: ${alert.alertId}
+category: ${category}
+severity: ${severity}
+"""
+    assert _render(spark, src, severity="critical") == (
+        "test summary\n\nImmediate action required.\nalert id: id-1\n"
+        "category: authprofile\nseverity: critical\n"
     )
+    assert _render(spark, src) == (
+        "test summary\n\nalert id: id-1\ncategory: authprofile\n"
+        "severity: warn\n"
+    )
+
+
+def test_ftlh_not_equal_renders_on_missing_key(spark):
+    src = """\
+<#if state_action_type != "known_ip">
+new address
+</#if>
+"""
+    assert _render(spark, src) == "new address\n"
+    assert _render(
+        spark, src, metadata={"state_action_type": "unknown_ip"}
+    ) == "new address\n"
+    assert _render(
+        spark, src, metadata={"state_action_type": "known_ip"}
+    ) == ""
+
+
+def test_ftlh_nested_if_elseif_else(spark):
+    src = """\
+<#if auth_alert_type == "auth">
+auth
+<#if sourceaddress??>
+from ${sourceaddress}
+<#else>
+from nowhere
+</#if>
+<#elseif auth_alert_type == "auth_session">
+session
+<#else>
+other
+</#if>
+end
+"""
+    assert _render(spark, src, metadata={
+        "auth_alert_type": "auth", "sourceaddress": "10.0.0.1",
+    }) == "auth\nfrom 10.0.0.1\nend\n"
+    assert _render(
+        spark, src, metadata={"auth_alert_type": "auth"}
+    ) == "auth\nfrom nowhere\nend\n"
+    assert _render(
+        spark, src, metadata={"auth_alert_type": "auth_session"}
+    ) == "session\nend\n"
+    assert _render(spark, src) == "other\nend\n"
+
+
+@pytest.mark.parametrize("src, msg", [
+    ("x\n</#if>\n", "unbalanced"),
+    ('<#if a == "b">\nx\n', "unterminated"),
+    ('<#if a == "b">\n<#if c??>\nx\n</#if>\n', "unterminated"),
+], ids=["stray_close", "unterminated", "unterminated_nested"])
+def test_ftlh_unbalanced_directives_raise(src, msg):
+    with pytest.raises(ValueError, match=msg):
+        parse_ftlh(src)
 
 
 # --- byte-parity with the reference's OWN template files + goldens --------
@@ -120,8 +219,6 @@ def test_email_body(spark):
 # scenarios below set those literals as the metadata values.
 
 import os
-
-import pytest
 
 _REF = "/root/reference/src/main"
 _TPL = f"{_REF}/resources/alert/templates"
@@ -191,8 +288,6 @@ _need_ref = pytest.mark.skipif(
 
 
 def _render_ref(spark, tpl_path, overlay):
-    from foxsec_pipeline_spark.alert.templates import render_ftlh
-
     meta = dict(_BASE_META)
     category = overlay.pop("__category", "state_analyze") if overlay else (
         "state_analyze"
@@ -228,8 +323,6 @@ def test_ftlh_email_authprofile_golden(spark, golden):
 def test_ftlh_slack_catchall_amo(spark):
     """slack/catchall/amo.ftlh has no recorded golden in the reference;
     assert both branches against the template's own literal text."""
-    from foxsec_pipeline_spark.alert.templates import render_ftlh
-
     with open(f"{_TPL}/slack/catchall/amo.ftlh", encoding="utf-8") as f:
         src = f.read()
     cloud = _alert(
