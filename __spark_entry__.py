@@ -31,10 +31,9 @@ from foxsec_pipeline_spark.plans.catalog import registry  # noqa: E402
 # file. Add a name here in the change that alters its plan; drop it
 # once a CORRECTNESS file records it green. A plan that reads a
 # LogicalRDD (a build-time checkpoint, or a table that createDataFrame
-# built from local rows) hides the work below that cut from the digest:
-# `scripts/plan_check.py diff` lists such queries apart, to be
-# compared with `--rows`. The rest follow stalest-evidence first (see
-# _ordered).
+# built from local rows) hides the work below that cut from the digest,
+# so `scripts/plan_check.py` compares those queries by their output
+# hash. The rest follow stalest-evidence first (see _ordered).
 CHANGED = [
     # connected components: one aggregate and one probe per round
     "dedup_clusters", "cluster_canonical_docs", "split_leakage_check",
@@ -51,6 +50,8 @@ CHANGED = [
     # changed too and are listed above
     "containment_dedup", "minhash_jaccard_estimate_error", "neardup_pair_recall",
     "prefix_jaccard_join", "semdedup", "winnowing_plagiarism_pairs",
+    # alerts -> violations through the iprepd wire conversion
+    "violation_projection",
 ]
 
 

@@ -14,13 +14,8 @@ from .heuristics import (  # noqa: F401
     threshold_analysis,
     ua_blocklist_analysis,
 )
-from .windows import fixed_window, session_win, sliding_window, windowed_counts  # noqa: F401
-from .summary import (  # noqa: F401
-    sliding_counts,
-    source_correlation,
-    summary_delta,
-    windowed_type_counts,
-)
+from .windows import windowed_counts  # noqa: F401
+from .summary import source_correlation, summary_delta  # noqa: F401
 from .customs import (  # noqa: F401
     account_creation_dist,
     assume_role_correlate,

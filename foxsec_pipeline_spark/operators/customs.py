@@ -32,16 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import bucket_pairs
-
-_UNITS = {
-    "second": 1, "seconds": 1, "minute": 60, "minutes": 60,
-    "hour": 3600, "hours": 3600, "day": 86400, "days": 86400,
-}
-
-
-def _gap_seconds(gap: str) -> int:
-    num, unit = gap.split()
-    return int(num) * _UNITS[unit]
+from .windows import duration_micros
 
 
 def features_combine(
@@ -223,23 +214,22 @@ def account_creation_dist(
     else:
         base = proj.withColumn("__hot", F.lit(None).cast("boolean"))
 
-    # r12 (guide §1.2 per-task work): Levenshtein is invariant under
-    # stripping a prefix COMMON TO BOTH arguments, and the prefix
-    # shared by every name in the input is exactly the common prefix
-    # of lexicographic min(name) and max(name) (any string outside it
-    # would sort outside the [min, max] band; UTF-8 byte order is
-    # code-point order, so the python commonprefix matches Spark's
-    # string min/max). Spark's levenshtein does NOT trim internally
-    # (microbenched: 2M 18-char fixed-prefix pairs 0.946 s full vs
-    # 0.530 s stripped, identical sums), so on fixed-format name
-    # populations ("Customer#000000042") stripping nearly halves the
-    # DP cell count of the quadratic kernel for the price of one
-    # linear min/max pass. The RATIO keeps the original-length
-    # denominator, so the predicate value is bit-identical. NOTE (r12
-    # ADVICE): the probe is an EAGER driver-blocking 1-row min/max job
-    # at plan-construction time — memoized per (session, input plan)
-    # in session.global_common_prefix_len, so only the FIRST
-    # invocation on a given input pays the scan.
+    # Levenshtein is invariant under stripping a prefix COMMON TO BOTH
+    # arguments, and the prefix shared by every name in the input is
+    # exactly the common prefix of lexicographic min(name) and
+    # max(name) (any string outside it would sort outside the
+    # [min, max] band; UTF-8 byte order is code-point order, so the
+    # python commonprefix matches Spark's string min/max). Spark's
+    # levenshtein does NOT trim internally (microbenched: 2M 18-char
+    # fixed-prefix pairs 0.946 s full vs 0.530 s stripped, identical
+    # sums), so on fixed-format name populations ("Customer#000000042")
+    # stripping nearly halves the DP cell count of the quadratic kernel
+    # for the price of one linear min/max pass. The RATIO keeps the
+    # original-length denominator, so the predicate value is
+    # bit-identical. The probe is an EAGER driver-blocking 1-row
+    # min/max job at plan-construction time — memoized per (session,
+    # input plan) in session.global_common_prefix_len, so only the
+    # FIRST invocation on a given input pays the scan.
     from ..session import global_common_prefix_len
 
     _pre = global_common_prefix_len(df.select(F.col(name_col)), name_col)
@@ -456,7 +446,7 @@ def sessionize(
     # events that land within 1 s of a boundary
     us = F.unix_micros(F.col(ts))
     brk = F.when(
-        us - F.lag(us).over(w) >= F.lit(_gap_seconds(gap) * 1_000_000),
+        us - F.lag(us).over(w) >= F.lit(duration_micros(gap)),
         1,
     ).otherwise(0)
     return df.withColumn(

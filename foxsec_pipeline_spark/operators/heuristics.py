@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .windows import windowed_counts
+from .windows import duration_micros, windowed_counts
 
 
 def beam_session_gap(gap: str) -> Column:
@@ -48,27 +48,12 @@ def beam_session_gap(gap: str) -> Column:
     delta == gap splits, delta == gap - 1us merges. Session window
     `end` then reads gap-1us after the last event instead of gap.
 
-    Pass the result as the `gap` argument of any session operator in
-    this module when Beam-exact boundaries are required; the default
-    string form keeps Spark's native (and the catalog oracles')
-    boundary convention, where delta == gap merges.
-
-    session_window requires CalendarIntervalType (interval arithmetic
-    yields DayTimeIntervalType, which it rejects), so the gap string
-    is parsed here and re-emitted through make_interval.
+    Every session operator in this module applies it to a string gap
+    (`_session_gap`). session_window requires CalendarIntervalType
+    (interval arithmetic yields DayTimeIntervalType, which it rejects),
+    so the gap is re-emitted through make_interval.
     """
-    import re as _re
-
-    units = {
-        "week": 604800.0, "day": 86400.0, "hour": 3600.0,
-        "minute": 60.0, "min": 60.0, "second": 1.0, "sec": 1.0,
-        "millisecond": 1e-3, "microsecond": 1e-6,
-    }
-    total = 0.0
-    for num, unit in _re.findall(r"([\d.]+)\s*([a-z]+?)s?\b", gap.lower()):
-        total += float(num) * units[unit]
-    if total <= 0:
-        raise ValueError(f"cannot parse session gap: {gap!r}")
+    total = duration_micros(gap) / 1_000_000
     return F.expr(f"make_interval(0,0,0,0,0,0,{total - 1e-6:.6f})")
 
 
@@ -108,8 +93,7 @@ def threshold_analysis(
     min_requests_per_client: int = 1,
 ) -> DataFrame:
     """Alert when a key's per-window count >= mean * threshold_modifier
-    (`ThresholdAnalysis.java:152` — AT-or-over, not strictly over;
-    round-5 parity fix, the original `>` diverged at exact equality).
+    (`ThresholdAnalysis.java:152` — AT-or-over, not strictly over).
 
     Mirrors ThresholdAnalysis: compute per-client counts in fixed
     windows, compare each against the window's global mean (the Beam
@@ -176,17 +160,9 @@ def error_rate_analysis(
     are shuffled — the reference achieves the same by filtering before
     GroupByKey.
     """
-    return (
-        events.where(error_predicate)
-        .groupBy(F.window(ts, duration).alias("window"), F.col(key))
-        .agg(F.count(F.lit(1)).alias("error_count"))
-        .where(F.col("error_count") > F.lit(int(max_errors)))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col(key),
-            F.col("error_count"),
-        )
-    )
+    return windowed_counts(
+        events.where(error_predicate), key, ts, duration, count_alias="error_count"
+    ).where(F.col("error_count") > F.lit(int(max_errors)))
 
 
 def status_code_rate_analysis(
@@ -209,17 +185,9 @@ def status_code_rate_analysis(
     The predicate filter runs BEFORE the shuffle, so only matching
     rows move — one shuffle, map-side partial counts.
     """
-    return (
-        events.where(match_predicate)
-        .groupBy(F.window(ts, duration).alias("window"), F.col(key))
-        .agg(F.count(F.lit(1)).alias("matched"))
-        .where(F.col("matched") > F.lit(int(max_count)))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col(key),
-            F.col("matched"),
-        )
-    )
+    return windowed_counts(
+        events.where(match_predicate), key, ts, duration, count_alias="matched"
+    ).where(F.col("matched") > F.lit(int(max_count)))
 
 
 def detect_nat(
@@ -437,10 +405,8 @@ def session_limit_analysis(
 ) -> DataFrame:
     """Alert when a key's single-session monitored-request volume
     reaches `monitor` (`httprequest/heuristics/SessionLimitAnalysis
-    .java:206` — `limits[i].monitor <= limitCounter[i]`, AT-or-over;
-    round-5 parity fix, the old `max_count`/strict-`>` form diverged
-    at exact equality). The session analog of HardLimit; one
-    session-window shuffle.
+    .java:206` — `limits[i].monitor <= limitCounter[i]`, AT-or-over).
+    The session analog of HardLimit; one session-window shuffle.
 
     `nat_ua_col` enables the reference's SESSION-scoped NAT rule
     (`SessionLimitAnalysis.java:151,171,187-192`): with NAT detection

@@ -212,6 +212,12 @@ def sessionize_full(
     and the sort order across the lag, cumsum, and first/last passes).
     Output: one row per session with start/end/duration_sec/n_events/
     landing/exit.
+
+    Boundary: a new session starts only when the delta to the previous
+    event EXCEEDS `gap_seconds` (`>`), so delta == gap merges. The
+    other session operators (`heuristics._session_gap`,
+    `customs.sessionize`, `streaming.panes`) split at delta == gap, as
+    Beam does; this one keeps its clickstream oracle's convention.
     """
     wo = Window.partitionBy(key_col).orderBy(ts_col, id_col)
     new_s = F.when(

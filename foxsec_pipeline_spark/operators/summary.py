@@ -5,10 +5,10 @@ alerts per classifier per 15-min block, then compare adjacent blocks
 via sliding windows (30m-every-15m, 2h-every-1h) and alert on
 percentage increase/decrease beyond thresholds.
 
-Spark shape: one windowed count, then `lag` over the window-start
-sequence per classifier (adjacent-pane compare without a self-join),
-or a sliding `F.window(ts, dur, slide)` count. Both are single-shuffle
-plans.
+Spark shape: one `windows.windowed_counts`, then `lag` over the
+window-start sequence per classifier (adjacent-pane compare without a
+self-join); the sliding panes are `windowed_counts(..., slide=...)`.
+Both are single-shuffle plans.
 """
 
 from __future__ import annotations
@@ -16,15 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def windowed_type_counts(
-    df: DataFrame, classifier: str, ts: str = "ts", duration: str = "15 minutes"
-) -> DataFrame:
-    return (
-        df.groupBy(F.window(ts, duration).alias("window"), F.col(classifier))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("window.start").alias("window_start"), F.col(classifier), F.col("n"))
-    )
+from .windows import windowed_counts
 
 
 def summary_delta(
@@ -46,7 +38,7 @@ def summary_delta(
     way for discarding-mode comparisons); the previous non-empty
     block is the comparison base.
     """
-    counts = windowed_type_counts(df, classifier, ts, duration)
+    counts = windowed_counts(df, classifier, ts, duration)
     w = Window.partitionBy(classifier).orderBy("window_start")
     delta = counts.select(
         "window_start",
@@ -60,22 +52,6 @@ def summary_delta(
         F.floor(F.abs(pct)).cast("long") > F.lit(int(warn_pct))
     ).select(
         "window_start", F.col(classifier), "n", "prev_n", F.round(pct, 6).alias("pct_change")
-    )
-
-
-def sliding_counts(
-    df: DataFrame,
-    classifier: str,
-    ts: str = "ts",
-    duration: str = "30 minutes",
-    slide: str = "15 minutes",
-) -> DataFrame:
-    """Sliding-window counts per classifier
-    (`AlertSummary.java:461-463,490-492`)."""
-    return (
-        df.groupBy(F.window(ts, duration, slide).alias("window"), F.col(classifier))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("window.start").alias("window_start"), F.col(classifier), F.col("n"))
     )
 
 

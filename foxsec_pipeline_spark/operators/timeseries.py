@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .windows import duration_micros
+
 
 def asof_join(
     points: DataFrame,
@@ -116,7 +118,7 @@ def interval_count_join(
         F.unix_micros(F.col(ts)).alias("__o_us"),
     ).withColumn(
         "__close_us",
-        F.col("__o_us") + F.lit(int(_duration_micros(length))),
+        F.col("__o_us") + F.lit(duration_micros(length)),
     )
     iv_b = iv.withColumn(
         "__bkt",
@@ -149,17 +151,6 @@ def interval_count_join(
             F.coalesce(F.col("__n"), F.lit(0)).alias("n_points"),
         )
     )
-
-
-def _duration_micros(s: str) -> int:
-    qty, unit = s.split()
-    mult = {
-        "second": 1_000_000, "seconds": 1_000_000,
-        "minute": 60_000_000, "minutes": 60_000_000,
-        "hour": 3_600_000_000, "hours": 3_600_000_000,
-        "day": 86_400_000_000, "days": 86_400_000_000,
-    }[unit]
-    return int(qty) * mult
 
 
 def rolling_counts(

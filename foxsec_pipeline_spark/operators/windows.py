@@ -1,46 +1,59 @@
-"""Windowing helpers — the reference's window vocabulary on Spark.
+"""The window vocabulary: one duration parser and one windowed count.
 
-Reference: fixed 1/5/10/15-min windows, sliding 30m/15m and 2h/1h,
-session windows with 45m/15m/120m/120s gaps, global re-window
-(`window/GlobalTriggers.java:29-39`, `httprequest/HTTPRequest.java:82-165`,
-`customs/CustomsWindow.java:26-37`, `postprocessing/AlertSummary.java:461-492`).
+Reference windows: fixed 1/5/10/15-minute windows, sliding 30m/15m and
+2h/1h, session gaps of 45m/15m/120m/120s and the suppressor expiries
+(`httprequest/HTTPRequest.java:82-165`, `customs/CustomsWindow.java:26-37`,
+`postprocessing/AlertSummary.java:461-492`, `alert/AlertSuppressor*.java`).
 
-Spark already has all of these as built-in grouping expressions
-(`F.window`, `F.session_window`); these helpers standardize the output
-column names (`window_start`, `window_end`) so downstream joins are
-window-aligned by construction — the reference's "main and side input
-window must align" invariant (`customs/CustomsWindow.java:14-17`)
-becomes a join key here.
+Spark has each of these as a grouping expression (`F.window`,
+`F.session_window`) or a watermark delay, and parses the strings it
+is given itself (a decimal quantity there is valid for seconds only).
+Every operator that needs the span as a number (a session gap, a
+session break condition, a state TTL, an interval bound) gets it from
+`duration_micros`. `windowed_counts` is the one fixed/sliding per-key
+count; its
+`window_start` column makes downstream joins window-aligned by
+construction, the reference's "main and side input window must align"
+invariant (`customs/CustomsWindow.java:14-17`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import re
+from fractions import Fraction
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def fixed_window(ts: str | Column = "ts", duration: str = "1 minute") -> Column:
-    """Fixed (tumbling) event-time window, e.g. FixedWindows.of(1 min)."""
-    return F.window(ts, duration)
-
-
-def sliding_window(
-    ts: str | Column = "ts", duration: str = "30 minutes", slide: str = "15 minutes"
-) -> Column:
-    """Sliding window, e.g. AlertSummary's 30m-every-15m comparison panes."""
-    return F.window(ts, duration, slide)
+_UNIT_MICROS = {
+    "week": 604_800_000_000, "day": 86_400_000_000, "hour": 3_600_000_000,
+    "minute": 60_000_000, "min": 60_000_000, "second": 1_000_000,
+    "sec": 1_000_000, "millisecond": 1_000, "microsecond": 1,
+}
+_PART = r"(\d+(?:\.\d*)?|\.\d+)\s*([a-z]+?)s?\b"
 
 
-def session_win(ts: str | Column = "ts", gap: str = "45 minutes") -> Column:
-    """Session window with inactivity gap (Sessions.withGapDuration),
-    with BEAM boundary semantics: delta == gap splits (see
-    `heuristics.beam_session_gap` — Spark's native session_window
-    merges at exact equality, Beam and every catalog oracle split)."""
-    from .heuristics import beam_session_gap
+def duration_micros(s: str) -> int:
+    """A duration string -> whole microseconds.
 
-    return F.session_window(
-        ts, beam_session_gap(gap) if isinstance(gap, str) else gap
-    )
+    Accepts one or more `<quantity> <unit>` parts ("45 minutes",
+    "1.5 hours", "2 hours 30 mins", "120 Seconds"): the quantity is an
+    integer or a decimal, the unit a singular or plural
+    week/day/hour/minute/min/second/sec/millisecond/microsecond, in any
+    case. Raises ValueError naming the input for anything else, and
+    for a span that is not a positive whole number of microseconds.
+    """
+    text = str(s).strip().lower()
+    if not re.fullmatch(rf"(?:{_PART}\s*)+", text):
+        raise ValueError(f"cannot parse duration: {s!r}")
+    total = Fraction(0)
+    for qty, unit in re.findall(_PART, text):
+        if unit not in _UNIT_MICROS:
+            raise ValueError(f"cannot parse duration: {s!r} (unit {unit!r})")
+        total += Fraction(qty) * _UNIT_MICROS[unit]
+    if total <= 0 or total.denominator != 1:
+        raise ValueError(f"duration is not a positive whole microsecond count: {s!r}")
+    return int(total)
 
 
 def windowed_counts(
@@ -49,15 +62,18 @@ def windowed_counts(
     ts: str = "ts",
     duration: str = "1 minute",
     count_alias: str = "n",
+    slide: str | None = None,
 ) -> DataFrame:
-    """Count.perElement within fixed windows — the shared first stage of
-    the rate heuristics (`ThresholdAnalysis.java:88-104` etc.).
+    """Count.perElement within fixed windows, or sliding ones when
+    `slide` is given — the shared first stage of the rate heuristics
+    (`ThresholdAnalysis.java:88-104` etc.) and the alert-summary panes.
+    Returns (window_start, key, count_alias).
 
     Partial aggregation (map-side combine) is Spark's default hash
     aggregate, equivalent to Beam's CombineFn partial/final split.
     """
     return (
-        df.groupBy(F.window(ts, duration).alias("window"), F.col(key))
+        df.groupBy(F.window(ts, duration, slide).alias("window"), F.col(key))
         .agg(F.count(F.lit(1)).alias(count_alias))
         .select(
             F.col("window.start").alias("window_start"),

@@ -41,13 +41,13 @@ from ..operators import (
     session_analysis,
     session_limit_analysis,
     simhash,
-    sliding_counts,
     source_correlation,
     status_code_rate_analysis,
     summary_delta,
     text_stats,
     threshold_analysis,
     ua_blocklist_analysis,
+    windowed_counts,
 )
 from ..session import load_tables
 
@@ -121,8 +121,7 @@ WHERE s.stats_mean >= 1.0 AND s.stats_count >= 1
   AND c.event_count >= s.stats_mean * 2.0
 """,
     doc="ThresholdAnalysis.java:88-199 — per-key count vs window mean "
-        "side-input; >= at the threshold per ThresholdAnalysis.java:152 "
-        "(round-5 parity fix)",
+        "side-input; >= at the threshold per ThresholdAnalysis.java:152",
 )
 def q_threshold(spark, sf_dir):
     ev = _events(spark, sf_dir)
@@ -342,8 +341,8 @@ FROM (
     doc="AlertSummary.java:461-492 — sliding-window (2d every 1d) counts",
 )
 def q_summary_sliding(spark, sf_dir):
-    return sliding_counts(
-        _events(spark, sf_dir), classifier="event_type", ts="ts",
+    return windowed_counts(
+        _events(spark, sf_dir), key="event_type", ts="ts",
         duration="2 days", slide="1 day",
     )
 

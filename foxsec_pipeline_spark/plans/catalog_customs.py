@@ -546,11 +546,11 @@ FROM events GROUP BY 1, 2
         "feeding info-level summary alerts (single hash-agg)",
 )
 def q_customs_summary(spark, sf_dir):
-    from ..operators import windowed_type_counts
+    from ..operators import windowed_counts
 
-    return windowed_type_counts(
-        _events(spark, sf_dir), classifier="event_type", ts="ts", duration="1 hour"
-    ).withColumnRenamed("event_type", "event_type")
+    return windowed_counts(
+        _events(spark, sf_dir), key="event_type", ts="ts", duration="1 hour"
+    )
 
 
 @register(

@@ -101,7 +101,7 @@ def _synth_customs_lines(spark, sf_dir):
 
     The events scan is fanned out BEFORE the to_json projection:
     events.parquet is a single row group at test SF, and a projection
-    placed before the exchange evaluates on ONE core — the r9 stage
+    placed before the exchange evaluates on ONE core — a stage
     profile measured the synth to_json (not the parse) as the hot
     stage because count()-style probes column-prune it away. After
     the repartition the line construction runs on every core; at
@@ -297,16 +297,22 @@ WITH counts AS (
   FROM events WHERE event_type = 'error' GROUP BY 1, 2 HAVING count(*) >= 2
 )
 SELECT '10.' || (user_id % 32) || '.0.1' AS object, 'ip' AS type,
-       'fxa:heavy_hitter_httprequest' AS violation
+       'hard_limit_violation' AS violation
 FROM counts
 """,
-    doc="S13 iprepd sink: Alert -> Violation projection "
-        "(Violation.java:23-87,344) driver-verified — alerts carrying a "
-        "source_address become (object, type, violation) submissions; "
-        "the HTTP PUT leg stays a pluggable executor-side emitter",
+    doc="S13 iprepd sink: Alert -> Violation conversion "
+        "(IprepdIO.java:389-420, Violation.java:100-235,344) driver-verified "
+        "— hard_limit alerts carrying a source_address become the "
+        "(object, type, violation) submissions that iprepd_violation_emitter "
+        "PUTs, through the same per-line conversion on the executors",
 )
 def q_violation_projection(spark, sf_dir):
-    from ..sinks.output import violations_from_alerts
+    import json
+
+    import pandas as pd
+
+    from ..alert.model import alerts_to_json
+    from ..sinks.output import violation_wires_from_alert_json
 
     ev = load_tables(spark, sf_dir, "events")["events"]
     hits = (
@@ -325,11 +331,26 @@ def q_violation_projection(spark, sf_dir):
     alerts = to_alerts(
         hits,
         category="httprequest",
+        subcategory="hard_limit",
         severity="warn",
         summary=F.concat(F.lit("heavy hitter "), F.col("source_address")),
         metadata_cols=["source_address", "event_count"],
     )
-    return violations_from_alerts(alerts).select("object", "type", "violation")
+
+    def wires(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    (obj, obj_type, json.loads(wire)["violation"])
+                    for line in pdf["value"]
+                    for obj_type, obj, wire in violation_wires_from_alert_json(line)
+                ],
+                columns=["object", "type", "violation"],
+            )
+
+    return alerts_to_json(alerts).mapInPandas(
+        wires, "object string, type string, violation string"
+    )
 
 
 @register(

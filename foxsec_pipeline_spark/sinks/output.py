@@ -225,21 +225,6 @@ class CompositeOutput:
         )
 
 
-def violations_from_alerts(alerts: DataFrame) -> DataFrame:
-    """Alert -> iprepd Violation projection (`Violation.java:23-87,344`):
-    one violation per alert carrying the source address and a
-    type-derived violation name."""
-    return (
-        alerts.where(F.col("metadata").getItem("source_address").isNotNull())
-        .select(
-            F.col("metadata").getItem("source_address").alias("object"),
-            F.lit("ip").alias("type"),
-            F.concat(F.lit("fxa:heavy_hitter_"), F.col("category")).alias("violation"),
-            F.col("alert_id"),
-        )
-    )
-
-
 # subcategory -> [(indicator kind, iprepd violation name)] — the
 # reference's full generator map (Violation.java:180-235) with the
 # enum's actual wire names (Violation.java:30-85; note

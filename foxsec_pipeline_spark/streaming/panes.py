@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.windows import duration_micros
+
 
 def _pane_fn(ts_col: str, gap_ms: int):
     def fn(
@@ -123,12 +125,7 @@ def session_fire_early_panes(
     trigger, so pane cost amortizes with batch size instead of firing
     per element.
     """
-    num, unit = gap.split()
-    gap_ms = int(num) * {
-        "second": 1000, "seconds": 1000,
-        "minute": 60_000, "minutes": 60_000,
-        "hour": 3_600_000, "hours": 3_600_000,
-    }[unit]
+    gap_ms = duration_micros(gap) // 1000
     out_schema = T.StructType(
         [
             T.StructField("key", T.StringType()),

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.windows import duration_micros
+
 
 def suppress_stream(
     alerts: DataFrame,
@@ -82,8 +84,7 @@ def suppress_count_stream(
     key's newest event (event-time TTL driven by the watermark — the
     reference's processing-time timer made event-time-deterministic
     per SURVEY §7)."""
-    num, unit = expiry.split()
-    ttl_ms = int(num) * {"seconds": 1000, "minutes": 60_000, "hours": 3_600_000}[unit]
+    ttl_ms = duration_micros(expiry) // 1000
     out_schema = alerts.schema
     state_schema = T.StructType([T.StructField("last_count", T.LongType())])
     return (
@@ -139,8 +140,7 @@ def suppress_session_stream(
     expiry out by `expiry` (sliding TTL), unlike T1's fixed horizon
     (`alert/AlertSuppressorSession.java:41-112`). Event-time timeout
     per SURVEY §7 hard part 3."""
-    num, unit = expiry.split()
-    ttl_ms = int(num) * {"seconds": 1000, "minutes": 60_000, "hours": 3_600_000}[unit]
+    ttl_ms = duration_micros(expiry) // 1000
     state_schema = T.StructType([T.StructField("last_seen_ms", T.LongType())])
     return (
         alerts.withWatermark(ts_col, expiry)

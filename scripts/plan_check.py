@@ -12,16 +12,15 @@ seeds and timestamp literals folded from the session clock. With
 `--rows` it also records an order-insensitive hash of the output: the
 row count plus the decimal sum of `xxhash64(to_json(struct(*)))`.
 
-`diff` prints the queries whose digest (or row hash) differs, and the
-queries present on one side only; it exits 1 when anything differs.
 A query whose optimized plan reads a `LogicalRDD` (an eager
 `localCheckpoint` taken while the plan is built, as in the
 connected-components loop, or a table that `createDataFrame` built
-from local rows) shows only
-the plan above that cut, so an equal digest there does not prove
-equal work. `capture` marks such a query `"cut": true`, and `diff`
-lists the cut queries under their own heading, to be checked with
-`--rows`.
+from local rows) shows only the plan above that cut, so an equal
+digest there does not prove equal work: `capture` marks such a query
+`"cut": true` and always records its row hash.
+
+`diff` prints the queries whose digest or row hash differs, and the
+queries present on one side only; it exits 1 when anything differs.
 
 Run `capture` from the root of each checkout with the same `--sf`
 and the same `SPARK_GRAFT_CPUS` (explicit repartition widths follow the
@@ -83,7 +82,7 @@ def capture(out: str, sf_dir: str, rows: bool, names: list[str]) -> None:
             }
             if "LogicalRDD" in plan:
                 rec["cut"] = True
-            if rows:
+            if rows or rec.get("cut"):
                 rec.update(_row_hash(df))
         except Exception as e:  # a failing query is a result too
             rec = {"error": f"{type(e).__name__}: {str(e)[:300]}"}
@@ -100,24 +99,16 @@ def diff(a_path: str, b_path: str) -> int:
     with open(b_path) as f:
         b = json.load(f)
     differ = 0
-    cut = []
     for name in sorted(a.keys() | b.keys()):
-        if a.get(name, {}).get("cut") or b.get(name, {}).get("cut"):
-            cut.append(name)
         if name not in a or name not in b:
             print(f"{name}: only in {a_path if name in a else b_path}")
             differ += 1
             continue
         fields = [k for k in sorted(a[name].keys() | b[name].keys())
-                  if k != "cut" and a[name].get(k) != b[name].get(k)]
+                  if a[name].get(k) != b[name].get(k)]
         if fields:
             print(f"{name}: {', '.join(fields)}")
             differ += 1
-    if cut:
-        print("plan reads a LogicalRDD, digest blind below it "
-              "(check with --rows):")
-        for name in cut:
-            print(f"  {name}")
     print(f"{differ} of {len(a.keys() | b.keys())} queries differ")
     return 1 if differ else 0
 

@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 
 from foxsec_pipeline_spark.alert.model import to_alerts
 from foxsec_pipeline_spark.functions.geoip import enrich_geoip
-from foxsec_pipeline_spark.sinks.output import CompositeOutput, violations_from_alerts
+from foxsec_pipeline_spark.sinks.output import CompositeOutput
+from tests.conftest import alert_violation_wires
 
 
 def _file_emitter(out_dir):
@@ -118,7 +119,7 @@ def test_composite_output_fanout_and_violations(spark):
         [Row(window_start="2024-01-01 00:00:00", source_address="1.2.3.4", n=9)]
     ).withColumn("window_start", F.col("window_start").cast("timestamp"))
     alerts = to_alerts(
-        hits, category="httprequest", severity="warn",
+        hits, category="httprequest", subcategory="hard_limit", severity="warn",
         summary=F.concat(F.lit("limit exceeded from "), F.col("source_address")),
         metadata_cols=["source_address", "n"],
     )
@@ -137,10 +138,18 @@ def test_composite_output_fanout_and_violations(spark):
         got = _emitted(os.path.join(d, "emitted"))
     assert len(got) == 1 and "httprequest" in got[0]
 
-    v = violations_from_alerts(alerts).collect()
-    assert len(v) == 1
-    assert v[0].object == "1.2.3.4" and v[0].type == "ip"
-    assert "httprequest" in v[0].violation
+    # the violation the iprepd emitter would PUT for that alert
+    v = alert_violation_wires(
+        hits.select(
+            F.lit("httprequest").alias("category"),
+            F.lit("hard_limit").alias("subcategory"),
+            "source_address",
+            "n",
+        )
+    )
+    assert [(t, obj, name) for _, t, obj, name, _ in v] == [
+        ("ip", "1.2.3.4", "hard_limit_violation")
+    ]
 
 
 def test_emitters_run_on_executors_by_default(spark, tmp_path):

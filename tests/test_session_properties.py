@@ -1,6 +1,9 @@
 """Property test: the row-level `sessionize` (lag/cumsum) and Spark's
 `session_window` grouping assign identical sessions — the duality the
-sessionized DuckDB oracles rely on."""
+sessionized DuckDB oracles rely on — and both read their gap through
+the one duration parser, `windows.duration_micros`."""
+
+import re
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -10,6 +13,59 @@ from pyspark.sql import functions as F
 
 from foxsec_pipeline_spark.operators import session_analysis
 from foxsec_pipeline_spark.operators.customs import sessionize
+from foxsec_pipeline_spark.operators.windows import duration_micros
+
+MIN, HOUR, DAY = 60_000_000, 3_600_000_000, 86_400_000_000
+
+# the spellings each duration consumer accepts, with their spans
+DURATIONS = [
+    # session_window gaps (heuristics.beam_session_gap): compound,
+    # decimal, any case, nine units singular or plural, space optional
+    ("45 minutes", 45 * MIN), ("1 minute", MIN), ("90min", 90 * MIN),
+    ("5 mins", 5 * MIN), ("1 hour 30 minutes", 90 * MIN),
+    ("1.5 hours", 3 * HOUR // 2), ("0.5 sec", 500_000), ("120 secs", 120_000_000),
+    ("1 week", 7 * DAY), ("2 weeks", 14 * DAY), ("1 HOUR", HOUR),
+    ("250 milliseconds", 250_000), ("1 millisecond", 1_000),
+    ("7 microseconds", 7), ("1 microsecond", 1),
+    # customs.sessionize gaps and timeseries.interval_count_join
+    # lengths: "<int> second(s)|minute(s)|hour(s)|day(s)"
+    ("1 second", 1_000_000), ("30 seconds", 30_000_000), ("30 minutes", 30 * MIN),
+    ("1 hour", HOUR), ("2 hours", 2 * HOUR), ("1 day", DAY), ("3 days", 3 * DAY),
+    # streaming.panes gaps and streaming.suppress expiries
+    ("120 seconds", 120_000_000), ("15 minutes", 15 * MIN), ("4 hours", 4 * HOUR),
+]
+
+
+@pytest.mark.parametrize("text,micros", DURATIONS, ids=[d for d, _ in DURATIONS])
+def test_duration_micros_vocabulary(text, micros):
+    assert duration_micros(text) == micros
+
+
+@pytest.mark.parametrize("bad", ["", "5 parsecs", "minutes"])
+def test_duration_micros_rejects(bad):
+    with pytest.raises(ValueError, match=re.escape(repr(bad))):
+        duration_micros(bad)
+
+
+def test_sessionize_takes_decimal_gap(spark):
+    """A decimal gap splits at delta == gap in both session forms."""
+    df = spark.createDataFrame(
+        [Row(k="a", ts=t) for t in ("00:00:00", "01:30:00", "02:59:00")]
+    ).withColumn("ts", F.concat(F.lit("2024-01-01 "), "ts").cast("timestamp"))
+    via_rows = {
+        (str(r.first_ts), r.n_events)
+        for r in sessionize(df, key="k", ts="ts", gap="1.5 hours")
+        .groupBy("session_id")
+        .agg(F.min("ts").alias("first_ts"), F.count(F.lit(1)).alias("n_events"))
+        .collect()
+    }
+    via_window = {
+        (str(r.first_ts), r.n_events)
+        for r in session_analysis(df, key="k", ts="ts", gap="1.5 hours").collect()
+    }
+    assert via_rows == via_window == {
+        ("2024-01-01 00:00:00", 1), ("2024-01-01 01:30:00", 2)
+    }
 
 EVENTS = st.lists(
     st.tuples(

@@ -14,9 +14,11 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from foxsec_pipeline_spark.streaming.panes import session_fire_early_panes
 from foxsec_pipeline_spark.streaming.state import LOGIN_SCHEMA, auth_state_analyze
 from foxsec_pipeline_spark.streaming.suppress import (
     suppress_count_stream,
+    suppress_session_stream,
     suppress_stream,
 )
 
@@ -182,8 +184,6 @@ def test_streaming_windowed_heuristic_matches_batch(spark, tmpdir):
 
 
 def test_suppress_session_sliding_ttl(spark, tmpdir):
-    from foxsec_pipeline_spark.streaming.suppress import suppress_session_stream
-
     rows = [
         # key 'a': continuous activity every 10 min — only the first emits
         Row(timestamp=datetime.fromisoformat("2024-01-01 00:00:00"), key="a", n=1),
@@ -196,6 +196,23 @@ def test_suppress_session_sliding_ttl(spark, tmpdir):
     _run_stream(suppress_session_stream(src, ["key"], expiry="15 minutes"), name)
     got = {r.key: r.n for r in spark.sql(f"SELECT * FROM {name}").collect()}
     assert got == {"a": 1, "b": 4}
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda src: suppress_count_stream(src, ["key"], count_col="n", expiry="1 hour"),
+        lambda src: suppress_session_stream(src, ["key"], expiry="1 minute"),
+        lambda src: session_fire_early_panes(src, "key", ts_col="timestamp", gap="1 day"),
+    ],
+    ids=["count_1_hour", "session_1_minute", "panes_1_day"],
+)
+def test_stateful_operators_take_singular_durations(spark, tmpdir, build):
+    """The state TTLs and pane gaps read their duration through
+    `windows.duration_micros`, so singular units build a plan."""
+    rows = [Row(timestamp=datetime.fromisoformat("2024-01-01 00:00:00"), key="a", n=1)]
+    src = _stream_from_rows(spark, rows, "timestamp timestamp, key string, n long", tmpdir)
+    assert build(src).isStreaming
 
 
 def test_streaming_session_window_synthetic_rows(spark, tmpdir):
