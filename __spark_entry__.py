@@ -35,7 +35,8 @@ from foxsec_pipeline_spark.plans.catalog import registry  # noqa: E402
 # so `scripts/plan_check.py` compares those queries by their output
 # hash. The rest follow stalest-evidence first (see _ordered).
 CHANGED = [
-    # connected components: one aggregate and one probe per round
+    # connected components: one aggregate and one probe per round, and
+    # the caller's pairs checkpointed as given
     "dedup_clusters", "cluster_canonical_docs", "split_leakage_check",
     # shingle-kernel consumers with no after-plan evidence
     "dedup_minhash_lsh", "decontaminate", "bloom_decontaminate",
@@ -52,6 +53,9 @@ CHANGED = [
     "prefix_jaccard_join", "semdedup", "winnowing_plagiarism_pairs",
     # alerts -> violations through the iprepd wire conversion
     "violation_projection",
+    # batch parse: the parse counters' CollectMetrics node keeps
+    # filters on parsed columns above the parse projections
+    "parse_normalize", "customs_prefilter_split",
 ]
 
 

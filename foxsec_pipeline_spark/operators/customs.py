@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import bucket_pairs
-from .windows import duration_micros
+from .windows import duration_micros, spark_interval
 
 
 def features_combine(
@@ -90,7 +90,7 @@ def features_combine(
         ).alias("retained_events"),
     ]
     agg = df.groupBy(
-        F.window(ts, duration).alias("w"), F.col(key)
+        F.window(ts, spark_interval(duration)).alias("w"), F.col(key)
     ).agg(*aggs)
     variance = F.when(
         F.col("n_paths") > 1,
@@ -549,7 +549,7 @@ def status_comparator(
     twin would use applyInPandasWithState like streaming/state.py).
     """
     return (
-        df.groupBy(F.window(ts, duration).alias("w"), F.col(key))
+        df.groupBy(F.window(ts, spark_interval(duration)).alias("w"), F.col(key))
         .agg(
             F.count(F.when(scan_predicate, 1)).alias("n_scans"),
             F.count(F.when(failure_predicate, 1)).alias("n_failures"),

@@ -18,6 +18,15 @@ Scale design:
 - simhash: a fixed-width map-side fingerprint; near-dup pairs come
   from the pigeonhole band join plus an exact bit_count(xor) filter.
 - dedup_clusters: connected components over any generator's pairs.
+  It checkpoints the caller's pairs DataFrame as given, once: a caller
+  that already ran a plan-executing action on that same DataFrame
+  (`collect`, `toPandas`) gets its finished shuffle stages reused, so
+  the generator does not run again; `count()` and `show()` run derived
+  plans and give no reuse. Each label-propagation round is then
+  checkpointed in turn.
+- the kernels' input-independent Column trees (the shingle transform,
+  the MinHash minima and bands) are built once per py4j gateway
+  (`session.gateway_memo`).
 All expressed with built-in expressions (md5/conv/transform/aggregate),
 so whole-stage codegen applies and the DuckDB oracle can reproduce
 results bit-for-bit.
@@ -36,6 +45,7 @@ from ..functions.text import (
     md5_bucket,
     tokens,
 )
+from ..session import gateway_memo
 from .skew import spread
 
 
@@ -100,6 +110,16 @@ def _shingle_arrays(
     min of 3): let-bound form 0.40 s vs window-lead 0.60-0.81 s, equal
     row counts; shape pinned by tests/test_shingle_kernel.py.
     """
+    sg = gateway_memo(
+        ("dedup.shingles", text_col, n, distinct),
+        lambda: _shingle_array_col(text_col, n, distinct),
+    )
+    return spread(df).select(F.col(id_col), sg.alias("__ss"))
+
+
+def _shingle_array_col(text_col: str, n: int, distinct: bool):
+    """The let-bound n-gram Column of `_shingle_arrays`; it depends on
+    no DataFrame, so it is built once per py4j gateway."""
     tok_arr = F.array(tokens(F.col(text_col)))
 
     def grams(tok):
@@ -119,7 +139,7 @@ def _shingle_arrays(
         # in-doc md5-prefix collision (odds ~C(52,2)·2^-60 ≈ 1e-15 per
         # doc — far below the 4e-7 cross-doc bound already accepted)
         sg = F.array_distinct(sg)
-    return spread(df).select(F.col(id_col), sg.alias("__ss"))
+    return sg
 
 
 def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -263,36 +283,14 @@ def minhash_lsh_pairs(
     # exists once in the plan and ReuseExchange serves every consumer.
     # min() per permutation is duplicate-insensitive, so a distinct
     # hash set yields the identical signature (guide §2.4).
-    sig = hashed.groupBy(id_col).agg(
-        *[
-            F.min(
-                (F.lit(MINHASH_A[i]) * F.col("__h") + F.lit(MINHASH_B[i]))
-                % F.lit(MINHASH_P)
-            ).alias(f"__h{i}")
-            for i in range(num_hashes)
-        ]
+    mins, band_rows = gateway_memo(
+        ("dedup.minhash", num_hashes, band_size),
+        lambda: _minhash_band_cols(num_hashes, band_size),
     )
-    n_bands = num_hashes // band_size
-    bands = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.concat_ws(
-                            "_",
-                            *[
-                                F.col(f"__h{band * band_size + j}").cast("string")
-                                for j in range(band_size)
-                            ],
-                        ).alias("band_sig"),
-                    )
-                    for band in range(n_bands)
-                ]
-            )
-        ).alias("bs"),
-    ).select(id_col, "bs.band", "bs.band_sig")
+    sig = hashed.groupBy(id_col).agg(*mins)
+    bands = sig.select(F.col(id_col), band_rows).select(
+        id_col, "bs.band", "bs.band_sig"
+    )
     # pairs are generated INSIDE each (band, band_sig) bucket — a
     # self-join on the bucket key would re-evaluate the whole signature
     # pipeline for both join sides, since Catalyst gives aliased
@@ -308,6 +306,37 @@ def minhash_lsh_pairs(
     return bucket_pairs(
         grouped.repartition(par), "docs", "doc_a", "doc_b"
     ).distinct()
+
+
+def _minhash_band_cols(num_hashes: int, band_size: int):
+    """The signature minima (`__h{i}` per permutation) and the exploded
+    (band, band_sig) struct column `bs` of `minhash_lsh_pairs`; they
+    depend on no DataFrame, so they are built once per py4j gateway."""
+    mins = [
+        F.min(
+            (F.lit(MINHASH_A[i]) * F.col("__h") + F.lit(MINHASH_B[i]))
+            % F.lit(MINHASH_P)
+        ).alias(f"__h{i}")
+        for i in range(num_hashes)
+    ]
+    band_rows = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(band).alias("band"),
+                    F.concat_ws(
+                        "_",
+                        *[
+                            F.col(f"__h{band * band_size + j}").cast("string")
+                            for j in range(band_size)
+                        ],
+                    ).alias("band_sig"),
+                )
+                for band in range(num_hashes // band_size)
+            ]
+        )
+    ).alias("bs")
+    return mins, band_rows
 
 
 def dedup_clusters(
@@ -336,11 +365,20 @@ def dedup_clusters(
     endpoints missing from `nodes` get a row too.
 
     Loop mechanics:
-    - edges hold both directions of every pair, built in one pass by
-      exploding a two-element array; duplicate edges are harmless to
-      a min, so there is no distinct. Only edge-touched nodes enter
-      the loop, with labels seeded at min(self, neighbors) by one
-      aggregate over the edges.
+    - `pairs` itself, exactly as the caller passed it, is cut with one
+      eager `localCheckpoint`, so the N pair rows are computed once for
+      every round. When the caller has already run a plan-executing
+      action on that same DataFrame (`collect`, `toPandas`), the
+      checkpoint re-runs the plan that already executed and Spark
+      skips its finished shuffle stages: a generator collected one call
+      earlier costs one job here, not its whole pipeline again.
+      `count()` and `show()` run derived plans, so they give no reuse;
+      a caller that ran no action pays for the generator once, here.
+    - edges are derived lazily from that checkpoint: both directions
+      of every pair, in one pass exploding a two-element array;
+      duplicate edges are harmless to a min, so there is no distinct.
+      Only edge-touched nodes enter the loop, with labels seeded at
+      min(self, neighbors) by one aggregate over the edges.
     - each round is ONE aggregate: every node receives its neighbors'
       labels (edges joined to labels on dst) plus its own label,
       marked as its own, and `groupBy(node)` yields the new label
@@ -348,21 +386,18 @@ def dedup_clusters(
     - the round's result is cut with an eager `localCheckpoint`, then
       one `first()` probe over rows whose label fell answers the
       fixpoint test. The checkpoint it replaced is released at once,
-      and the edges after the loop, so only the final labels stay
+      and the pairs after the loop, so only the final labels stay
       pinned, until the returned DataFrame is garbage-collected.
     - cluster_size is a count window over the label.
     """
+    pinned = pairs.localCheckpoint(eager=True)
     e = F.explode(
         F.array(
             F.struct(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
             F.struct(F.col(b_col).alias("src"), F.col(a_col).alias("dst")),
         )
     )
-    edges = (
-        pairs.select(e.alias("__e"))
-        .select("__e.src", "__e.dst")
-        .localCheckpoint(eager=True)
-    )
+    edges = pinned.select(e.alias("__e")).select("__e.src", "__e.dst")
     labels = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
@@ -385,7 +420,7 @@ def dedup_clusters(
         labels = upd
         if upd.where(F.col("label") < F.col("__old")).first() is None:
             break
-    _release_checkpoint(edges)
+    _release_checkpoint(pinned)
     singletons = (
         nodes.select(F.col(id_col).alias("node"))
         .join(labels.select("node"), "node", "left_anti")

@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.net import cidr_in_any
+from .windows import spark_interval
 
 
 # ---------------------------------------------------------------------------
@@ -79,7 +80,7 @@ def etd_finding_alerts(
         "category", F.lit("gatekeeper:gcp")
     )
     w = Window.partitionBy(
-        *suppress_key_cols, F.window(ts, suppress_window)["start"]
+        *suppress_key_cols, F.window(ts, spark_interval(suppress_window))["start"]
     ).orderBy(ts)
     return (
         out.withColumn("__rn", F.row_number().over(w))
@@ -323,7 +324,7 @@ def source_login_failure_dist(
     aggregation computes both."""
     return (
         events.where(failure_predicate)
-        .groupBy(F.window(ts, duration).alias("w"), F.col(account_col))
+        .groupBy(F.window(ts, spark_interval(duration)).alias("w"), F.col(account_col))
         .agg(
             F.count(F.lit(1)).alias("n_failures"),
             F.countDistinct(addr_col).alias("n_sources"),
@@ -353,7 +354,7 @@ def variance_view(
     normal browser variance."""
     return (
         events.where(presence_predicate)
-        .groupBy(F.window(ts, duration).alias("w"), F.col(key_col))
+        .groupBy(F.window(ts, spark_interval(duration)).alias("w"), F.col(key_col))
         .agg(F.lit(True).alias("has_variance"))
         .select(F.col("w.start").alias("window_start"), key_col, "has_variance")
     )

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .windows import duration_micros, windowed_counts
+from .windows import duration_micros, spark_interval, windowed_counts
 
 
 def beam_session_gap(gap: str) -> Column:
@@ -207,7 +207,7 @@ def detect_nat(
     call site, sketch-based, no accuracy cliff at 100 TB.
     """
     return (
-        events.groupBy(F.window(ts, duration).alias("window"), F.col(key))
+        events.groupBy(F.window(ts, spark_interval(duration)).alias("window"), F.col(key))
         .agg(F.countDistinct(diversity_col).alias("n_distinct"))
         .where(F.col("n_distinct") >= F.lit(int(min_distinct)))
         .select(
@@ -567,7 +567,7 @@ def ua_blocklist_analysis(
     )
     return (
         events.where(hit)
-        .groupBy(F.window(ts, duration).alias("window"), F.col(key))
+        .groupBy(F.window(ts, spark_interval(duration)).alias("window"), F.col(key))
         .agg(
             F.count(F.lit(1)).alias("n_matched"),
             F.min(ua_col).alias("sample_user_agent"),

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .windows import spark_interval
+
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Fan a narrow input out across the cluster before expensive
@@ -88,7 +90,7 @@ def salted_windowed_counts(
     )
     partial = (
         df.groupBy(
-            F.window(ts, duration).alias("window"),
+            F.window(ts, spark_interval(duration)).alias("window"),
             F.col(key),
             s.alias("__salt"),
         )

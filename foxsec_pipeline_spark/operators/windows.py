@@ -6,15 +6,16 @@ Reference windows: fixed 1/5/10/15-minute windows, sliding 30m/15m and
 `postprocessing/AlertSummary.java:461-492`, `alert/AlertSuppressor*.java`).
 
 Spark has each of these as a grouping expression (`F.window`,
-`F.session_window`) or a watermark delay, and parses the strings it
-is given itself (a decimal quantity there is valid for seconds only).
-Every operator that needs the span as a number (a session gap, a
-session break condition, a state TTL, an interval bound) gets it from
-`duration_micros`. `windowed_counts` is the one fixed/sliding per-key
-count; its
-`window_start` column makes downstream joins window-aligned by
-construction, the reference's "main and side input window must align"
-invariant (`customs/CustomsWindow.java:14-17`).
+`F.session_window`) or a watermark delay. Every operator that needs
+the span as a number (a session gap, a session break condition, a
+state TTL, an interval bound) gets it from `duration_micros`, and
+every window and watermark gets it from `spark_interval`, the same
+span in microseconds, because Spark's own interval parser rejects
+spellings `duration_micros` accepts (a decimal quantity is valid
+there for seconds only). `windowed_counts` is the one fixed/sliding
+per-key count; its `window_start` column makes downstream joins
+window-aligned by construction, the reference's "main and side input
+window must align" invariant (`customs/CustomsWindow.java:14-17`).
 """
 
 from __future__ import annotations
@@ -56,6 +57,14 @@ def duration_micros(s: str) -> int:
     return int(total)
 
 
+def spark_interval(s: str) -> str:
+    """`s` as the interval string Spark reads the same way: its
+    `duration_micros` in whole microseconds. Spark's own parser
+    rejects decimal and unspaced spellings ("1.5 hours", "90min"), so
+    every `F.window` and `withWatermark` gets this form."""
+    return f"{duration_micros(s)} microseconds"
+
+
 def windowed_counts(
     df: DataFrame,
     key: str,
@@ -73,7 +82,14 @@ def windowed_counts(
     aggregate, equivalent to Beam's CombineFn partial/final split.
     """
     return (
-        df.groupBy(F.window(ts, duration, slide).alias("window"), F.col(key))
+        df.groupBy(
+            F.window(
+                ts,
+                spark_interval(duration),
+                None if slide is None else spark_interval(slide),
+            ).alias("window"),
+            F.col(key),
+        )
         .agg(F.count(F.lit(1)).alias(count_alias))
         .select(
             F.col("window.start").alias("window_start"),

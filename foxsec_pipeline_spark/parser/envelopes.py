@@ -23,12 +23,11 @@ as a JSON string, so string + explicit cast accepts both shapes.
 
 from __future__ import annotations
 
-import weakref
-
-from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import gateway_memo
 
 
 def _s(name: str) -> T.StructField:
@@ -614,25 +613,15 @@ AUTH0_BODY = T.StructType(
 _AUTH0_WRAPPED = T.StructType([T.StructField("jsonPayload", AUTH0_BODY)])
 
 
-# Keyed on the py4j gateway: the Column handles are JVM objects of one
-# gateway, so a restarted gateway must never see them, while a session
-# restarted in the same JVM (same gateway) keeps using them.
-_ENVELOPE_COLS: "weakref.WeakKeyDictionary[object, dict[str, tuple]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _envelope_cols(value_col: str) -> tuple:
-    """Input-independent Column trees of `strip_envelopes`, cached per
-    gateway and value_col — the `parse._projection` posture:
-    Columns are immutable unresolved expressions bound to nothing,
-    reusable across DataFrames, queries and sessions, and rebuilding
-    this set is ~90 py4j calls (~0.1-0.2 s of client-side planning) per
-    parse_events call."""
-    per_gateway = _ENVELOPE_COLS.setdefault(SparkContext._gateway, {})
-    hit = per_gateway.get(value_col)
-    if hit is not None:
-        return hit
+    """Input-independent Column trees of `strip_envelopes`, built once
+    per py4j gateway and value_col (`session.gateway_memo`):
+    rebuilding this set is ~90 py4j calls (~0.1-0.2 s of client-side
+    planning) per parse_events call."""
+    return gateway_memo(("envelopes", value_col), lambda: _build_envelope_cols(value_col))
+
+
+def _build_envelope_cols(value_col: str) -> tuple:
     j = F.from_json(F.col(value_col), WIDE_SCHEMA)
     moz_shaped = F.col(value_col).contains('"Timestamp"') | F.col(
         value_col
@@ -692,9 +681,7 @@ def _envelope_cols(value_col: str) -> tuple:
         F.timestamp_micros(F.expr("moz_ts_ns div 1000")),
         F.to_timestamp(F.col("j.timestamp")),
     )
-    built = (j, m, a0, mt, layer3, envelope_ts)
-    per_gateway[value_col] = built
-    return built
+    return (j, m, a0, mt, layer3, envelope_ts)
 
 
 def strip_envelopes(df: DataFrame, value_col: str = "value") -> DataFrame:

@@ -17,14 +17,14 @@ optimization manually (`Parser.java:507-516`, `Input.java:429-445`).
 
 from __future__ import annotations
 
-import weakref
+import itertools
 from dataclasses import dataclass, field
 
-from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import EVENT_SCHEMA
+from ..session import gateway_memo
 from .envelopes import explode_cloudwatch, strip_envelopes
 from .payloads import PayloadSpec, default_chain
 
@@ -80,13 +80,7 @@ class ParserCfg:
     chain: list[PayloadSpec] | None = None
 
 
-# Payload chains and parse projections, keyed on the py4j gateway like
-# envelopes._ENVELOPE_COLS: both hold Column handles, which are JVM
-# objects of one gateway, so a restarted gateway must rebuild them,
-# while a session restarted on the same gateway keeps using them.
-_PARSE_COLS: "weakref.WeakKeyDictionary[object, dict[tuple, object]]" = (
-    weakref.WeakKeyDictionary()
-)
+_PARSE_IDS = itertools.count()
 
 
 def _cached_chain(
@@ -94,28 +88,28 @@ def _cached_chain(
     use_xff_as_remote: bool = False,
     use_proxy_xff: bool = False,
 ) -> list[PayloadSpec]:
-    cache = _PARSE_COLS.setdefault(SparkContext._gateway, {})
-    key = ("chain", tuple(xff_trusted_cidrs), bool(use_xff_as_remote),
-           bool(use_proxy_xff))
-    if key not in cache:
-        cache[key] = default_chain(list(key[1]), key[2], key[3])
-    return cache[key]
+    """The default payload chain, built once per py4j gateway and
+    configuration (`session.gateway_memo`): its specs hold Column
+    handles."""
+    cidrs = tuple(xff_trusted_cidrs)
+    return gateway_memo(
+        ("parse.chain", cidrs, bool(use_xff_as_remote), bool(use_proxy_xff)),
+        lambda: default_chain(list(cidrs), bool(use_xff_as_remote), bool(use_proxy_xff)),
+    )
 
 
 def _projection(chain: list[PayloadSpec]):
-    """Input-independent pieces of the parse projection, cached per
-    gateway and chain. Column objects are immutable unresolved
-    expressions bound to nothing, so they are reusable across
-    DataFrames and queries — and rebuilding them is NOT free: the
-    22-spec chain's when-cascades are ~3000 py4j round-trips, ~2.6 s of
-    driver time per parse_events call (more than executing the parse
-    at sf0.1)."""
-    cache = _PARSE_COLS.setdefault(SparkContext._gateway, {})
-    key = ("projection", *(id(s) for s in chain))
-    hit = cache.get(key)
-    if hit is not None:
-        return hit[1]
+    """Input-independent pieces of the parse projection, built once per
+    py4j gateway and chain (`session.gateway_memo`). Rebuilding them
+    is NOT free: the 22-spec chain's when-cascades are ~3000 py4j
+    round-trips, ~2.6 s of driver time per parse_events call (more
+    than executing the parse at sf0.1). The memo value pins the chain,
+    so an id()-keyed entry cannot alias a chain that was collected."""
+    key = ("parse.projection", *(id(s) for s in chain))
+    return gateway_memo(key, lambda: (chain, _build_projection(chain)))[1]
 
+
+def _build_projection(chain: list[PayloadSpec]):
     # All cascades are built FLAT (one CaseWhen with N branches via
     # chained .when(), first match wins) rather than N nested
     # CaseWhens: the nested form is a depth-22 tree that Catalyst
@@ -181,10 +175,7 @@ def _projection(chain: list[PayloadSpec]):
     )
 
     picks = [pick(f) for f in _NORM_FIELDS]
-    built = (ptype, norm_type, payload_ts, extras_col, picks)
-    # pin the chain so id()-keyed entries can't alias a GC'd chain
-    cache[key] = (chain, built)
-    return built
+    return (ptype, norm_type, payload_ts, extras_col, picks)
 
 
 def parse_events(
@@ -226,7 +217,8 @@ def parse_events(
         # manual pushdown in the reference; free row-group pruning here
         df = df.where(F.col(value_col).contains(cfg.fast_matcher))
 
-    if not df.isStreaming:
+    streaming = df.isStreaming
+    if not streaming:
         # the 22-spec projection is the most expensive map stage in the
         # engine; fan a narrow batch scan out first (no-op at scale,
         # see skew.spread). Streaming inputs keep their natural
@@ -242,6 +234,22 @@ def parse_events(
 
     # first-match-wins probe chain as a single when-cascade
     df = df.withColumn("payload_type", ptype)
+    if not streaming:
+        # The parse counters, as a CollectMetrics node: predicates do
+        # not pass it, so a batch filter on a parsed column (a status,
+        # a user agent, an EventFilter) stays above the normalized
+        # select instead of having every aliased from_json and payload
+        # cascade inlined into it (measured on 120 GLB lines: the
+        # error-rate plan held 2770 from_json calls against the parse's
+        # own 25). A streaming filter already stays
+        # above: current_timestamp makes the select nondeterministic
+        # per micro-batch. Names are unique per call, since one plan
+        # may hold several parses.
+        df = df.observe(
+            f"parse_events#{next(_PARSE_IDS)}",
+            F.count(F.lit(1)).alias("n_parsed"),
+            F.count(F.when(F.col("payload_type") == "raw", 1)).alias("n_raw_fallback"),
+        )
 
     ref_now = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
     event_ts = (

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import weakref
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -137,6 +138,29 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str):
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+# py4j gateway (weak) -> {key -> value}. Column objects are immutable
+# unresolved expressions bound to no DataFrame, so one built tree is
+# reusable across DataFrames, queries and sessions; but they are JVM
+# handles of one gateway, so a restarted gateway must rebuild them,
+# while a session restarted on the same gateway keeps using them, and
+# a dropped gateway takes its entries with it.
+_GATEWAY_MEMO: "weakref.WeakKeyDictionary[object, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def gateway_memo(key: tuple, build):
+    """``build()`` once per (py4j gateway, key): the memo for
+    input-independent Column trees, whose py4j construction is paid
+    per call otherwise (the parse projection's cascades alone are
+    ~3000 round trips). ``key`` starts with the caller's name and
+    holds every argument the tree depends on."""
+    per_gateway = _GATEWAY_MEMO.setdefault(SparkContext._gateway, {})
+    if key not in per_gateway:
+        per_gateway[key] = build()
+    return per_gateway[key]
 
 
 # SparkSession (weak) -> [(analyzed probe jplan, bounded value), ...].

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.windows import duration_micros
+from ..operators.windows import duration_micros, spark_interval
 
 
 def _pane_fn(ts_col: str, gap_ms: int):
@@ -142,7 +142,7 @@ def session_fire_early_panes(
         ]
     )
     return (
-        events.withWatermark(ts_col, gap)
+        events.withWatermark(ts_col, spark_interval(gap))
         .groupBy(key_col)
         .applyInPandasWithState(
             _pane_fn(ts_col, gap_ms),

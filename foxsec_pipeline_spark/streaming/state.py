@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.windows import spark_interval
+
 LOGIN_SCHEMA = T.StructType(
     [
         T.StructField("identity", T.StringType()),
@@ -239,7 +241,7 @@ def auth_state_analyze(
     driven by the watermark).
     """
     return (
-        logins.withWatermark("timestamp", watermark_delay)
+        logins.withWatermark("timestamp", spark_interval(watermark_delay))
         .groupBy("identity")
         .applyInPandasWithState(
             _auth_state_fn(max_kmh, prune_age_days),

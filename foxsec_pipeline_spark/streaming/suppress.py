@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.windows import duration_micros
+from ..operators.windows import duration_micros, spark_interval
 
 
 def suppress_stream(
@@ -37,7 +37,9 @@ def suppress_stream(
 ) -> DataFrame:
     """T1 AlertSuppressor: first alert per key within the expiry
     horizon. State GC is driven by the event-time watermark."""
-    return alerts.withWatermark(ts_col, expiry).dropDuplicatesWithinWatermark(key_cols)
+    return alerts.withWatermark(
+        ts_col, spark_interval(expiry)
+    ).dropDuplicatesWithinWatermark(key_cols)
 
 
 def _suppress_count_fn(ts_col: str, count_col: str, ttl_ms: int):
@@ -88,7 +90,7 @@ def suppress_count_stream(
     out_schema = alerts.schema
     state_schema = T.StructType([T.StructField("last_count", T.LongType())])
     return (
-        alerts.withWatermark(ts_col, expiry)
+        alerts.withWatermark(ts_col, spark_interval(expiry))
         .groupBy(*key_cols)
         .applyInPandasWithState(
             _suppress_count_fn(ts_col, count_col, ttl_ms),
@@ -143,7 +145,7 @@ def suppress_session_stream(
     ttl_ms = duration_micros(expiry) // 1000
     state_schema = T.StructType([T.StructField("last_seen_ms", T.LongType())])
     return (
-        alerts.withWatermark(ts_col, expiry)
+        alerts.withWatermark(ts_col, spark_interval(expiry))
         .groupBy(*key_cols)
         .applyInPandasWithState(
             _suppress_session_fn(ts_col, ttl_ms),

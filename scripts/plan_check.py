@@ -8,7 +8,8 @@ between two checkouts.
 `capture` builds each registered query on one session and records a
 sha256 digest of its optimized logical plan, with the run-specific
 parts masked: expression ids (`#12`, `#12L`), `plan_id=N`, `uuid(Some(N))`
-seeds and timestamp literals folded from the session clock. With
+seeds, lambda variable counters (`x_12`), CollectMetrics DataFrame ids
+and timestamp literals folded from the session clock. With
 `--rows` it also records an order-insensitive hash of the output: the
 row count plus the decimal sum of `xxhash64(to_json(struct(*)))`.
 
@@ -19,8 +20,15 @@ from local rows) shows only the plan above that cut, so an equal
 digest there does not prove equal work: `capture` marks such a query
 `"cut": true` and always records its row hash.
 
-`diff` prints the queries whose digest or row hash differs, and the
-queries present on one side only; it exits 1 when anything differs.
+`capture` also records the size of each optimized plan: its length in
+characters (`plan_chars`) and its number of `from_json` calls
+(`from_json`). An optimizer rule that inlines a wide projection into
+a pushed-down filter multiplies both without changing the output.
+
+`diff` prints the queries whose digest or row hash differs, the
+queries present on one side only, and the queries whose plan grew to
+more than twice its characters or `from_json` calls; it exits 1 when
+anything differs.
 
 Run `capture` from the root of each checkout with the same `--sf`
 and the same `SPARK_GRAFT_CPUS` (explicit repartition widths follow the
@@ -41,6 +49,10 @@ _MASKS = [
     (re.compile(r"#\d+L?"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"uuid\(Some\(-?\d+\)\)"), "uuid(Some(N))"),
+    # lambda variables are named from a JVM-wide counter
+    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_N"),
+    # the DataFrame id that ends a CollectMetrics node
+    (re.compile(r"(CollectMetrics [^\n]*\], )\d+$", re.M), r"\1N"),
     # current_timestamp()/now() folded to a literal by the optimizer
     (re.compile(r"\b1[5-9]\d{14}\b"), "<ts_us>"),
     (re.compile(r"\d{4}-\d\d-\d\d \d\d:\d\d:\d\d(\.\d+)?"), "<ts>"),
@@ -79,6 +91,8 @@ def capture(out: str, sf_dir: str, rows: bool, names: list[str]) -> None:
             rec = {
                 "plan": hashlib.sha256(plan.encode()).hexdigest(),
                 "schema": df.schema.simpleString(),
+                "plan_chars": len(plan),
+                "from_json": plan.count("from_json("),
             }
             if "LogicalRDD" in plan:
                 rec["cut"] = True
@@ -93,6 +107,20 @@ def capture(out: str, sf_dir: str, rows: bool, names: list[str]) -> None:
         json.dump(res, f, indent=1, sort_keys=True)
 
 
+_SIZES = ("plan_chars", "from_json")
+GROWTH_LIMIT = 2.0
+
+
+def _grown(a: dict, b: dict) -> list[str]:
+    """Size fields of `b` above GROWTH_LIMIT times `a`'s; a capture
+    without size fields (an older script) compares nothing."""
+    return [
+        f"{k} {a[k]} -> {b[k]}"
+        for k in _SIZES
+        if k in a and k in b and b[k] > GROWTH_LIMIT * max(a[k], 1)
+    ]
+
+
 def diff(a_path: str, b_path: str) -> int:
     with open(a_path) as f:
         a = json.load(f)
@@ -105,9 +133,12 @@ def diff(a_path: str, b_path: str) -> int:
             differ += 1
             continue
         fields = [k for k in sorted(a[name].keys() | b[name].keys())
-                  if a[name].get(k) != b[name].get(k)]
+                  if k not in _SIZES and a[name].get(k) != b[name].get(k)]
+        grown = _grown(a[name], b[name])
+        if grown:
+            fields.append("plan grew: " + ", ".join(grown))
         if fields:
-            print(f"{name}: {', '.join(fields)}")
+            print(f"{name}: {'; '.join(fields)}")
             differ += 1
     print(f"{differ} of {len(a.keys() | b.keys())} queries differ")
     return 1 if differ else 0

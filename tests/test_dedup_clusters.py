@@ -1,6 +1,7 @@
 """Row equality of `dedup_clusters` on generated graphs, against the
 previous two-join loop (kept below as the reference) and a plain-Python
-union-find, plus the number of jobs the loop fires."""
+union-find, plus the number of jobs the loop fires and its reuse of a
+generator's pairs that the caller already collected."""
 
 import random
 
@@ -8,7 +9,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from foxsec_pipeline_spark.operators.dedup import dedup_clusters
+from foxsec_pipeline_spark.operators.dedup import dedup_clusters, minhash_lsh_pairs
 
 
 def _reference_dedup_clusters(
@@ -221,3 +222,52 @@ def test_dedup_clusters_two_round_job_count(spark):
     _, ref_names = _jobs(
         spark, lambda: _reference_dedup_clusters(pairs_df, nodes_df))
     assert len(ref_names) > len(names), ref_names
+
+
+def _near_dup_corpus(spark, path):
+    """200 documents drawn from 40 bases with one word replaced in
+    about half of them, as a parquet scan (so the generator's plan has
+    shuffle stages and a checkpoint of it has something to skip)."""
+    rng = random.Random(5)
+    words = [f"w{i}" for i in range(60)]
+    bases = [[random.Random(b).choice(words) for _ in range(30)] for b in range(40)]
+    docs = []
+    for i in range(200):
+        text = list(rng.choice(bases))
+        if rng.random() < 0.5:
+            text[rng.randrange(30)] = "x"
+        docs.append((i, " ".join(text)))
+    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_dedup_clusters_reuses_collected_pairs(spark, tmp_path):
+    """The pairs are checkpointed as the caller passed them: after the
+    caller collected them, the checkpoint re-runs the executed plan, so
+    the first job of the build is that checkpoint, with one stage run
+    and the generator's shuffle map stages skipped (a derived
+    projection would get a new plan and run the MinHash pipeline
+    again). Rows equal the reference loop and a union-find."""
+    corpus = _near_dup_corpus(spark, str(tmp_path / "corpus"))
+    pairs = minhash_lsh_pairs(corpus)
+    collected = [(r.doc_a, r.doc_b) for r in pairs.collect()]
+    assert collected
+
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup_clusters_reuse", "pairs checkpoint")
+    try:
+        out = dedup_clusters(pairs, corpus)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    first = min(sc.statusTracker().getJobIdsForGroup("dedup_clusters_reuse"))
+    job = sc._jsc.sc().statusStore().job(first)
+    assert str(job.name()).startswith("localCheckpoint at"), job.name()
+    assert job.numCompletedStages() == 1
+    assert job.numSkippedStages() >= 1
+
+    got = _rows(out)
+    assert got == _rows(_reference_dedup_clusters(pairs, corpus))
+    ids = [r.doc_id for r in corpus.select("doc_id").collect()]
+    want = sorted((x, k, n) for x, (k, n) in _union_find(collected, ids).items())
+    assert got == want

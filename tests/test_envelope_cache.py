@@ -1,13 +1,16 @@
-"""The parser's Column caches (envelope trees, payload chains, parse
-projections) are scoped to the py4j gateway: a restarted gateway
-rebuilds the Column trees instead of serving handles of the old one,
-and a dropped gateway takes its entry with it."""
+"""The input-independent Column trees (envelope trees, payload chains,
+parse projections, the dedup kernels' shingle and MinHash trees) are
+memoized by `session.gateway_memo`, scoped to the py4j gateway: a
+restarted gateway rebuilds the Column trees instead of serving handles
+of the old one, and a dropped gateway takes its entry with it."""
 
 import gc
 import weakref
 
 from pyspark import SparkContext
 
+from foxsec_pipeline_spark import session
+from foxsec_pipeline_spark.operators import dedup
 from foxsec_pipeline_spark.parser import envelopes, parse
 
 
@@ -33,7 +36,7 @@ def test_envelope_cols_cached_per_gateway(spark, monkeypatch):
     del restarted
     gc.collect()
     assert gone() is None
-    assert list(envelopes._ENVELOPE_COLS.keys()) == [SparkContext._gateway]
+    assert list(session._GATEWAY_MEMO.keys()) == [SparkContext._gateway]
 
 
 def test_parse_chain_and_projection_cached_per_gateway(spark, monkeypatch):
@@ -60,4 +63,51 @@ def test_parse_chain_and_projection_cached_per_gateway(spark, monkeypatch):
     del restarted
     gc.collect()
     assert gone() is None
-    assert list(parse._PARSE_COLS.keys()) == [SparkContext._gateway]
+    assert list(session._GATEWAY_MEMO.keys()) == [SparkContext._gateway]
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_dedup_kernel_cols_cached_per_gateway(spark, monkeypatch):
+    """`minhash_lsh_pairs` and `ngram_jaccard_pairs` build their shingle
+    tree (shared by both) and their MinHash minima and band structs
+    once per gateway, and give the same rows from memoized trees."""
+    corpus = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e g"), (3, "x y z w v u"),
+         (4, "a b c d e f"), (5, "short")],
+        "doc_id long, text string",
+    )
+    monkeypatch.setattr(session, "_GATEWAY_MEMO", weakref.WeakKeyDictionary())
+    builds = []
+    for name in ("_shingle_array_col", "_minhash_band_cols"):
+        real = getattr(dedup, name)
+        monkeypatch.setattr(
+            dedup, name,
+            lambda *a, _real=real, _name=name: builds.append(_name) or _real(*a),
+        )
+    mh = _rows(dedup.minhash_lsh_pairs(corpus))
+    nj = _rows(dedup.ngram_jaccard_pairs(corpus))
+    assert mh and nj
+    assert sorted(builds) == ["_minhash_band_cols", "_shingle_array_col"]
+    # hits on the same gateway: no rebuild, the same rows
+    assert _rows(dedup.minhash_lsh_pairs(corpus)) == mh
+    assert _rows(dedup.ngram_jaccard_pairs(corpus)) == nj
+    assert len(builds) == 2
+
+    restarted = _Gateway()
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, "_gateway", restarted)
+        fresh_mh = dedup.minhash_lsh_pairs(corpus)
+        fresh_nj = dedup.ngram_jaccard_pairs(corpus)
+        assert len(builds) == 4
+    assert _rows(fresh_mh) == mh
+    assert _rows(fresh_nj) == nj
+    dedup.minhash_lsh_pairs(corpus)
+    assert len(builds) == 4
+    gone = weakref.ref(restarted)
+    del restarted
+    gc.collect()
+    assert gone() is None
+    assert list(session._GATEWAY_MEMO.keys()) == [SparkContext._gateway]

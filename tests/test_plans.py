@@ -109,6 +109,57 @@ def test_single_shuffle_aggs(spark, reg):
     assert _exchange_nodes(plan) <= 2, plan
 
 
+def _from_json_calls(df) -> int:
+    return df._jdf.queryExecution().optimizedPlan().toString().count("from_json(")
+
+
+def test_batch_parse_filter_stays_above_the_parse(spark, tmp_path):
+    """A batch filter on a parsed column stays above parse_events'
+    projections (the parse counters' CollectMetrics node is a barrier
+    predicates do not pass), so the error-rate plan holds no more
+    from_json calls than the parse alone instead of one inlined copy
+    of the envelope and payload trees per reference; its rows equal
+    the same heuristic over the materialized parse."""
+    import json
+
+    from foxsec_pipeline_spark.operators import error_rate_analysis
+    from foxsec_pipeline_spark.parser.parse import parse_events
+
+    glb = "type.googleapis.com/google.cloud.loadbalancing.type.LoadBalancerLogEntry"
+    lines = [
+        json.dumps({
+            "timestamp": f"1970-01-01T00:{i // 60:02d}:{i % 60:02d}.000Z",
+            "resource": {"labels": {"project_id": "p"}},
+            "jsonPayload": {"@type": glb},
+            "httpRequest": {
+                "remoteIp": f"10.0.0.{i % 3}",
+                "requestMethod": "GET",
+                "requestUrl": f"https://h.example.com/p{i % 5}",
+                "status": (200, 404, 429, 500)[i % 4],
+                "userAgent": "ua",
+            },
+        })
+        for i in range(120)
+    ]
+    path = tmp_path / "glb.jsonl"
+    path.write_text("\n".join(lines))
+    events = parse_events(spark.read.text(str(path)), now="1970-01-01 01:00:00")
+
+    def errors(ev):
+        return error_rate_analysis(
+            ev, key="source_address",
+            error_predicate=F.col("request_status").between(400, 499),
+            ts="timestamp", duration="1 minute", max_errors=3,
+        )
+
+    er = errors(events)
+    assert _from_json_calls(er) <= _from_json_calls(events)
+    materialized = spark.createDataFrame(events.collect(), events.schema)
+    got = sorted(er.collect())
+    assert got == sorted(errors(materialized).collect())
+    assert len(got) == 6  # 3 addresses x 2 minutes, 10 4xx rows each
+
+
 @pytest.mark.parametrize("spec", SPECS, ids=[s.name for s in SPECS])
 def test_no_python_udf_in_batch_plans(spark, spec):
     """UDFs are the slow path; every batch operator must stay JVM-side

@@ -1,7 +1,8 @@
 """Property test: the row-level `sessionize` (lag/cumsum) and Spark's
 `session_window` grouping assign identical sessions — the duality the
 sessionized DuckDB oracles rely on — and both read their gap through
-the one duration parser, `windows.duration_micros`."""
+the one duration parser, `windows.duration_micros`. Every spelling it
+accepts also builds a Spark window and watermark (`spark_interval`)."""
 
 import re
 
@@ -13,7 +14,12 @@ from pyspark.sql import functions as F
 
 from foxsec_pipeline_spark.operators import session_analysis
 from foxsec_pipeline_spark.operators.customs import sessionize
-from foxsec_pipeline_spark.operators.windows import duration_micros
+from foxsec_pipeline_spark.operators.windows import (
+    duration_micros,
+    spark_interval,
+    windowed_counts,
+)
+from foxsec_pipeline_spark.streaming.suppress import suppress_stream
 
 MIN, HOUR, DAY = 60_000_000, 3_600_000_000, 86_400_000_000
 
@@ -45,6 +51,27 @@ def test_duration_micros_vocabulary(text, micros):
 def test_duration_micros_rejects(bad):
     with pytest.raises(ValueError, match=re.escape(repr(bad))):
         duration_micros(bad)
+
+
+@pytest.mark.parametrize("text,micros", DURATIONS, ids=[d for d, _ in DURATIONS])
+def test_spark_window_and_watermark_take_every_spelling(spark, text, micros):
+    """Spark's interval parser rejects decimal and unspaced spellings
+    ("1.5 hours", "90min"); the window and watermark operators hand it
+    the same span in microseconds, so every spelling analyzes, and the
+    window Spark builds spans exactly `duration_micros`."""
+    df = spark.createDataFrame(
+        [Row(k="a", ts="2024-01-01 00:00:00")]
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    span = df.select(F.window("ts", spark_interval(text)).alias("w")).select(
+        F.unix_micros("w.end") - F.unix_micros("w.start")
+    ).first()[0]
+    assert span == micros
+    assert windowed_counts(df, "k", "ts", text, slide=text).count() == 1
+    stream = spark.readStream.format("rate").load().select(
+        F.col("value").cast("string").alias("k"), F.col("timestamp").alias("ts")
+    )
+    plan = suppress_stream(stream, ["k"], expiry=text, ts_col="ts")._jdf
+    assert "EventTimeWatermark" in plan.queryExecution().analyzed().toString()
 
 
 def test_sessionize_takes_decimal_gap(spark):
