@@ -56,6 +56,14 @@ CHANGED = [
     # batch parse: the parse counters' CollectMetrics node keeps
     # filters on parsed columns above the parse projections
     "parse_normalize", "customs_prefilter_split",
+    # windows.windowed_agg: the grouping column keeps Spark's own name
+    # (`window`, not `w`), or its start moves into the aggregate
+    "account_enumeration", "alert_pipeline", "content_server_variance",
+    "customs_alert_fanout", "customs_features", "customs_pipeline",
+    "login_failure_at_risk_account", "source_login_failure_dist",
+    "status_comparator",
+    # salted second stage groups on window_start, not the window struct
+    "salted_hard_limit",
 ]
 
 

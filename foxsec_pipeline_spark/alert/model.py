@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.windows import time_window, windowed_agg
 from ..schema import ALERT_SCHEMA, SEVERITY_INFO
 
 
@@ -72,7 +73,7 @@ def suppress_first_per_key(
     expiry interval, which yields identical results on final windows.
     """
     w = Window.partitionBy(
-        *key_cols, F.window(F.col(ts_col), expiry)["start"]
+        *key_cols, time_window(ts_col, expiry)["start"]
     ).orderBy(ts_col, "alert_id")
     return (
         alerts.withColumn("__rn", F.row_number().over(w))
@@ -189,36 +190,34 @@ def merge_for_notification(
     """AlertIO notify-merge: group alerts sharing a notify_merge key
     within a window into one notification row with a combined summary
     (`alert/AlertIO.java:116-143`)."""
-    merged = (
-        alerts.where(F.col("notify_merge").isNotNull())
-        .groupBy(F.window("timestamp", window).alias("w"), "notify_merge")
-        .agg(
-            F.count(F.lit(1)).alias("n_alerts"),
-            F.min("timestamp").alias("first_ts"),
-            F.min("summary").alias("__summary"),
-        )
-        .select(
-            "notify_merge",
-            "first_ts",
-            "n_alerts",
-            # reference format (AlertIO.AlertNotifyMerge, golden
-            # TestAlertMerge.alertMergeTest): the surviving alert's
-            # summary gains ' (N-1 similar alerts)' and the
-            # notify_merged_count metadata ONLY when alerts actually
-            # merged — a lone alert with a key passes through clean.
-            # min(summary) is the deterministic stand-in for the
-            # reference's arbitrary-survivor pick.
-            F.when(
-                F.col("n_alerts") > 1,
-                F.concat(
-                    F.col("__summary"), F.lit(" ("),
-                    (F.col("n_alerts") - 1).cast("string"),
-                    F.lit(" similar alerts)"),
-                ),
-            ).otherwise(F.col("__summary")).alias("summary"),
-            F.when(F.col("n_alerts") > 1, F.col("n_alerts"))
-            .alias("notify_merged_count"),
-        )
+    merged = windowed_agg(
+        alerts.where(F.col("notify_merge").isNotNull()),
+        ["notify_merge"],
+        time_window("timestamp", window),
+        F.count(F.lit(1)).alias("n_alerts"),
+        F.min("timestamp").alias("first_ts"),
+        F.min("summary").alias("__summary"),
+    ).select(
+        "notify_merge",
+        "first_ts",
+        "n_alerts",
+        # reference format (AlertIO.AlertNotifyMerge, golden
+        # TestAlertMerge.alertMergeTest): the surviving alert's
+        # summary gains ' (N-1 similar alerts)' and the
+        # notify_merged_count metadata ONLY when alerts actually
+        # merged — a lone alert with a key passes through clean.
+        # min(summary) is the deterministic stand-in for the
+        # reference's arbitrary-survivor pick.
+        F.when(
+            F.col("n_alerts") > 1,
+            F.concat(
+                F.col("__summary"), F.lit(" ("),
+                (F.col("n_alerts") - 1).cast("string"),
+                F.lit(" similar alerts)"),
+            ),
+        ).otherwise(F.col("__summary")).alias("summary"),
+        F.when(F.col("n_alerts") > 1, F.col("n_alerts"))
+        .alias("notify_merged_count"),
     )
     passthrough = alerts.where(F.col("notify_merge").isNull()).select(
         F.lit(None).cast("string").alias("notify_merge"),

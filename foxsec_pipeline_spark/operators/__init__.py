@@ -1,5 +1,4 @@
 from .heuristics import (  # noqa: F401
-    beam_session_gap,
     detect_nat,
     endpoint_abuse_analysis,
     endpoint_sequence_abuse,
@@ -14,7 +13,7 @@ from .heuristics import (  # noqa: F401
     threshold_analysis,
     ua_blocklist_analysis,
 )
-from .windows import windowed_counts  # noqa: F401
+from .windows import beam_session_gap, windowed_counts  # noqa: F401
 from .summary import source_correlation, summary_delta  # noqa: F401
 from .customs import (  # noqa: F401
     account_creation_dist,

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import bucket_pairs
-from .windows import duration_micros, spark_interval
+from .windows import duration_micros, time_window, windowed_agg
 
 
 def features_combine(
@@ -89,9 +89,7 @@ def features_combine(
             ),
         ).alias("retained_events"),
     ]
-    agg = df.groupBy(
-        F.window(ts, spark_interval(duration)).alias("w"), F.col(key)
-    ).agg(*aggs)
+    agg = windowed_agg(df, [key], time_window(ts, duration), *aggs)
     variance = F.when(
         F.col("n_paths") > 1,
         F.least(
@@ -99,7 +97,7 @@ def features_combine(
         ),
     ).otherwise(F.lit(0))
     return agg.select(
-        F.col("w.start").alias("window_start"),
+        "window_start",
         F.col(key),
         "total_events",
         *counted_types.keys(),
@@ -549,15 +547,15 @@ def status_comparator(
     twin would use applyInPandasWithState like streaming/state.py).
     """
     return (
-        df.groupBy(F.window(ts, spark_interval(duration)).alias("w"), F.col(key))
-        .agg(
+        windowed_agg(
+            df, [key], time_window(ts, duration),
             F.count(F.when(scan_predicate, 1)).alias("n_scans"),
             F.count(F.when(failure_predicate, 1)).alias("n_failures"),
         )
         .where(
             (F.col("n_scans") >= min_scans) & (F.col("n_failures") >= min_failures)
         )
-        .select(F.col("w.start").alias("window_start"), F.col(key), "n_scans", "n_failures")
+        .drop("window_end")
     )
 
 

@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.net import cidr_in_any
-from .windows import spark_interval
+from .windows import time_window, windowed_agg
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +80,7 @@ def etd_finding_alerts(
         "category", F.lit("gatekeeper:gcp")
     )
     w = Window.partitionBy(
-        *suppress_key_cols, F.window(ts, spark_interval(suppress_window))["start"]
+        *suppress_key_cols, time_window(ts, suppress_window)["start"]
     ).orderBy(ts)
     return (
         out.withColumn("__rn", F.row_number().over(w))
@@ -323,9 +323,8 @@ def source_login_failure_dist(
     reach the threshold (SourceLoginFailureDist.java:53-100). One
     aggregation computes both."""
     return (
-        events.where(failure_predicate)
-        .groupBy(F.window(ts, spark_interval(duration)).alias("w"), F.col(account_col))
-        .agg(
+        windowed_agg(
+            events.where(failure_predicate), [account_col], time_window(ts, duration),
             F.count(F.lit(1)).alias("n_failures"),
             F.countDistinct(addr_col).alias("n_sources"),
         )
@@ -333,10 +332,7 @@ def source_login_failure_dist(
             (F.col("n_failures") >= int(threshold))
             & (F.col("n_sources") >= int(threshold))
         )
-        .select(
-            F.col("w.start").alias("window_start"), account_col,
-            "n_failures", "n_sources",
-        )
+        .drop("window_end")
     )
 
 
@@ -352,12 +348,10 @@ def variance_view(
     note CustomsWindow.java:14-17). Joined window-aligned (J3) by the
     consumer; keys present in the content-server stream indicate
     normal browser variance."""
-    return (
-        events.where(presence_predicate)
-        .groupBy(F.window(ts, spark_interval(duration)).alias("w"), F.col(key_col))
-        .agg(F.lit(True).alias("has_variance"))
-        .select(F.col("w.start").alias("window_start"), key_col, "has_variance")
-    )
+    return windowed_agg(
+        events.where(presence_predicate), [key_col], time_window(ts, duration),
+        F.lit(True).alias("has_variance"),
+    ).drop("window_end")
 
 
 def activity_monitor(

@@ -29,42 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .windows import duration_micros, spark_interval, windowed_counts
-
-
-def beam_session_gap(gap: str) -> Column:
-    """Beam-exact session gap for Spark's session_window.
-
-    Beam merges two events into one session only when their interval
-    windows OVERLAP — inter-event delta strictly LESS than the gap
-    (`org.apache.beam.sdk.transforms.windowing.IntervalWindow
-    .intersects`: `!(start >= o.end || end <= o.start)`); Spark's
-    session_window also merges at delta == gap. Found by replaying
-    `TestPerEndpointErrorRateAnalysis.java:340-384` (stream3), whose
-    fixture places errors exactly 60 s apart around a 1-minute gap —
-    Beam splits them into sessions of 3 and 2 (no alert), Spark merged
-    them into 5 (alert). Subtracting one microsecond (the timestamp
-    resolution) makes Spark reproduce Beam's boundary exactly:
-    delta == gap splits, delta == gap - 1us merges. Session window
-    `end` then reads gap-1us after the last event instead of gap.
-
-    Every session operator in this module applies it to a string gap
-    (`_session_gap`). session_window requires CalendarIntervalType
-    (interval arithmetic yields DayTimeIntervalType, which it rejects),
-    so the gap is re-emitted through make_interval.
-    """
-    total = duration_micros(gap) / 1_000_000
-    return F.expr(f"make_interval(0,0,0,0,0,0,{total - 1e-6:.6f})")
-
-
-def _session_gap(gap) -> Column:
-    """Every session operator in this module sessionizes with BEAM
-    boundary semantics: a string gap is converted through
-    beam_session_gap (delta == gap SPLITS), matching both the
-    reference (`IntervalWindow.intersects`) and every catalog oracle
-    (their lag-based break condition is `delta >= gap`). A Column gap
-    passes through untouched."""
-    return beam_session_gap(gap) if isinstance(gap, str) else gap
+from .windows import gap_session, time_window, windowed_agg, windowed_counts
 
 
 def per_key_stats(counts: DataFrame, count_col: str = "n") -> DataFrame:
@@ -207,14 +172,12 @@ def detect_nat(
     call site, sketch-based, no accuracy cliff at 100 TB.
     """
     return (
-        events.groupBy(F.window(ts, spark_interval(duration)).alias("window"), F.col(key))
-        .agg(F.countDistinct(diversity_col).alias("n_distinct"))
-        .where(F.col("n_distinct") >= F.lit(int(min_distinct)))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col(key),
-            F.col("n_distinct"),
+        windowed_agg(
+            events, [key], time_window(ts, duration),
+            F.countDistinct(diversity_col).alias("n_distinct"),
         )
+        .where(F.col("n_distinct") >= F.lit(int(min_distinct)))
+        .drop("window_end")
     )
 
 
@@ -277,15 +240,12 @@ def session_analysis(
     expression, so the same code runs under readStream with a
     watermark.
     """
-    return (
-        events.groupBy(F.session_window(ts, _session_gap(gap)).alias("session"), F.col(key))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min(ts).alias("first_ts"),
-            F.max(ts).alias("last_ts"),
-        )
-        .select(key, "first_ts", "last_ts", "n_events")
-    )
+    return windowed_agg(
+        events, [key], gap_session(ts, gap),
+        F.count(F.lit(1)).alias("n_events"),
+        F.min(ts).alias("first_ts"),
+        F.max(ts).alias("last_ts"),
+    ).select(key, "first_ts", "last_ts", "n_events")
 
 
 # the reference's "supporting content" suffixes: a non-monitored
@@ -355,9 +315,8 @@ def endpoint_abuse_analysis(
         variance_aggs.append(
             F.count(F.when(~monitored_pred & supporting, 1)).alias("__var")
         )
-    agg = events.groupBy(
-        F.session_window(ts, _session_gap(gap)).alias("session"), F.col(key)
-    ).agg(
+    agg = windowed_agg(
+        events, [key], gap_session(ts, gap),
         *per_ep,
         *variance_aggs,
         F.min(ts).alias("first_ts"),
@@ -423,15 +382,12 @@ def session_limit_analysis(
         if nat_ua_col is not None
         else []
     )
-    out = (
-        events.groupBy(F.session_window(ts, _session_gap(gap)).alias("session"), F.col(key))
-        .agg(
-            F.min(ts).alias("first_ts"),
-            F.count(F.lit(1)).alias("n_events"),
-            *extra,
-        )
-        .where(F.col("n_events") >= F.lit(int(monitor)))
-    )
+    out = windowed_agg(
+        events, [key], gap_session(ts, gap),
+        F.min(ts).alias("first_ts"),
+        F.count(F.lit(1)).alias("n_events"),
+        *extra,
+    ).where(F.col("n_events") >= F.lit(int(monitor)))
     if nat_ua_col is not None:
         out = out.where(F.col("__n_ua") < 2)
     return out.select(key, "first_ts", "n_events")
@@ -457,13 +413,11 @@ def per_endpoint_error_rate(
     explosion.
     """
     return (
-        events.where(error_predicate)
-        .groupBy(
-            F.session_window(ts, _session_gap(gap)).alias("session"),
-            F.col(key),
-            F.col(endpoint_col),
+        windowed_agg(
+            events.where(error_predicate), [key, endpoint_col], gap_session(ts, gap),
+            F.min(ts).alias("first_ts"),
+            F.count(F.lit(1)).alias("error_count"),
         )
-        .agg(F.min(ts).alias("first_ts"), F.count(F.lit(1)).alias("error_count"))
         .where(F.col("error_count") > F.lit(int(max_errors)))
         .select(key, endpoint_col, "first_ts", "error_count")
     )
@@ -506,9 +460,7 @@ def per_endpoint_error_rate_specs(
         )
         aggs.append(F.count(F.when(match, 1)).alias(f"__c{i}"))
         aggs.append(F.max(F.when(match, F.col(ts))).alias(f"__t{i}"))
-    agg = err.groupBy(
-        F.session_window(ts, _session_gap(gap)).alias("session"), F.col(key)
-    ).agg(*aggs)
+    agg = windowed_agg(err, [key], gap_session(ts, gap), *aggs)
     # (count, -spec_index) struct max == reference's "highest count,
     # earliest spec on ties" loop; specs below threshold are filtered
     # out of the array first, so array_max -> null means no alert
@@ -542,7 +494,7 @@ def per_endpoint_error_rate_specs(
             F.col("__top.method").alias("method"),
             F.col("__top.pattern").alias("endpoint_pattern"),
             F.col("__top.latest").alias("latest_error_ts"),
-            F.col("session.end").alias("session_end"),
+            F.col("window_end").alias("session_end"),
         )
     )
 
@@ -565,17 +517,8 @@ def ua_blocklist_analysis(
     hit = _reduce(
         lambda a, b: a | b, [F.col(ua_col).rlike(p) for p in patterns]
     )
-    return (
-        events.where(hit)
-        .groupBy(F.window(ts, spark_interval(duration)).alias("window"), F.col(key))
-        .agg(
-            F.count(F.lit(1)).alias("n_matched"),
-            F.min(ua_col).alias("sample_user_agent"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col(key),
-            "n_matched",
-            "sample_user_agent",
-        )
-    )
+    return windowed_agg(
+        events.where(hit), [key], time_window(ts, duration),
+        F.count(F.lit(1)).alias("n_matched"),
+        F.min(ua_col).alias("sample_user_agent"),
+    ).drop("window_end")

@@ -215,7 +215,7 @@ def sessionize_full(
 
     Boundary: a new session starts only when the delta to the previous
     event EXCEEDS `gap_seconds` (`>`), so delta == gap merges. The
-    other session operators (`heuristics._session_gap`,
+    other session operators (`windows.gap_session`,
     `customs.sessionize`, `streaming.panes`) split at delta == gap, as
     Beam does; this one keeps its clickstream oracle's convention.
     """

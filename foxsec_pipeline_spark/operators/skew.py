@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .windows import spark_interval
+from .windows import time_window, windowed_agg
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -88,16 +88,8 @@ def salted_windowed_counts(
         if salt_source is not None
         else (F.spark_partition_id() % salt)
     )
-    partial = (
-        df.groupBy(
-            F.window(ts, spark_interval(duration)).alias("window"),
-            F.col(key),
-            s.alias("__salt"),
-        )
-        .agg(F.count(F.lit(1)).alias("__pn"))
+    partial = windowed_agg(
+        df, [key, s.alias("__salt")], time_window(ts, duration),
+        F.count(F.lit(1)).alias("__pn"),
     )
-    return (
-        partial.groupBy("window", key)
-        .agg(F.sum("__pn").alias("n"))
-        .select(F.col("window.start").alias("window_start"), F.col(key), F.col("n"))
-    )
+    return partial.groupBy("window_start", key).agg(F.sum("__pn").alias("n"))

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .windows import spark_interval, windowed_counts
+from .windows import time_window, windowed_counts
 
 
 def summary_delta(
@@ -98,7 +98,7 @@ def classifier_rollup(
     NULL level columns mean "aggregated over" (standard grouping-sets
     semantics, identical in the DuckDB oracle).
     """
-    w = F.window(ts, spark_interval(duration))["start"].alias("window_start")
+    w = time_window(ts, duration)["start"].alias("window_start")
     sets = ", ".join(
         "(" + ", ".join(["window_start"] + list(levels[:i])) + ")"
         for i in range(len(levels) + 1)

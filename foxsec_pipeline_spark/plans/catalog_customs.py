@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from ..filters.event_filter import compile_event_filter
 from ..functions.text import normalize_email
-from ..operators.heuristics import beam_session_gap
 from ..operators.customs import (
     account_creation_dist,
     assume_role_correlate,
@@ -23,6 +22,7 @@ from ..operators.customs import (
     status_comparator,
     watchlist_match,
 )
+from ..operators.windows import gap_session, time_window, windowed_agg
 from ..session import load_tables
 from .catalog import register
 
@@ -400,17 +400,20 @@ FROM agg WHERE n_accounts >= 6 AND n_types > 1
         "unless the source shows cross-type variance",
 )
 def q_account_enumeration(spark, sf_dir):
-    agg = (
-        _events(spark, sf_dir)
-        .groupBy(F.window("ts", "1 day").alias("w"), "user_id")
-        .agg(
+    return _account_enumeration(_events(spark, sf_dir))
+
+
+def _account_enumeration(ev):
+    """(window_start, user_id, n_accounts) of the sources that probed
+    >= 6 distinct accounts in a day, with more than one event type."""
+    return (
+        windowed_agg(
+            ev, ["user_id"], time_window("ts", "1 day"),
             F.countDistinct("props").alias("n_accounts"),
             F.countDistinct("event_type").alias("n_types"),
         )
         .where((F.col("n_accounts") >= 6) & (F.col("n_types") > 1))
-    )
-    return agg.select(
-        F.col("w.start").alias("window_start"), "user_id", "n_accounts"
+        .select("window_start", "user_id", "n_accounts")
     )
 
 
@@ -491,8 +494,10 @@ def q_fxa_alias_abuse(spark, sf_dir):
         F.col("ts"),
     )
     return (
-        e.groupBy(F.session_window("ts", beam_session_gap("4 hours")).alias("session"), F.col("norm_email"))
-        .agg(F.min("ts").alias("first_ts"), F.count(F.lit(1)).alias("n_signups"))
+        windowed_agg(
+            e, ["norm_email"], gap_session("ts", "4 hours"),
+            F.min("ts").alias("first_ts"), F.count(F.lit(1)).alias("n_signups"),
+        )
         .where(F.col("n_signups") >= 3)
         .select("norm_email", "first_ts", "n_signups")
     )
@@ -525,8 +530,8 @@ def q_pioneer_exfil(spark, sf_dir):
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("long")
     return (
-        ev.groupBy(F.session_window("ts", beam_session_gap("2 hours")).alias("session"), F.col("user_id"))
-        .agg(
+        windowed_agg(
+            ev, ["user_id"], gap_session("ts", "2 hours"),
             F.min("ts").alias("first_ts"),
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum(cents) / 100.0, 6).alias("total_volume"),
@@ -638,17 +643,9 @@ def q_customs_pipeline(spark, sf_dir):
         F.lit("password_reset_abuse").alias("detector"),
         F.col("n_distinct").alias("n"),
     )
-    enum = (
-        ev.groupBy(F.window("ts", "1 day").alias("w"), "user_id")
-        .agg(
-            F.countDistinct("props").alias("n_accounts"),
-            F.countDistinct("event_type").alias("n_types"),
-        )
-        .where((F.col("n_accounts") >= 6) & (F.col("n_types") > 1))
-        .select(
-            F.col("w.start").alias("window_start"), "user_id",
-            F.lit("account_enumeration").alias("detector"),
-            F.col("n_accounts").alias("n"),
-        )
+    enum = _account_enumeration(ev).select(
+        "window_start", "user_id",
+        F.lit("account_enumeration").alias("detector"),
+        F.col("n_accounts").alias("n"),
     )
     return slf.unionByName(pra).unionByName(enum)

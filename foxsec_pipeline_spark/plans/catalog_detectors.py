@@ -29,6 +29,7 @@ from ..operators.detectors import (
     status_comparator_state,
     variance_view,
 )
+from ..operators.windows import time_window, windowed_agg, windowed_counts
 from ..session import load_tables
 from .catalog import register
 
@@ -390,10 +391,12 @@ WHERE v.user_id IS NULL
 def q_content_server_variance(spark, sf_dir):
     ev = _events(spark, sf_dir)
     cand = (
-        ev.groupBy(F.window("ts", "1 day").alias("w"), "user_id")
-        .agg(F.countDistinct("props").alias("n_accounts"))
+        windowed_agg(
+            ev, ["user_id"], time_window("ts", "1 day"),
+            F.countDistinct("props").alias("n_accounts"),
+        )
         .where(F.col("n_accounts") >= 5)
-        .select(F.col("w.start").alias("window_start"), "user_id", "n_accounts")
+        .drop("window_end")
     )
     var = variance_view(
         ev, key_col="user_id",
@@ -608,14 +611,11 @@ FROM alerts WHERE heuristic = 'velocity'
 )
 def q_customs_alert_fanout(spark, sf_dir):
     ev = _events(spark, sf_dir)
-    hits = (
-        ev.where(F.col("event_type") == "error")
-        .groupBy(F.window("ts", "1 day").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 3)
-    )
+    hits = windowed_counts(
+        ev.where(F.col("event_type") == "error"), "user_id", "ts", "1 day"
+    ).where(F.col("n") > 3)
     alerts = hits.select(
-        F.col("w.start").alias("timestamp"),
+        F.col("window_start").alias("timestamp"),
         F.when(F.col("user_id") % 3 == 0, "velocity")
         .otherwise("source_login_failure")
         .alias("subcategory"),

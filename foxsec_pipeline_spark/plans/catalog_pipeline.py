@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..alert.model import suppress_first_per_key, to_alerts
+from ..operators.windows import windowed_counts
 from ..parser.parse import ParserCfg, parse_events
 from ..session import load_tables
 from .catalog import register
@@ -237,6 +238,15 @@ def q_customs_prefilter_split(spark, sf_dir):
     )
 
 
+def _error_hours(ev):
+    """(window_start, user_id, event_count) of the users with >= 2
+    error events in an hour."""
+    return windowed_counts(
+        ev.where(F.col("event_type") == "error"), "user_id", "ts", "1 hour",
+        count_alias="event_count",
+    ).where(F.col("event_count") >= 2)
+
+
 @register(
     "alert_pipeline",
     """
@@ -266,13 +276,7 @@ FROM ranked WHERE rn = 1
 )
 def q_alert_pipeline(spark, sf_dir):
     ev = load_tables(spark, sf_dir, "events")["events"]
-    hits = (
-        ev.where(F.col("event_type") == "error")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("event_count"))
-        .where(F.col("event_count") >= 2)
-        .select(F.col("w.start").alias("window_start"), "user_id", "event_count")
-    )
+    hits = _error_hours(ev)
     alerts = to_alerts(
         hits,
         category="httprequest",
@@ -315,18 +319,9 @@ def q_violation_projection(spark, sf_dir):
     from ..sinks.output import violation_wires_from_alert_json
 
     ev = load_tables(spark, sf_dir, "events")["events"]
-    hits = (
-        ev.where(F.col("event_type") == "error")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("event_count"))
-        .where(F.col("event_count") >= 2)
-        .select(
-            F.col("w.start").alias("window_start"),
-            "user_id",
-            "event_count",
-            F.concat(F.lit("10."), (F.col("user_id") % 32).cast("string"),
-                     F.lit(".0.1")).alias("source_address"),
-        )
+    hits = _error_hours(ev).withColumn(
+        "source_address",
+        F.concat(F.lit("10."), (F.col("user_id") % 32).cast("string"), F.lit(".0.1")),
     )
     alerts = to_alerts(
         hits,

@@ -19,7 +19,7 @@ file-per-batch source with `maxFilesPerTrigger=1`, which is how the
 golden replays drive it.
 
 Sessions use BEAM boundary semantics (delta == gap splits), like every
-other session operator in this engine (`heuristics.beam_session_gap`).
+other session operator in this engine (`windows.beam_session_gap`).
 Late events that bridge two open sessions merge them, and the merged
 session's next pane carries the combined count — Beam's merging-window
 accumulation. State is GC'd by an event-time timeout one gap past the

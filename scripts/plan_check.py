@@ -9,7 +9,10 @@ between two checkouts.
 sha256 digest of its optimized logical plan, with the run-specific
 parts masked: expression ids (`#12`, `#12L`), `plan_id=N`, `uuid(Some(N))`
 seeds, lambda variable counters (`x_12`), CollectMetrics DataFrame ids
-and timestamp literals folded from the session clock. With
+and timestamp literals folded from the session clock. The Expand that
+rewrites several distinct aggregates orders its distinct columns and
+numbers its groups (`gid = K`) differently per JVM run, so `mask`
+sorts both (`_canonical_expand`). With
 `--rows` it also records an order-insensitive hash of the output: the
 row count plus the decimal sum of `xxhash64(to_json(struct(*)))`.
 
@@ -59,10 +62,92 @@ _MASKS = [
 ]
 
 
+def _close(s: str, i: int) -> int:
+    """Index of the bracket that closes the one at `s[i]`."""
+    depth = 0
+    for j in range(i, len(s)):
+        depth += (s[j] in "([") - (s[j] in ")]")
+        if depth == 0:
+            return j
+    raise ValueError(f"unbalanced brackets in {s!r}")
+
+
+def _items(s: str) -> list[str]:
+    """The top-level comma-separated items of a bracket list's body."""
+    out, depth, start = [], 0, 0
+    for j, c in enumerate(s):
+        depth += (c in "([") - (c in ")]")
+        if c == "," and depth == 0:
+            out.append(s[start:j].strip())
+            start = j + 1
+    return out + [s[start:].strip()] if s.strip() else out
+
+
+_NODE = re.compile(r"^[: ]*\+- ")
+_GID = re.compile(r"gid# = (\d+)")
+
+
+def _depth(line: str) -> int:
+    m = _NODE.match(line)
+    return m.end() if m else 0
+
+
+def _canonical_expand(lines: list[str], i: int) -> None:
+    """Rewrite the distinct-aggregate Expand on `lines[i]` and the
+    nodes above it that name its columns and groups, in a form that
+    does not depend on the rewrite's hash-map order: the distinct
+    columns (those some projection nulls, left of `gid`) sorted by
+    name, and the distinct groups numbered 1..n in the sorted order
+    of their projections (the regular group keeps 0)."""
+    line = lines[i]
+    a = line.index("Expand [") + len("Expand ")
+    b = _close(line, a)
+    c = b + len("], [") - 1
+    d = _close(line, c)
+    projs = [_items(p[1:-1]) for p in _items(line[a + 1:b])]
+    out = _items(line[c + 1:d])
+    if "gid#" not in out:
+        return
+    g = out.index("gid#")
+    block = [k for k in range(g) if any(p[k] == "null" for p in projs)]
+    order = sorted(block, key=lambda k: out[k])
+    perm = list(range(len(out)))
+    for dst, src in zip(block, order):
+        perm[dst] = src
+    projs = [[p[k] for k in perm] for p in projs]
+    distinct = sorted((p for p in projs if p[g] != "0"), key=lambda p: p[:g] + p[g + 1:])
+    gids = {p[g]: str(n) for n, p in enumerate(distinct, 1)}
+    for p in projs:
+        p[g] = gids.get(p[g], p[g])
+    projs.sort(key=lambda p: int(p[g]))
+    lines[i] = (
+        line[:a]
+        + "[" + ", ".join("[" + ", ".join(p) + "]" for p in projs) + "], ["
+        + ", ".join(out[k] for k in perm) + "]" + line[d + 1:]
+    )
+    old_cols = ", ".join(out[k] for k in block)
+    new_cols = ", ".join(out[k] for k in order)
+    depth, first = _depth(line), True
+    for j in range(i - 1, -1, -1):
+        if _depth(lines[j]) >= depth:
+            continue
+        depth = _depth(lines[j])
+        if first:  # the Aggregate that groups the Expand's output
+            lines[j] = lines[j].replace(old_cols, new_cols)
+            first = False
+        if _GID.search(lines[j]):
+            lines[j] = _GID.sub(lambda m: f"gid# = {gids.get(m[1], m[1])}", lines[j])
+            break
+
+
 def mask(plan: str) -> str:
     for pat, rep in _MASKS:
         plan = pat.sub(rep, plan)
-    return plan
+    lines = plan.split("\n")
+    for i, line in enumerate(lines):
+        if "Expand [" in line:
+            _canonical_expand(lines, i)
+    return "\n".join(lines)
 
 
 def _row_hash(df) -> dict:

@@ -19,7 +19,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from foxsec_pipeline_spark.operators.heuristics import (
-    beam_session_gap,
     detect_nat,
     endpoint_abuse_analysis,
     hard_limit_analysis,
@@ -335,7 +334,7 @@ def test_per_endpoint_error_rate_regex_specs_reference_golden(spark):
         ev, key="source_address", specs=[(4, "GET", "/t.*")],
         method_col="request_method", path_col="request_path",
         error_predicate=_4xx(), ts="timestamp",
-        gap=beam_session_gap("1 minute"),
+        gap="1 minute",
     ).collect()
     got = {r["source_address"]: r for r in out}
     assert set(got) == {"192.168.1.1", "192.168.1.2"}
@@ -357,7 +356,7 @@ def test_per_endpoint_error_rate_session_split_reference_golden(spark):
         ev, key="source_address", specs=[(4, "GET", "/test")],
         method_col="request_method", path_col="request_path",
         error_predicate=_4xx(), ts="timestamp",
-        gap=beam_session_gap("1 minute"),
+        gap="1 minute",
     ).collect()
     assert out == []
 
@@ -374,7 +373,7 @@ def test_per_endpoint_error_rate_id_guessing_reference_golden(spark):
         specs=[(4, "GET", r"/test/(\d+)/profile")],
         method_col="request_method", path_col="request_path",
         error_predicate=_4xx(), ts="timestamp",
-        gap=beam_session_gap("1 minute"),
+        gap="1 minute",
     ).collect()
     assert len(out) == 1
     a = out[0]
@@ -396,7 +395,7 @@ def test_per_endpoint_error_rate_good_traffic_gap_reference_golden(spark):
         ev, key="source_address", specs=[(4, "GET", "/test")],
         method_col="request_method", path_col="request_path",
         error_predicate=_4xx(), ts="timestamp",
-        gap=beam_session_gap("1 minute"),
+        gap="1 minute",
     ).collect()
     assert out == []
 
@@ -416,7 +415,7 @@ def test_per_endpoint_error_rate_top_spec_reference_golden(spark):
         specs=[(4, "GET", "/test"), (4, "GET", "/t.*")],
         method_col="request_method", path_col="request_path",
         error_predicate=_4xx(), ts="timestamp",
-        gap=beam_session_gap("1 minute"),
+        gap="1 minute",
     ).collect()
     assert len(out) == 1
     a = out[0]

@@ -2,9 +2,12 @@
 `session_window` grouping assign identical sessions — the duality the
 sessionized DuckDB oracles rely on — and both read their gap through
 the one duration parser, `windows.duration_micros`. Every spelling it
-accepts also builds a Spark window and watermark (`spark_interval`)."""
+accepts also builds a Spark window and watermark (`spark_interval`),
+and `windowed_agg` returns the rows of the hand-written
+`groupBy(window(...))` form it replaced."""
 
 import re
+from datetime import timedelta
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -12,11 +15,19 @@ from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from foxsec_pipeline_spark.alert.model import (
+    merge_for_notification,
+    suppress_first_per_key,
+)
 from foxsec_pipeline_spark.operators import session_analysis
 from foxsec_pipeline_spark.operators.customs import sessionize
 from foxsec_pipeline_spark.operators.windows import (
+    beam_session_gap,
     duration_micros,
+    gap_session,
     spark_interval,
+    time_window,
+    windowed_agg,
     windowed_counts,
 )
 from foxsec_pipeline_spark.streaming.suppress import suppress_stream
@@ -25,7 +36,7 @@ MIN, HOUR, DAY = 60_000_000, 3_600_000_000, 86_400_000_000
 
 # the spellings each duration consumer accepts, with their spans
 DURATIONS = [
-    # session_window gaps (heuristics.beam_session_gap): compound,
+    # session_window gaps (windows.gap_session): compound,
     # decimal, any case, nine units singular or plural, space optional
     ("45 minutes", 45 * MIN), ("1 minute", MIN), ("90min", 90 * MIN),
     ("5 mins", 5 * MIN), ("1 hour 30 minutes", 90 * MIN),
@@ -72,6 +83,20 @@ def test_spark_window_and_watermark_take_every_spelling(spark, text, micros):
     )
     plan = suppress_stream(stream, ["k"], expiry=text, ts_col="ts")._jdf
     assert "EventTimeWatermark" in plan.queryExecution().analyzed().toString()
+    alerts = df.select(
+        F.col("ts").alias("timestamp"), F.lit(1).alias("alert_id"),
+        F.col("k").alias("notify_merge"), F.lit("s").alias("summary"),
+    )
+    assert suppress_first_per_key(alerts, ["notify_merge"], expiry=text).count() == 1
+    assert merge_for_notification(alerts, window=text).count() == 1
+    # a 1 us gap leaves a zero-length Beam session, which Spark drops
+    assert session_analysis(df, key="k", ts="ts", gap=text).count() == int(micros > 1)
+    sessions = windowed_agg(df, ["k"], gap_session("ts", text), F.count(F.lit(1)))
+    assert [
+        r[0] for r in sessions.select(
+            F.unix_micros("window_end") - F.unix_micros("window_start")
+        ).collect()
+    ] == ([micros - 1] if micros > 1 else [])
 
 
 def test_sessionize_takes_decimal_gap(spark):
@@ -93,6 +118,60 @@ def test_sessionize_takes_decimal_gap(spark):
     assert via_rows == via_window == {
         ("2024-01-01 00:00:00", 1), ("2024-01-01 01:30:00", 2)
     }
+
+
+def _hand_written(df, window, *aggs):
+    """The form `windowed_agg` replaced at every window site."""
+    return (
+        df.groupBy(window.alias("w"), F.col("k"))
+        .agg(*aggs)
+        .select(
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
+            "k", "n", "last_ts",
+        )
+    )
+
+
+@pytest.mark.parametrize("form", ["fixed", "sliding", "session"])
+def test_windowed_agg_matches_hand_written_groupby(spark, form):
+    """Same rows as `groupBy(window(...).alias("w"), key).agg(...)
+    .select("w.start", ...)` for fixed, sliding and session windows.
+    Key "a" has events exactly one gap (10 minutes) apart, which
+    Beam's boundary splits into separate sessions; key "b" has events
+    inside one gap, whose session ends gap - 1 us after its last
+    event."""
+    stamps = {
+        "a": ["00:00:00", "00:10:00", "00:20:00", "00:35:00"],
+        "b": ["00:01:00", "00:05:30", "00:14:59", "00:14:59"],
+    }
+    df = spark.createDataFrame(
+        [Row(k=k, ts=f"2024-01-01 {t}") for k, ts in stamps.items() for t in ts]
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    windows = {
+        "fixed": (time_window("ts", "10 minutes"), F.window("ts", "10 minutes")),
+        "sliding": (
+            time_window("ts", "10 minutes", "5 minutes"),
+            F.window("ts", "10 minutes", "5 minutes"),
+        ),
+        "session": (
+            gap_session("ts", "10 minutes"),
+            F.session_window("ts", beam_session_gap("10 minutes")),
+        ),
+    }
+    new, old = windows[form]
+    aggs = (F.count(F.lit(1)).alias("n"), F.max("ts").alias("last_ts"))
+    got = windowed_agg(df, ["k"], new, *aggs)
+    assert got.columns == ["window_start", "window_end", "k", "n", "last_ts"]
+    rows = sorted(got.collect())
+    assert rows == sorted(_hand_written(df, old, *aggs).collect())
+    if form == "session":
+        assert sorted((r.k, r.n) for r in rows) == [
+            ("a", 1), ("a", 1), ("a", 1), ("a", 1), ("b", 4)
+        ]
+        for r in rows:
+            assert r.window_end - r.last_ts == timedelta(minutes=10, microseconds=-1)
+
 
 EVENTS = st.lists(
     st.tuples(
