@@ -27,44 +27,59 @@ from foxsec_pipeline_spark.plans.catalog import registry  # noqa: E402
 
 # A CORRECTNESS_r*.json file records exactly the FIRST 50 rows of
 # queries(), so the order decides what gets re-verified. CHANGED leads
-# it: every query whose plan changed after the newest CORRECTNESS
-# file. Add a name here in the change that alters its plan; drop it
-# once a CORRECTNESS file records it green. A plan that reads a
+# it: every query, in registry order, whose `scripts/plan_check.py`
+# record (masked optimized-plan digest, schema, row count and hash,
+# error) in PLAN_DIGEST.json differs from the snapshot PLAN_DIGEST_rK.json
+# of the newest CORRECTNESS round K that has one. A plan that reads a
 # LogicalRDD (a build-time checkpoint, or a table that createDataFrame
 # built from local rows) hides the work below that cut from the digest,
-# so `scripts/plan_check.py` compares those queries by their output
-# hash. The rest follow stalest-evidence first (see _ordered).
-CHANGED = [
-    # connected components: one aggregate and one probe per round, and
-    # the caller's pairs checkpointed as given
-    "dedup_clusters", "cluster_canonical_docs", "split_leakage_check",
-    # shingle-kernel consumers with no after-plan evidence
-    "dedup_minhash_lsh", "decontaminate", "bloom_decontaminate",
-    "dedup_ngram_jaccard",
-    # LSH buckets: guarded fixed-point conversion in both forms
-    "ann_cosine_lsh", "dedup_embedding_cosine", "ann_cosine_lsh_multiprobe",
-    # cosine scorers: zero norm clamped to 1; PQ encode drops null/empty
-    "ann_cosine_topk", "ann_cosine_ivf", "ann_range_search_ivf",
-    "ann_cosine_pq", "rrf_hybrid_fusion",
-    # in-bucket pairs from the one pair kernel (dedup.bucket_pairs);
-    # dedup_ngram_jaccard, dedup_minhash_lsh and dedup_embedding_cosine
-    # changed too and are listed above
-    "containment_dedup", "minhash_jaccard_estimate_error", "neardup_pair_recall",
-    "prefix_jaccard_join", "semdedup", "winnowing_plagiarism_pairs",
-    # alerts -> violations through the iprepd wire conversion
-    "violation_projection",
-    # batch parse: the parse counters' CollectMetrics node keeps
-    # filters on parsed columns above the parse projections
-    "parse_normalize", "customs_prefilter_split",
-    # windows.windowed_agg: the grouping column keeps Spark's own name
-    # (`window`, not `w`), or its start moves into the aggregate
-    "account_enumeration", "alert_pipeline", "content_server_variance",
-    "customs_alert_fanout", "customs_features", "customs_pipeline",
-    "login_failure_at_risk_account", "source_login_failure_dist",
-    "status_comparator",
-    # salted second stage groups on window_start, not the window struct
-    "salted_hard_limit",
-]
+# so plan_check always records those queries' output hash. The rest
+# follow stalest-evidence first (see _ordered).
+_DIGEST_FIELDS = ("plan", "schema", "n", "hash", "error")
+
+
+def changed_between(snapshot: dict, current: dict, names) -> list[str]:
+    """The `names`, in their order, whose digest fields differ between
+    two plan_check captures, or that either capture lacks."""
+    return [
+        n for n in names
+        if n not in snapshot or n not in current
+        or any(snapshot[n].get(k) != current[n].get(k) for k in _DIGEST_FIELDS)
+    ]
+
+
+def _numbered(prefix: str) -> dict[int, str]:
+    """{K: path} of the `<prefix>_rK.json` files next to this module.
+    The round comes from the basename only, so a checkout path like
+    /home/u/repo_r2 cannot shadow it."""
+    out = {}
+    for path in glob.glob(os.path.join(_HERE, f"{prefix}_r*.json")):
+        m = re.fullmatch(rf"{prefix}_r(\d+)\.json", os.path.basename(path))
+        if m is not None:
+            out[int(m.group(1))] = path
+    return out
+
+
+def _read(path: str | None) -> dict:
+    if path is None or not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def _changed() -> list[str]:
+    """CHANGED against the newest snapshot at or below the newest
+    CORRECTNESS round. Missing files only lengthen the list: an older
+    snapshot differs in at least the same queries, and a missing
+    snapshot or digest lists every query."""
+    newest = max(_numbered("CORRECTNESS"), default=0)
+    snapshots = {k: p for k, p in _numbered("PLAN_DIGEST").items() if k <= newest}
+    snapshot = _read(snapshots[max(snapshots)] if snapshots else None)
+    current = _read(os.path.join(_HERE, "PLAN_DIGEST.json"))
+    return changed_between(snapshot, current, registry())
+
+
+CHANGED = _changed()
 
 
 def _green(row: dict) -> bool:
@@ -78,16 +93,8 @@ def _green(row: dict) -> bool:
 
 def _rounds() -> list[tuple[int, dict]]:
     """[(round, {query: row})] from the CORRECTNESS_r*.json files next
-    to this module, oldest round first. The round comes from the
-    basename only, so a checkout path like /home/u/repo_r2 cannot
-    shadow it."""
-    out = []
-    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
-        if m is not None:
-            with open(path) as f:
-                out.append((int(m.group(1)), json.load(f)))
-    return sorted(out, key=lambda r: r[0])
+    to this module, oldest round first."""
+    return [(k, _read(p)) for k, p in sorted(_numbered("CORRECTNESS").items())]
 
 
 def _last_green() -> dict[str, int]:
@@ -106,8 +113,6 @@ def _ordered():
     round first (never-green queries lead); ties keep registration
     order."""
     reg = registry()
-    missing = [n for n in CHANGED if n not in reg]
-    assert not missing, f"CHANGED references unknown queries: {missing}"
     last = _last_green()
     rest = sorted((n for n in reg if n not in CHANGED), key=lambda n: last.get(n, 0))
     return {n: reg[n] for n in [*CHANGED, *rest]}

@@ -130,7 +130,7 @@ def account_creation_dist(
 
     By default the operator is EXACT for every group under
     `hot_group_cutoff` rows: `work_budget_pairs=None` disables the
-    density-aware rerouting, so existing callers keep pre-r8 exact
+    density-aware rerouting, so callers that pass no budget get exact
     output. Callers running at scale opt in by passing a budget (the
     catalog query passes 50M explicitly).
 
@@ -141,7 +141,7 @@ def account_creation_dist(
     is individually huge (> `hot_group_cutoff` rows) OR when — a
     budget having been passed — the dataset is uniformly dense: the
     density-aware trigger keeps the
-    TOTAL exact work Σ n_g² within `work_budget_pairs` (the r7
+    TOTAL exact work Σ n_g² within `work_budget_pairs` (a 10x
     step-up measured 147.9 s at 10x data with 25 uniform 6k-row
     groups — 450M pairs and not one group over the old row cutoff).
     Groups under the derived cutoff stay exact all-pairs; hot groups
@@ -225,9 +225,8 @@ def account_creation_dist(
     # for the price of one linear min/max pass. The RATIO keeps the
     # original-length denominator, so the predicate value is
     # bit-identical. The probe is an EAGER driver-blocking 1-row
-    # min/max job at plan-construction time — memoized per (session,
-    # input plan) in session.global_common_prefix_len, so only the
-    # FIRST invocation on a given input pays the scan.
+    # min/max job at plan-construction time, run on every build: a
+    # prefix measured on other data would strip characters that differ.
     from ..session import global_common_prefix_len
 
     _pre = global_common_prefix_len(df.select(F.col(name_col)), name_col)

@@ -91,12 +91,11 @@ def _shingle_arrays(
     """(id, __ss: array<string>) — per-doc word n-gram shingles built
     ENTIRELY map-side: zero exchanges, zero sorts, zero aggregates.
 
-    r13 (guide §2.1/§2.2): replaces the posexplode + window-`lead`
-    shingle pipeline, whose Window(partitionBy id) shuffled and sorted
-    the WHOLE exploded token stream (|corpus tokens| rows) before any
-    consumer aggregate. The r12 rejection of the `word_shingles` HOF
-    does not apply here because its failure mode was never "HOFs are
-    slow" but the lambda capturing `tokens(text)` — a regex split —
+    Guide §2.1/§2.2: a posexplode + window-`lead` shingle pipeline
+    would shuffle and sort the WHOLE exploded token stream (|corpus
+    tokens| rows, Window(partitionBy id)) before any consumer
+    aggregate. The known failure of a `word_shingles` HOF does not
+    apply here because it was never "HOFs are slow" but the lambda capturing `tokens(text)` — a regex split —
     re-evaluated PER ELEMENT once CollapseProject inlined it (the rule
     counts CONSUMER EXPRESSIONS, not occurrences, so a single-consumer
     layering does not protect a multiply-used subtree). The fix is a
@@ -149,10 +148,10 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     longs instead of ~40-byte strings (collision odds at 1e6 distinct
     shingles ≈ 4e-7 — below any bench's noise floor).
 
-    r13: built on `_shingle_arrays` — the per-doc distinct + count
-    happen in the array domain (array_distinct/size) inside the same
-    map pass, so the r12 shape's Exchange(id) + Sort over the token
-    stream AND its collect_set aggregate are gone; md5 hashes after
+    Built on `_shingle_arrays` — the per-doc distinct + count happen
+    in the array domain (array_distinct/size) inside the same map
+    pass, so no Exchange(id) + Sort over the token stream and no
+    collect_set aggregate; md5 hashes after
     the explode in whole-stage codegen. First exchange a consumer
     pays is its own (e.g. groupBy(shingle)). n_sh is computed BELOW
     the explode (its own projection layer) so the Generate carries
@@ -1255,8 +1254,8 @@ def _verify_pairs_multiword(tok, cand, id_col, t_num, t_den, n_vocab,
     BROADCASTS up to `_BROADCAST_BYTES_CAP` of masks and falls back
     to an AQE shuffle join above that. The footprint is priced from
     the caller's n_docs scalar — no cache/count on the dim itself
-    (the r11 form cached it to price the decision and leaked the
-    cache entry for the session's life; the two mask-build subplans
+    (caching it to price the decision leaks the cache entry for the
+    session's life; the two mask-build subplans
     below are identical up to the output aliases, so ReuseExchange
     dedupes the one shuffle between them)."""
     masks, words = _multiword_masks(tok, id_col, n_vocab)
@@ -1296,8 +1295,8 @@ def _verify_pairs_arrays(tok, cand, id_col, t_num, t_den):
     """Exact verify for REAL-TEXT vocabularies: re-attach full sorted
     token arrays and compute the intersection map-side
     (array_intersect). The doc->token-set dim BROADCASTS when its
-    estimated BYTES fit `_BROADCAST_BYTES_CAP` — the r11 gate was a
-    2M-ROW count, which at a few hundred tokens/doc is a multi-GB
+    estimated BYTES fit `_BROADCAST_BYTES_CAP` — a 2M-ROW count gate
+    would, at a few hundred tokens/doc, allow a multi-GB
     OOM-grade broadcast on exactly the real-text corpora this tier
     exists for; the estimate (Σ len(w) string payload + ~8 B/element
     array overhead, one 1-row agg on tok) is the same driver-side
@@ -1305,8 +1304,8 @@ def _verify_pairs_arrays(tok, cand, id_col, t_num, t_den):
     wide arrays never shuffle (map-side verify per pair); above the
     cap -> shuffle join with AQE. No cache on the dim: the two
     set-build subplans are identical up to output aliases, so
-    ReuseExchange dedupes the one shuffle between them (the r11 cache
-    leaked an executor-memory entry per invocation)."""
+    ReuseExchange dedupes the one shuffle between them (a cache would
+    leak an executor-memory entry per invocation)."""
     from ..session import plan_stat_memo
 
     est_bytes = plan_stat_memo(
@@ -1456,7 +1455,7 @@ def edit_distance_pairs_blocked(
     Levenshtein distance, as (block_cols..., id_a, id_b, name_dist)
     with id_a < id_b.
 
-    Blocks below the density-aware cutoff (see density.py — the r7
+    Blocks below the density-aware cutoff (see density.py — a 10x
     step-up measured the all-pairs equi-join at 683.6 s on 10x data,
     125 uniformly dense blocks and no single one over a row cutoff)
     run the plain self-equi-join. Hot blocks switch to deletion-
@@ -1490,7 +1489,7 @@ def edit_distance_pairs_blocked(
     base = df.select(
         *block_cols, F.col(id_col).alias("__id"), F.col(name_col).alias("__nm")
     )
-    # r12 (guide §1.2 per-task work): strip the GLOBAL common name
+    # guide §1.2 per-task work: strip the GLOBAL common name
     # prefix before anything touches __nm. Levenshtein is invariant
     # under removing a prefix common to both arguments, every name
     # shares the common prefix of lexicographic min/max (UTF-8 byte
@@ -1500,11 +1499,10 @@ def edit_distance_pairs_blocked(
     # Spark's levenshtein does not trim internally (microbenched ~2x
     # on fixed-format names). So the DP verify, the deletion-variant
     # fan-out (C(L,2) keys on the SHORTER stripped length), and the
-    # emitted name_dist are all exact-identical. NOTE (r12 ADVICE):
-    # the probe is an EAGER driver-blocking 1-row min/max job at
-    # plan-construction time — memoized per (session, input plan) in
-    # session.global_common_prefix_len, so only the FIRST invocation
-    # on a given input pays the scan.
+    # emitted name_dist are all exact-identical. The probe is an
+    # EAGER driver-blocking 1-row min/max job at plan-construction
+    # time, run on every build: a prefix measured on other data would
+    # strip characters that differ.
     from ..session import global_common_prefix_len
 
     _pre = global_common_prefix_len(base, "__nm")
@@ -1543,13 +1541,13 @@ def edit_distance_pairs_blocked(
         # integer) necessary condition that spares the O(len_a *
         # len_b) DP on every pair it rejects. No-op on uniform-length
         # name corpora (this testdata post-strip), real on
-        # heterogeneous names at scale (r13; VERDICT item 3). NOTE the
+        # heterogeneous names at scale. NOTE the
         # known double-DP on SURVIVORS stays by choice: the filter
         # predicate and the name_dist projection each evaluate the
         # 2-arg DP once, but survivors are output-sized, and the
         # single-eval alternative — the 3-arg banded levenshtein — is
         # ~2x slower PER CALL at the short post-strip lengths this
-        # operator produces (r12 microbench), i.e. worse on every pair
+        # operator produces (microbenched), i.e. worse on every pair
         # instead of 2x on the few that match.
         joined = joined.where(
             F.abs(F.length("__nm_a") - F.length("__nm_b")) <= max_dist

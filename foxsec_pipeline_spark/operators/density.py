@@ -1,7 +1,7 @@
 """Density-aware hot-group detection shared by the quadratic-in-a-
 block operators (`account_creation_dist`, `record_linkage_blocking`).
 
-The r7 step-up measured the failure mode this module exists for: a
+A 10x step-up measured the failure mode this module exists for: a
 single-group row-count cutoff (100k) never engages when the data is
 UNIFORMLY dense — 25 groups of 6k rows each is 450M exact pairs and
 no group is individually "hot". The right trigger is the total

@@ -1,4 +1,4 @@
-"""Detector-family operators closing the round-1 coverage gaps:
+"""Detector-family operators:
 Gatekeeper ETD, AwsBehavior event matching, the five remaining AMO
 heuristics, and the remaining Customs detectors.
 

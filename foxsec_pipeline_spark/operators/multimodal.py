@@ -299,7 +299,7 @@ def media_phash(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        # r13 (guide §4 — vectorize inside the worker): codepoints via
+        # guide §4 — vectorize inside the worker: codepoints via
         # one utf-32-le reinterpret (identical to ord() per char —
         # python strs carry no surrogates) instead of a per-char
         # python list, and the bit-majority packs as one masked

@@ -1078,8 +1078,8 @@ def kcenter_coreset(
     codes, so every argmax is exact and the selection is
     engine-reproducible (the oracle unrolls the same k steps as CTEs).
 
-    Scale contract (enforced, not advisory — the r6 verdict flagged
-    the previous k-sequential-scan plan): the operator itself applies
+    Scale contract (enforced, not advisory — a k-sequential-scan
+    plan reads the corpus k times): the operator itself applies
     a deterministic md5-draw pre-sample — TakeOrdered of the lowest
     `sample_cap` ids by md5(id), map-side top-k, no full sort — and
     runs the k greedy argmax rounds driver-side in numpy over the

@@ -85,7 +85,7 @@ def language_id(
     the operator shape (map-side projection, argmax over a struct
     array) is identical.
 
-    ``carry_cols`` (r13): extra input columns projected through the
+    ``carry_cols``: extra input columns projected through the
     one map pass (appended after the standard output columns), so a
     consumer that needs e.g. `source` alongside pred_lang does not
     re-scan the corpus and join the two passes back on doc_id
@@ -628,18 +628,15 @@ def bpe_train(
     of magnitude smaller than the corpus). Returns (merge_rank,
     left_sym, right_sym, pair_count).
 
-    r13 loop mechanics: each round's top-1 pair is a BOUNDED 1-row
+    Loop mechanics: each round's top-1 pair is a BOUNDED 1-row
     driver collect (the kmeans/IVF codebook posture — a trained
     tokenizer's merge table IS the model artifact, and collecting it
     driver-side is how every real BPE trainer works) and is applied
-    to the vocab repr as LITERAL strings. The r12 form instead
-    broadcast the top-1 row back and joined per round, which cost a
-    broadcast-exchange job + a lazy-checkpoint materialization per
-    round — 21 sequential jobs for 6 merges at sf0.1 (measured;
-    ~8 after this rewrite, interleaved A/B in OPTIMIZATION_r13.md).
-    The learned merge list (<= n_merges tuples) is memoized per
-    (session, words plan) via plan_stat_memo, the same posture as
-    the PQ/IVF _TRAINED_CACHE two rounds of judges have audited.
+    to the vocab repr as LITERAL strings. Broadcasting the top-1 row
+    back and joining per round instead costs a broadcast-exchange job
+    + a lazy-checkpoint materialization per round — 21 sequential jobs
+    for 6 merges at sf0.1, against ~8 in this form. The merge list is
+    query output, so every build trains it on the input as it is now.
     """
     merges = bpe_train_merge_list(df, n_merges, text_col)
     return df.sparkSession.createDataFrame(
@@ -657,72 +654,61 @@ def bpe_train_merge_list(
     """The trained merge rules of :func:`bpe_train` as a plain list of
     (merge_rank, left_sym, right_sym, pair_count) tuples — the form
     :func:`bpe_segment_counts` consumes."""
-    from ..session import plan_stat_memo
-
-    # the ONE corpus-scale pass; materialized once per (session, plan,
-    # n_merges) via the memo probe below (the merge rounds never
-    # re-scan the corpus). The literal __n_merges column exists ONLY
-    # to make the memo key n-aware: a 4-merge and a 6-merge training
-    # over the same corpus must not alias.
-    words = (
+    # the ONE corpus-scale pass, checkpointed eagerly so the merge
+    # rounds never re-scan the corpus
+    cur = (
         df.select(F.explode(tokens(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("wc"))
-        .withColumn("__n_merges", F.lit(int(n_merges)))
-    )
-
-    def _train(words_plan) -> list[tuple]:
-        cur = words_plan.drop("__n_merges").localCheckpoint(
-            eager=True
-        ).select(
+        .localCheckpoint(eager=True)
+        .select(
             "word",
             "wc",
             F.regexp_replace("word", "(.)", "<$1>").alias("repr"),
         )
-        merges: list[tuple] = []
-        for r in range(int(n_merges)):
-            syms = F.expr("regexp_extract_all(repr, '<([^>]*)>', 1)")
-            pairs = (
-                cur.withColumn("syms", syms)
-                .where(F.size("syms") >= 2)
-                .select(
-                    "wc",
-                    F.explode(
-                        F.expr(
-                            "transform(sequence(1, size(syms) - 1), "
-                            "i -> concat(element_at(syms, i), chr(1), "
-                            "element_at(syms, i + 1)))"
-                        )
-                    ).alias("pair"),
-                )
-                .groupBy("pair")
-                .agg(F.sum("wc").alias("pair_count"))
+    )
+    merges: list[tuple] = []
+    for r in range(int(n_merges)):
+        syms = F.expr("regexp_extract_all(repr, '<([^>]*)>', 1)")
+        pairs = (
+            cur.withColumn("syms", syms)
+            .where(F.size("syms") >= 2)
+            .select(
+                "wc",
+                F.explode(
+                    F.expr(
+                        "transform(sequence(1, size(syms) - 1), "
+                        "i -> concat(element_at(syms, i), chr(1), "
+                        "element_at(syms, i + 1)))"
+                    )
+                ).alias("pair"),
             )
-            row = (
-                pairs.orderBy(F.col("pair_count").desc(), "pair")
-                .limit(1)
-                .collect()
-            )
-            if not row:
-                break
-            pair, pair_count = row[0]["pair"], row[0]["pair_count"]
-            left, _, right = pair.partition("\x01")
-            merges.append((r, left, right, int(pair_count)))
-            # literal replace — vocab-sized map projection, no join,
-            # no broadcast (F.lit, not an f-string into SQL: symbols
-            # from arbitrary corpora may carry quote chars); lazy
-            # checkpoint still cuts the O(rounds^2) lineage growth
-            cur = cur.withColumn(
-                "repr",
-                F.replace(
-                    F.col("repr"),
-                    F.lit(f"<{left}><{right}>"),
-                    F.lit(f"<{left}{right}>"),
-                ),
-            ).localCheckpoint(eager=False)
-        return merges
-
-    return plan_stat_memo(words, _train)
+            .groupBy("pair")
+            .agg(F.sum("wc").alias("pair_count"))
+        )
+        row = (
+            pairs.orderBy(F.col("pair_count").desc(), "pair")
+            .limit(1)
+            .collect()
+        )
+        if not row:
+            break
+        pair, pair_count = row[0]["pair"], row[0]["pair_count"]
+        left, _, right = pair.partition("\x01")
+        merges.append((r, left, right, int(pair_count)))
+        # literal replace — vocab-sized map projection, no join, no
+        # broadcast (F.lit, not an f-string into SQL: symbols from
+        # arbitrary corpora may carry quote chars); lazy checkpoint
+        # still cuts the O(rounds^2) lineage growth
+        cur = cur.withColumn(
+            "repr",
+            F.replace(
+                F.col("repr"),
+                F.lit(f"<{left}><{right}>"),
+                F.lit(f"<{left}{right}>"),
+            ),
+        ).localCheckpoint(eager=False)
+    return merges
 
 
 def bpe_segment_counts(

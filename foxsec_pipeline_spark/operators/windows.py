@@ -95,10 +95,17 @@ def beam_session_gap(gap: str) -> Column:
 
     session_window requires CalendarIntervalType (interval arithmetic
     yields DayTimeIntervalType, which it rejects), so the gap is
-    re-emitted through make_interval.
+    re-emitted through make_interval, its seconds written from integer
+    microseconds. The minimum gap is 2 microseconds: a 1 microsecond
+    gap leaves a zero-length session, and Spark drops every row of it.
     """
-    total = duration_micros(gap) / 1_000_000
-    return F.expr(f"make_interval(0,0,0,0,0,0,{total - 1e-6:.6f})")
+    micros = duration_micros(gap)
+    if micros < 2:
+        raise ValueError(
+            f"session gap {gap!r} is below the 2 microsecond minimum"
+        )
+    secs, frac = divmod(micros - 1, 1_000_000)
+    return F.expr(f"make_interval(0,0,0,0,0,0,{secs}.{frac:06d})")
 
 
 def gap_session(ts, gap: str) -> Column:

@@ -695,7 +695,7 @@ def strip_envelopes(df: DataFrame, value_col: str = "value") -> DataFrame:
     # BATCHED withColumns, not a withColumn chain: every withColumn is
     # a full analyzer pass over a plan that carries the WIDE_SCHEMA
     # from_json tree, and eleven chained passes cost ~1.4 s of pure
-    # DRIVER time per parse_events call (measured at r9; 4 batched
+    # DRIVER time per parse_events call (measured; 4 batched
     # passes bring envelope attachment to ~0.3 s). Batches follow the
     # dependency layers: (j, m, a0) <- mt <- moz_*/sd/payload_text
     # <- envelope_ts. The a0 parse is gated on the _id marker so the

@@ -106,7 +106,7 @@ FROM counts GROUP BY 1
         "ThresholdAnalysis broadcasts. The mean is emitted in exact integer "
         "micros ((sum*1e6) DIV count) so the cross-engine hash is "
         "deterministic — Spark round() and DuckDB round() disagree on "
-        "half-ulp doubles (the r01 hash mismatch)",
+        "half-ulp doubles",
 )
 def q_global_stats(spark, sf_dir):
     counts = windowed_counts(

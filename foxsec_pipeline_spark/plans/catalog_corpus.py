@@ -1,4 +1,4 @@
-"""Catalog tranche (round 6): corpus-preparation additions — RAG
+"""Catalog tranche: corpus-preparation additions — RAG
 passage chunking, exact-substring duplication mass (the
 suffix-array-free ExactSubstr form), a Count-Min heavy-hitter sketch,
 and an epoch/mixture repetition planner.
@@ -483,10 +483,10 @@ def q_bpe_token_counts(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir)
-    # r13: literal merge rules (zero joins in the segmentation pass)
-    # and n_tokens carried through that same pass — the old shape
-    # scanned documents a second time just to re-tokenize for the
-    # count and joined the scans back on doc_id (guide §2.4)
+    # literal merge rules (zero joins in the segmentation pass) and
+    # n_tokens carried through that same pass, instead of scanning
+    # documents a second time just to re-tokenize for the count and
+    # joining the scans back on doc_id (guide §2.4)
     merges = bpe_train_merge_list(docs, n_merges=_BPE_N)
     seg = bpe_segment_counts(
         docs, merges, _BPE_N,
@@ -843,7 +843,7 @@ FROM scored WHERE n_inter * 5 >= (n_a + n_b - n_inter) * 3
         "(brute-force-verified in tests), unlike the documented "
         "underestimate of the df_cap shingle pruning. The threshold "
         "is the cross-multiplied integer test 5*|∩| >= 3*|∪| — t "
-        "stays rational end to end. Scale (r11, statistics-driven "
+        "stays rational end to end. Scale (statistics-driven "
         "physical choice): candidate emission Sum_w C(prefix_df_w, 2) "
         "is measured against C(n_docs, 2); pair-SPARSE corpora run "
         "chunk-grid candidate generation (hot-token emission spread "

@@ -1,4 +1,4 @@
-"""Catalog tranche (round 7): corpus-curation and graph additions —
+"""Catalog tranche: corpus-curation and graph additions —
 deterministic per-key sampling, an LM-typicality (perplexity-proxy)
 quality filter, DSIR-style importance weights, BM25 retrieval,
 n-gram novelty, canonical-doc selection over dedup clusters, k-core
@@ -30,7 +30,7 @@ from .catalog import register
 # the copurchase edge support threshold is SHARED with the oracle SQL
 # below (kcore's pairs CTE, khop's pairs CTE) and with the
 # catalog_mining copurchase family: one constant, no silent divergence
-# if a caller passes a different min_supp (r10 ADVICE)
+# if a caller passes a different min_supp
 from .catalog_mining import _MIN_PAIR_SUPP
 
 
@@ -374,9 +374,9 @@ WHERE levenshtein(a.c_name, b.c_name) <= 2
         "(nation x market segment), then an edit-distance match rule "
         "(levenshtein <= 2 — identical DP semantics in Spark and "
         "DuckDB). The equi-join on the block key bounds the pair "
-        "space; since r8 the operator carries an EXACT hot-block "
+        "space; the operator carries an EXACT hot-block "
         "guard (operators/dedup.py edit_distance_pairs_blocked): when "
-        "the density-aware work budget trips (the r7 step-up measured "
+        "the density-aware work budget trips (a 10x step-up measured "
         "683.6 s at 10x — 125 uniformly dense blocks, no single one "
         "'hot' by row count), blocks switch to deletion-neighborhood "
         "candidate generation (FastSS: lev<=2 pairs MUST share a "
@@ -535,11 +535,10 @@ GROUP BY f.doc_id
 )
 def q_dsir_importance_weights(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    # r12: aggregate BEFORE the shuffles (guide §2.3). The old shape
-    # kept the exploded token table and fed it to three independent
-    # consumers (src/tgt histograms + the per-doc mean), so every
-    # token row crossed three exchanges and the tokenize+md5 pass ran
-    # three times. Counting per (doc_id, lang, bucket) first caps the
+    # aggregate BEFORE the shuffles (guide §2.3). Feeding the exploded
+    # token table to three independent consumers (src/tgt histograms
+    # + the per-doc mean) sends every token row through three
+    # exchanges and runs the tokenize+md5 pass three times. Counting per (doc_id, lang, bucket) first caps the
     # relation at 64 rows/doc, lets the partial (map-side) aggregate
     # shrink the one remaining wide exchange, and the identical
     # subtree under all three consumers collapses to a single shared
@@ -663,7 +662,7 @@ FROM ranked WHERE rank <= {_BM25_TOPK}
 )
 def q_bm25_topk_retrieval(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    # r12 note: a (doc_id, w) pre-aggregate shared by the three token
+    # a (doc_id, w) pre-aggregate shared by the three token
     # consumers was A/B'd and REJECTED (+0.4 s interleaved): this
     # query's existing aggregates all shrink to tiny exchanges via
     # map-side partial agg (dl <= n_docs rows, qterms <= vocab rows,
@@ -762,8 +761,7 @@ def _kcore_oracle(k: int, rounds: int) -> str:
     # k is DATA-ADAPTIVE (kprm): the sparse-support co-purchase graph
     # thins as the corpus grows (pair support >= 2 is rare when part
     # cardinality scales with orders), so a fixed k=3 empties the
-    # 4-round peel above ~100k lineitems — the r9 verdict's vacuous
-    # step-up row. Both engines evaluate the identical rule, so
+    # 4-round peel above ~100k lineitems (a vacuous step-up row). Both engines evaluate the identical rule, so
     # results stay engine-exact at every scale.
     parts = [
         f"""
@@ -834,11 +832,9 @@ def q_kcore_decomposition(spark, sf_dir):
     # race measured on the pagerank edge table at 10x).
     edges = _copurchase_edges(li).localCheckpoint()
     # the oracle's kprm rule, evaluated identically (one metadata-cheap
-    # count action — the bounded-scalar-collect posture, memoized per
-    # (session, plan) like every plan-build statistic since r13)
-    from ..session import plan_stat_memo
-
-    n_li = plan_stat_memo(li, lambda p: p.count())
+    # count action per build: k decides the output, so it must count
+    # the input as it is now)
+    n_li = li.count()
     k = _KCORE_K if n_li < _KCORE_N_SMALL else _KCORE_K_LARGE
     for r in range(_KCORE_ROUNDS):
         deg = edges.groupBy(F.col("u").alias("node")).agg(
@@ -856,7 +852,7 @@ def q_kcore_decomposition(spark, sf_dir):
         # agg + semi-join left side) — checkpoint those; the LAST
         # round feeds only the final aggregate, whose plan reads the
         # previous (materialized) round's RDD, so the closing
-        # checkpoint job is pure waste (r13: one fewer sequential job)
+        # checkpoint job is pure waste (one fewer sequential job)
         if r != _KCORE_ROUNDS - 1:
             edges = edges.localCheckpoint()
     return edges.groupBy(F.col("u").alias("part")).agg(
@@ -950,11 +946,11 @@ def q_tokenizer_fertility(spark, sf_dir):
     from .catalog_corpus import _BPE_N
 
     docs = _docs(spark, sf_dir)
-    # r13: literal merge rules + every per-doc column carried through
-    # the ONE segmentation pass (carry_cols) — the old shape scanned
-    # documents twice and joined the two scans back on doc_id (6
-    # broadcast-join rounds + 1 SMJ/BHJ exchange pair), all for
-    # columns derivable from the same row (guide §2.4)
+    # literal merge rules + every per-doc column carried through the
+    # ONE segmentation pass (carry_cols), instead of scanning documents
+    # twice and joining the two scans back on doc_id (6 broadcast-join
+    # rounds + 1 SMJ/BHJ exchange pair), all for columns derivable
+    # from the same row (guide §2.4)
     merges = bpe_train_merge_list(docs, n_merges=_BPE_N)
     seg = bpe_segment_counts(
         docs, merges, _BPE_N,
@@ -1391,7 +1387,7 @@ def q_khop_reachability(spark, sf_dir):
         # frontier is small here so lazy happened to measure fine, but
         # the race is latent; eager matches the five sibling sites
         # (pagerank, kcore, triangles, frequent_itemsets, link_jaccard).
-        # LAST round excepted (r13): it feeds only the final per-seed
+        # LAST round excepted: it feeds only the final per-seed
         # aggregate — one consumer, so the closing checkpoint job is
         # pure waste (the plan still reads the previous round's
         # materialized RDD twice, which is safe).

@@ -64,12 +64,12 @@ def q_dedup_exact(spark, sf_dir):
     return exact_dedup(_docs(spark, sf_dir))
 
 
-# Fixed-count eval/probe split for the decontamination family (r9):
-# the probe set is the top-K documents by a pure-arithmetic int64 hash
+# Fixed-count eval/probe split for the decontamination family: the
+# probe set is the top-K documents by a pure-arithmetic int64 hash
 # both engines compute identically — a FIXED-size benchmark split like
 # a real eval set, not a corpus-proportional `doc_id % k` slice (the
-# same scale anti-pattern the r8 verdict flagged on the ANN evals: a
-# % k probe side grows with the corpus, breaking the broadcast and
+# same scale anti-pattern as a `% k` ANN eval: a % k probe side grows
+# with the corpus, breaking the broadcast and
 # making gram-join work superlinear — decontaminate measured 14.1x
 # wall at the 10x step-up). Spark resolves the K ids once per
 # (sf_dir, k) with a TakeOrderedAndProject + bounded collect (an eval
@@ -769,7 +769,7 @@ def q_embedding_int8_quantize(spark, sf_dir):
   SELECT cell, label, c,
          row_number() OVER (PARTITION BY cell ORDER BY c DESC, label) AS rn,
          -- CAST: DuckDB's sum(BIGINT) widens to HUGEINT, which the driver's
-         -- value-hash canonicalizes differently from int64 (judge r4)
+         -- value-hash canonicalizes differently from int64
          CAST(sum(c) OVER (PARTITION BY cell) AS BIGINT) AS n_vecs
   FROM lab
 )
@@ -1243,7 +1243,7 @@ GROUP BY 1
         "overlap count — the n-gram overlap rule that keeps test sets "
         "out of training corpora. The eval split is FIXED-COUNT "
         "(top-K by the shared deterministic hash — a real benchmark "
-        "has constant size; the pre-r9 `doc_id % 50` slice grew with "
+        "has constant size; a `doc_id % 50` slice grows with "
         "the corpus, measured 14.1x wall at the 10x step-up). Probe "
         "shingles BROADCAST (and stay broadcastable at ANY corpus "
         "size now); the corpus is one shingle pass + a map-side "
@@ -1379,10 +1379,9 @@ FROM joined
         "doc_id/content-hash",
 )
 def q_quality_filter_pipeline(spark, sf_dir):
-    # r13 (guide §2.1/§2.4): all four gate signals are PER-ROW
-    # functions of the one documents row, so they compute in ONE
-    # map-side projection — the r12 shape built four separate metric
-    # frames (quality_score, language_id, repetition_stats, the
+    # guide §2.1/§2.4: all four gate signals are PER-ROW functions
+    # of the one documents row, so they compute in ONE map-side
+    # projection instead of four separate metric frames (quality_score, language_id, repetition_stats, the
     # fingerprint) and joined them back on doc_id (4 joins + the
     # repetition window/agg pair + a keeper agg+join: 11 exchanges,
     # 5 scans). The only non-map signal, the exact-dedup keeper, is
@@ -2108,8 +2107,8 @@ def q_customer_order_distribution(spark, sf_dir):
 # scale-safe banding for the simhash pairs query: a 60-bit
 # fingerprint sliced into 3 bands gives 2^20 bucket keys per band
 # (the phash family's 63-bit/3-band shape), so banded pair volume
-# stays ~linear in corpus size — the r9 16-bit/2-band parametrization
-# had only 256 keys per band, making bucket size ~ N/256 and pair
+# stays ~linear in corpus size — a 16-bit/2-band parametrization
+# has only 256 keys per band, making bucket size ~ N/256 and pair
 # volume ~ N^2/128 at scale. bits <= 60 keeps every token hash and
 # bit weight inside a signed 64-bit long in BOTH engines.
 _SIMHASH_PAIR_BITS = 60
@@ -2155,8 +2154,8 @@ WHERE bit_count(xor(a.sh, b.sh)) <= {_SIMHASH_PAIR_MAXHAM}
         "to the all-pairs scan the oracle runs. One shuffle on the "
         "band-slice key; 20-bit slices give 2^20 bucket keys per "
         "band, so pair volume is sum-of-bucket-squares over ~1M-key "
-        "buckets — ~linear in corpus size, never corpus^2 (the r9 "
-        "16-bit/2-band form's 256-key bands were quadratic at 100x)",
+        "buckets — ~linear in corpus size, never corpus^2 (a "
+        "16-bit/2-band form's 256-key bands are quadratic at 100x)",
 )
 def q_dedup_simhash_pairs(spark, sf_dir):
     from ..operators.dedup import simhash_hamming_pairs
@@ -2206,16 +2205,14 @@ def q_tfidf_top_terms(spark, sf_dir):
     from ..functions.text import tokens
 
     docs = _docs(spark, sf_dir)
-    # bounded plan-build statistic (feeds the score literal), memoized
-    # per (session, plan) so bench reps skip the extra count job
-    from ..session import plan_stat_memo
-
-    n_docs = plan_stat_memo(docs, lambda p: p.count())
+    # one eager count job per build: N feeds the score literal, so it
+    # must count the input as it is now
+    n_docs = docs.count()
     tok = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("term")
     )
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    # r13: document frequency as COUNT OVER (PARTITION BY term) on the
+    # document frequency as COUNT OVER (PARTITION BY term) on the
     # tf table itself — one exchange on term — instead of a vocab
     # hash-agg plus an equi-join back on term (two exchanges + a join;
     # the duplicate_ngram_fraction corpus-frequency-as-window lesson,
@@ -2519,7 +2516,7 @@ def q_doc_language_mix(spark, sf_dir):
     from ..operators.textanalysis import language_id
 
     docs = _docs(spark, sf_dir)
-    # r13: source rides the one language_id map pass (carry_cols)
+    # source rides the one language_id map pass (carry_cols)
     # instead of a second documents scan joined back on doc_id
     lid = language_id(docs, carry_cols=("source",)).select(
         "doc_id", "pred_lang", "source"
@@ -2865,11 +2862,10 @@ def q_oov_rate_filter(spark, sf_dir):
     from ..functions.text import tokens
 
     docs = _docs(spark, sf_dir).where(F.length(F.trim("text")) > 0)
-    # r12: one (doc_id, token) count aggregate replaces two
-    # independent consumers of the raw exploded token table (the
-    # vocab top-20 and the per-doc scorer each re-ran
-    # scan+tokenize+explode; guide §2.3 — aggregate before you
-    # shuffle). The identical subtree under both consumers collapses
+    # one (doc_id, token) count aggregate feeds both consumers
+    # instead of the raw exploded token table (the vocab top-20 and
+    # the per-doc scorer would each re-run scan+tokenize+explode;
+    # guide §2.3 — aggregate before you shuffle). The identical subtree under both consumers collapses
     # to one shared exchange at runtime, and count(1) over tokens ==
     # sum(c) over (doc, token) groups exactly, so values and the
     # deterministic top-20 tie-break are unchanged.

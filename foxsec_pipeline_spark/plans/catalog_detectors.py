@@ -1,12 +1,12 @@
-"""Catalog tranche 6: the round-2 detector families — Gatekeeper ETD,
+"""Catalog tranche: the detector families — Gatekeeper ETD,
 AwsBehavior event matchers, the five remaining AMO heuristics, and the
 remaining Customs detectors (distributed login failure, content-server
 variance gate, activity monitor, the comparator/at-risk state pair,
 CustomsAlert fan-out).
 
 Each query synthesizes the detector's input columns deterministically
-from the driver's events table (same technique as the r01 customs
-tranche) so the DuckDB oracle can state the expected output in pure
+from the driver's events table (same technique as the customs
+queries) so the DuckDB oracle can state the expected output in pure
 SQL.
 """
 

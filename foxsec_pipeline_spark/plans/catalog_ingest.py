@@ -1,4 +1,4 @@
-"""Catalog tranche (round 4): ingestion & serving shapes — CDC
+"""Catalog tranche: ingestion & serving shapes — CDC
 changelog apply, replay-window dedup, deterministic quantile
 sampling, fixed-width histograms, ROLLUP readouts, URL
 canonicalization, full clickstream sessionization, time-of-day pivot
@@ -443,8 +443,8 @@ GROUP BY 1, 2 HAVING count(*) >= 2
         "generalization of the reference's source correlator "
         "(`SourceCorrelation.java` family). Two bounds keep the "
         "per-cell pair fan-out from exploding on a credential-stuffed "
-        "account that sees 1e4-1e5 distinct addresses in one hour "
-        "(r4 judge finding): (1) a LOSSLESS pre-filter — an address in "
+        "account that sees 1e4-1e5 distinct addresses in one hour: "
+        "(1) a LOSSLESS pre-filter — an address in "
         "fewer than 2 distinct (user,hour) cells can never reach a "
         "pair with n_shared >= 2, so singleton-cell addresses (the "
         "overwhelming majority under skew) are dropped by a cheap "

@@ -1,4 +1,4 @@
-"""Catalog tranche (round 6, continued): pattern-mining and
+"""Catalog tranche: pattern-mining and
 change-detection analytics — apriori-pruned frequent itemsets,
 exact-integer mean-shift changepoint detection, row-level snapshot
 diff (the CDC primitive between two table versions), and first-order
@@ -103,7 +103,7 @@ def q_frequent_itemsets(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     # EAGER: three concurrent consumers (supp, pair explode, order
     # count) race a lazy checkpoint's cache population into
-    # re-running the basket agg (the pagerank 182-s lesson; r10
+    # re-running the basket agg (the pagerank 182-s lesson;
     # interleaved A/B at sf0.1: 2.98 -> 2.38 s min, spikes gone)
     baskets = (
         li.groupBy("l_orderkey")
@@ -1477,7 +1477,7 @@ def q_copurchase_link_jaccard(spark, sf_dir):
         .where(F.col("_n") >= _MIN_PAIR_SUPP)
         .select("u", "v")
         # EAGER: degree agg + both pair-join probes read this table
-        # concurrently (r10 A/B: 3.86 -> 3.18 s min, 7.7 s spike gone)
+        # concurrently (A/B: 3.86 -> 3.18 s min, 7.7 s spike gone)
         .localCheckpoint()
     )
     deg = (

@@ -1,4 +1,4 @@
-"""Catalog tranche (round 8): data-quality gates, contamination
+"""Catalog tranche: data-quality gates, contamination
 scoring, weighted sampling, embedding QC, range similarity search,
 and SRE/abuse detectors.
 
@@ -180,9 +180,9 @@ def q_contamination_overlap_fraction(spark, sf_dir):
             )
         ).alias("ng"),
     ).distinct()
-    # fixed-count eval split (r9): constant probe size at any corpus
+    # fixed-count eval split: constant probe size at any corpus
     # scale, IN-list pushed into the scan — not a corpus-proportional
-    # % k slice (the r8-flagged anti-pattern)
+    # % k slice, whose probe side grows with the corpus
     from .catalog_data import _probe_doc_ids
 
     probe = _probe_doc_ids(spark, sf_dir, k=50)
@@ -327,8 +327,7 @@ _RANGE_FOLD = (
 # queries (range search / kNN vote / MMR): the query set is the top-K
 # corpus rows by a pure-arithmetic int64 hash BOTH engines compute
 # identically (pre-mod keeps the product < 2^63 for any vec_id).
-# Fixed COUNT — not a corpus-proportional `% k` filter, the r8 weak
-# flag: at Nx data the brute pair work grows K*N (linear) and the
+# Fixed COUNT — not a corpus-proportional `% k` filter: at Nx data the brute pair work grows K*N (linear) and the
 # broadcast query side stays K rows at any corpus size. Spark plans
 # the pick as TakeOrderedAndProject (per-partition top-K + driver
 # merge of K-row heads), never a global sort.
@@ -379,8 +378,8 @@ WHERE query_id <> neighbor_id
         "engines compute identically — Spark plans the pick as "
         "TakeOrderedAndProject, no global sort), one corpus scan, no "
         "corpus shuffle (the same posture as ann_cosine_topk). "
-        "Fixed-count, not corpus-proportional (% k was the r8 weak "
-        "flag): at Nx data the pair work is K*N, linear, and the "
+        "Fixed-count, not corpus-proportional (a % k probe grows "
+        "with the corpus): at Nx data the pair work is K*N, linear, and the "
         "broadcast side stays K rows at any corpus size. The "
         "LSH-bucketed variants (`ann_cosine_lsh*`) are the sub-linear "
         "path when the radius is tight. Scores rounded to 1e-6 with "
@@ -465,7 +464,7 @@ SELECT query_id, neighbor_id, cosine FROM scored WHERE cosine >= 0.2
     _range_ivf_oracle(),
     doc="cosine range (radius) search routed through the TRAINED IVF "
         "cells — the sub-linear production path next to the brute "
-        "`ann_range_search` baseline (the r8 verdict's prescribed "
+        "`ann_range_search` baseline (its "
         "scale fix): corpus work is ONE cell-assignment pass + an "
         "equi-join on the cell id, so at Nx data the candidate count "
         "grows with the probed cells' occupancy, not the corpus "
@@ -903,9 +902,9 @@ def q_mmr_diversified_topk(spark, sf_dir):
         scored.withColumn("rk", F.row_number().over(pw))
         .where(F.col("rk") <= 20)
     )
-    # r12 rewrite (guide §2.4/§4.1): the five selection rounds used to
-    # run as a driver-unrolled chain of per-round join+window+eager-
-    # localCheckpoint jobs — 7 sequential tiny jobs, 2.8 s of pure
+    # one aggregate, not rounds (guide §2.4/§4.1): the five selection
+    # rounds as a driver-unrolled chain of per-round join+window+eager-
+    # localCheckpoint jobs cost 7 sequential tiny jobs, 2.8 s of pure
     # build-time at sf0.1 with the actual compute < 0.1 s. The pool is
     # BOUNDED (20 candidates/query) by construction, so the whole MMR
     # selection fits in one codegen-stage aggregate: collect each
@@ -1318,7 +1317,7 @@ def q_user_feature_snapshot(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Bigram PMI collocations (r9)
+# Bigram PMI collocations
 
 
 @register(
@@ -1399,7 +1398,7 @@ def q_bigram_pmi_collocations(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Token Simpson concentration index (r9)
+# Token Simpson concentration index
 
 
 @register(
@@ -1458,7 +1457,7 @@ def q_token_simpson_index(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Duplicate n-gram fraction (r9)
+# Duplicate n-gram fraction
 
 
 @register(
@@ -1531,7 +1530,7 @@ def q_duplicate_ngram_fraction(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Multi-window multi-burn-rate SLO alert (r9)
+# Multi-window multi-burn-rate SLO alert
 
 
 @register(
@@ -1607,7 +1606,7 @@ def q_slo_multiwindow_burn(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Burstiness (Fano factor) per user (r9)
+# Burstiness (Fano factor) per user
 
 
 @register(
@@ -1671,7 +1670,7 @@ def q_burstiness_fano_factor(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# MinHash Jaccard estimator error (r9)
+# MinHash Jaccard estimator error
 
 
 def _mh_est_error_oracle() -> str:
@@ -1749,8 +1748,8 @@ def q_minhash_jaccard_estimate_error(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     from ..operators.dedup import _shingle_arrays
 
-    # r13 second pass: shingles come from the map-side array kernel
-    # (zero exchanges before the distinct — the window-lead form paid
+    # shingles come from the map-side array kernel
+    # (zero exchanges before the distinct — a window-lead form pays
     # an Exchange(doc_id) + Sort over the full token stream first).
     # The (doc_id, h) `.distinct()` STAYS: per-doc string-distinct is
     # finer than mod-P hash-distinct, so the distinct preserves the
@@ -1763,11 +1762,10 @@ def q_minhash_jaccard_estimate_error(spark, sf_dir):
             (md5_bucket(F.col("__s")) % F.lit(MINHASH_P)).alias("h"),
         )
         .distinct()
-        # r13: EAGER checkpoint — hsh has FIVE consumers (cand's
-        # banding, nsh, mh, ha, hb) and the committed r12 before-plan
-        # showed the tokenize->Window->md5 shingle pipeline replicated
-        # NINE times (9 parquet scans / 9 Windows, zero ReusedExchange
-        # in the initial plan). Materializing the distinct hash table
+        # EAGER checkpoint — hsh has FIVE consumers (cand's banding,
+        # nsh, mh, ha, hb); without the cut the plan replicated the
+        # tokenize->md5 shingle pipeline NINE times (9 parquet scans,
+        # zero ReusedExchange in the initial plan). Materializing the distinct hash table
         # once collapses those to one corpus pass + 8 reads of the
         # checkpoint (guide §2.4); interleaved A/B at sf0.1:
         # means 2.6 -> 2.0 s, mins 2.03 -> 1.80 s, output identical.
@@ -1775,10 +1773,10 @@ def q_minhash_jaccard_estimate_error(spark, sf_dir):
     )
     # the candidate leg reuses hsh's shingle hashes (min per
     # permutation is duplicate-insensitive, so the distinct hash set
-    # yields the identical signature): before r12 minhash_lsh_pairs
-    # rebuilt its own corpus tokenize->window->md5 pipeline, so the
-    # corpus shingle pass ran TWICE per query (guide §2.4 — now one
-    # subtree, ReuseExchange serves cand + ha/hb + mh alike)
+    # yields the identical signature): if minhash_lsh_pairs rebuilt
+    # its own corpus tokenize->md5 pipeline, the corpus shingle pass
+    # would run TWICE per query (guide §2.4 — one subtree,
+    # ReuseExchange serves cand + ha/hb + mh alike)
     cand = minhash_lsh_pairs(
         docs, n=3, num_hashes=8, band_size=2,
         hashed=hsh.select("doc_id", F.col("h").alias("__h")),
@@ -1833,7 +1831,7 @@ def q_minhash_jaccard_estimate_error(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Banded near-dup pair RECALL eval (r11)
+# Banded near-dup pair RECALL eval
 
 
 def _neardup_recall_oracle() -> str:
@@ -1998,15 +1996,14 @@ def q_neardup_pair_recall(spark, sf_dir):
     # shingle join, minhash banding, simhash banding); un-checkpointed,
     # each leg re-scans documents and re-tokenizes the slice (tokens()
     # evaluates in the filter AND the projection), so the slice build
-    # ran 3x per query (r12: eager cut here measured 5.99 -> 4.42 s
+    # ran 3x per query (the eager cut here measured 5.99 -> 4.42 s
     # steady at sf0.1, identical output — guide §2.4, one pass instead
     # of three over the same subtree)
     aug = base.unionByName(variants).localCheckpoint()
     # truth has THREE consumers (n_true agg + two semijoins) but is
-    # NOT checkpointed since r12: all three legs live in one final
-    # plan, so ReuseExchange serves the shared shingle-join subtree
-    # (the redundant eager checkpoint cost a full extra job; removing
-    # it was part of the r12 4.15x on this query)
+    # NOT checkpointed: all three legs live in one final plan, so
+    # ReuseExchange serves the shared shingle-join subtree (an eager
+    # checkpoint costs a full extra job)
     truth = (
         ngram_jaccard_pairs(aug, n=3, threshold=0.5, df_cap=64)
         .select("doc_a", "doc_b")

@@ -84,7 +84,7 @@ def q_small_lot_revenue(spark, sf_dir):
 WITH big AS (
   -- outer CAST: DuckDB widens sum(BIGINT) to HUGEINT (int128), which the
   -- driver's value-hash canonicalizes differently from int64 even when
-  -- every value is equal (judge-diagnosed r4) — force it back to BIGINT
+  -- every value is equal — force it back to BIGINT
   SELECT l_orderkey, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
   FROM lineitem GROUP BY 1
   HAVING sum(CAST(l_quantity AS BIGINT)) > 300

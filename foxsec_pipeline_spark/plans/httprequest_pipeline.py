@@ -10,9 +10,12 @@ stream and formatted.
 
 Spark shape: one events DataFrame -> N heuristic DataFrames ->
 `unionByName` -> `to_alerts` projections. Each leg is a pure function
-of the shared input, so Spark reuses the scan (or an explicit
-`.persist()` caches the parsed stream once for all legs). The toggle
-config is the dataclass below — the HTTPRequestMultiMode JSON maps
+of the shared input, but the union plans that input once per leg: a
+batch run and every streaming micro-batch scan and parse the input
+once for each enabled heuristic (one `Relation` scan and one parse
+chain per leg in the optimized plan). Reading it once needs the
+parsed events persisted first (`.persist()` in batch, a persisted
+frame inside `foreachBatch` in streaming). The toggle config is the dataclass below — the HTTPRequestMultiMode JSON maps
 onto it 1:1.
 """
 

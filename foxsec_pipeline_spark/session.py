@@ -82,7 +82,7 @@ def _nano_ts_columns(path: str) -> list[str]:
 # of per-call driver work (pyarrow footer probe, spark.read.parquet
 # file listing + schema resolution over py4j, the timestamp-cast
 # withColumns) that every query re-paid on every bench rep. Keyed on
-# the SESSION OBJECT (r12 ADVICE): DataFrames and temp views are
+# the SESSION OBJECT: DataFrames and temp views are
 # SparkSession-scoped, and `spark.newSession()` shares the
 # applicationId, so an app-id key could serve a DataFrame whose
 # createOrReplaceTempView lands in another session's catalog. The weak
@@ -164,24 +164,21 @@ def gateway_memo(key: tuple, build):
 
 
 # SparkSession (weak) -> [(analyzed probe jplan, bounded value), ...].
-# Statistics memo: every cached value is a BOUNDED plan-construction
-# value (a 1-row scalar, a <=64-row bucket profile or a trained merge
-# list — the Catalyst-statistics posture), keyed by EXACT plan
-# identity via Catalyst sameResult (canonicalized comparison, no
-# hash-collision hazard), so the same logical input always reproduces
-# the same statistic and a different input can never alias. r12
-# verdict item 8: before this memo every invocation of a
-# statistics-driven operator (Levenshtein prefix strip, density hot
-# split) re-ran its full-column probe scan at PLAN-BUILD time —
-# O(corpus) driver-blocking work per call even when the downstream
-# work was small. Most of these statistics only shape the plan (strip
-# width, hot cutoff), and the plan recomputes from parquet. Three
-# callers memoize values that ARE query output: the trained merge list
-# of `bpe_train_merge_list` (operators/textanalysis.py), tfidf's
-# `n_docs` (plans/catalog_data.py) and kcore's `n_li`
-# (plans/catalog_curation.py). The key is the analyzed plan, not the
-# files under it, so those three assume their input does not change
-# within a session (ROADMAP open item 4).
+# Statistics memo for values that only SHAPE a plan: the density
+# bucket profile (operators/density.py) and the prefix-Jaccard path,
+# pair-exchange width and broadcast estimates (operators/dedup.py).
+# Each is a bounded plan-construction value (a 1-row scalar or a
+# <=64-row bucket profile) keyed by exact plan identity via Catalyst
+# sameResult, so repeat builds on the same logical input skip the
+# probe scan. The key is the analyzed plan, not the files under it, so
+# after the files change a stale value picks the path for the old
+# data: the exact paths return the same rows either way, but the
+# density split also decides which groups take the approximate
+# hot-group strategy of `customs.account_creation_dist`. A statistic
+# that feeds the RESULT directly (a common prefix stripped before a
+# distance, a trained merge list, a count used in a score or a
+# threshold) must not come from here; it is computed in the build
+# that uses it.
 _PLAN_STAT_CACHE: "weakref.WeakKeyDictionary[SparkSession, list]" = (
     weakref.WeakKeyDictionary()
 )
@@ -212,21 +209,17 @@ def global_common_prefix_len(df, col_name: str) -> int:
     of its lexicographic min and max (any value outside that prefix
     would sort outside the [min, max] band; UTF-8 byte order is
     code-point order, so python commonprefix matches Spark's string
-    min/max). Runs ONE eager 1-row min/max aggregate the first time a
-    given input plan is seen in a session (plan_stat_memo).
+    min/max). Runs ONE eager 1-row min/max aggregate per call: the
+    prefix is stripped from the values the caller compares, so it must
+    describe the input as it is now.
     """
     from pyspark.sql import functions as F
     import os.path as _osp
 
-    probe = df.select(
+    row = df.select(
         F.min(F.col(col_name)).alias("__mn"),
         F.max(F.col(col_name)).alias("__mx"),
-    )
-
-    def _run(p):
-        row = p.first()
-        if row is None or row["__mn"] is None or row["__mx"] is None:
-            return 0
-        return len(_osp.commonprefix([row["__mn"], row["__mx"]]))
-
-    return plan_stat_memo(probe, _run)
+    ).first()
+    if row is None or row["__mn"] is None or row["__mx"] is None:
+        return 0
+    return len(_osp.commonprefix([row["__mn"], row["__mx"]]))

@@ -27,11 +27,15 @@ digest there does not prove equal work: `capture` marks such a query
 characters (`plan_chars`) and its number of `from_json` calls
 (`from_json`). An optimizer rule that inlines a wide projection into
 a pushed-down filter multiplies both without changing the output.
+It also records the shape of the physical plan (`shape`): how many
+Exchanges, joins of each kind, file scans, Generates and Python UDF
+evaluations (`BatchEvalPython`/`ArrowEvalPython`) the initial
+adaptive plan holds. `executedPlan()` only plans, so no job runs.
 
-`diff` prints the queries whose digest or row hash differs, the
-queries present on one side only, and the queries whose plan grew to
-more than twice its characters or `from_json` calls; it exits 1 when
-anything differs.
+`diff` prints the queries whose digest, row hash or shape differs
+(with each shape count's change), the queries present on one side
+only, and the queries whose plan grew to more than twice its
+characters or `from_json` calls; it exits 1 when anything differs.
 
 Run `capture` from the root of each checkout with the same `--sf`
 and the same `SPARK_GRAFT_CPUS` (explicit repartition widths follow the
@@ -45,6 +49,7 @@ import json
 import os
 import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -150,6 +155,23 @@ def mask(plan: str) -> str:
     return "\n".join(lines)
 
 
+# physical nodes counted by `shape`
+SHAPE_NODES = (
+    "Exchange", "BroadcastExchange",
+    "SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin",
+    "BroadcastNestedLoopJoin", "CartesianProduct",
+    "FileScan", "Generate", "BatchEvalPython", "ArrowEvalPython",
+)
+_NODE_NAME = re.compile(r"^[: ]*(?:[+:]- )?(?:\*\(\d+\) )?(\w+)", re.M)
+
+
+def shape(physical: str) -> dict[str, int]:
+    """{node name: count} of the SHAPE_NODES in a physical plan's tree
+    string (absent names count 0)."""
+    counts = Counter(m[1] for m in _NODE_NAME.finditer(physical))
+    return {k: counts[k] for k in SHAPE_NODES if counts[k]}
+
+
 def _row_hash(df) -> dict:
     from pyspark.sql import functions as F
 
@@ -172,12 +194,14 @@ def capture(out: str, sf_dir: str, rows: bool, names: list[str]) -> None:
     for name in names or list(reg):
         try:
             df = reg[name].fn(spark, sf_dir)
-            plan = mask(df._jdf.queryExecution().optimizedPlan().toString())
+            qe = df._jdf.queryExecution()
+            plan = mask(qe.optimizedPlan().toString())
             rec = {
                 "plan": hashlib.sha256(plan.encode()).hexdigest(),
                 "schema": df.schema.simpleString(),
                 "plan_chars": len(plan),
                 "from_json": plan.count("from_json("),
+                "shape": shape(qe.executedPlan().toString()),
             }
             if "LogicalRDD" in plan:
                 rec["cut"] = True
@@ -206,27 +230,53 @@ def _grown(a: dict, b: dict) -> list[str]:
     ]
 
 
+def _shape_delta(a: dict, b: dict) -> str:
+    """`Exchange 3 -> 4, Generate 0 -> 2` for the shape counts that
+    differ between two records; a record without shape counts (an
+    older script, or an error) compares nothing."""
+    if "shape" not in a or "shape" not in b:
+        return ""
+    sa, sb = a["shape"], b["shape"]
+    return ", ".join(
+        f"{k} {sa.get(k, 0)} -> {sb.get(k, 0)}"
+        for k in SHAPE_NODES
+        if sa.get(k, 0) != sb.get(k, 0)
+    )
+
+
+def differences(a: dict, b: dict, a_name: str = "A", b_name: str = "B") -> dict[str, list[str]]:
+    """{query: what differs} between two captures, for every query
+    whose digest, schema, row hash, error or shape differs, whose plan
+    grew (`_grown`), or that one side lacks."""
+    out = {}
+    for name in sorted(a.keys() | b.keys()):
+        if name not in a or name not in b:
+            out[name] = [f"only in {a_name if name in a else b_name}"]
+            continue
+        ra, rb = a[name], b[name]
+        fields = [k for k in sorted(ra.keys() | rb.keys())
+                  if k not in (*_SIZES, "shape") and ra.get(k) != rb.get(k)]
+        delta = _shape_delta(ra, rb)
+        if delta:
+            fields.append("shape: " + delta)
+        grown = _grown(ra, rb)
+        if grown:
+            fields.append("plan grew: " + ", ".join(grown))
+        if fields:
+            out[name] = fields
+    return out
+
+
 def diff(a_path: str, b_path: str) -> int:
     with open(a_path) as f:
         a = json.load(f)
     with open(b_path) as f:
         b = json.load(f)
-    differ = 0
-    for name in sorted(a.keys() | b.keys()):
-        if name not in a or name not in b:
-            print(f"{name}: only in {a_path if name in a else b_path}")
-            differ += 1
-            continue
-        fields = [k for k in sorted(a[name].keys() | b[name].keys())
-                  if k not in _SIZES and a[name].get(k) != b[name].get(k)]
-        grown = _grown(a[name], b[name])
-        if grown:
-            fields.append("plan grew: " + ", ".join(grown))
-        if fields:
-            print(f"{name}: {'; '.join(fields)}")
-            differ += 1
-    print(f"{differ} of {len(a.keys() | b.keys())} queries differ")
-    return 1 if differ else 0
+    found = differences(a, b, a_path, b_path)
+    for name, fields in found.items():
+        print(f"{name}: {'; '.join(fields)}")
+    print(f"{len(found)} of {len(a.keys() | b.keys())} queries differ")
+    return 1 if found else 0
 
 
 def main() -> None:

@@ -38,3 +38,36 @@ def test_queries_and_oracles_align():
     assert set(os_) <= set(qs)
     # oracles are non-vacuous strings
     assert all(isinstance(s, str) and "SELECT" in s.upper() for s in os_.values())
+
+
+def test_changed_is_the_digest_difference_in_registry_order():
+    snapshot = {
+        "a": {"plan": "p1", "schema": "struct<x:int>"},
+        "b": {"plan": "p2", "schema": "struct<x:int>"},
+        "c": {"plan": "p3", "n": 4, "hash": "h3", "cut": True},
+        "d": {"plan": "p4"},
+        "f": {"plan": "p6", "plan_chars": 10, "shape": {"Exchange": 1}},
+    }
+    current = {
+        "a": {"plan": "p1", "schema": "struct<x:int>"},
+        "b": {"plan": "p2", "schema": "struct<x:bigint>"},
+        "c": {"plan": "p3", "n": 4, "hash": "h3-new", "cut": True},
+        "d": {"error": "AnalysisException: boom"},
+        "e": {"plan": "p5"},
+        # size and shape fields alone move no query into CHANGED
+        "f": {"plan": "p6", "plan_chars": 99, "shape": {"Exchange": 2}},
+    }
+    names = ["f", "e", "d", "c", "b", "a"]
+    assert entry.changed_between(snapshot, current, names) == ["e", "d", "c", "b"]
+    assert entry.changed_between(current, current, names) == []
+    # a query the current digest lacks (added without a new capture)
+    assert entry.changed_between(snapshot, {}, ["a"]) == ["a"]
+
+
+def test_changed_queries_keep_their_oracle_test_in_the_default_run():
+    from tests.conftest import SLOW_TESTS, slow_tests
+
+    node = "test_catalog.py::test_query_matches_oracle[account_creation_dist]"
+    assert node in SLOW_TESTS
+    assert node not in slow_tests(["account_creation_dist"])
+    assert slow_tests([]) == SLOW_TESTS

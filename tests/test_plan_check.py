@@ -1,8 +1,9 @@
-"""`scripts/plan_check.py mask`: the Expand that rewrites several
+"""`scripts/plan_check.py`: `mask` — the Expand that rewrites several
 distinct aggregates orders its distinct columns and numbers its groups
-per JVM run; the masked plan must not."""
+per JVM run; the masked plan must not — and the physical `shape`
+counts that `diff` reports."""
 
-from scripts.plan_check import mask
+from scripts.plan_check import differences, mask, shape
 
 # one plan as two JVM runs printed it: count(DISTINCT props) and
 # count(DISTINCT event_type) per (window, user_id)
@@ -58,3 +59,44 @@ def test_mask_keeps_a_rewrite_over_another_distinct_column_apart():
         "count(event_type#3) FILTER (WHERE (gid#33 = 1))",
     )
     assert mask(swapped) != mask(RUN_A)
+
+
+# an initial adaptive plan as `executedPlan()` prints it
+PHYSICAL = """\
+AdaptiveSparkPlan isFinalPlan=false
++- Project [doc_id#187L, cluster_size#189L]
+   +- BroadcastHashJoin [vec_b#389L], [vec_b#403L], Inner, BuildRight, false
+      :- SortMergeJoin [doc_id#0L], [node#184L], LeftAnti
+      :  :- Sort [doc_id#0L ASC NULLS FIRST], false, 0
+      :  :  +- Exchange hashpartitioning(doc_id#0L, 4), ENSURE_REQUIREMENTS, [plan_id=973]
+      :  :     +- Generate explode(ids#381), [cell#279L], false, [vec_a#387L]
+      :  :        +- FileScan parquet [doc_id#0L] Batched: true, Format: Parquet
+      :  +- Sort [node#184L ASC NULLS FIRST], false, 0
+      :     +- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=974]
+      :        +- Scan ExistingRDD[node#184L,label#185L]
+      +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, true]),false), [plan_id=1279]
+         +- CartesianProduct
+            :- ArrowEvalPython [score(text#2)#9], [pythonUDF0#10], 200
+            :  +- FileScan parquet [text#2] Batched: true, Format: Parquet
+            +- *(1) BatchEvalPython [norm(x#3)#11], [pythonUDF1#12]
+               +- LocalTableScan [x#3]"""
+
+
+def test_shape_counts_physical_nodes():
+    assert shape(PHYSICAL) == {
+        "Exchange": 2, "BroadcastExchange": 1, "SortMergeJoin": 1,
+        "BroadcastHashJoin": 1, "CartesianProduct": 1, "FileScan": 2,
+        "Generate": 1, "BatchEvalPython": 1, "ArrowEvalPython": 1,
+    }
+    # names inside expressions and non-file scans are not nodes
+    assert shape("Project [Exchange#1, Generate#2]\n+- Scan ExistingRDD[a#1]") == {}
+
+
+def test_diff_reports_shape_deltas():
+    a = {"q": {"plan": "p", "shape": {"Exchange": 2, "Generate": 1}}}
+    b = {"q": {"plan": "p", "shape": {"Exchange": 3, "SortMergeJoin": 1}}}
+    assert differences(a, b) == {
+        "q": ["shape: Exchange 2 -> 3, SortMergeJoin 0 -> 1, Generate 1 -> 0"]
+    }
+    # a capture without shape counts (an older script) compares none
+    assert differences({"q": {"plan": "p"}}, b) == {}

@@ -1,8 +1,9 @@
-"""Focused tests for the r13 plan-construction statistics memo
-(session.plan_stat_memo): bounded statistics (prefix length, density
-buckets, n_docs/emission scalars) are computed ONCE per (session,
-probe plan) and reused on semantically-equal rebuilds — but a
-semantically DIFFERENT probe can never alias into a cached value."""
+"""Focused tests for the plan-construction statistics memo
+(session.plan_stat_memo): plan-shaping statistics (density buckets,
+n_docs/emission scalars) are computed ONCE per (session, probe plan)
+and reused on semantically-equal rebuilds — but a semantically
+DIFFERENT probe can never alias into a cached value, and a statistic
+that feeds the result is measured on the input as it is now."""
 
 from pyspark.sql import functions as F
 
@@ -73,6 +74,28 @@ def test_global_common_prefix_len_values(spark):
     assert global_common_prefix_len(df3, "name") == 0
     df4 = spark.createDataFrame([], "name string")
     assert global_common_prefix_len(df4, "name") == 0
+
+
+def test_prefix_strip_follows_input_overwritten_mid_session(spark, tmp_path):
+    """The common-prefix strip changes the distance it is applied to,
+    so a parquet dir overwritten in the same session must be measured
+    again: a prefix of 17 kept from the first names would leave one
+    character of each new name and pair them at distance 1."""
+    from foxsec_pipeline_spark.operators.dedup import edit_distance_pairs_blocked
+
+    path = str(tmp_path / "names.parquet")
+
+    def pairs(names):
+        spark.createDataFrame(
+            [(1, 1, names[0]), (1, 2, names[1])], "g int, id long, name string"
+        ).write.mode("overwrite").parquet(path)
+        out = edit_distance_pairs_blocked(
+            spark.read.parquet(path), ["g"], "id", "name", max_dist=1
+        )
+        return [(r.id_a, r.id_b, r.name_dist) for r in out.collect()]
+
+    assert pairs(("Customer#000000001", "Customer#000000002")) == [(1, 2, 1)]
+    assert pairs(("Alexander Hamilton", "Benjamin Franklin!")) == []
 
 
 def test_density_split_memoized_profile_still_honors_args(spark):

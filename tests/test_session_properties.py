@@ -89,14 +89,21 @@ def test_spark_window_and_watermark_take_every_spelling(spark, text, micros):
     )
     assert suppress_first_per_key(alerts, ["notify_merge"], expiry=text).count() == 1
     assert merge_for_notification(alerts, window=text).count() == 1
-    # a 1 us gap leaves a zero-length Beam session, which Spark drops
-    assert session_analysis(df, key="k", ts="ts", gap=text).count() == int(micros > 1)
+    if micros == 1:
+        # a 1 us gap would leave a zero-length Beam session, which
+        # Spark drops, so the gap names its minimum instead
+        with pytest.raises(ValueError, match="2 microsecond minimum"):
+            session_analysis(df, key="k", ts="ts", gap=text)
+        with pytest.raises(ValueError, match="2 microsecond minimum"):
+            gap_session("ts", text)
+        return
+    assert session_analysis(df, key="k", ts="ts", gap=text).count() == 1
     sessions = windowed_agg(df, ["k"], gap_session("ts", text), F.count(F.lit(1)))
     assert [
         r[0] for r in sessions.select(
             F.unix_micros("window_end") - F.unix_micros("window_start")
         ).collect()
-    ] == ([micros - 1] if micros > 1 else [])
+    ] == [micros - 1]
 
 
 def test_sessionize_takes_decimal_gap(spark):
