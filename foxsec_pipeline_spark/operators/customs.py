@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import bucket_pairs
+from .dedup import bucketed_pairs, minhash_signature
 from .windows import duration_micros, time_window, windowed_agg
 
 
@@ -329,7 +329,7 @@ def _hot_minhash_counts(hot, group_col, id_col, sim, minhash_hashes):
     compression + char-bigram MinHash candidates + exact arithmetic
     expansion (see the operator docstring). `hot` has columns
     (g, id, name, addr); returns (group_col, id_col, n_similar)."""
-    from ..functions.text import MINHASH_A, MINHASH_B, MINHASH_P, md5_bucket
+    from ..functions.text import MINHASH_P, md5_bucket
 
     nc = hot.groupBy("g", "name").agg(F.count(F.lit(1)).alias("__csz"))
     ca = hot.groupBy("g", "name", "addr").agg(F.count(F.lit(1)).alias("__acnt"))
@@ -345,18 +345,12 @@ def _hot_minhash_counts(hot, group_col, id_col, sim, minhash_hashes):
             )
         ).alias("__s"),
     )
-    sig = (
+    sig = minhash_signature(
         shingles.select(
             "g", "name", (md5_bucket(F.col("__s")) % F.lit(MINHASH_P)).alias("__h")
-        )
-        .groupBy("g", "name")
-        .agg(*[
-            F.min(
-                (F.lit(MINHASH_A[i]) * F.col("__h") + F.lit(MINHASH_B[i]))
-                % F.lit(MINHASH_P)
-            ).alias(f"__m{i}")
-            for i in range(minhash_hashes)
-        ])
+        ),
+        ["g", "name"],
+        minhash_hashes,
     )
     # band_size 1: a pair is a candidate on ANY shared minimum — the
     # high-recall operating point for short strings (measured in
@@ -367,17 +361,11 @@ def _hot_minhash_counts(hot, group_col, id_col, sim, minhash_hashes):
     bands = sig.select(
         "g", "name",
         F.posexplode(
-            F.array(*[F.col(f"__m{i}") for i in range(minhash_hashes)])
+            F.array(*[F.col(f"__h{i}") for i in range(minhash_hashes)])
         ).alias("__band", "__mv"),
     )
-    grouped = (
-        bands.groupBy("g", "__band", "__mv")
-        .agg(F.sort_array(F.collect_list("name")).alias("__names"))
-        .where(F.size("__names") >= 2)
-    )
-    par = hot.sparkSession.sparkContext.defaultParallelism
-    cand = bucket_pairs(
-        grouped.repartition(par), "__names", "name_a", "name_b", "g"
+    cand = bucketed_pairs(
+        bands, ["g", "__band", "__mv"], "name", "name_a", "name_b", "g"
     ).distinct()
     simp = cand.where(sim(F.col("name_a"), F.col("name_b")))
     return _hot_name_class_counts(hot, nc, ca, simp, group_col, id_col)

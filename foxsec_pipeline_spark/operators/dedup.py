@@ -8,13 +8,19 @@ SimHash, prefix-filtered token-set Jaccard, blocked edit distance.
 
 Scale design:
 - exact_dedup: one shuffle on the content hash, computed map-side.
-- candidate generators meet documents only inside a bucket: a shingle
-  (document-frequency capped), a (band, band signature), a SimHash
-  slice, a prefix token. Each groups the bucket's ids into a sorted
-  array and emits the pairs map-side — never a self-join, never a
-  cross join. `bucket_pairs` is the one pair kernel for buckets with
-  a width bound; `_chunked_self_pairs` spreads unbounded buckets
-  (hamming bands, prefix tokens) over a chunk-pair grid.
+- candidate generators meet documents only inside a bucket: a shingle,
+  a (band, band signature), a SimHash slice, a prefix token. Buckets
+  are grouped, bounded and spread in one place: `bucket_arrays`
+  collects each key's sorted items and keeps buckets of 2..cap items,
+  and `bucketed_pairs` spreads those buckets at machine width and
+  emits their pairs map-side through the one pair kernel
+  `bucket_pairs` — never a self-join, never a cross join. The shingle
+  generators pass their document-frequency cap; buckets that may
+  exceed any width (hamming bands, prefix tokens) pair through the
+  chunk-pair grid of `_chunked_self_pairs` instead.
+- minhash_signature: the one MinHash signature, a per-permutation min
+  aggregate over shingle hashes, shared by the LSH banding, the
+  estimator eval and the customs hot-name path.
 - simhash: a fixed-width map-side fingerprint; near-dup pairs come
   from the pigeonhole band join plus an exact bit_count(xor) filter.
 - dedup_clusters: connected components over any generator's pairs.
@@ -73,8 +79,9 @@ def bucket_pairs(
     rows per n-element array, so a sorted array of distinct elements
     yields a < b with no filter. Two chained codegen Generates
     (posexplode, then explode of the tail slice): no interpreted
-    lambda, no n² explode of the array against itself. Callers that
-    spread the buckets repartition `df` themselves."""
+    lambda, no n² explode of the array against itself. Bucket-pair
+    sites go through `bucketed_pairs`; the kernel is called directly
+    only on arrays built for other consumers too."""
     return (
         df.select(F.posexplode(arr_col).alias("_i", a), arr_col, *keep)
         .select(
@@ -82,6 +89,43 @@ def bucket_pairs(
             F.explode(F.expr(f"slice({arr_col}, _i + 2, size({arr_col}))")).alias(b),
             *keep,
         )
+    )
+
+
+def bucket_arrays(
+    df: DataFrame, keys: list[str], item, cap: int | None = None
+) -> DataFrame:
+    """(keys..., __bucket): each key's `item` values (a column name or
+    Column) as one sorted array, for buckets of 2..`cap` items
+    (`cap=None`: no upper bound). Narrower buckets hold no pair; wider
+    ones are dropped before any pair exists, the quadratic skew bound
+    of the callers that pass a cap."""
+    width = F.size("__bucket")
+    admit = width >= 2
+    if cap is not None:
+        admit = admit & (width <= int(cap))
+    return (
+        df.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(item)).alias("__bucket"))
+        .where(admit)
+    )
+
+
+def bucketed_pairs(
+    df: DataFrame, keys: list[str], item, a: str, b: str, *keep: str,
+    cap: int | None = None,
+) -> DataFrame:
+    """(a, b, *keep): every pair of `item` values sharing a bucket of
+    `bucket_arrays(df, keys, item, cap)`, `a` before `b` in the sorted
+    array (`keep` names key columns to carry along). AQE sizes the
+    post-aggregate stage by its few bytes and would coalesce the
+    quadratic pair emission to a few tasks, so the buckets are spread
+    round-robin over machine width first: an explicit-width
+    repartition is never coalesced."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return bucket_pairs(
+        bucket_arrays(df, keys, item, cap).repartition(par),
+        "__bucket", a, b, *keep,
     )
 
 
@@ -175,21 +219,14 @@ def _shingle_pair_counts(
     distinct shingles each pair shares, and each doc's shingle count.
 
     Docs group per shingle (2..df_cap docs; wider shingles are pruned
-    before any pair exists, the quadratic skew bound) and pair inside
-    the sorted (id, n_sh) array. AQE sizes the post-agg stage by its
-    tiny byte count and would coalesce the quadratic pair stage to a
-    few tasks, so an explicit-width repartition spreads it. The
-    order predicate stays: a 60-bit shingle-hash collision inside one
-    doc repeats its id in the array."""
-    grouped = (
-        _shingled(df, id_col, text_col, n)
-        .groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(F.struct(id_col, "n_sh"))).alias("docs"))
-        .where((F.size("docs") >= 2) & (F.size("docs") <= int(df_cap)))
-    )
-    par = df.sparkSession.sparkContext.defaultParallelism
+    before any pair exists) and pair inside the sorted (id, n_sh)
+    array. The order predicate stays: a 60-bit shingle-hash collision
+    inside one doc repeats its id in the array."""
     return (
-        bucket_pairs(grouped.repartition(par), "docs", "a", "b")
+        bucketed_pairs(
+            _shingled(df, id_col, text_col, n), ["shingle"],
+            F.struct(id_col, "n_sh"), "a", "b", cap=df_cap,
+        )
         .where(F.col("a")[id_col] < F.col("b")[id_col])
         .groupBy(
             F.col("a")[id_col].alias("doc_a"),
@@ -246,22 +283,18 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash banding.
 
-    Signature: num_hashes md5-permutation minima over word-n-gram
+    Signature: `minhash_signature` over the md5 hashes of word-n-gram
     shingles. Docs sharing any band (band_size consecutive signature
     slots) become a candidate pair. Join key is (band, band_sig) —
     an equi-join whose fan-out is bounded by bucket sizes, the LSH
     scale guarantee. Verify candidates with `ngram_jaccard_pairs`
     downstream if exact Jaccard is needed.
     """
-    assert num_hashes % band_size == 0
-    # signature is computed RELATIONALLY: explode shingle hashes, then
-    # groupBy(id).agg(min(perm_i(h))) per permutation — the agg stays
-    # codegen and map-side partial agg shrinks the exploded shingles
-    # back to one row per (doc, partition) before the exchange, so the
-    # shuffle is ~|docs| rows at any scale. An array-shaped signature
-    # (transform + array_min per permutation) is avoided on purpose:
-    # CollapseProject inlines it into every band column, duplicating
-    # the HOF tree ~num_hashes^2 times (~1.7 s COMPILE vs 0.3 s run).
+    if band_size < 1 or num_hashes % band_size:
+        raise ValueError(
+            f"band_size must be >= 1 and divide num_hashes={num_hashes},"
+            f" got {band_size}"
+        )
     # The shingle stream is the map-side `_shingle_arrays` kernel
     # (per-doc distinct in the array domain; min per permutation is
     # duplicate-insensitive, so dedup'd shingles give the identical
@@ -280,15 +313,14 @@ def minhash_lsh_pairs(
     # query that ALSO needs the hash table for its own legs passes the
     # shared (deduplicated) relation so the corpus shingle pipeline
     # exists once in the plan and ReuseExchange serves every consumer.
-    # min() per permutation is duplicate-insensitive, so a distinct
-    # hash set yields the identical signature (guide §2.4).
-    mins, band_rows = gateway_memo(
+    band_rows = gateway_memo(
         ("dedup.minhash", num_hashes, band_size),
         lambda: _minhash_band_cols(num_hashes, band_size),
     )
-    sig = hashed.groupBy(id_col).agg(*mins)
-    bands = sig.select(F.col(id_col), band_rows).select(
-        id_col, "bs.band", "bs.band_sig"
+    bands = (
+        minhash_signature(hashed, [id_col], num_hashes)
+        .select(F.col(id_col), band_rows)
+        .select(id_col, "bs.band", "bs.band_sig")
     )
     # pairs are generated INSIDE each (band, band_sig) bucket — a
     # self-join on the bucket key would re-evaluate the whole signature
@@ -296,29 +328,55 @@ def minhash_lsh_pairs(
     # subplans no exchange reuse. Each doc has one band_sig per band,
     # so a bucket's sorted ids are distinct and the kernel's pairs are
     # already ordered; the distinct folds pairs met in several bands.
-    grouped = (
-        bands.groupBy("band", "band_sig")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("docs"))
-        .where(F.size("docs") >= 2)
-    )
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return bucket_pairs(
-        grouped.repartition(par), "docs", "doc_a", "doc_b"
+    return bucketed_pairs(
+        bands, ["band", "band_sig"], id_col, "doc_a", "doc_b"
     ).distinct()
 
 
-def _minhash_band_cols(num_hashes: int, band_size: int):
-    """The signature minima (`__h{i}` per permutation) and the exploded
-    (band, band_sig) struct column `bs` of `minhash_lsh_pairs`; they
-    depend on no DataFrame, so they are built once per py4j gateway."""
-    mins = [
+def minhash_signature(
+    hashed: DataFrame, keys: list[str], num_hashes: int
+) -> DataFrame:
+    """(keys..., __h0..__h{num_hashes-1}): the MinHash signature of
+    each key's shingle hashes `__h` (values in [0, MINHASH_P)), slot i
+    being min((MINHASH_A[i] * h + MINHASH_B[i]) mod MINHASH_P).
+
+    The signature is computed RELATIONALLY: one groupBy(keys) with a
+    min aggregate per permutation stays codegen, and map-side partial
+    aggregation shrinks the shingle rows to one row per (key,
+    partition) before the exchange. An array-shaped signature
+    (transform + array_min per permutation) is avoided on purpose:
+    CollapseProject inlines it into every consumer column, duplicating
+    the HOF tree ~num_hashes^2 times (~1.7 s COMPILE vs 0.3 s run).
+    min() is duplicate-insensitive, so a distinct hash set yields the
+    identical signature."""
+    if not 1 <= num_hashes <= len(MINHASH_A):
+        raise ValueError(
+            f"num_hashes must be in [1, {len(MINHASH_A)}], got {num_hashes}"
+        )
+    mins = gateway_memo(
+        ("dedup.minhash_signature", num_hashes),
+        lambda: _minhash_min_cols(num_hashes),
+    )
+    return hashed.groupBy(*keys).agg(*mins)
+
+
+def _minhash_min_cols(num_hashes: int):
+    """The `__h{i}` minima of `minhash_signature`; they depend on no
+    DataFrame, so they are built once per py4j gateway."""
+    return [
         F.min(
             (F.lit(MINHASH_A[i]) * F.col("__h") + F.lit(MINHASH_B[i]))
             % F.lit(MINHASH_P)
         ).alias(f"__h{i}")
         for i in range(num_hashes)
     ]
-    band_rows = F.explode(
+
+
+def _minhash_band_cols(num_hashes: int, band_size: int):
+    """The exploded (band, band_sig) struct column `bs` of
+    `minhash_lsh_pairs` over the signature slots; it depends on no
+    DataFrame, so it is built once per py4j gateway."""
+    return F.explode(
         F.array(
             *[
                 F.struct(
@@ -335,7 +393,6 @@ def _minhash_band_cols(num_hashes: int, band_size: int):
             ]
         )
     ).alias("bs")
-    return mins, band_rows
 
 
 def dedup_clusters(
@@ -611,11 +668,12 @@ def simhash_hamming_pairs(
     )
 
 
-def _chunked_self_pairs(grouped, arr_col, par, chunk=1024):
-    """All element pairs (a, b) from each row's SORTED struct array,
-    emitted through a chunk-pair grid: the array splits into
-    `chunk`-element slices and every (slice_i, slice_j | i <= j)
-    grid row becomes an independent unit of quadratic emission.
+def _chunked_self_pairs(grouped, par=None, chunk=1024):
+    """All element pairs (a, b) from the SORTED struct array `__bucket`
+    of each `bucket_arrays` row, emitted through a chunk-pair grid: the
+    array splits into `chunk`-element slices and every (slice_i,
+    slice_j | i <= j) grid row becomes an independent unit of
+    quadratic emission.
 
     Two scale properties the naive explode-the-array-per-element
     form lacks (measured on multimodal_phash_dedup at the 30x
@@ -627,14 +685,17 @@ def _chunked_self_pairs(grouped, arr_col, par, chunk=1024):
     - a hot group's emission runs at machine width instead of one
       task per group.
 
-    Callers filter `a.<first_field> < b.<first_field>` — valid
+    The grid spreads round-robin over `par` tasks (default: machine
+    width). Callers filter `a.<first_field> < b.<first_field>` — valid
     across chunks because slices of a sorted array are contiguous
     ranges — and project their own columns."""
+    if par is None:
+        par = grouped.sparkSession.sparkContext.defaultParallelism
     grid = (
         grouped.select(
             F.expr(
-                f"transform(sequence(0, (size({arr_col})-1) div {chunk}),"
-                f" c -> slice({arr_col}, c*{chunk}+1, {chunk}))"
+                f"transform(sequence(0, (size(__bucket)-1) div {chunk}),"
+                f" c -> slice(__bucket, c*{chunk}+1, {chunk}))"
             ).alias("__chunks")
         )
         .select(
@@ -670,7 +731,10 @@ def hamming_pairs(
     (doc_a, doc_b, hamming), complete for max_hamming <= bands - 1."""
     if max_hamming > bands - 1:
         raise ValueError("completeness needs max_hamming <= bands - 1")
-    assert bits % bands == 0
+    if bands < 1 or bits % bands:
+        raise ValueError(
+            f"bands must be >= 1 and divide bits={bits}, got {bands}"
+        )
     bw = bits // bands
     slices = F.array(*[
         F.shiftright(F.col(hash_col), bw * i).bitwiseAND(F.lit(2 ** bw - 1))
@@ -681,14 +745,8 @@ def hamming_pairs(
         .alias("__m"),
         F.posexplode(slices).alias("__band", "__sv"),
     )
-    grouped = (
-        banded.groupBy("__band", "__sv")
-        .agg(F.sort_array(F.collect_list("__m")).alias("__ms"))
-        .where(F.size("__ms") >= 2)
-    )
-    par = fp.sparkSession.sparkContext.defaultParallelism
     return (
-        _chunked_self_pairs(grouped, "__ms", par)
+        _chunked_self_pairs(bucket_arrays(banded, ["__band", "__sv"], "__m"))
         .where(F.col("a.id") < F.col("b.id"))
         .select(
             F.col("a.id").alias("doc_a"),
@@ -1085,16 +1143,8 @@ def _jaccard_prefix_path(tok, id_col, t_num, t_den, n_vocab=None):
             return _jaccard_dense_mask_path(
                 tok, id_col, t_num, t_den, n_vocab
             )
-    grouped = (
-        pref.groupBy("w")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col(id_col).alias("i"), F.col("n").alias("n"))
-                )
-            ).alias("ds")
-        )
-        .where(F.size("ds") >= 2)
+    grouped = bucket_arrays(
+        pref, ["w"], F.struct(F.col(id_col).alias("i"), F.col("n").alias("n"))
     )
     # The distinct reads an explicit-width exchange on the pair keys:
     # without it AQE sizes the read on the compresses-20x int-pair
@@ -1108,7 +1158,7 @@ def _jaccard_prefix_path(tok, id_col, t_num, t_den, n_vocab=None):
         path="sparse", n_docs=n_docs, emission=emission, width=width
     )
     cand = (
-        _chunked_self_pairs(grouped, "ds", par * 4)
+        _chunked_self_pairs(grouped, par * 4)
         .where(
             (F.col("a.i") < F.col("b.i"))
             # PPJoin length filter: prune before the pair materializes

@@ -28,7 +28,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from ..operators.dedup import bucket_pairs
+from ..operators.dedup import bucketed_pairs
 from ..operators.ingest import countmin_cells, countmin_estimate
 from ..operators.textanalysis import chunk_passages, dup_span_stats
 from ..session import load_tables
@@ -737,8 +737,10 @@ JOIN docn nb ON p.doc_b = nb.doc_id
         "ppm). Pairing is bucket-local on fp_hash with the df-cap "
         f"prefilter (2..{_WINNOW_DF_CAP} docs per fingerprint — "
         "ubiquitous boilerplate fingerprints are dropped BEFORE the "
-        "join, the same df_cap posture as every dedup candidate "
-        "generator in the catalog), so per-key fan-out is bounded by "
+        "join, the df_cap posture of the shingle generators "
+        "ngram_jaccard_pairs and containment_pairs; the MinHash, "
+        "embedding and hot-name buckets pass no cap), so per-key "
+        "fan-out is bounded by "
         "the cap squared and no all-pairs stage exists at any skew. "
         "The winnowing guarantee transfers: any shared run of >= 7 "
         "words yields a shared fingerprint, so real plagiarism of 2+ "
@@ -755,21 +757,13 @@ def q_winnowing_plagiarism_pairs(spark, sf_dir):
     # join sides (Catalyst gives aliased subplans no exchange reuse)
     # and need a separate df hash-agg + semi-join for the cap. The
     # df-cap [2, _WINNOW_DF_CAP] folds into the grouping aggregate
-    # (size of the id array), the same shape as ngram_jaccard_pairs /
-    # minhash_lsh_pairs; the explicit-width repartition spreads the
-    # quadratic pair stage AQE can't see (byte-blind coalescing).
-    # (doc_id, fp_hash) rows are distinct, so a bucket's sorted ids
-    # are distinct and the kernel's pairs are already ordered.
-    par = spark.sparkContext.defaultParallelism
-    grouped = (
-        d.groupBy("fp_hash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
-        .where(
-            (F.size("docs") >= 2) & (F.size("docs") <= _WINNOW_DF_CAP)
-        )
-    )
+    # (size of the id array), as in ngram_jaccard_pairs. (doc_id,
+    # fp_hash) rows are distinct, so a bucket's sorted ids are distinct
+    # and the kernel's pairs are already ordered.
     pr = (
-        bucket_pairs(grouped.repartition(par), "docs", "doc_a", "doc_b")
+        bucketed_pairs(
+            d, ["fp_hash"], "doc_id", "doc_a", "doc_b", cap=_WINNOW_DF_CAP
+        )
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .where(F.col("n_shared") >= 2)

@@ -31,7 +31,7 @@ from .catalog import register
 # below (kcore's pairs CTE, khop's pairs CTE) and with the
 # catalog_mining copurchase family: one constant, no silent divergence
 # if a caller passes a different min_supp
-from .catalog_mining import _MIN_PAIR_SUPP
+from .catalog_mining import _MIN_PAIR_SUPP, _baskets, _supported_pairs
 
 
 def _docs(spark, sf_dir):
@@ -735,23 +735,11 @@ _KCORE_N_SMALL = 100_000
 _KCORE_K_LARGE = 2
 
 
-def _copurchase_edges(li, min_supp: int = _MIN_PAIR_SUPP):
-    """Undirected co-purchase edge list (both directions), the edge
-    definition shared with the catalog_mining copurchase family:
-    per-order distinct part baskets -> in-basket pairs
-    (`dedup.bucket_pairs`) -> pair support >= min_supp -> symmetrize."""
-    from ..operators.dedup import bucket_pairs
-
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
-    pairs = (
-        bucket_pairs(baskets, "ps", "u", "v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") >= min_supp)
-        .select("u", "v")
-    )
+def _copurchase_edges(li):
+    """Undirected co-purchase edge list (both directions): the
+    catalog_mining pair definition (`_supported_pairs` over
+    `_baskets`), symmetrized."""
+    pairs = _supported_pairs(_baskets(li)).select("u", "v")
     return pairs.unionAll(
         pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

@@ -29,7 +29,7 @@ from ..operators import (
     simhash,
     text_stats,
 )
-from ..operators.dedup import bucket_pairs
+from ..operators.dedup import bucketed_pairs
 from ..operators.multimodal import attach_binary_payload, binary_metadata
 from ..session import load_tables
 from .catalog import register
@@ -886,15 +886,8 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     b = lsh_buckets_relational(emb, [_PLANES]).select(
         "vec_id", F.col("__bkt").alias("bkt")
     )
-    par = spark.sparkContext.defaultParallelism
-    grouped = (
-        b.groupBy("bkt")
-        .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
-        .repartition(par)
-    )
     pairs = (
-        bucket_pairs(grouped, "ids", "vec_a", "vec_b")
+        bucketed_pairs(b, ["bkt"], "vec_id", "vec_a", "vec_b")
         .where(F.col("vec_a") < F.col("vec_b"))
         .distinct()
         # AQE coalesces the distinct's output to 1 partition (tiny
@@ -902,7 +895,7 @@ def q_dedup_embedding_cosine(spark, sf_dir):
         # Catalyst then pushes the cosine filter INTO the join stage,
         # so the interpreted fold would run single-core. Explicit
         # width BEFORE the joins keeps the whole score+filter wide.
-        .repartition(par)
+        .repartition(spark.sparkContext.defaultParallelism)
     )
     v = spread(emb).select(
         "vec_id", F.col("embedding").alias("__v"),
@@ -992,18 +985,13 @@ def q_semdedup(spark, sf_dir):
         f"{_ivf_cell_sql(cb)} AS cell",
         f"{_lsh_pack_sql(_PLANES)} AS bkt",
     )
-    par = spark.sparkContext.defaultParallelism
-    grouped = (
-        keyed.groupBy("cell", "bkt")
-        .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
-        .repartition(par)
-    )
     # the order predicate stays: vec_id is not unique by construction
     pairs = (
-        bucket_pairs(grouped, "ids", "vec_a", "vec_b", "cell")
+        bucketed_pairs(
+            keyed, ["cell", "bkt"], "vec_id", "vec_a", "vec_b", "cell"
+        )
         .where(F.col("vec_a") < F.col("vec_b"))
-        .repartition(par)
+        .repartition(spark.sparkContext.defaultParallelism)
     )
     v = spread(emb).select(
         "vec_id", F.col("embedding").alias("__v"),

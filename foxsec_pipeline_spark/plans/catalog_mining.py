@@ -43,6 +43,29 @@ _MIN_ITEM_SUPP = 3
 _MIN_PAIR_SUPP = 2
 
 
+def _baskets(li):
+    """(l_orderkey, ps): each order's distinct parts as one sorted
+    array — the co-purchase basket. Its elements are distinct, so the
+    in-basket pairs of `_supported_pairs` come out ordered u < v."""
+    return li.groupBy("l_orderkey").agg(
+        F.sort_array(F.collect_set("l_partkey")).alias("ps")
+    )
+
+
+def _supported_pairs(baskets):
+    """(u, v, n): the co-purchase pair definition shared by every
+    copurchase query — part pairs u < v bought together in n >=
+    _MIN_PAIR_SUPP of the `_baskets` orders, paired map-side inside
+    each basket (`dedup.bucket_pairs`; a basket is bounded by order
+    size)."""
+    return (
+        bucket_pairs(baskets, "ps", "u", "v")
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .where(F.col("n") >= _MIN_PAIR_SUPP)
+    )
+
+
 @register(
     "frequent_itemsets",
     f"""
@@ -105,21 +128,16 @@ def q_frequent_itemsets(spark, sf_dir):
     # count) race a lazy checkpoint's cache population into
     # re-running the basket agg (the pagerank 182-s lesson;
     # interleaved A/B at sf0.1: 2.98 -> 2.38 s min, spikes gone)
-    baskets = (
-        li.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .localCheckpoint()
-    )
+    baskets = _baskets(li).localCheckpoint()
     supp = (
         baskets.select(F.explode("ps").alias("l_partkey"))
         .groupBy("l_partkey")
         .agg(F.count(F.lit(1)).cast("long").alias("supp"))
     )
-    pairs = (
-        bucket_pairs(baskets, "ps", "part_a", "part_b")
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("pair_support"))
-        .where(F.col("pair_support") >= _MIN_PAIR_SUPP)
+    pairs = _supported_pairs(baskets).select(
+        F.col("u").alias("part_a"),
+        F.col("v").alias("part_b"),
+        F.col("n").alias("pair_support"),
     )
     tot = baskets.agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
     sa = supp.select(
@@ -463,22 +481,12 @@ FROM pn JOIN deg d ON pn.node = d.node
 )
 def q_copurchase_triangles(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
     # EAGER: the edge table has three concurrent consumers (degree
     # union-agg x2 sides, orientation join, closing-edge semi-join) —
     # a lazy checkpoint raced them into re-running the pair expansion
     # (10x batch reps measured [23.6 s, 279.6 s]; eager + freed
     # blocks: [12.1, 11.8])
-    edges = (
-        bucket_pairs(baskets, "ps", "u", "v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") >= _MIN_PAIR_SUPP)
-        .select("u", "v")
-        .localCheckpoint()
-    )
+    edges = _supported_pairs(_baskets(li)).select("u", "v").localCheckpoint()
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -947,16 +955,7 @@ FROM r{_PR_ITERS} rN JOIN deg d ON rN.node = d.node
 )
 def q_copurchase_pagerank(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
-    pairs = (
-        bucket_pairs(baskets, "ps", "u", "v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") >= _MIN_PAIR_SUPP)
-        .select("u", "v")
-    )
+    pairs = _supported_pairs(_baskets(li)).select("u", "v")
     edges = pairs.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(pairs.select(F.col("v").alias("src"), F.col("u").alias("dst")))
@@ -1467,19 +1466,9 @@ WHERE du.degree + dv.degree - 2 - COALESCE(c.common_neighbors, 0) > 0
 )
 def q_copurchase_link_jaccard(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
-    pairs = (
-        bucket_pairs(baskets, "ps", "u", "v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") >= _MIN_PAIR_SUPP)
-        .select("u", "v")
-        # EAGER: degree agg + both pair-join probes read this table
-        # concurrently (A/B: 3.86 -> 3.18 s min, 7.7 s spike gone)
-        .localCheckpoint()
-    )
+    # EAGER: degree agg + both pair-join probes read this table
+    # concurrently (A/B: 3.86 -> 3.18 s min, 7.7 s spike gone)
+    pairs = _supported_pairs(_baskets(li)).select("u", "v").localCheckpoint()
     deg = (
         pairs.select(F.col("u").alias("node"))
         .unionAll(pairs.select(F.col("v").alias("node")))

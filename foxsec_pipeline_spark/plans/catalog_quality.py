@@ -1742,11 +1742,14 @@ JOIN nsh nb ON nb.doc_id = p.doc_b
         "compute identically (md5-60bit mod p)",
 )
 def q_minhash_jaccard_estimate_error(spark, sf_dir):
-    from ..functions.text import MINHASH_A, MINHASH_B, MINHASH_P, md5_bucket
-    from ..operators import minhash_lsh_pairs
+    from ..functions.text import MINHASH_P, md5_bucket
+    from ..operators.dedup import (
+        _shingle_arrays,
+        minhash_lsh_pairs,
+        minhash_signature,
+    )
 
     docs = _docs(spark, sf_dir)
-    from ..operators.dedup import _shingle_arrays
 
     # shingles come from the map-side array kernel
     # (zero exchanges before the distinct — a window-lead form pays
@@ -1771,31 +1774,23 @@ def q_minhash_jaccard_estimate_error(spark, sf_dir):
         # means 2.6 -> 2.0 s, mins 2.03 -> 1.80 s, output identical.
         .localCheckpoint(eager=True)
     )
-    # the candidate leg reuses hsh's shingle hashes (min per
-    # permutation is duplicate-insensitive, so the distinct hash set
-    # yields the identical signature): if minhash_lsh_pairs rebuilt
-    # its own corpus tokenize->md5 pipeline, the corpus shingle pass
-    # would run TWICE per query (guide §2.4 — one subtree,
+    # the candidate leg and the signature reuse hsh's shingle hashes
+    # (min per permutation is duplicate-insensitive, so the distinct
+    # hash set yields the identical signature): if minhash_lsh_pairs
+    # rebuilt its own corpus tokenize->md5 pipeline, the corpus shingle
+    # pass would run TWICE per query (guide §2.4 — one subtree,
     # ReuseExchange serves cand + ha/hb + mh alike)
+    hashed = hsh.select("doc_id", F.col("h").alias("__h"))
     cand = minhash_lsh_pairs(
-        docs, n=3, num_hashes=8, band_size=2,
-        hashed=hsh.select("doc_id", F.col("h").alias("__h")),
+        docs, n=3, num_hashes=8, band_size=2, hashed=hashed
     )
     nsh = hsh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     # long-form 8-slot signature (doc_id, i, h_min)
-    mh = hsh.select(
+    mh = minhash_signature(hashed, ["doc_id"], 8).select(
         "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("i"),
-                    ((F.lit(MINHASH_A[i]) * F.col("h") + F.lit(MINHASH_B[i]))
-                     % F.lit(MINHASH_P)).alias("hp"),
-                )
-                for i in range(8)
-            ])
-        ).alias("s"),
-    ).groupBy("doc_id", "s.i").agg(F.min("s.hp").alias("h"))
+        F.posexplode(F.array(*[F.col(f"__h{i}") for i in range(8)]))
+        .alias("i", "h"),
+    )
     ha = hsh.select(F.col("doc_id").alias("doc_a"), F.col("h"))
     hb = hsh.select(F.col("doc_id").alias("doc_b"), F.col("h"))
     inter = (

@@ -1,7 +1,9 @@
 """The in-bucket pair kernel `dedup.bucket_pairs`: its rows against
-`itertools.combinations`, its plan shape, and the two shingle-pair
-operators built on it against the explode-against-itself bodies they
-replaced."""
+`itertools.combinations`, its plan shape; the bucket builders
+`bucket_arrays`/`bucketed_pairs` against the hand-written
+group/sort/size-filter/repartition block they replaced; the input
+checks of the MinHash and Hamming generators; and the two shingle-pair
+operators against the explode-against-itself bodies they replaced."""
 
 import re
 from collections import Counter
@@ -12,8 +14,12 @@ from pyspark.sql import functions as F
 
 from foxsec_pipeline_spark.operators.dedup import (
     _shingled,
+    bucket_arrays,
     bucket_pairs,
+    bucketed_pairs,
     containment_pairs,
+    hamming_pairs,
+    minhash_lsh_pairs,
     ngram_jaccard_pairs,
 )
 
@@ -68,6 +74,115 @@ def test_bucket_pairs_plan_shape(buckets):
         re.search(r"Filter \(\(size\(ps#\d+, false\) > 0\) AND isnotnull\(ps#\d+\)\)$", ln)
         for ln in filters
     ), plan
+
+
+# -- the bucket builders against the hand-written block -------------
+
+# (k, g) -> items; bucket widths 1..4, one repeated item
+BUCKETS = {
+    (1, "x"): [7],
+    (2, "x"): [4, 2],
+    (2, "y"): [9, 3, 6],
+    (3, "x"): [5, 1, 5, 8],
+}
+
+
+@pytest.fixture(scope="module")
+def keyed(spark):
+    return spark.createDataFrame(
+        [(k, g, x) for (k, g), xs in BUCKETS.items() for x in xs],
+        "k long, g string, x long",
+    )
+
+
+def _reference_arrays(df, cap):
+    grouped = (
+        df.groupBy("k", "g")
+        .agg(F.sort_array(F.collect_list("x")).alias("xs"))
+        .where(F.size("xs") >= 2)
+    )
+    if cap is not None:
+        grouped = grouped.where(F.size("xs") <= cap)
+    return grouped
+
+
+def _reference_pairs(df, cap, keep):
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return bucket_pairs(
+        _reference_arrays(df, cap).repartition(par), "xs", "a", "b", *keep
+    )
+
+
+def _bag(df):
+    return Counter(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("cap,widths", [(None, {2, 3, 4}), (2, {2}), (3, {2, 3})])
+def test_bucket_arrays_equals_hand_block(keyed, cap, widths):
+    out = bucket_arrays(keyed, ["k", "g"], "x", cap=cap)
+    assert out.columns == ["k", "g", "__bucket"]
+    got = _bag(out)
+    assert got == _bag(_reference_arrays(keyed, cap))
+    # a 1-item key never pairs; a `cap`-wide bucket stays, a wider one goes
+    assert {len(r[2]) for r in got} == widths
+
+
+@pytest.mark.parametrize("keep", [[], ["g"], ["k", "g"]])
+@pytest.mark.parametrize("cap", [None, 2, 3])
+def test_bucketed_pairs_equals_hand_block(keyed, cap, keep):
+    out = bucketed_pairs(keyed, ["k", "g"], "x", "a", "b", *keep, cap=cap)
+    assert out.columns == ["a", "b", *keep]
+    got = _bag(out)
+    assert got == _bag(_reference_pairs(keyed, cap, keep))
+    want = sum(
+        len(xs) * (len(xs) - 1) // 2
+        for xs in BUCKETS.values()
+        if 2 <= len(xs) <= (cap or len(xs))
+    )
+    assert sum(got.values()) == want
+
+
+def test_bucketed_pairs_plan_shape(keyed):
+    """One hash Exchange on the keys (the grouping), one round-robin
+    Exchange (the spread) and the kernel's two Generates."""
+    plan = (
+        bucketed_pairs(keyed, ["k", "g"], "x", "a", "b", "g")
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    exchanges = [ln for ln in plan.splitlines() if "Exchange " in ln]
+    assert len(exchanges) == 2, plan
+    assert sum(
+        bool(re.search(r"Exchange hashpartitioning\(k#\d+L?, g#\d+, ", ln))
+        for ln in exchanges
+    ) == 1, plan
+    assert sum("Exchange RoundRobinPartitioning(" in ln for ln in exchanges) == 1, plan
+    assert plan.count("Generate ") == 2, plan
+
+
+# -- input checks that hold under `python -O` -------------------------
+
+
+@pytest.mark.parametrize(
+    "make,bound",
+    [
+        (lambda d: minhash_lsh_pairs(d, num_hashes=65, band_size=1),
+         r"num_hashes must be in \[1, 64\]"),
+        (lambda d: minhash_lsh_pairs(d, num_hashes=8, band_size=3),
+         "band_size must be >= 1 and divide num_hashes=8"),
+        (lambda d: minhash_lsh_pairs(d, num_hashes=8, band_size=0),
+         "band_size must be >= 1 and divide num_hashes=8"),
+        (lambda d: hamming_pairs(d.select("doc_id", F.lit(0).alias("simhash")),
+                                 bits=16, bands=3),
+         "bands must be >= 1 and divide bits=16"),
+    ],
+    ids=["minhash-65x1", "minhash-8x3", "minhash-8x0", "hamming-16x3"],
+)
+def test_generator_bounds_raise_value_error(docs, make, bound):
+    with pytest.raises(ValueError, match=bound):
+        make(docs)
 
 
 # -- the shingle-pair operators against the bodies they replaced ------

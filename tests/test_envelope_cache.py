@@ -81,7 +81,7 @@ def test_dedup_kernel_cols_cached_per_gateway(spark, monkeypatch):
     )
     monkeypatch.setattr(session, "_GATEWAY_MEMO", weakref.WeakKeyDictionary())
     builds = []
-    for name in ("_shingle_array_col", "_minhash_band_cols"):
+    for name in ("_shingle_array_col", "_minhash_min_cols", "_minhash_band_cols"):
         real = getattr(dedup, name)
         monkeypatch.setattr(
             dedup, name,
@@ -90,22 +90,24 @@ def test_dedup_kernel_cols_cached_per_gateway(spark, monkeypatch):
     mh = _rows(dedup.minhash_lsh_pairs(corpus))
     nj = _rows(dedup.ngram_jaccard_pairs(corpus))
     assert mh and nj
-    assert sorted(builds) == ["_minhash_band_cols", "_shingle_array_col"]
+    assert sorted(builds) == [
+        "_minhash_band_cols", "_minhash_min_cols", "_shingle_array_col"
+    ]
     # hits on the same gateway: no rebuild, the same rows
     assert _rows(dedup.minhash_lsh_pairs(corpus)) == mh
     assert _rows(dedup.ngram_jaccard_pairs(corpus)) == nj
-    assert len(builds) == 2
+    assert len(builds) == 3
 
     restarted = _Gateway()
     with monkeypatch.context() as m:
         m.setattr(SparkContext, "_gateway", restarted)
         fresh_mh = dedup.minhash_lsh_pairs(corpus)
         fresh_nj = dedup.ngram_jaccard_pairs(corpus)
-        assert len(builds) == 4
+        assert len(builds) == 6
     assert _rows(fresh_mh) == mh
     assert _rows(fresh_nj) == nj
     dedup.minhash_lsh_pairs(corpus)
-    assert len(builds) == 4
+    assert len(builds) == 6
     gone = weakref.ref(restarted)
     del restarted
     gc.collect()
